@@ -14,7 +14,7 @@ window-cumsum batch assignment (SURVEY.md §2.6 W3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # --- reference constants -------------------------------------------------
 # exporter/omnishard/factory.go:33 — flush a record once accumulated
@@ -66,13 +66,7 @@ class PipelineConfig:
     # Deterministic send-failure rule: routed row is dropped iff the first
     # two hex chars of md5(conv_id:turn_idx:sink) equal this value (~0.39%).
     drop_md5_prefix: str = "ff"
-    # forward-fill physical strategy: 'window' (one sort per conv — the
-    # default; cheapest when conversations are bounded) or 'join'
-    # (bucketed anchors join — immune to a single hot conversation
-    # serializing the stage; see BENCH/BASELINE.md §5).
-    fill_strategy: str = "window"
     # Receiver backpressure toggle (receiver/opencensusreceiver/config.go:47):
     # True → protocol-violating conversations are REFUSED (counted, visible
     # to the sender); False → they are silently DROPPED (RPC succeeds).
     backpressure_on: bool = True
-    extra: dict = field(default_factory=dict)

@@ -163,7 +163,7 @@ def assign_shard(
         & (F.col("hash_key") <= F.col("end_key"))
     )
     joined = keyed.join(F.broadcast(lut), cond, how)
-    return joined.drop("start_key", "end_key", "hash_prefix", "lut_prefix")
+    return joined.drop("start_key", "end_key", "hash_key", "hash_prefix", "lut_prefix")
 
 
 def shard_of(partition_key: str, shards: list[dict]) -> str | None:

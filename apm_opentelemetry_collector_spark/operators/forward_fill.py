@@ -29,86 +29,3 @@ def forward_fill(df: DataFrame, cols: tuple[str, ...] = ("role", "tool")) -> Dat
         out = out.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
     return out
 
-
-def forward_fill_join(
-    df: DataFrame,
-    cols: tuple[str, ...] = ("role", "tool"),
-    bucket_size: int = 1024,
-) -> DataFrame:
-    """Skew-proof forward fill: bucketed anchors join instead of a window.
-
-    The window implementation sorts each conversation in ONE task — a
-    conversation holding 50% of the corpus serializes the stage (measured
-    5× degradation, BENCH/BASELINE.md §5). This variant keeps identical
-    semantics while partitioning work by (conv_id, turn bucket):
-
-      1. anchors = rows with a non-null value;
-      2. per (conv, bucket) summary: last anchor value/turn in the bucket
-         — the only per-conversation window left runs over these TINY
-         summaries (≈ turns / bucket_size rows per conversation);
-      3. each NULL row resolves against (a) same-bucket anchors at or
-         before its turn (equi-join on (conv, bucket) + max_by — fan-out
-         bounded by anchors-per-bucket), else (b) the carry value from
-         the previous bucket's summary.
-
-    Non-null rows keep their own value untouched. Leading nulls (no
-    earlier anchor) stay null, exactly like last(ignorenulls) over an
-    unbounded-preceding frame.
-    """
-    bucket = F.floor(F.col("turn_idx") / bucket_size)
-    out = df.withColumn("_b", bucket)
-    for c in cols:
-        anchors = out.filter(F.col(c).isNotNull()).select(
-            "conv_id", F.col("_b").alias("_ab"), F.col("turn_idx").alias("_at"),
-            F.col(c).alias("_av"),
-        )
-        # per-bucket last anchor, carried forward over the FULL bucket
-        # spine (every bucket the conversation occupies — anchor-free
-        # gaps must still receive the carry)
-        per_bucket = anchors.groupBy("conv_id", "_ab").agg(
-            F.max_by("_av", "_at").alias("_bv")
-        )
-        spine = out.select("conv_id", F.col("_b").alias("_ab")).distinct()
-        wb = (
-            Window.partitionBy("conv_id")
-            .orderBy("_ab")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        carry = (
-            spine.join(per_bucket, ["conv_id", "_ab"], "left")
-            .select(
-                "conv_id", "_ab",
-                F.last("_bv", ignorenulls=True).over(wb).alias("_carry"),
-            )
-        )
-
-        # (a) same-bucket resolution for null rows only
-        nulls = out.filter(F.col(c).isNull()).select(
-            "conv_id", "turn_idx", F.col("_b").alias("_nb")
-        )
-        same = (
-            nulls.join(
-                anchors,
-                (nulls.conv_id == anchors.conv_id)
-                & (F.col("_nb") == F.col("_ab"))
-                & (F.col("_at") <= F.col("turn_idx")),
-                "inner",
-            )
-            .groupBy(nulls.conv_id.alias("conv_id"), "turn_idx")
-            .agg(F.max_by("_av", "_at").alias("_same"))
-        )
-        # (b) previous-bucket carry
-        prev = carry.select(
-            "conv_id", (F.col("_ab") + 1).alias("_nb"), F.col("_carry")
-        )
-        resolved = (
-            nulls.join(same, ["conv_id", "turn_idx"], "left")
-            .join(prev, ["conv_id", "_nb"], "left")
-            .select(
-                "conv_id", "turn_idx", F.coalesce("_same", "_carry").alias(f"_fill_{c}")
-            )
-        )
-        out = out.join(resolved, ["conv_id", "turn_idx"], "left").withColumn(
-            c, F.coalesce(F.col(c), F.col(f"_fill_{c}"))
-        ).drop(f"_fill_{c}")
-    return out.drop("_b")

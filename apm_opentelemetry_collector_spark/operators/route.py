@@ -52,13 +52,39 @@ def fan_out(turns: DataFrame, routes: DataFrame) -> DataFrame:
     return turns.join(F.broadcast(routes), cond, "inner")
 
 
+def passthrough(df: DataFrame, replaced: tuple[str, ...]) -> list[str]:
+    """df's columns minus `replaced`, backtick-quoted for selectExpr (a
+    reserved word or a dotted name then reads as one column)."""
+    return ["`" + c.replace("`", "``") + "`" for c in df.columns if c not in replaced]
+
+
+def outcome_exprs(
+    df: DataFrame, is_drop: str, reason: str, otherwise: str
+) -> tuple[str, str]:
+    """selectExpr items (outcome, drop_reason) for one stage's drop rule.
+
+    Rows where the SQL predicate `is_drop` holds are dropped with `reason`;
+    the rest get the SQL value `otherwise`. When df already carries
+    outcome/drop_reason, a row that arrives with an outcome other than
+    accepted (an earlier stage's drop) keeps both.
+    """
+    outcome = f"CASE WHEN {is_drop} THEN '{OUTCOME_DROPPED}' ELSE {otherwise} END"
+    why = f"CASE WHEN {is_drop} THEN '{reason}' ELSE CAST(NULL AS STRING) END"
+    if {"outcome", "drop_reason"} <= set(df.columns):
+        prior = f"(`outcome` <> '{OUTCOME_ACCEPTED}')"
+        outcome = f"CASE WHEN {prior} THEN `outcome` ELSE {outcome} END"
+        why = f"CASE WHEN {prior} THEN `drop_reason` ELSE {why} END"
+    return f"{outcome} AS outcome", f"{why} AS drop_reason"
+
+
 def with_send_outcome(routed: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Deterministic per-(row, sink) send outcome + drop reason.
 
     outcome = dropped iff md5(conv_id:turn_idx:sink) starts with
     cfg.drop_md5_prefix (~0.39% at the default 'ff') — the batch-engine
     stand-in for FAILED_NOT_RETRYABLE sends (exporter.go:252-255), chosen
-    so a pure-SQL oracle reproduces it exactly.
+    so a pure-SQL oracle reproduces it exactly. A row already dropped
+    upstream (e.g. a fatal truncation) keeps its outcome and reason.
     """
     cfg = cfg or PipelineConfig()
     # one selectExpr instead of two withColumns (r7 construction-cost
@@ -70,11 +96,10 @@ def with_send_outcome(routed: DataFrame, cfg: PipelineConfig | None = None) -> D
     )
     is_drop = f"(substring({sig}, 1, {len(pfx)}) = '{pfx}')"
     return routed.selectExpr(
-        *routed.columns,
-        f"CASE WHEN {is_drop} THEN '{OUTCOME_DROPPED}' "
-        f"ELSE '{OUTCOME_ACCEPTED}' END AS outcome",
-        f"CASE WHEN {is_drop} THEN '{DROP_SEND_NOT_RETRYABLE}' "
-        "ELSE CAST(NULL AS STRING) END AS drop_reason",
+        *passthrough(routed, ("outcome", "drop_reason")),
+        *outcome_exprs(
+            routed, is_drop, DROP_SEND_NOT_RETRYABLE, f"'{OUTCOME_ACCEPTED}'"
+        ),
     )
 
 

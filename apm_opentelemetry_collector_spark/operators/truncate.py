@@ -19,7 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..config import DROP_FATAL_ENCODING, OUTCOME_DROPPED, PipelineConfig
+from ..config import DROP_FATAL_ENCODING, PipelineConfig
+from .route import outcome_exprs, passthrough
 
 TRUNC_MARKER = "[TRUNCATED reason=max_span_size size="
 
@@ -28,7 +29,8 @@ def truncate_oversize(df: DataFrame, cfg: PipelineConfig | None = None) -> DataF
     """Adds `truncated` bool; rewrites oversized text; flags fatal drops.
 
     Output columns: text (possibly rewritten), truncated bool,
-    encode_dropped bool, drop_reason (FatalEncodingError when dropped).
+    drop_reason (FatalEncodingError when dropped), outcome (dropped when
+    dropped, else NULL). A row already dropped upstream keeps its outcome.
     """
     cfg = cfg or PipelineConfig()
     # One selectExpr instead of four withColumns (r7: each withColumn is a
@@ -48,18 +50,14 @@ def truncate_oversize(df: DataFrame, cfg: PipelineConfig | None = None) -> DataF
     trunc = f"({over} AND NOT {fatal})"
     cols = [
         c
-        if c != "text"
+        if c != "`text`"
         else (
             f"CASE WHEN {trunc} THEN concat({marker}, "
             f"substring(text, 1, greatest({keep}, 0))) ELSE text END AS text"
         )
-        for c in df.columns
+        for c in passthrough(df, ("truncated", "drop_reason", "outcome"))
     ]
-    return df.selectExpr(
-        *cols,
-        f"{trunc} AS truncated",
-        f"CASE WHEN {fatal} THEN '{DROP_FATAL_ENCODING}' "
-        "ELSE CAST(NULL AS STRING) END AS drop_reason",
-        f"CASE WHEN {fatal} THEN '{OUTCOME_DROPPED}' "
-        "ELSE CAST(NULL AS STRING) END AS outcome",
+    outcome, drop_reason = outcome_exprs(
+        df, fatal, DROP_FATAL_ENCODING, "CAST(NULL AS STRING)"
     )
+    return df.selectExpr(*cols, f"{trunc} AS truncated", drop_reason, outcome)

@@ -1,18 +1,18 @@
-"""End-to-end pipeline assembly: parse → enrich → route → aggregate.
+"""End-to-end pipeline assembly: validate → enrich → route → pack.
 
 The Spark lifecycle equivalent of the reference's EP1 flagship path
 (SURVEY.md §3): scan transcripts → validate (receiver protocol) →
-forward-fill (node multiplexing) → parse (span/attributes processors) →
-truncate (XL spans) → enrich (resource processor, broadcast) → fan-out
-(pipelines config) → send outcomes (exporter result codes) → shard
-assignment (omnishard md5 ranges) → record packing → metric aggregates
-(obsreport views).
+forward-fill (node multiplexing) → truncate (XL spans) → enrich
+(resource processor, broadcast) → fan-out (pipelines config) → send
+outcomes (exporter result codes) → shard assignment (omnishard md5
+ranges) → record packing.
 
-Everything is lazy; `run_pipeline` returns named DataFrames so callers
-(driver entry, tests, bench) choose what to materialize. The whole plan
-shuffles the fact table at most twice: once on conv_id (windows: protocol
-check, forward fill, packing order all reuse it) and once for the final
-salted aggregate; every config join is broadcast.
+Everything is lazy; `run_pipeline` builds exactly the chain the batch job
+writes: `routed` is the sink table (plans/job.py adds only conv_bucket)
+and every metric is aggregated from the written files, not here. The
+plan shuffles the fact table on conv_id (protocol check and forward fill
+share that window) and on (sink, shard_id) for the packing order; every
+config join is broadcast.
 """
 
 from __future__ import annotations
@@ -22,17 +22,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import PipelineConfig
+from ..config import OUTCOME_ACCEPTED, PipelineConfig
 from ..functions import sharding
-from ..functions.parse import with_parsed
-from ..operators.aggregate import (
-    flushed_stats,
-    receiver_counts,
-    sink_outcome_counts,
-)
 from ..operators.enrich import enrich
 from ..operators.forward_fill import forward_fill
-from ..operators.pack import assign_batches, record_stats
+from ..operators.pack import assign_batches
 from ..operators.route import fan_out, with_send_outcome
 from ..operators.truncate import truncate_oversize
 from ..operators.validate import split_valid
@@ -41,13 +35,8 @@ from ..sources import fixtures
 
 @dataclass
 class PipelineResult:
-    valid: DataFrame            # admitted turns (parsed, enriched)
-    rejected: DataFrame         # refused/dropped at the receiver
-    routed: DataFrame           # after fan-out + shard + outcome columns
-    records: DataFrame          # packed record stats per (sink, shard, batch)
-    sink_counts: DataFrame      # A9 flagship aggregate
-    receiver_counts: DataFrame  # A7
-    flushed: DataFrame          # A1/A8
+    rejected: DataFrame  # refused/dropped at the receiver
+    routed: DataFrame    # fan-out + outcome + shard + batch_no: the sink table
 
 
 def run_pipeline(
@@ -57,7 +46,6 @@ def run_pipeline(
     routes: DataFrame | None = None,
     service_dim: DataFrame | None = None,
     shards: list[dict] | None = None,
-    use_pandas_udf_parse: bool = False,
 ) -> PipelineResult:
     cfg = cfg or PipelineConfig()
     routes = routes if routes is not None else fixtures.routes_df(spark)
@@ -66,42 +54,23 @@ def run_pipeline(
     )
     shard_list = shards if shards is not None else sharding.even_shards(cfg.n_shards)
 
-    # receiver stage: protocol validation (F1/S4)
+    # receiver stage: protocol validation (F1/S4) + node multiplexing (S3/W1)
     valid, rejected = split_valid(transcripts, cfg.backpressure_on)
-    # node multiplexing (S3/W1) — window by default; bucketed anchors
-    # join under hot-conversation skew (cfg.fill_strategy)
-    if cfg.fill_strategy == "join":
-        from ..operators.forward_fill import forward_fill_join
-
-        valid = forward_fill_join(valid)
-    else:
-        valid = forward_fill(valid)
-    # parse (P1) — vectorized; column-expression grok by default
-    valid = with_parsed(valid, use_pandas_udf=use_pandas_udf_parse)
-    # XL truncation (P4) — rewrites text, may mark fatal drops
-    valid = truncate_oversize(valid, cfg).drop("outcome", "drop_reason")
+    valid = forward_fill(valid)
+    # XL truncation (P4) — rewrites text, marks fatal drops
+    valid = truncate_oversize(valid, cfg)
     # enrich (J7/P9/P2)
     valid = enrich(valid, service_dim)
 
-    # routing: fan-out (J6) + deterministic send outcomes (T6/A5/A6)
+    # routing: fan-out (J6) + deterministic send outcomes (T6/A5/A6); a
+    # fatal truncation drop keeps its outcome
     routed = fan_out(valid, routes)
     routed = with_send_outcome(routed, cfg)
     # shard assignment (J1-J3) on the routed stream, like the omnishard
     # exporter sharding each pipeline's output
     routed = sharding.assign_shard(routed, shard_list, "conv_id", "left")
-
-    # record packing (W3) on accepted rows only — dropped sends never
-    # reach a record (hooks.go:128-160 orders drop before flush)
-    accepted = routed.filter(F.col("outcome") == "accepted")
-    packed = assign_batches(accepted, cfg)
-    records = record_stats(packed)
-
-    return PipelineResult(
-        valid=valid,
-        rejected=rejected,
-        routed=routed,
-        records=records,
-        sink_counts=sink_outcome_counts(routed, cfg, salted=True),
-        receiver_counts=receiver_counts(valid, rejected),
-        flushed=flushed_stats(records),
-    )
+    # record packing (W3): batch_no for accepted rows only, NULL for
+    # dropped sends — they never reach a record (hooks.go:128-160 orders
+    # drop before flush); one scan via the gated cumsum
+    routed = assign_batches(routed, cfg, gate=F.col("outcome") == OUTCOME_ACCEPTED)
+    return PipelineResult(rejected=rejected, routed=routed)

@@ -24,7 +24,7 @@ def register_views(
 ) -> list[str]:
     """Register temp views: the ten parquet tables, `transcripts`
     (frozen events→transcripts derivation), and — when
-    include_pipeline — `routed` (parse→enrich→route→outcome output).
+    include_pipeline — `routed` (enrich→route→outcome→shard→pack output).
     Returns the view names registered."""
     from ..config import PipelineConfig
     from ..plans.pipeline import run_pipeline

@@ -18,7 +18,7 @@ Protocol (derived empirically — full notes in BENCH/BASELINE.md):
     (~120 MB) is chosen for the DATA, not the core count — undersizing
     to cores*2 makes 4 concurrent 2 GB sort tasks blow the execution-
     memory budget and spill (measured: 206 s vs 44 s).
-  * measured job: the north-rule metric parse → enrich → route →
+  * measured job: the north-rule metric enrich → route →
     aggregate, terminal action = collecting the per-sink outcome
     aggregate. Sink-table writes are excluded here because a laptop's
     single disk does not scale with cores (a cluster's aggregate disk
@@ -55,6 +55,7 @@ sys.path.insert(0, {root!r})
 from apm_opentelemetry_collector_spark.session import get_spark
 from apm_opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from apm_opentelemetry_collector_spark.config import PipelineConfig
+from apm_opentelemetry_collector_spark.operators.aggregate import sink_outcome_counts
 from apm_opentelemetry_collector_spark.sources.transcripts import synth_transcripts
 from pyspark.sql import functions as F
 
@@ -70,7 +71,7 @@ spark.range(1000).select(F.sum("id")).collect()  # JVM/codegen warm-up
 cfg = PipelineConfig(n_shards=32)
 res = run_pipeline(spark, spark.read.parquet(inp), cfg)
 t0 = time.time()
-res.sink_counts.collect()
+sink_outcome_counts(res.routed, cfg).collect()
 print(json.dumps({{"cores": cores, "sec": time.time() - t0}}))
 """
 

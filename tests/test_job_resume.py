@@ -4,6 +4,7 @@ invariants, encoder.go:226-263)."""
 
 from __future__ import annotations
 
+import contextlib
 
 import pytest
 
@@ -40,7 +41,8 @@ def test_kill_replay_resumes_incomplete_only(spark, tmp_path):
     clean = {m["bucket"]: m for m in read_all_manifests(clean_dir)}
     assert resumed.keys() == clean.keys() == set(range(N_BUCKETS))
     for b in clean:
-        for key in ("routed_rows", "by_outcome", "rejected_rows", "checksum"):
+        for key in ("n_buckets", "routed_rows", "by_outcome", "rejected_rows",
+                    "checksum"):
             assert resumed[b][key] == clean[b][key], (b, key)
 
     # idempotent re-run: nothing left to do
@@ -54,9 +56,24 @@ def test_single_pass_mode(spark, tmp_path):
     res = run_job(spark, tr, out_dir, n_buckets=None)
     assert res.buckets_run == [0]
     m = read_all_manifests(out_dir)[0]
-    assert m["routed_rows"] > 0
+    assert m["routed_rows"] > 0 and m["n_buckets"] is None
     # conservation recorded in the manifest
     assert m["routed_rows"] == sum(m["by_outcome"].values())
+
+
+@pytest.mark.parametrize("first, second", [(None, 16), (16, 8)])
+def test_resume_refuses_other_bucket_layout(spark, tmp_path, first, second):
+    """Manifests record n_buckets: bucket ids of another layout name other
+    rows, so resuming under it would skip or double-count rows."""
+    tr = synth_transcripts(spark, n_rows=1_000, n_convs=20)
+    out_dir = str(tmp_path / "job")
+    with contextlib.suppress(RuntimeError):
+        run_job(spark, tr, out_dir, n_buckets=first, fail_after=1)
+    assert len(completed_buckets(out_dir)) == 1
+
+    with pytest.raises(ValueError, match=f"n_buckets={first}.*n_buckets={second}"):
+        run_job(spark, tr, out_dir, n_buckets=second)
+    assert len(completed_buckets(out_dir)) == 1
 
 
 def test_resume_reuses_materialized_bucketed_input(spark, tmp_path):

@@ -111,7 +111,10 @@ def test_backpressure_off_drops_silently(spark):
 def test_truncation_rewrites_oversized_text(spark):
     cfg = PipelineConfig(max_span_size=100)
     rows = [("c", 0, "user", "x" * 500, None), ("c", 1, "user", "small", None)]
-    out = {r["turn_idx"]: r for r in truncate_oversize(turns(spark, rows), cfg).collect()}
+    # passthrough names that parse only when quoted: a reserved word, a dot
+    df = turns(spark, rows).withColumn("select", F.lit(1)).withColumn("a.b", F.lit(2))
+    out = {r["turn_idx"]: r for r in truncate_oversize(df, cfg).collect()}
+    assert out[0]["select"] == 1 and out[0]["a.b"] == 2
     assert out[0]["truncated"] and out[0]["text"].startswith("[TRUNCATED reason=")
     assert "size=500" in out[0]["text"]
     assert not out[1]["truncated"] and out[1]["text"] == "small"
@@ -121,8 +124,17 @@ def test_truncation_rewrites_oversized_text(spark):
 def test_truncation_fatal_drop_when_cap_below_marker(spark):
     cfg = PipelineConfig(max_span_size=10)  # marker alone exceeds the cap
     rows = [("c", 0, "user", "y" * 50, None)]
-    r = truncate_oversize(turns(spark, rows), cfg).collect()[0]
+    df = turns(spark, rows).withColumn("a.b", F.lit(2))
+    truncated = truncate_oversize(df, cfg)
+    r = truncated.collect()[0]
     assert r["outcome"] == "dropped" and r["drop_reason"] == "FatalEncodingError"
+    # the send outcome keeps the fatal drop and adds no second copy of
+    # the outcome columns
+    sent = with_send_outcome(truncated.withColumn("sink", F.lit("s")), cfg)
+    assert len(sent.columns) == len(set(sent.columns))
+    r = sent.collect()[0]
+    assert r["outcome"] == "dropped" and r["drop_reason"] == "FatalEncodingError"
+    assert r["a.b"] == 2
 
 
 # --- packing goldens (shard_encoder_test.go:84-170) --------------------------
