@@ -43,7 +43,6 @@ from apm_opentelemetry_collector_spark.operators import sample as smp
 from apm_opentelemetry_collector_spark.operators.sample import (
     sample_conversations_nibble,
 )
-from apm_opentelemetry_collector_spark.operators.similarity import ivf_knn
 from apm_opentelemetry_collector_spark.operators.translate import (
     memorymonitor_scrape,
     signalfx_oracle_sql,
@@ -756,19 +755,6 @@ def q_record_encode_stats(spark, sf_dir):
     )
 
 
-def q_multimodal_features(spark, sf_dir):
-    """Multimodal plumbing (rows-only check: binary payloads + stubbed
-    decoder): synthesize media per document, extract features via the
-    Arrow-batched mapInPandas pass."""
-    from apm_opentelemetry_collector_spark.operators.multimodal import (
-        extract_features,
-        synth_media,
-    )
-
-    docs = _load(spark, sf_dir, "documents").select("doc_id")
-    return extract_features(synth_media(docs)).drop("batch_rows")
-
-
 def q_counter_rate(spark, sf_dir):
     """SignalFx counter semantics: delta of a cumulative counter with
     reset handling (decrease ⇒ restart ⇒ delta = post-reset value).
@@ -914,24 +900,6 @@ def q_contamination_cross_source(spark, sf_dir):
     return cross_source_contamination(docs, threshold=0.5)
 
 
-def q_ivf_knn(spark, sf_dir):
-    emb = _load(spark, sf_dir, "embeddings")
-    out = ivf_knn(emb, emb.filter(F.col("vec_id") < 5), k=5, n_probe=2)
-    return out.withColumn("cos", F.round("cos", 6))
-
-
-def q_lsh_knn(spark, sf_dir):
-    """ANN scale path #2: hyperplane-LSH buckets (multi-probe Hamming-1)
-    + exact cosine verify — the LSH-bucketed alternative to IVF."""
-    from apm_opentelemetry_collector_spark.operators.similarity import (
-        hyperplane_lsh_knn,
-    )
-
-    emb = _load(spark, sf_dir, "embeddings")
-    out = hyperplane_lsh_knn(emb, emb.filter(F.col("vec_id") < 5), k=5)
-    return out.withColumn("cos", F.round("cos", 6))
-
-
 WRS_K = 50
 
 
@@ -1015,18 +983,6 @@ def q_bigram_lm_scores(spark, sf_dir):
     return bigram_lm_scores(_load(spark, sf_dir, "documents"))
 
 
-def q_pq_knn(spark, sf_dir):
-    """Product-quantization ANN (ADC): per-subspace Lloyd codebooks →
-    one map-side encode fold → broadcast-query asymmetric distances →
-    per-query top-k. The memory-bounded production ANN: a 64-dim float
-    vector compresses to 4 small ints before the scan."""
-    from apm_opentelemetry_collector_spark.operators.similarity import pq_knn
-
-    emb = _load(spark, sf_dir, "embeddings")
-    out = pq_knn(emb, emb.filter(F.col("vec_id") < 5), k=5)
-    return out.withColumn("adc_d2", F.round("adc_d2", 6))
-
-
 def q_semdedup(spark, sf_dir):
     """SemDeDup semantic deduplication: k-means clusters bound the
     pairwise cosine comparison, then each doc keeps iff no smaller-id
@@ -1035,19 +991,6 @@ def q_semdedup(spark, sf_dir):
     from apm_opentelemetry_collector_spark.operators.dedup import semdedup
 
     return semdedup(_load(spark, sf_dir, "embeddings"))
-
-
-def q_ivfpq_knn(spark, sf_dir):
-    """IVFADC ANN: coarse cell pruning (n_probe nearest centroids by
-    squared L2) + product-quantized RESIDUALS scored by asymmetric
-    distance — the production composition of ivf_knn and pq_knn. The
-    postings table that crosses the cell join carries only
-    (id, cell, m codes); codebooks ride the tiny probed side."""
-    from apm_opentelemetry_collector_spark.operators.similarity import ivfpq_knn
-
-    emb = _load(spark, sf_dir, "embeddings")
-    out = ivfpq_knn(emb, emb.filter(F.col("vec_id") < 5), k=5)
-    return out.withColumn("adc_d2", F.round("adc_d2", 6))
 
 
 def q_ewma_anomalies(spark, sf_dir):
@@ -1405,20 +1348,6 @@ def q_dedup_components_star(spark, sf_dir):
     return dedup_components_star(dd.minhash_lsh_dedup(docs, threshold=0.5))
 
 
-def q_video_frame_sample(spark, sf_dir):
-    """Video frame sampling: uniform-stride pick of 3 frames per fake
-    video payload, decoded in Arrow batches (mapInPandas). The payload
-    is a pure function of doc_id, so the oracle recomputes each sampled
-    frame's checksum in SQL — the decode path itself is exact-checked."""
-    from apm_opentelemetry_collector_spark.operators.multimodal import (
-        sample_frames,
-        synth_video,
-    )
-
-    docs = _load(spark, sf_dir, "documents").select("doc_id")
-    return sample_frames(synth_video(docs))
-
-
 RATE_WINDOW_S = 86400
 RATE_MAX_EVENTS = 4
 
@@ -1498,37 +1427,6 @@ def q_robust_outliers(spark, sf_dir):
     return robust_zscore_outliers(ev, "value", ["event_type"], ["event_id"])
 
 
-TUNE_TARGET_RECALL = 0.5
-TUNE_CANDIDATES = (1, 2, 4, 8)
-
-
-def q_tune_n_probe(spark, sf_dir):
-    """Recall-driven knob tuning: the smallest IVF n_probe whose
-    recall@10 on the query sample meets TUNE_TARGET_RECALL (else the
-    highest-recall candidate). One row: n_probe, n_hits, n_true, recall."""
-    from apm_opentelemetry_collector_spark.operators.similarity import tune_n_probe
-
-    emb = _load(spark, sf_dir, "embeddings")
-    return tune_n_probe(
-        emb,
-        emb.filter(F.col("vec_id") < 5),
-        target_recall=TUNE_TARGET_RECALL,
-        candidates=TUNE_CANDIDATES,
-        k=10,
-    )
-
-
-def q_ann_recall(spark, sf_dir):
-    """Recall@10 of each ANN variant (IVF n_probe 1/2/4, LSH multi-probe
-    off/on) vs exact brute force — the tuning metric for the approximate
-    paths (VERDICT r2 #3). Oracle-exact: hit membership is deterministic
-    on both engines."""
-    from apm_opentelemetry_collector_spark.operators.similarity import ann_recall
-
-    emb = _load(spark, sf_dir, "embeddings")
-    return ann_recall(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-
 # ------------------------------------------------------------------ driver
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-sink outcome aggregate of the full pipeline at sf0.001."""
@@ -1558,7 +1456,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pack_sequences": q_pack_sequences,
         "mixture_weights": q_mixture_weights,
         "dedup_canonical": q_dedup_canonical,
-        "ivfpq_knn": q_ivfpq_knn,
         "semdedup": q_semdedup,
         "gopher_quality_filters": q_gopher_quality_filters,
         "gopher_repetition": q_gopher_repetition,
@@ -1571,7 +1468,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- new in r5 ------------------------------------------------------
         "repeated_spans": q_repeated_spans,
         "ewma_anomalies": q_ewma_anomalies,
-        "pq_knn": q_pq_knn,
         "bigram_lm_scores": q_bigram_lm_scores,
         # --- new in r4 ------------------------------------------------------
         "repeated_passages": q_repeated_passages,
@@ -1580,8 +1476,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- r4-touched implementations (argmin assignment; checkpoint
         # discipline; epoch-floor oracle) — kept inside the window ----------
         "kmeans_assign": q_kmeans_assign,
-        "ann_recall": q_ann_recall,
-        "tune_n_probe": q_tune_n_probe,
         # --- r7-touched implementations rotated INTO the window (shingle
         # per-doc array_distinct; spread_small_scan in the vector bases) —
         # swapped with rate_limit/alert/counter_rate/hll, all untouched
@@ -1591,8 +1485,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_components": q_dedup_components,
         # --- r2/r3 backlog (first driver-checked in r3) ---------------------
         "embedding_neardup": q_embedding_neardup,
-        "ivf_knn": q_ivf_knn,
-        "lsh_knn": q_lsh_knn,
         "stratified_sample": q_stratified_sample,
         "cms_user_counts": q_cms_user_counts,
         "knn_bruteforce": q_knn_bruteforce,
@@ -1605,13 +1497,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # entries can never bank a hash-MATCH, so they must STAY inside
         # the driver's 50-window (tests/test_query_window.py enforces)
         "record_encode_stats": q_record_encode_stats,
-        "multimodal_features": q_multimodal_features,
         "tdigest_value_quantiles": q_tdigest_value_quantiles,  # rows-only
         # --- new in r3 ------------------------------------------------------
         "weighted_reservoir": q_weighted_reservoir,
         "tfidf_top_terms": q_tfidf_top_terms,
         "leakage_safe_split": q_leakage_safe_split,
-        "video_frame_sample": q_video_frame_sample,
         "events_funnel": q_events_funnel,
         "cohort_retention": q_cohort_retention,
         "events_json_props": q_events_json_props,
@@ -1857,62 +1747,6 @@ SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos FROM ranked WHERE rank 
 """
 
 
-def _lsh_knn_sql(
-    k: int = 5, n_planes: int = 8, dim: int = 64, multi_probe: bool = True
-) -> str:
-    """Oracle twin of hyperplane_lsh_knn: the SAME Python-derived ±1
-    hyperplane literals, bucket = sum of sign bits, multi-probe = bucket
-    plus its n_planes Hamming-1 flips."""
-    from apm_opentelemetry_collector_spark.operators.similarity import (
-        hyperplane_signs,
-    )
-
-    planes = hyperplane_signs(n_planes, dim)
-
-    def bucket_expr(v: str) -> str:
-        terms = []
-        for p, w in enumerate(planes):
-            lit = "[" + ", ".join("1.0" if x > 0 else "-1.0" for x in w) + "]"
-            terms.append(
-                f"(CASE WHEN list_dot_product({v}, {lit}) > 0 THEN {2 ** p} ELSE 0 END)"
-            )
-        return " + ".join(terms)
-
-    cos = _COS_SQL.format(a="p.qv", b="cb.cv")
-    probes = " UNION ALL ".join(
-        ["SELECT query_id, qv, bucket AS probe FROM qb"]
-        + (
-            [
-                f"SELECT query_id, qv, xor(bucket, {1 << p}) FROM qb"
-                for p in range(n_planes)
-            ]
-            if multi_probe
-            else []
-        )
-    )
-    return f"""
-WITH cb AS (
-  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv,
-         {bucket_expr("CAST(embedding AS DOUBLE[])")} AS bucket
-  FROM embeddings
-), qb AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv,
-         {bucket_expr("CAST(embedding AS DOUBLE[])")} AS bucket
-  FROM embeddings WHERE vec_id < 5
-), probes AS ({probes}
-), scored AS (
-  SELECT p.query_id, cb.neighbor_id, {cos} AS cos
-  FROM probes p JOIN cb ON cb.bucket = p.probe
-  WHERE p.query_id <> cb.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos FROM ranked WHERE rank <= {k}
-"""
-
-
 def _hll_users_sql() -> str:
     from apm_opentelemetry_collector_spark.functions.sketch import hll_sql
 
@@ -2007,94 +1841,6 @@ SELECT a.id AS id_a, b.id AS id_b, round({cos}, 6) AS cos
 FROM base a JOIN base b ON a.blk = b.blk AND a.id < b.id
 WHERE {cos} >= {threshold}
 """
-
-
-def _ivf_sql(k: int = 5, n_probe: int = 2) -> str:
-    ccos = _COS_SQL.format(a="q.qv", b="ce.centroid")
-    cos = _COS_SQL.format(a="p.qv", b="co.cv")
-    return f"""
-WITH comp AS (
-  SELECT label AS cluster, CAST(j AS INTEGER) AS pos,
-         CAST(embedding AS DOUBLE[])[CAST(j AS INTEGER) + 1] AS x
-  FROM embeddings, range(0, 64) t(j)
-), means AS (
-  SELECT cluster, pos,
-         CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-  FROM comp GROUP BY cluster, pos
-), cents AS (
-  SELECT cluster, list(m ORDER BY pos) AS centroid FROM means GROUP BY cluster
-), q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id < 5
-), probe AS (
-  SELECT query_id, qv, cluster FROM (
-    SELECT q.query_id, q.qv, ce.cluster,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {ccos} DESC, ce.cluster) AS crank
-    FROM q, cents ce
-  ) WHERE crank <= {n_probe}
-), co AS (
-  SELECT vec_id AS neighbor_id, label AS cluster, CAST(embedding AS DOUBLE[]) AS cv
-  FROM embeddings
-), scored AS (
-  SELECT p.query_id, co.neighbor_id, {cos} AS cos
-  FROM probe p JOIN co ON co.cluster = p.cluster
-  WHERE p.query_id <> co.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos FROM ranked WHERE rank <= {k}
-"""
-
-
-def _ann_recall_sql(k: int = 10) -> str:
-    """Recall@k oracle: each variant's (query, neighbor) pairs joined
-    against the brute-force pairs — composed from the SAME parameterized
-    builders the standalone oracles use, so the variants stay in
-    lockstep with their Spark twins."""
-    variants = {
-        "ivf_p1": _ivf_sql(k=k, n_probe=1),
-        "ivf_p2": _ivf_sql(k=k, n_probe=2),
-        "ivf_p4": _ivf_sql(k=k, n_probe=4),
-        "lsh_mp0": _lsh_knn_sql(k=k, multi_probe=False),
-        "lsh_mp1": _lsh_knn_sql(k=k, multi_probe=True),
-    }
-    hits = " UNION ALL ".join(
-        f"""SELECT '{name}' AS method, CAST(count(*) AS BIGINT) AS n_hits
-  FROM ({sql}) a JOIN bf USING (query_id, neighbor_id)"""
-        for name, sql in variants.items()
-    )
-    return f"""
-WITH bf AS MATERIALIZED (SELECT query_id, neighbor_id FROM ({_knn_sql(k=k)})),
-hits AS ({hits})
-SELECT method, n_hits,
-       CAST((SELECT count(*) FROM bf) AS BIGINT) AS n_true,
-       round(n_hits * 1.0 / (SELECT count(*) FROM bf), 6) AS recall
-FROM hits"""
-
-
-def _tune_n_probe_sql(k: int = 10) -> str:
-    cand = " UNION ALL ".join(
-        f"""SELECT {p} AS n_probe, CAST(count(*) AS BIGINT) AS n_hits
-  FROM ({_ivf_sql(k=k, n_probe=p)}) a JOIN bf USING (query_id, neighbor_id)"""
-        for p in TUNE_CANDIDATES
-    )
-    return f"""
-WITH bf AS MATERIALIZED (SELECT query_id, neighbor_id FROM ({_knn_sql(k=k)})),
-cand AS ({cand}),
-scored AS (
-  SELECT n_probe, n_hits,
-         CAST((SELECT count(*) FROM bf) AS BIGINT) AS n_true,
-         round(n_hits * 1.0 / (SELECT count(*) FROM bf), 6) AS recall
-  FROM cand
-)
-SELECT n_probe, n_hits, n_true, recall FROM scored
-ORDER BY (CASE WHEN recall >= {TUNE_TARGET_RECALL} THEN 0 ELSE 1 END),
-         (CASE WHEN recall >= {TUNE_TARGET_RECALL} THEN n_probe ELSE -recall END),
-         n_probe
-LIMIT 1"""
 
 
 def _components_sql(iters: int | None = None) -> str:
@@ -2193,240 +1939,6 @@ def _kmeans_sql(k: int | None = None, iters: int | None = None, dim: int = 64) -
             )
     return (
         "WITH " + ",\n".join(ctes) + f"\nSELECT id AS vec_id, cluster FROM a{iters}"
-    )
-
-
-def _pq_train_ctes(
-    m_subspaces: int,
-    n_codes: int,
-    iters: int,
-    sub: int,
-    src: str = "pts",
-    vcol: str = "v",
-) -> list[str]:
-    """Per-subspace Lloyd-training CTEs shared by _pq_sql and
-    _ivfpq_sql: sub{m} slices `vcol` out of `src`, c0_{m} seeds from
-    the lowest ids, a{i}_{m}/m{i}_{m}/c{i}_{m} unroll the rounds with
-    the same decimal means and (d2 ASC, cluster ASC) tie rule as the
-    Spark _pq_train fold."""
-    ctes = []
-    for m in range(m_subspaces):
-        lo, hi = m * sub + 1, (m + 1) * sub
-        d2 = (
-            "(list_dot_product(p.v, p.v) + list_dot_product(c.c, c.c)"
-            " - 2.0 * list_dot_product(p.v, c.c))"
-        )
-        ctes.append(f"sub{m} AS (SELECT id, {vcol}[{lo}:{hi}] AS v FROM {src})")
-        ctes.append(
-            f"""c0_{m} AS (
-  SELECT row_number() OVER (ORDER BY id ASC) - 1 AS cluster, v AS c
-  FROM (SELECT id, v FROM sub{m} ORDER BY id ASC LIMIT {n_codes})
-)"""
-        )
-        for i in range(1, iters + 1):
-            ctes.append(
-                f"""a{i}_{m} AS (
-  SELECT id, v, cluster FROM (
-    SELECT p.id, p.v, c.cluster,
-           row_number() OVER (PARTITION BY p.id ORDER BY {d2} ASC, c.cluster ASC) AS rn
-    FROM sub{m} p, c{i - 1}_{m} c
-  ) WHERE rn = 1
-)"""
-            )
-            if i < iters:
-                ctes.append(
-                    f"""m{i}_{m} AS (
-  SELECT cluster, CAST(j AS INTEGER) AS pos,
-         CAST(sum(CAST(v[CAST(j AS INTEGER) + 1] AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-  FROM a{i}_{m}, range(0, {sub}) t(j) GROUP BY cluster, pos
-)"""
-                )
-                ctes.append(
-                    f"c{i}_{m} AS (SELECT cluster, list(m ORDER BY pos) AS c FROM m{i}_{m} GROUP BY cluster)"
-                )
-    return ctes
-
-
-def _pq_enc_cte(
-    m_subspaces: int, iters: int, carry: str = "", extra_join: str = ""
-) -> str:
-    """The encoded-corpus CTE: final-round assignments joined across
-    subspaces; `carry`/`extra_join` optionally pull extra columns in
-    (e.g. the coarse cell for IVFADC postings via a join back to res)."""
-    joins = " ".join(
-        f"JOIN a{iters}_{m} e{m} USING (id)" for m in range(1, m_subspaces)
-    )
-    code_sel = ", ".join(
-        (f"e{m}.cluster AS code{m}" if m else "e0.cluster AS code0")
-        for m in range(m_subspaces)
-    )
-    return (
-        f"enc AS (SELECT e0.id, {carry}{code_sel} "
-        f"FROM a{iters}_0 e0 {joins} {extra_join})"
-    )
-
-
-def _pq_sql(
-    k: int = 5,
-    m_subspaces: int | None = None,
-    n_codes: int | None = None,
-    iters: int | None = None,
-    dim: int = 64,
-) -> str:
-    """Unrolled-CTE twin of operators/similarity.pq_knn: per subspace
-    the same fixed Lloyd rounds as _kmeans_sql over the SLICED
-    subvectors; codes = the a{iters} assignment, ADC codebook =
-    c{iters-1}; distance = left-to-right sum of the m dot-composed
-    squared-L2 subspace terms — bit-identical to the Spark fold."""
-    from apm_opentelemetry_collector_spark.operators.similarity import (
-        PQ_CODES,
-        PQ_ITERS,
-        PQ_M,
-    )
-
-    m_subspaces = m_subspaces or PQ_M
-    n_codes = n_codes or PQ_CODES
-    iters = iters or PQ_ITERS
-    sub = dim // m_subspaces
-    ctes = [
-        "pts AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)"
-    ]
-    ctes += _pq_train_ctes(m_subspaces, n_codes, iters, sub)
-    ctes.append(_pq_enc_cte(m_subspaces, iters))
-    ctes.append("q AS (SELECT id AS query_id, v AS qv FROM pts WHERE id < 5)")
-    book_joins = " ".join(
-        f"JOIN c{iters - 1}_{m} b{m} ON b{m}.cluster = e.code{m}"
-        for m in range(m_subspaces)
-    )
-    terms = " + ".join(
-        f"(list_dot_product(q.qv[{m * sub + 1}:{(m + 1) * sub}], q.qv[{m * sub + 1}:{(m + 1) * sub}])"
-        f" + list_dot_product(b{m}.c, b{m}.c)"
-        f" - 2.0 * list_dot_product(q.qv[{m * sub + 1}:{(m + 1) * sub}], b{m}.c))"
-        for m in range(m_subspaces)
-    )
-    ctes.append(
-        f"""pairs AS (
-  SELECT q.query_id, e.id AS neighbor_id, {terms} AS adc_d2
-  FROM enc e {book_joins} CROSS JOIN q
-  WHERE q.query_id <> e.id
-)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT query_id, neighbor_id, rank, round(adc_d2, 6) AS adc_d2 FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY adc_d2 ASC, neighbor_id ASC) AS rank
-  FROM pairs
-) WHERE rank <= {k}"""
-    )
-
-
-def _ivfpq_sql(
-    k: int = 5,
-    n_probe: int | None = None,
-    m_subspaces: int | None = None,
-    n_codes: int | None = None,
-    iters: int | None = None,
-    dim: int = 64,
-) -> str:
-    """Unrolled-CTE twin of operators/similarity.ivfpq_knn (IVFADC):
-    decimal-exact coarse centroids per label cell, IEEE-double
-    residuals, the SAME _pq_train_ctes Lloyd unroll over the residuals,
-    squared-L2 probe of the n_probe nearest cells (ties to the lower
-    cell), per-(query, cell) query residual, and ADC as the
-    left-to-right sum of the m dot-composed squared-L2 subspace terms —
-    bit-identical to the Spark folds."""
-    from apm_opentelemetry_collector_spark.operators.similarity import (
-        IVFPQ_NPROBE,
-        PQ_CODES,
-        PQ_ITERS,
-        PQ_M,
-    )
-
-    n_probe = n_probe or IVFPQ_NPROBE
-    m_subspaces = m_subspaces or PQ_M
-    n_codes = n_codes or PQ_CODES
-    iters = iters or PQ_ITERS
-    sub = dim // m_subspaces
-    d2qc = (
-        "(list_dot_product(q.qv, q.qv) + list_dot_product(ce.centroid, ce.centroid)"
-        " - 2.0 * list_dot_product(q.qv, ce.centroid))"
-    )
-    ctes = [
-        "pts AS MATERIALIZED (SELECT vec_id AS id, label AS cell, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
-        f"""ccomp AS (
-  SELECT cell, CAST(j AS INTEGER) AS pos, v[CAST(j AS INTEGER) + 1] AS x
-  FROM pts, range(0, {dim}) t(j)
-)""",
-        """cmeans AS MATERIALIZED (
-  SELECT cell, pos,
-         CAST(sum(CAST(x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-  FROM ccomp GROUP BY cell, pos
-)""",
-        "ccents AS (SELECT cell, list(m ORDER BY pos) AS centroid FROM cmeans GROUP BY cell)",
-        """res AS MATERIALIZED (
-  SELECT p.id, p.cell, list(p.v[cm.pos + 1] - cm.m ORDER BY cm.pos) AS rv
-  FROM pts p JOIN cmeans cm ON cm.cell = p.cell
-  GROUP BY p.id, p.cell
-)""",
-    ]
-    ctes += _pq_train_ctes(m_subspaces, n_codes, iters, sub, src="res", vcol="rv")
-    ctes.append(
-        _pq_enc_cte(
-            m_subspaces,
-            iters,
-            carry="r.cell, ",
-            extra_join="JOIN res r ON r.id = e0.id",
-        )
-    )
-    ctes.append(
-        "q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id < 5)"
-    )
-    ctes.append(
-        f"""probe AS (
-  SELECT query_id, qv, cell FROM (
-    SELECT q.query_id, q.qv, ce.cell,
-           row_number() OVER (PARTITION BY q.query_id
-                              ORDER BY {d2qc} ASC, ce.cell ASC) AS crank
-    FROM q, ccents ce
-  ) WHERE crank <= {n_probe}
-)"""
-    )
-    ctes.append(
-        """qres AS (
-  SELECT p.query_id, p.cell, list(p.qv[cm.pos + 1] - cm.m ORDER BY cm.pos) AS qr
-  FROM probe p JOIN cmeans cm ON cm.cell = p.cell
-  GROUP BY p.query_id, p.cell
-)"""
-    )
-    book_joins = " ".join(
-        f"JOIN c{iters - 1}_{m} b{m} ON b{m}.cluster = e.code{m}"
-        for m in range(m_subspaces)
-    )
-    terms = " + ".join(
-        f"(list_dot_product(r.qr[{m * sub + 1}:{(m + 1) * sub}], r.qr[{m * sub + 1}:{(m + 1) * sub}])"
-        f" + list_dot_product(b{m}.c, b{m}.c)"
-        f" - 2.0 * list_dot_product(r.qr[{m * sub + 1}:{(m + 1) * sub}], b{m}.c))"
-        for m in range(m_subspaces)
-    )
-    ctes.append(
-        f"""pairs AS (
-  SELECT r.query_id, e.id AS neighbor_id, {terms} AS adc_d2
-  FROM qres r JOIN enc e ON e.cell = r.cell {book_joins}
-  WHERE r.query_id <> e.id
-)"""
-    )
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-SELECT query_id, neighbor_id, rank, round(adc_d2, 6) AS adc_d2 FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY adc_d2 ASC, neighbor_id ASC) AS rank
-  FROM pairs
-) WHERE rank <= {k}"""
     )
 
 
@@ -2571,38 +2083,6 @@ SELECT b.id AS vec_id, b.cluster,
 FROM base b LEFT JOIN agg g ON g.id_a = b.id"""
 
 
-def _frame_sample_sql() -> str:
-    """Oracle twin of sample_frames∘synth_video: frame f of doc d has
-    bytes md5('d:f')×2, so its checksum is (2·Σ md5-bytes) mod 65536 —
-    recomputable from doc_id alone, exactly like the image-features
-    oracle."""
-    from apm_opentelemetry_collector_spark.operators.multimodal import (
-        N_FRAME_SAMPLES,
-    )
-
-    n = N_FRAME_SAMPLES
-    return f"""
-WITH v AS (
-  SELECT doc_id, CAST(doc_id % 12 + 4 AS INTEGER) AS n_frames FROM documents
-), s AS (
-  SELECT doc_id, n_frames,
-         CAST((CAST(j AS INTEGER) * n_frames) // {n} AS INTEGER) AS frame_idx
-  FROM (SELECT doc_id, n_frames, unnest(range(0, {n})) AS j FROM v)
-), h AS (
-  SELECT doc_id, n_frames, frame_idx,
-         md5(CAST(doc_id AS VARCHAR) || ':' || CAST(frame_idx AS VARCHAR)) AS hx
-  FROM s
-), b AS (
-  SELECT doc_id, n_frames, frame_idx,
-         (instr('0123456789abcdef', substr(hx, 2*j+1, 1)) - 1) * 16
-       + (instr('0123456789abcdef', substr(hx, 2*j+2, 1)) - 1) AS byte
-  FROM (SELECT doc_id, n_frames, frame_idx, hx, unnest(range(0, 16)) AS j FROM h)
-)
-SELECT doc_id, frame_idx, n_frames,
-       CAST((2 * sum(byte)) % 65536 AS INTEGER) AS frame_checksum
-FROM b GROUP BY doc_id, frame_idx, n_frames"""
-
-
 def _ewma_sql() -> str:
     from apm_opentelemetry_collector_spark.operators.outliers import (
         ewma_anomalies_sql,
@@ -2735,20 +2215,6 @@ FROM transcripts GROUP BY conv_id""",
         # the fake payload is a pure function of doc_id (header + 4×md5
         # bytes), so even the mapInPandas decode path has an exact twin:
         # pixel_checksum = 4 * (sum of md5 digest bytes) % 65536
-        "multimodal_features": """
-WITH m AS (
-  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents
-), b AS (
-  SELECT doc_id,
-         (instr('0123456789abcdef', substr(hx, 2*j+1, 1)) - 1) * 16
-       + (instr('0123456789abcdef', substr(hx, 2*j+2, 1)) - 1) AS byte
-  FROM (SELECT doc_id, hx, unnest(range(0, 16)) AS j FROM m)
-)
-SELECT doc_id,
-       CAST(doc_id % 64 + 8 AS INTEGER) AS width,
-       CAST(doc_id % 48 + 8 AS INTEGER) AS height,
-       CAST((4 * sum(byte)) % 65536 AS INTEGER) AS pixel_checksum
-FROM b GROUP BY doc_id""",
         "metrics_resample": f"""
 WITH sfx AS (
   SELECT name, host, ts, value AS last_value
@@ -2998,8 +2464,6 @@ SELECT doc_id, {g.lang_id_sql('text')} AS lang_pred FROM documents""",
         "simhash": _simhash_sql(),
         "ngram_jaccard_same_source": _ngram_jaccard_sql(0.2),
         "embedding_neardup": _embedding_neardup_sql(0.3),
-        "ivf_knn": _ivf_sql(),
-        "lsh_knn": _lsh_knn_sql(),
         "cms_user_counts": _cms_sql(),
         "hll_distinct_users": _hll_users_sql(),
         "bloom_membership": _bloom_sql(),
@@ -3054,8 +2518,6 @@ FROM ({_minhash_sql(0.5)}) p
 JOIN documents da ON da.doc_id = p.id_a
 JOIN documents db ON db.doc_id = p.id_b
 WHERE da.source <> db.source""",
-        "ann_recall": _ann_recall_sql(),
-        "tune_n_probe": _tune_n_probe_sql(),
         "weighted_reservoir": _wrs_sql(),
         "kmeans_assign": _kmeans_sql(),
         "tfidf_top_terms": textfn.tfidf_top_terms_sql(),
@@ -3105,8 +2567,6 @@ WHERE da.source <> db.source""",
         "mixture_weights": _mixture_weights_sql(),
         "dedup_canonical": _canonical_sql(),
         "ewma_anomalies": _ewma_sql(),
-        "pq_knn": _pq_sql(),
-        "ivfpq_knn": _ivfpq_sql(),
         "semdedup": _semdedup_sql(),
         "bigram_lm_scores": textfn.bigram_lm_scores_sql(),
         "gopher_quality_filters": textfn.gopher_quality_sql(),
@@ -3158,7 +2618,6 @@ WHERE da.source <> db.source""",
 SELECT doc_id, {smp.split_case_sql(g.FINGERPRINT_SQL.format(col='text'))} AS split
 FROM documents""",
         "robust_outliers": _outliers_sql(),
-        "video_frame_sample": _frame_sample_sql(),
         "events_funnel": _analytics.funnel_sql(),
         "cohort_retention": _analytics.cohort_retention_sql(),
         "events_json_props": """

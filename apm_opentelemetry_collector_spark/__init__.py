@@ -14,9 +14,14 @@ Layout:
   config          — reference defaults (exporter/omnishard/factory.go:31-35)
   session         — SparkSession builder tuned for the pipeline
   sources/        — transcript derivation + synthetic generators + fixtures
-  functions/      — column-expression libraries (parse, sharding, text, vectors)
-  operators/      — pipeline operators (validate, forward-fill, enrich, route,
-                    pack, truncate, aggregate, dedup, similarity, multimodal)
+  functions/      — column-expression libraries (parse, sharding, sqlgen,
+                    sketch, text, vectors)
+  operators/      — collector-path operators (validate, forward-fill,
+                    truncate, enrich, route, pack, encode, aggregate,
+                    sample, translate), time-series and analytics operators
+                    (asof, resample, rates, skew, outliers, tdigest,
+                    analytics) and corpus-curation operators (dedup,
+                    curation, clustering)
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant
 """

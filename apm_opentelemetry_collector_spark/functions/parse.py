@@ -7,11 +7,16 @@ Our engine's equivalent is grok/regex extraction of structured attributes
 from each turn's free text (north_star): severity marker, tool_call(name,
 arg) fragment, and trailing key=value pairs.
 
-Two interchangeable implementations, equality-tested in pytest:
+Two interchangeable implementations, equality-tested in pytest
+(tests/test_operators.py). They differ in call convention only:
+``parse_cols`` takes a column NAME, ``parse_pandas_udf`` a Column.
 
-  - ``parse_cols`` — pure Column expressions (regexp_extract), JVM-side
-    inside whole-stage codegen. THE DEFAULT hot path: zero Python, zero
-    Arrow transfer.
+  - ``parse_cols(name)`` — one SQL expression (regexp_extract) over the
+    text column NAMED by its argument, JVM-side inside whole-stage
+    codegen. THE DEFAULT hot path: zero Python, zero Arrow transfer. Its
+    regexes are embedded as SQL string literals, which assumes
+    ``spark.sql.parser.escapedStringLiterals=false`` (pinned by
+    session.get_spark).
   - ``parse_pandas_udf`` — a vectorized Arrow/pandas UDF performing the
     same grok with Python's re. The designated escape hatch for grok
     patterns Spark's regexp engine can't express; also demonstrates the
@@ -46,11 +51,6 @@ PARSED_SCHEMA = T.StructType(
 )
 
 
-def _nullify_empty(c: Column) -> Column:
-    # regexp_extract returns '' on no-match (Spark & DuckDB agree).
-    return F.when(c == "", F.lit(None).cast("string")).otherwise(c)
-
-
 def _sql_str(s: str) -> str:
     """Escape a Python string into a Spark SQL single-quoted literal that
     round-trips to the same runtime string (backslashes doubled for the
@@ -58,19 +58,20 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def parse_cols(text: Column | str) -> Column:
-    """Column-expression grok of a turn's text → parsed struct.
+def parse_cols(text: str) -> Column:
+    """SQL-expression grok of the text column named `text` → parsed struct.
 
-    kv extraction uses regexp_extract_all + str_to_map-style assembly,
+    Takes a column NAME, not a Column (TypeError otherwise): the
+    expression is built as a SQL string. kv extraction uses regexp_extract_all + str_to_map-style assembly,
     all JVM-side. tool_call's own name=/arg= tokens are inside parens and
     excluded from kv by stripping the fragment first. Built as one parsed
     SQL-expr string (r7): the Column spelling cost ~0.1 s of py4j round
     trips per pipeline construction; the parsed expression tree is
     identical (equality-tested against the Arrow twin and the oracles).
     """
-    c = f"`{text}`" if isinstance(text, str) else None
-    if c is None:
-        raise TypeError("parse_cols expects a column NAME for the expr path")
+    if not isinstance(text, str):
+        raise TypeError("parse_cols takes a column name, not a Column")
+    c = f"`{text}`"
     sev_re, tc_re, kv_re = map(_sql_str, (SEVERITY_RE, TOOL_CALL_RE, KV_RE))
     pairs = f"regexp_extract_all(regexp_replace({c}, {tc_re}, ''), {kv_re}, 0)"
 

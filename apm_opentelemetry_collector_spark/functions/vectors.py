@@ -49,8 +49,7 @@ def brute_force_knn(
     corpus — a BroadcastNestedLoopJoin scanning the corpus ONCE for all
     queries; ranking is a window per query. At 100 TB the corpus side
     stays partitioned and the query side is broadcast, so this scales
-    linearly with corpus size; the IVF variant (operators/similarity.py)
-    prunes the scan.
+    linearly with corpus size.
 
     Output: query_id, neighbor_id, rank (1..k), cos (double).
     """

@@ -11,7 +11,6 @@ Lloyd rounds expressed as a LAZY unrolled DataFrame plan —
   update: elementwise centroid mean with DECIMAL accumulation — exact
           and order-independent, so Spark and the SQL oracle produce
           bit-identical centroids regardless of partial-agg order
-          (same trick as operators/similarity.centroids)
 
 Squared L2 is composed as |v|² + |c|² − 2·v·c from the same left-fold
 dot product the cosine operators use, so both engines bit-match and the

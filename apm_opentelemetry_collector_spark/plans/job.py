@@ -22,6 +22,8 @@ single pass (fastest when resume granularity is not needed).
 
 from __future__ import annotations
 
+import dataclasses
+import hashlib
 import json
 import os
 import time
@@ -34,6 +36,7 @@ from pyspark.sql import functions as F
 from ..config import PipelineConfig
 from ..operators.aggregate import conv_bucket_col
 from ..plans.pipeline import run_pipeline
+from ..session import file_listing
 
 # Bucket jobs submitted concurrently from the driver's thread pool.
 MAX_PARALLEL = 4
@@ -60,13 +63,45 @@ def _manifest_path(out_dir: str, bucket: int) -> str:
     return os.path.join(out_dir, "_manifests", f"bucket={bucket}.json")
 
 
-def _write_manifest(out_dir: str, bucket: int, payload: dict) -> None:
-    path = _manifest_path(out_dir, bucket)
+def _bucketed_marker(out_dir: str) -> str:
+    return os.path.join(out_dir, "_bucketed", "_fingerprint.json")
+
+
+def _write_json(path: str, payload: dict) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(payload, f, sort_keys=True)
-    os.replace(tmp, path)  # atomic: a manifest exists only when complete
+    os.replace(tmp, path)  # atomic: a record exists only when complete
+
+
+def job_fingerprint(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    cfg: PipelineConfig,
+    routes: DataFrame | None,
+    shards: list[dict] | None,
+) -> dict:
+    """What a run's outputs depend on besides n_buckets, one digest per
+    part: the config, the routing table and shard list as passed (None =
+    the defaults), and the sorted (path, size, mtime) of the input files
+    (an input that is not file-backed lists none). The routing table is a
+    small config table; its sorted rows come back as one aggregate row."""
+    if routes is not None:
+        routes = routes.select(
+            F.sort_array(F.collect_list(F.to_json(F.struct(*routes.columns))))
+        ).first()[0]
+    parts = {
+        "config": dataclasses.asdict(cfg),
+        "routing table": routes,
+        "shard list": shards,
+        "input listing": file_listing(spark, transcripts.inputFiles()),
+    }
+    return {
+        k: hashlib.sha256(json.dumps(v, sort_keys=True, default=str).encode())
+        .hexdigest()
+        for k, v in parts.items()
+    }
 
 
 def completed_buckets(out_dir: str) -> set[int]:
@@ -87,6 +122,7 @@ def _process(
     cfg: PipelineConfig,
     bucket: int | None,
     n_buckets: int | None,
+    fingerprint: dict,
     routes: DataFrame | None = None,
     shards: list[dict] | None = None,
 ) -> dict:
@@ -95,8 +131,9 @@ def _process(
     Single materialization discipline: the routed rows (with outcome,
     shard, batch assignment) are written ONCE, partitioned by sink; every
     aggregate is then derived from the written files — no stage of the
-    lineage is computed twice. The manifest records n_buckets so a resume
-    under another bucket layout can be refused.
+    lineage is computed twice. The manifest records n_buckets and the
+    job fingerprint so a resume under another bucket layout or
+    fingerprint can be refused.
     """
     res = run_pipeline(spark, transcripts, cfg, routes=routes, shards=shards)
     sub = f"bucket={bucket}" if bucket is not None else "all"
@@ -112,8 +149,7 @@ def _process(
     # two concurrent driver-submitted job chains (guide §2.6: actions
     # are only sequential because the driver calls them sequentially;
     # the rejected chain's tasks back-fill executors left idle by the
-    # routed write's stragglers). Job descriptions are thread-local, so
-    # the UI stays labelled correctly.
+    # routed write's stragglers).
 
     def _routed_chain() -> list:
         sink_table.write.mode("overwrite").partitionBy("sink").parquet(routed_dir)
@@ -171,6 +207,7 @@ def _process(
     return {
         "bucket": bucket,
         "n_buckets": n_buckets,
+        "fingerprint": fingerprint,
         "routed_rows": int(sum(by_outcome.values())),
         "by_outcome": by_outcome,
         "rejected_rows": int(n_rejected),
@@ -241,22 +278,30 @@ def validate_bucket_layout(transcripts: DataFrame, n_buckets: int) -> None:
 
 
 def _materialize_bucketed(
-    spark: SparkSession, transcripts: DataFrame, out_dir: str, n_buckets: int
+    spark: SparkSession,
+    transcripts: DataFrame,
+    out_dir: str,
+    n_buckets: int,
+    fingerprint: dict,
 ) -> DataFrame:
     """One full input scan + partitioned write; per-bucket reads then prune.
 
-    Idempotent across resume: if a completed `_bucketed` layout exists
-    (Spark's _SUCCESS marker) it is reused — a killed 16-bucket job
-    replays only its incomplete buckets AND never rescans the raw input.
+    Idempotent across resume: a completed `_bucketed` layout (its
+    fingerprint record, written after Spark's _SUCCESS marker) is reused
+    — a killed 16-bucket job replays only its incomplete buckets AND
+    never rescans the raw input. check_manifest_layout has already
+    refused a layout recorded under another n_buckets or fingerprint.
     """
     bucketed_dir = os.path.join(out_dir, "_bucketed")
-    if not os.path.exists(os.path.join(bucketed_dir, "_SUCCESS")):
+    marker = _bucketed_marker(out_dir)
+    if not os.path.exists(marker):
         (
             transcripts.withColumn("conv_bucket", bucket_expr(n_buckets))
             .write.mode("overwrite")
             .partitionBy("conv_bucket")
             .parquet(bucketed_dir)
         )
+        _write_json(marker, {"n_buckets": n_buckets, "fingerprint": fingerprint})
     return spark.read.parquet(bucketed_dir)
 
 
@@ -292,12 +337,16 @@ def run_job(
     are submitted and allowed to finish before the injected error, so
     replay semantics stay deterministic even with threads.
 
-    Resuming is refused (ValueError) when out_dir holds manifests written
-    under a different n_buckets: bucket ids would not name the same rows,
-    so skipping "completed" buckets would lose or double-count rows.
+    Resuming is refused (ValueError) when out_dir holds manifests or a
+    `_bucketed` layout written under a different n_buckets (bucket ids
+    would not name the same rows, so skipping "completed" buckets would
+    lose or double-count rows) or a different fingerprint (config, routing
+    table, shard list or input files changed: outputs of two runs would
+    mix).
     """
     cfg = cfg or PipelineConfig()
-    check_manifest_layout(out_dir, n_buckets)
+    fingerprint = job_fingerprint(spark, transcripts, cfg, routes, shards)
+    check_manifest_layout(out_dir, n_buckets, fingerprint)
     manifests: list[dict] = []
     run: list[int] = []
     skipped: list[int] = []
@@ -307,9 +356,10 @@ def run_job(
             skipped.append(0)
         else:
             manifests.append(
-                _process(spark, transcripts, out_dir, cfg, None, n_buckets, routes, shards)
+                _process(spark, transcripts, out_dir, cfg, None, n_buckets,
+                         fingerprint, routes, shards)
             )
-            _write_manifest(out_dir, 0, manifests[-1])
+            _write_json(_manifest_path(out_dir, 0), manifests[-1])
             run.append(0)
         return JobResult(out_dir, run, skipped, manifests)
 
@@ -319,7 +369,9 @@ def run_job(
     if "conv_bucket" in transcripts.columns:
         validate_bucket_layout(transcripts, n_buckets)
     elif len(todo) > 1:
-        transcripts = _materialize_bucketed(spark, transcripts, out_dir, n_buckets)
+        transcripts = _materialize_bucketed(
+            spark, transcripts, out_dir, n_buckets, fingerprint
+        )
 
     crash = fail_after is not None and len(todo) > fail_after
     if crash:
@@ -327,8 +379,9 @@ def run_job(
 
     def _one(b: int) -> dict:
         part = bucket_slice(transcripts, b, n_buckets)
-        m = _process(spark, part, out_dir, cfg, b, n_buckets, routes, shards)
-        _write_manifest(out_dir, b, m)
+        m = _process(spark, part, out_dir, cfg, b, n_buckets, fingerprint,
+                     routes, shards)
+        _write_json(_manifest_path(out_dir, b), m)
         return m
 
     workers = max(1, min(MAX_PARALLEL, len(todo)))
@@ -348,16 +401,32 @@ def run_job(
     return JobResult(out_dir, run, skipped, manifests)
 
 
-def check_manifest_layout(out_dir: str, n_buckets: int | None) -> None:
-    """Raise if out_dir holds manifests written under another n_buckets
-    (None = single pass)."""
-    other = {m.get("n_buckets") for m in read_all_manifests(out_dir)} - {n_buckets}
-    if other:
-        raise ValueError(
-            f"{out_dir} holds manifests written with n_buckets={other.pop()}; "
-            f"this run asks for n_buckets={n_buckets}. Resume with the original "
-            "bucket count or write to a fresh out_dir"
-        )
+def check_manifest_layout(
+    out_dir: str, n_buckets: int | None, fingerprint: dict
+) -> None:
+    """Raise if out_dir holds manifests, or a `_bucketed` layout, written
+    under another n_buckets (None = single pass) or another fingerprint
+    (job_fingerprint); the error names the parts that differ."""
+    records = read_all_manifests(out_dir)
+    marker = _bucketed_marker(out_dir)
+    if os.path.exists(marker):
+        with open(marker) as f:
+            records.append(json.load(f))
+    for rec in records:
+        if rec.get("n_buckets") != n_buckets:
+            raise ValueError(
+                f"{out_dir} holds outputs written with n_buckets={rec.get('n_buckets')}; "
+                f"this run asks for n_buckets={n_buckets}. Resume with the original "
+                "bucket count or write to a fresh out_dir"
+            )
+        recorded = rec.get("fingerprint") or {}
+        changed = [k for k in fingerprint if recorded.get(k) != fingerprint[k]]
+        if changed:
+            raise ValueError(
+                f"{out_dir} holds outputs written under another "
+                f"{' and '.join(changed)}; resume with the original config, routes, "
+                "shards and input or write to a fresh out_dir"
+            )
 
 
 def read_all_manifests(out_dir: str) -> list[dict]:

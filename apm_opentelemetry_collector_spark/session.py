@@ -44,6 +44,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # the expr-string operators (parse._sql_str, the selectExpr
+        # builders) escape their SQL literals for the default parser;
+        # pin it so an override cannot silently change their regexes
+        .config("spark.sql.parser.escapedStringLiterals", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let the planner pick shuffled-hash joins when the build side
@@ -123,24 +127,46 @@ def spread_small_scan(df, min_parts: int | None = None):
     return df.repartition(target)
 
 
-_PARQUET_SCHEMAS: dict[str, object] = {}
+def file_listing(spark: SparkSession, paths) -> list[tuple[str, int, int]]:
+    """Sorted (path, size, mtime) of every file under `paths` (files or
+    directories; missing ones list nothing), read through Hadoop's
+    FileSystem in the driver with no Spark job."""
+    jvm, conf = spark.sparkContext._jvm, spark.sparkContext._jsc.hadoopConfiguration()
+    out = []
+    for p in paths:
+        hp = jvm.org.apache.hadoop.fs.Path(p)
+        fs = hp.getFileSystem(conf)
+        if not fs.exists(hp):
+            continue
+        it = fs.listFiles(hp, True)
+        while it.hasNext():
+            st = it.next()
+            out.append(
+                (st.getPath().toString(), st.getLen(), st.getModificationTime())
+            )
+    return sorted(out)
+
+
+_PARQUET_SCHEMAS: dict[tuple, object] = {}
 
 
 def read_input_table(spark: SparkSession, path: str):
-    """spark.read.parquet with the inferred schema cached per path.
+    """spark.read.parquet with the inferred schema cached per path and
+    file listing.
 
     Plain read.parquet infers the schema with a small driver job per
     call (~0.1-0.6 s + one job here); for the static input tables the
     schema never changes, so cache that METADATA — never data: every
     action still scans the parquet files — and pass it explicitly, which
-    plans with no job. Intended for the fixed benchmark/test inputs
-    only; outputs that are rewritten between reads must keep the
-    inferring read.
+    plans with no job. The key includes the listing's names, sizes and
+    mtimes, so a path rewritten between reads (even with another schema)
+    misses the cache and is inferred afresh.
     """
-    sch = _PARQUET_SCHEMAS.get(path)
+    key = (path, tuple(file_listing(spark, [path])))
+    sch = _PARQUET_SCHEMAS.get(key)
     if sch is None:
         df = spark.read.parquet(path)
-        _PARQUET_SCHEMAS[path] = df.schema
+        _PARQUET_SCHEMAS[key] = df.schema
         return df
     return spark.read.schema(sch).parquet(path)
 

@@ -1020,8 +1020,7 @@ def semdedup_stateful(
     so semantic near-duplicates of anything seen within the state
     horizon are flagged on ARRIVAL. Freezing the codebook is what makes
     the op streamable — Lloyd iteration is a batch concern; production
-    stacks retrain offline and hot-swap, exactly like the frozen
-    hyperplanes of lsh_knn.
+    stacks retrain offline and hot-swap.
 
     Assignment is the SAME strictly-smaller-d2 literal fold as the
     batch _assign (ties to the lower cluster id), rendered over literal

@@ -82,12 +82,9 @@ def main() -> None:
         "dedup_exact",
         "minhash_lsh_neardup",
         "knn_bruteforce",
-        "ivf_knn",
-        "lsh_knn",
         "asof_last_event",
         "metrics_resample",
         # r3 additions
-        "ann_recall",
         "weighted_reservoir",
         "tdigest_value_quantiles",
         "kmeans_assign",
@@ -105,11 +102,9 @@ def main() -> None:
         # r5 additions
         "repeated_spans",
         "ewma_anomalies",
-        "pq_knn",
         "bigram_lm_scores",
         # r6 additions
         "span_cores",
-        "ivfpq_knn",
         "semdedup",
         "pack_sequences",
         "mixture_weights",

@@ -4,7 +4,7 @@
 bench.py is frozen for measurement; this file exists so optimization
 work can time a single query (or a short list) in a fresh JVM with the
 noop sink, optionally under config overrides, without paying for the
-whole 50-entry headline. Usage:
+whole headline. Usage:
 
     python bench_extra.py span_cores semdedup --reps 3
     python bench_extra.py pipeline_e2e_synth --rows 2000000

@@ -80,51 +80,6 @@ def test_banding_config_validates():
     assert PRODUCTION_BANDING.rows_per_band == 4
 
 
-# --- hyperplane LSH ANN (scale path #2 beside IVF) ---------------------------
-def test_lsh_knn_prunes_and_finds_close_neighbors(spark):
-    from apm_opentelemetry_collector_spark.functions.vectors import brute_force_knn
-    from apm_opentelemetry_collector_spark.operators.similarity import (
-        hyperplane_lsh_knn,
-        hyperplane_signs,
-        lsh_bucket,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 5)
-
-    # pruning: multi-probe candidates are a strict subset of all pairs
-    planes = hyperplane_signs(8, 64)
-    from apm_opentelemetry_collector_spark.functions.vectors import as_double
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        lsh_bucket(as_double("embedding"), planes).alias("bucket"),
-    )
-    probes = q.select(
-        F.col("vec_id").alias("query_id"),
-        lsh_bucket(as_double("embedding"), planes).alias("qb"),
-    ).select(
-        "query_id",
-        F.explode(
-            F.array(
-                F.col("qb"), *[F.col("qb").bitwiseXOR(F.lit(1 << p)) for p in range(8)]
-            )
-        ).alias("bucket"),
-    )
-    n_candidates = probes.join(corpus, "bucket").count()
-    n_all_pairs = q.count() * emb.count()
-    assert 0 < n_candidates < n_all_pairs / 3  # genuinely pruned search
-
-    # sanity vs exact search: LSH's top hit is a genuinely close neighbor —
-    # its cosine is within the exact top-10 range for that query
-    exact = {
-        (r["query_id"], r["rank"]): r["cos"]
-        for r in brute_force_knn(emb, q, k=10).collect()
-    }
-    for r in hyperplane_lsh_knn(emb, q, k=1).collect():
-        floor_cos = exact[(r["query_id"], 10)]
-        assert r["cos"] >= floor_cos, r
-
-
 def test_distinct_scope_equality(spark):
     """The two shuffle plans (corpus-wide distinct vs candidate-scoped
     distinct with raw-shingle signatures) must produce IDENTICAL pairs —

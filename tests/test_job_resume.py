@@ -76,6 +76,63 @@ def test_resume_refuses_other_bucket_layout(spark, tmp_path, first, second):
     assert len(completed_buckets(out_dir)) == 1
 
 
+def test_resume_refuses_changed_config(spark, tmp_path):
+    """Manifests record the job fingerprint: a resume under another cfg
+    would mix buckets sharded and dropped under two configs."""
+    from apm_opentelemetry_collector_spark.config import PipelineConfig
+
+    tr = synth_transcripts(spark, n_rows=1_000, n_convs=20)
+    out_dir = str(tmp_path / "job")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_job(spark, tr, out_dir, n_buckets=N_BUCKETS, fail_after=1)
+
+    with pytest.raises(ValueError, match="another config"):
+        run_job(spark, tr, out_dir, cfg=PipelineConfig(n_shards=8),
+                n_buckets=N_BUCKETS)
+    assert len(completed_buckets(out_dir)) == 1
+
+
+def test_resume_refuses_changed_routes(spark, tmp_path):
+    """The fingerprint covers the routing table: a resume under other
+    routes would mix buckets routed by two tables. The same rows in
+    another order are the same table."""
+    from apm_opentelemetry_collector_spark.sources import fixtures
+
+    tr = synth_transcripts(spark, n_rows=1_000, n_convs=20)
+    out_dir = str(tmp_path / "job")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_job(spark, tr, out_dir, n_buckets=N_BUCKETS, fail_after=1,
+                routes=fixtures.routes_df(spark))
+
+    fewer = spark.createDataFrame(fixtures.ROUTES[:-1], fixtures.ROUTES_SCHEMA)
+    for routes in (None, fewer):
+        with pytest.raises(ValueError, match="another routing table"):
+            run_job(spark, tr, out_dir, n_buckets=N_BUCKETS, routes=routes)
+    assert len(completed_buckets(out_dir)) == 1
+
+    reordered = spark.createDataFrame(fixtures.ROUTES[::-1], fixtures.ROUTES_SCHEMA)
+    res = run_job(spark, tr, out_dir, n_buckets=N_BUCKETS, routes=reordered)
+    assert len(res.buckets_run) == N_BUCKETS - 1
+
+
+def test_resume_refuses_rewritten_input(spark, tmp_path):
+    """The fingerprint covers the input listing: a resume after the input
+    files were rewritten must not reuse _bucketed or the old manifests."""
+    inp = str(tmp_path / "input")
+    synth_transcripts(spark, n_rows=1_000, n_convs=20).write.parquet(inp)
+    out_dir = str(tmp_path / "job")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_job(spark, spark.read.parquet(inp), out_dir, n_buckets=N_BUCKETS,
+                fail_after=1)
+
+    synth_transcripts(spark, n_rows=1_200, n_convs=30).write.mode(
+        "overwrite"
+    ).parquet(inp)
+    with pytest.raises(ValueError, match="another input listing"):
+        run_job(spark, spark.read.parquet(inp), out_dir, n_buckets=N_BUCKETS)
+    assert len(completed_buckets(out_dir)) == 1
+
+
 def test_resume_reuses_materialized_bucketed_input(spark, tmp_path):
     """A resumed run must NOT rescan/rewrite the raw input: the
     _bucketed layout materialized before the crash is reused (the

@@ -137,6 +137,51 @@ def test_truncation_fatal_drop_when_cap_below_marker(spark):
     assert r["a.b"] == 2
 
 
+# --- parse: SQL-expression grok equals its Arrow twin ------------------------
+def test_parse_cols_equals_pandas_twin(spark):
+    """The SQL-expression grok and the pandas-UDF twin agree row for row.
+    parse_cols embeds its regexes as SQL literals escaped for the default
+    parser, so get_spark pins that setting."""
+    from apm_opentelemetry_collector_spark.functions.parse import (
+        parse_cols,
+        parse_pandas_udf,
+    )
+
+    assert spark.conf.get("spark.sql.parser.escapedStringLiterals") == "false"
+    df = spark.createDataFrame(
+        [
+            ("[WARN] tool_call(name=grep, arg=x1) k=v a_b=1 z=3.5",),
+            ("[INFO] user=alice n=42 tool_call(name=ls-2, arg=dir) [ERROR]",),
+            ("no markers at all",),
+        ],
+        "text string",
+    )
+    rows = df.select(
+        parse_cols("text").alias("sql"), parse_pandas_udf(F.col("text")).alias("arrow")
+    ).collect()
+    assert all(r["sql"] == r["arrow"] for r in rows)
+    assert rows[0]["sql"]["tool_call_name"] == "grep"
+    assert rows[0]["sql"]["kv"] == {"k": "v", "a_b": "1", "z": "3.5"}
+    with pytest.raises(TypeError):
+        parse_cols(F.col("text"))
+
+
+def test_read_input_table_sees_rewritten_schema(spark, tmp_path):
+    """The input-schema cache is keyed by the file listing too: a path
+    rewritten with another schema is inferred afresh."""
+    from apm_opentelemetry_collector_spark.session import read_input_table
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).selectExpr("id AS a").write.parquet(path)
+    assert read_input_table(spark, path).columns == ["a"]
+    assert read_input_table(spark, path).columns == ["a"]
+    spark.range(3).selectExpr("id AS a", "id * 2 AS b").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = read_input_table(spark, path)
+    assert df.columns == ["a", "b"] and df.count() == 3
+
+
 # --- packing goldens (shard_encoder_test.go:84-170) --------------------------
 def _packed(spark, texts, max_record_size):
     cfg = PipelineConfig(max_record_size=max_record_size)

@@ -223,22 +223,22 @@ def test_new_queries_no_python_nodes(spark):
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    for name in ("lsh_knn", "asof_last_event", "metrics_resample",
+    for name in ("asof_last_event", "metrics_resample",
                  "q3_shipping_priority", "q5_local_supplier_volume",
                  "q14_promo_revenue", "token_count_bpe",
                  "events_sessionize_window", "cms_user_counts",
                  "hll_distinct_users", "alert_sustained_utilization",
                  "counter_rate", "cube_orders", "events_hourly_rollup",
-                 "stratified_sample", "ann_recall", "weighted_reservoir",
-                 "tdigest_value_quantiles", "tune_n_probe", "kmeans_assign",
+                 "stratified_sample", "weighted_reservoir",
+                 "tdigest_value_quantiles", "kmeans_assign",
                  "tfidf_top_terms", "leakage_safe_split", "robust_outliers",
                  "events_funnel", "cohort_retention", "events_json_props",
                  "rate_limit_exceeded",
                  # r5
-                 "repeated_spans", "ewma_anomalies", "pq_knn",
+                 "repeated_spans", "ewma_anomalies",
                  "bigram_lm_scores",
                  # r6
-                 "span_cores", "ivfpq_knn", "semdedup", "pack_sequences",
+                 "span_cores", "semdedup", "pack_sequences",
                  "mixture_weights", "dedup_canonical",
                  "gopher_quality_filters", "gopher_repetition",
                  "c4_line_filters", "c4_span_dedup", "dsir_weights",
@@ -332,24 +332,3 @@ def test_ewma_batch_plan_vectorized_no_python(spark):
         assert node not in plan, node
     assert "Window" in plan
     assert "ReadSchema: struct<event_id:bigint,ts:timestamp" in plan, plan
-
-
-def test_pq_encode_no_sort_no_python(spark):
-    """PQ's encode must stay a map-side fold like the k-means
-    assignment: zero Sort nodes attributable to encoding (the only
-    sorts allowed are the seed row_number and the final top-k window),
-    no Python nodes anywhere, and the corpus scanned — not shuffled —
-    for encoding (the one exchange below the top-k window belongs to
-    codebook training's mean aggregate)."""
-    from apm_opentelemetry_collector_spark.operators.similarity import pq_knn
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    df = pq_knn(emb, emb.filter(F.col("vec_id") < 5), k=5)
-    plan = plan_of(df)
-    for node in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
-        assert node not in plan, node
-    # executed plan of the FINAL query (training ran to a checkpoint):
-    # exactly one Window (top-k) and no SortAggregate anywhere
-    assert "SortAggregate" not in plan, plan
-    assert plan.count("Window [") == 1, plan  # WindowGroupLimit ≠ a 2nd window

@@ -28,8 +28,7 @@ MUST_BE_IN_WINDOW = {
     # policy makes the driver re-verify exactly the code that moved):
     # spread_small_scan paths, the semdedup salt + norm precompute, the
     # shingle per-doc array_distinct (minhash/simhash/jaccard family),
-    # the span_cores level-set fold, lazy CC round checkpoints, the
-    # single-aggregate PQ codebooks, and the shared IVF centroid table
+    # the span_cores level-set fold and lazy CC round checkpoints
     "repeated_passages",
     "repeated_spans",
     "span_cores",
@@ -47,12 +46,6 @@ MUST_BE_IN_WINDOW = {
     "gopher_repetition",
     "curation_funnel",
     "knn_bruteforce",
-    "ann_recall",
-    "tune_n_probe",
-    "ivf_knn",
-    "pq_knn",
-    "ivfpq_knn",
-    "lsh_knn",
     "kmeans_assign",
 }
 
