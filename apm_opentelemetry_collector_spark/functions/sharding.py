@@ -29,6 +29,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.fixtures import local_table
+
 HASH_SPACE_MAX = (1 << 128) - 1  # sharding_config.go:33-35
 
 
@@ -102,7 +104,8 @@ def validate_sharding_config(shards: list[dict]) -> list[dict]:
 def shards_df(spark: SparkSession, shards: list[dict]) -> DataFrame:
     """Tiny config DataFrame {shard_id, start_key, end_key} (validated)."""
     ordered = validate_sharding_config(shards)
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(s["shard_id"], s["start_key"], s["end_key"]) for s in ordered],
         "shard_id string, start_key string, end_key string",
     )
@@ -128,7 +131,7 @@ def assign_shard(
     matches at most one shard. Rows matching no shard keep shard_id NULL
     ('no shard found', encoder.go:462) → dropped as FatalEncodingError.
     `shards` may be the config DataFrame or the plain shard list; the
-    list path skips a createDataFrame + collect round trip per call
+    list path skips a shards_df + collect round trip per call
     (config is driver-side either way — the LUT below is identical
     because shards_df preserves validate_sharding_config order).
     """
@@ -148,8 +151,10 @@ def assign_shard(
     for shard_id, start, end in rows:
         for p in range(int(start[:2], 16), int(end[:2], 16) + 1):
             exploded.append((f"{p:02x}", shard_id, start, end))
-    lut = spark.createDataFrame(
-        exploded, "lut_prefix string, shard_id string, start_key string, end_key string"
+    lut = local_table(
+        spark,
+        exploded,
+        "lut_prefix string, shard_id string, start_key string, end_key string",
     )
     keyed = df.withColumn("hash_key", hash_key_col(partition_key)).withColumn(
         "hash_prefix", F.substring("hash_key", 1, 2)

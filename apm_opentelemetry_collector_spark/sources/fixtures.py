@@ -6,14 +6,16 @@ entering pipeline P is delivered to every exporter of P) and of the
 attributes/resource/k8s processors' lookup metadata
 (cmd/omnitelsvc/components.go:89-95).
 
-The constants here are the single source of truth: sources render them as
-Spark DataFrames, functions/sqlgen.py renders the SAME constants as SQL
-VALUES clauses for the DuckDB oracle, so engine and oracle can never skew.
+The constants here are the single source of truth, and _values_sql is
+their one rendering: Spark reads it as a local table (local_table) and
+functions/sqlgen.py hands it to the DuckDB oracle, so engine and oracle
+can never skew.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # (pipeline_id, role_pattern, tool_pattern, sink); '*' matches anything,
 # otherwise exact match. NULL role/tool matches only '*' (SQL equality
@@ -58,18 +60,39 @@ SERVICE_DIM_SCHEMA = "role string, tool string, service_name string, resource_ty
 
 
 def routes_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROUTES, ROUTES_SCHEMA)
+    return local_table(spark, ROUTES, ROUTES_SCHEMA)
 
 
 def service_dim_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(SERVICE_DIM, SERVICE_DIM_SCHEMA)
+    return local_table(spark, SERVICE_DIM, SERVICE_DIM_SCHEMA)
 
 
-def _values_sql(rows: list[tuple], alias: str, cols: list[str]) -> str:
+def local_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small config table that plans as LocalTableScan: its rows travel
+    inside the plan. createDataFrame(list) instead scans an ExistingRDD,
+    and every broadcast of it re-runs a Python-RDD Spark job (0.1-0.4 s
+    per table per query on 4 vCPUs). Columns are typed by `schema`; a column without
+    NULLs is non-nullable. No rows → an empty table of that schema."""
+    st = StructType.fromDDL(schema)
+    cols = st.fieldNames()
+    sql = _values_sql(rows or [(None,) * len(cols)], "t", cols, backslash_escapes=True)
+    df = spark.sql(f"SELECT * FROM {sql}").to(st)
+    return df if rows else df.where("false")
+
+
+def _values_sql(
+    rows: list[tuple], alias: str, cols: list[str], backslash_escapes: bool = False
+) -> str:
+    """ANSI `(VALUES ...) AS alias(cols)`. Spark's parser reads a backslash
+    in a string literal as an escape, DuckDB's as itself:
+    backslash_escapes=True renders for Spark."""
+
     def lit(v) -> str:
         if v is None:
             return "NULL"
         if isinstance(v, str):
+            if backslash_escapes:
+                v = v.replace("\\", "\\\\")
             return "'" + v.replace("'", "''") + "'"
         return str(v)
 

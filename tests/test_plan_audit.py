@@ -9,6 +9,8 @@ splitting into two exchanges.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from apm_opentelemetry_collector_spark.config import PipelineConfig
@@ -41,6 +43,77 @@ def _flagship(spark):
 def test_no_rowwise_python_anywhere(spark):
     plan = plan_of(_flagship(spark))
     assert "BatchEvalPython" not in plan
+
+
+def test_config_tables_are_local_relations(spark, tmp_path):
+    """Routes, service_dim and the shard LUT are LocalTableScans: no
+    ExistingRDD / PythonRDD scan, so no Python job runs per broadcast of
+    a config table, in the flagship chain or in run_pipeline over
+    parquet input."""
+    from apm_opentelemetry_collector_spark.plans.pipeline import run_pipeline
+    from apm_opentelemetry_collector_spark.sources.transcripts import synth_transcripts
+
+    path = str(tmp_path / "in")
+    synth_transcripts(spark, 2000, 40).write.parquet(path)
+    routed = run_pipeline(spark, spark.read.parquet(path)).routed
+    for df in (_flagship(spark), routed):
+        plan = plan_of(df)
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+        # service_dim, routes and the shard LUT
+        assert plan.count("LocalTableScan") == 3, plan
+
+
+def test_config_tables_equal_their_constants(spark):
+    from pyspark.sql.types import StructType
+
+    shards = sharding.even_shards(4)
+    tables = (
+        (fixtures.routes_df(spark), fixtures.ROUTES, fixtures.ROUTES_SCHEMA),
+        (fixtures.service_dim_df(spark), fixtures.SERVICE_DIM,
+         fixtures.SERVICE_DIM_SCHEMA),
+        (sharding.shards_df(spark, shards),
+         [(s["shard_id"], s["start_key"], s["end_key"]) for s in shards],
+         "shard_id string, start_key string, end_key string"),
+    )
+    for df, rows, schema in tables:
+        assert "LocalTableScan" in plan_of(df)
+        assert [tuple(r) for r in df.collect()] == list(rows)
+        want = StructType.fromDDL(schema)
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in want
+        ]
+
+
+def test_local_table_round_trips_spark_literals(spark):
+    # a backslash is an escape in Spark's string literals, a quote is
+    # doubled; NULLs, numbers and the empty table keep their schema
+    rows = [("a\\b'c", None, 7, 2.5), (None, "x", None, None)]
+    schema = "s string, t string, i bigint, f double"
+    df = fixtures.local_table(spark, rows, schema)
+    assert [tuple(r) for r in df.collect()] == rows
+    assert df.schema.simpleString() == "struct<s:string,t:string,i:bigint,f:double>"
+    empty = fixtures.local_table(spark, [], schema)
+    assert "LocalTableScan" in plan_of(empty) and empty.count() == 0
+    assert empty.schema.simpleString() == df.schema.simpleString()
+
+
+def test_batch_exchanges_use_initial_partition_num(spark):
+    """get_spark sizes the two engines apart: batch exchanges start at
+    initialPartitionNum = the shuffle_partitions argument (8 in
+    conftest), spark.sql.shuffle.partitions (the streaming state
+    partitions, AQE off) is the slot count."""
+    sc = spark.sparkContext
+    assert spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(sc.defaultParallelism)
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        # a session value other than the slot count leaves batch plans alone
+        spark.conf.set(key, "3")
+        plan = plan_of(spark.range(100).selectExpr("id % 3 AS k").groupBy("k").count())
+    finally:
+        spark.conf.set(key, old)
+    assert re.search(r"Exchange hashpartitioning\(k#\d+L, 8\)", plan), plan
 
 
 def test_config_joins_are_broadcast(spark):

@@ -62,6 +62,115 @@ def test_stateful_fill_across_microbatches(spark, tmp_path):
     assert got[3] == ("node2", "search")
 
 
+# (conv_id, turn_idx, role, tool) per file; each file is one micro-batch.
+# c_unsorted arrives out of turn order inside a file, c_first_null opens
+# with a null turn, c_clean never has a null, c_late_nulls opens its
+# second micro-batch with nulls, c_new appears only in the last file.
+_FILL_FILES = [
+    [
+        ("c_unsorted", 2, None, None), ("c_unsorted", 0, "user", "search"),
+        ("c_unsorted", 1, None, "code"),
+        ("c_first_null", 0, None, None), ("c_first_null", 1, None, "code"),
+        ("c_first_null", 2, "assistant", None),
+        ("c_clean", 0, "user", "none"), ("c_clean", 1, "assistant", "search"),
+        ("c_clean", 2, "tool", "code"),
+        ("c_late_nulls", 0, "system", "browser"), ("c_late_nulls", 1, "user", "none"),
+        ("c_late_nulls", 2, "assistant", "code"),
+    ],
+    [
+        ("c_unsorted", 3, "tool", None), ("c_unsorted", 5, None, None),
+        ("c_unsorted", 4, None, "browser"),
+        ("c_first_null", 3, None, None), ("c_first_null", 4, "user", "search"),
+        ("c_first_null", 5, None, None),
+        ("c_clean", 3, "user", "none"), ("c_clean", 4, "user", "none"),
+        ("c_clean", 5, "assistant", "code"),
+        ("c_late_nulls", 3, None, None), ("c_late_nulls", 4, None, "search"),
+        ("c_late_nulls", 5, "tool", None),
+    ],
+    [
+        ("c_unsorted", 6, None, None), ("c_unsorted", 7, "user", "code"),
+        ("c_first_null", 7, None, None), ("c_first_null", 6, None, "none"),
+        ("c_clean", 6, "tool", "search"), ("c_clean", 7, "system", "none"),
+        ("c_late_nulls", 6, None, None), ("c_late_nulls", 7, None, None),
+        ("c_new", 0, None, "code"), ("c_new", 1, "user", None),
+    ],
+]
+
+
+def _fill_rows(rows):
+    return [(c, i, r, f"t{c}{i}", o) for c, i, r, o in rows]
+
+
+def test_stateful_fill_equals_batch_fill_row_for_row(spark, tmp_path):
+    """forward_fill_stateful over three micro-batches equals the batch
+    forward_fill over the same rows, every column of every row. The
+    input drives both paths of _fill_group: chunks already in turn order
+    with no nulls come back untouched (fast path), the others are
+    sorted and filled (full path)."""
+    import os
+
+    from apm_opentelemetry_collector_spark.operators.forward_fill import forward_fill
+    from apm_opentelemetry_collector_spark.streaming.stream_pipeline import (
+        FILLED_COLUMNS,
+        _fill_group,
+    )
+
+    class _State:
+        exists, get = False, None
+
+        def update(self, v):
+            self.exists, self.get = True, v
+
+    # the same chunks through _fill_group in-process: both paths are hit
+    states, untouched = {}, []
+    ts = dt.datetime.fromisoformat(TS)
+    for rows in _FILL_FILES:
+        chunks = {}
+        for r in _fill_rows(rows):
+            chunks.setdefault(r[0], []).append((*r, ts))
+        for conv, chunk in chunks.items():
+            pdf = pd.DataFrame(chunk, columns=FILLED_COLUMNS)
+            (out,) = _fill_group((conv,), iter([pdf]), states.setdefault(conv, _State()))
+            untouched.append(out is pdf)
+    assert any(untouched) and not all(untouched)
+
+    path = str(tmp_path / "fill_parity_in")
+    for k, rows in enumerate(_FILL_FILES):
+        _write_batch(spark, path, _fill_rows(rows))
+        # the file source orders by mtime: pin it to the write order
+        for f in os.listdir(path):
+            p = os.path.join(path, f)
+            if f.endswith(".parquet") and os.path.getmtime(p) > 1_700_000_000 + k:
+                os.utime(p, (1_700_000_000 + k,) * 2)
+
+    q = (
+        forward_fill_stateful(stream_transcripts(spark, path))
+        .writeStream.format("memory")
+        .queryName("fill_parity_out")
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    assert len(batches) == len(_FILL_FILES)
+
+    got = spark.sql("SELECT * FROM fill_parity_out").select(*FILLED_COLUMNS)
+    want = forward_fill(spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path)).select(
+        *FILLED_COLUMNS
+    )
+    assert got.count() == sum(len(rows) for rows in _FILL_FILES)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    # a conversation whose first turn is null keeps it null
+    first = spark.sql(
+        "SELECT role, tool FROM fill_parity_out WHERE conv_id = 'c_first_null' AND turn_idx = 0"
+    ).first()
+    assert first["role"] is None and first["tool"] is None
+
+
 def test_stateless_stages_match_batch(spark, tmp_path):
     path = str(tmp_path / "stream_in2")
     rows = [

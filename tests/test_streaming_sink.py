@@ -184,3 +184,83 @@ def test_counter_state_survives_checkpoint_restart(spark, tmp_path):
     assert got[t(2)] == 15.0  # 40 - 25: baseline restored from checkpoint
     assert got[t(3)] == 4.0   # reset
     assert got[t(0)] is None or got[t(0)] != got[t(0)]  # first point: NULL/NaN
+
+
+def test_state_partitions_survive_restart_under_another_session_value(spark, tmp_path):
+    """A stateful stream keeps the state partition count its checkpoint
+    recorded: started with 8 shuffle partitions, stopped after one epoch
+    and restarted under another session value, it still runs 8 state
+    partitions, and its committed epochs equal an uninterrupted run's
+    with no (conv_id, turn_idx, sink) written twice."""
+    import os
+
+    from pyspark.sql import Row
+
+    from apm_opentelemetry_collector_spark.streaming.stream_pipeline import (
+        forward_fill_stateful,
+    )
+
+    routes = fixtures.routes_df(spark)
+    files = [
+        [(f"c{c}", i, "user" if i == 0 else None, "search" if c % 2 else None)
+         for c in range(6) for i in (0, 1)],
+        [(f"c{c}", i, None if i == 2 else "tool", None) for c in range(6) for i in (2, 3)],
+        [(f"c{c}", 4, None, "code") for c in range(6)],
+    ]
+
+    def stage(src, k):
+        spark.createDataFrame(
+            [Row(conv_id=c, turn_idx=i, role=r, text=f"t{i}", tool=o,
+                 ts=dt.datetime(2024, 1, 1))
+             for c, i, r, o in files[k]],
+            TRANSCRIPT_SCHEMA,
+        ).coalesce(1).write.mode("append").parquet(src)
+        # the file source orders by mtime: pin it to the staging order
+        for f in os.listdir(src):
+            p = os.path.join(src, f)
+            if f.endswith(".parquet") and os.path.getmtime(p) > 1_700_000_000 + k:
+                os.utime(p, (1_700_000_000 + k,) * 2)
+
+    def start(src, out, ckpt):
+        routed = with_send_outcome(
+            fan_out(forward_fill_stateful(stream_transcripts(spark, src)), routes)
+        )
+        return write_sinks_stream(routed, out, ckpt)
+
+    def run(src, out, ckpt) -> list[int]:
+        q = start(src, out, ckpt)
+        try:
+            q.processAllAvailable()
+            return [
+                op["numShufflePartitions"]
+                for p in q.recentProgress
+                for op in p["stateOperators"]
+            ]
+        finally:
+            q.stop()
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    src, out, ckpt = (str(tmp_path / n) for n in ("src", "out", "ckpt"))
+    try:
+        spark.conf.set(key, "8")
+        stage(src, 0)
+        assert set(run(src, out, ckpt)) == {8}
+        stage(src, 1)
+        stage(src, 2)
+        spark.conf.set(key, "3")
+        assert set(run(src, out, ckpt)) == {8}  # the checkpoint's count wins
+
+        # the uninterrupted run, all files present from the start
+        src2, out2, ckpt2 = (str(tmp_path / n) for n in ("src2", "out2", "ckpt2"))
+        for k in range(len(files)):
+            stage(src2, k)
+        assert set(run(src2, out2, ckpt2)) == {3}
+    finally:
+        spark.conf.set(key, old)
+
+    got, want = spark.read.parquet(out), spark.read.parquet(out2)
+    assert sorted(r[0] for r in got.select("epoch").distinct().collect()) == [0, 1, 2]
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    assert got.groupBy("conv_id", "turn_idx", "sink").count().where("count > 1").count() == 0
