@@ -996,8 +996,7 @@ def q_semdedup(spark, sf_dir):
 def q_ewma_anomalies(spark, sf_dir):
     """Batch EWMA anomaly detection over events.value per event_type
     (ordered by ts, event_id): vectorized truncated-Horner folds — no
-    per-row state, no Python — the batch twin of the streaming
-    ewma_anomalies operator; z from the PRE-update mean/var so a spike
+    per-row state, no Python; z from the PRE-update mean/var so a spike
     can't mask itself."""
     from apm_opentelemetry_collector_spark.operators.outliers import (
         ewma_anomalies_batch,

@@ -23,7 +23,9 @@ Layout:
                     analytics) and corpus-curation operators (dedup,
                     curation, clustering)
   plans/          — end-to-end pipeline assembly + lineage/resume
-  streaming/      — Structured Streaming variant
+  streaming/      — Structured Streaming variant of the collector path
+                    (stateful forward fill, watermarked counts, dedup,
+                    sessions, exactly-once sinks)
 """
 
 __version__ = "0.1.0"

@@ -66,51 +66,6 @@ def funnel_stages(
     return reduce(DataFrame.unionByName, counts)
 
 
-def funnel_user_steps(
-    df: DataFrame,
-    steps: tuple[str, ...] = FUNNEL_STEPS,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Per-user step completion times — the row-level face of
-    funnel_stages (same strict-order min-ts chain; counting distinct
-    users per step_idx reproduces it exactly). Output: user_col,
-    step_idx (1-based), step, ts. This is also the batch ground truth
-    the streaming funnel's emitted advances are equality-tested against.
-    """
-    reached = (
-        df.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("_t"))
-    )
-    outs = [
-        reached.select(
-            user_col,
-            F.lit(1).alias("step_idx"),
-            F.lit(steps[0]).alias("step"),
-            F.col("_t").alias("ts"),
-        )
-    ]
-    for i, step in enumerate(steps[1:], start=2):
-        reached = (
-            df.filter(F.col(type_col) == step)
-            .join(reached.select(user_col, "_t"), user_col)
-            .filter(F.col(ts_col) > F.col("_t"))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias("_t"))
-        )
-        outs.append(
-            reached.select(
-                user_col,
-                F.lit(i).alias("step_idx"),
-                F.lit(step).alias("step"),
-                F.col("_t").alias("ts"),
-            )
-        )
-    return reduce(DataFrame.unionByName, outs)
-
-
 def funnel_sql(
     table: str = "events",
     steps: tuple[str, ...] = FUNNEL_STEPS,

@@ -145,8 +145,8 @@ def ewma_anomalies_batch(
     min_points: int = EWMA_MIN_POINTS,
     window: int | None = None,
 ) -> DataFrame:
-    """Batch twin of streaming/stream_pipeline.ewma_anomalies with NO
-    per-row state (r4 VERDICT #6): the sequential recurrences
+    """Per-key EWMA anomaly detection with NO per-row state (r4
+    VERDICT #6): the sequential recurrences
 
         m_t = (1-α)·m_{t-1} + α·x_t          (m_0 = x_0)
         v_t = (1-α)·(v_{t-1} + α·d_t²)       (v_0 = 0, d_t = x_t − m_{t-1})
@@ -165,7 +165,7 @@ def ewma_anomalies_batch(
         |v̂_t − v_t| = β^(W-1)·v_{t-W+1}               ≤ β^(W-1)·max d²
 
     — below double precision for the default W (β^(W-1) ≈ 1e-12). The
-    z-score uses the PRE-UPDATE state like the streaming operator
+    z-score uses the PRE-UPDATE state
     (z_t from m_{t-1}, v_{t-1}; 0 during the min_points warm-up), so a
     spike cannot mask itself. Per-row cost is O(W); every row folds
     independently — embarrassingly parallel, no sequential barrier.
