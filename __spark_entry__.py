@@ -652,10 +652,6 @@ def q_pivot_status_by_priority(spark, sf_dir):
 
 
 # ----------------------------------------------------------- training-data
-def q_dedup_exact(spark, sf_dir):
-    return dd.exact_dedup_groups(_load(spark, sf_dir, "documents"))
-
-
 def q_doc_fingerprint(spark, sf_dir):
     docs = _load(spark, sf_dir, "documents")
     return docs.select("doc_id", textfn.fingerprint("text").alias("fingerprint"))
@@ -705,29 +701,6 @@ def q_lang_id(spark, sf_dir):
 def q_knn_bruteforce(spark, sf_dir):
     emb = _load(spark, sf_dir, "embeddings")
     out = brute_force_knn(emb, emb.filter(F.col("vec_id") < 5), k=10)
-    return out.withColumn("cos", F.round("cos", 6))
-
-
-def q_minhash_lsh_neardup(spark, sf_dir):
-    return dd.minhash_lsh_dedup(_load(spark, sf_dir, "documents"), threshold=0.5)
-
-
-def q_simhash(spark, sf_dir):
-    return dd.simhash(_load(spark, sf_dir, "documents"))
-
-
-def q_ngram_jaccard_same_source(spark, sf_dir):
-    docs = _load(spark, sf_dir, "documents")
-    sh = dd.shingles(docs)
-    a = docs.select(F.col("doc_id").alias("id_a"), F.col("source").alias("src"))
-    b = docs.select(F.col("doc_id").alias("id_b"), F.col("source").alias("src"))
-    pairs = a.join(b, "src").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    out = dd.jaccard(pairs, sh).filter(F.col("jaccard") >= 0.2)
-    return out.withColumn("jaccard", F.round("jaccard", 6))
-
-
-def q_embedding_neardup(spark, sf_dir):
-    out = dd.embedding_neardup(_load(spark, sf_dir, "embeddings"), threshold=0.3)
     return out.withColumn("cos", F.round("cos", 6))
 
 
@@ -889,17 +862,6 @@ def q_stratified_sample(spark, sf_dir):
     return stratified_sample(docs, MIXTURE_RATES).select("doc_id", "source")
 
 
-def q_contamination_cross_source(spark, sf_dir):
-    """Train/benchmark contamination: near-dup pairs across DIFFERENT
-    sources via banded LSH + exact-Jaccard verify (never all-pairs)."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        cross_source_contamination,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    return cross_source_contamination(docs, threshold=0.5)
-
-
 WRS_K = 50
 
 
@@ -955,17 +917,6 @@ def q_tfidf_top_terms(spark, sf_dir):
     return tfidf_top_terms(_load(spark, sf_dir, "documents"))
 
 
-def q_dedup_components(spark, sf_dir):
-    """Near-dup GROUPS from minhash pairs: connected components via
-    min-label propagation (fixed rounds, unrolled-CTE oracle twin).
-    Output: id, component (= min doc id of the group) — the table a
-    curation pass joins against to keep one canonical doc per group."""
-    from apm_opentelemetry_collector_spark.operators.dedup import dedup_components
-
-    docs = _load(spark, sf_dir, "documents")
-    return dedup_components(dd.minhash_lsh_dedup(docs, threshold=0.5))
-
-
 def q_repeated_passages(spark, sf_dir):
     """Cross-document repeated passages (boilerplate/memorization
     check): 40-char normalized windows at stride 7, counted by md5 KEY
@@ -981,16 +932,6 @@ def q_bigram_lm_scores(spark, sf_dir):
     from apm_opentelemetry_collector_spark.functions.text import bigram_lm_scores
 
     return bigram_lm_scores(_load(spark, sf_dir, "documents"))
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup semantic deduplication: k-means clusters bound the
-    pairwise cosine comparison, then each doc keeps iff no smaller-id
-    τ-neighbor exists in its cluster — deterministic
-    keep-one-per-similarity-group with no iteration."""
-    from apm_opentelemetry_collector_spark.operators.dedup import semdedup
-
-    return semdedup(_load(spark, sf_dir, "embeddings"))
 
 
 def q_ewma_anomalies(spark, sf_dir):
@@ -1039,14 +980,6 @@ def q_pack_sequences(spark, sf_dir):
     from apm_opentelemetry_collector_spark.operators.pack import pack_sequences
 
     return pack_sequences(_load(spark, sf_dir, "documents"))
-
-
-def q_dedup_canonical(spark, sf_dir):
-    """End-to-end fuzzy dedup (r6): MinHash+LSH verified pairs →
-    min-label components → keep-longest canonical per group (ties to
-    the smaller id); singletons survive — `keep` is the corpus-wide
-    curation filter."""
-    return dd.dedup_canonical(_load(spark, sf_dir, "documents"))
 
 
 def q_mixture_weights(spark, sf_dir):
@@ -1213,30 +1146,6 @@ def q_decontaminate_splice(spark, sf_dir):
     )
 
 
-def q_url_dedup(spark, sf_dir):
-    """URL-level dedup (RefinedWeb §3.2 — the stage BEFORE content
-    dedup): normalize scheme/www/query/fragment/trailing-slash, keep
-    the smallest doc_id per normalized URL. The corpus has no URL
-    column, so the query fabricates deterministic crawl-style URLs
-    whose noise components vary by doc_id mods (www on %4, utm query
-    on %3, fragment on %5) while the (site, path) identity collides
-    across docs — real dedup classes with cosmetic variants inside
-    them. Same construction in the oracle pre-CTE."""
-    did = F.col("doc_id")
-    url = F.concat(
-        F.lit("https://"),
-        F.when(did % 4 == 0, F.lit("www.")).otherwise(F.lit("")),
-        F.lit("Site"),
-        (did % 23).cast("string"),
-        F.lit(".example.com/path/"),
-        (did % 7).cast("string"),
-        F.when(did % 3 == 0, F.concat(F.lit("?utm=x"), did.cast("string"))).otherwise(F.lit("")),
-        F.when(did % 5 == 0, F.lit("#frag")).otherwise(F.lit("")),
-    )
-    docs = _load(spark, sf_dir, "documents").select("doc_id", url.alias("url"))
-    return dd.url_dedup(docs)
-
-
 def q_fineweb_filters(spark, sf_dir):
     """FineWeb custom filters (Penedo et al. 2024): punct-ending line
     fraction >= 0.12, duplicated-line char fraction <= 0.10, short-line
@@ -1328,23 +1237,6 @@ def q_exactsubstr_dedup(spark, sf_dir):
     seed shuffle; the rewrite is a per-doc higher-order cursor fold
     over sorted removal intervals, integer-exact on both engines."""
     return dd.exactsubstr_dedup(_load(spark, sf_dir, "documents"))
-
-
-def q_dedup_components_star(spark, sf_dir):
-    """Near-dup groups via alternating large-star/small-star (Kiveris
-    et al.) — the billion-edge production form of dedup_components:
-    converges in O(log² n) rounds regardless of component diameter,
-    operates on the shrinking edge list only, per-round reliable
-    storage checkpoints, stops when the edge set is stable. Same output
-    contract (id, component = true component min); the oracle is a
-    recursive-CTE transitive closure, so the check is EXACT and
-    independent of either Spark iteration scheme."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        dedup_components_star,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    return dedup_components_star(dd.minhash_lsh_dedup(docs, threshold=0.5))
 
 
 RATE_WINDOW_S = 86400
@@ -1444,7 +1336,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """
     return {
         # --- new in r6 ------------------------------------------------------
-        "url_dedup": q_url_dedup,
         "fineweb_filters": q_fineweb_filters,
         "tokenizer_fertility": q_tokenizer_fertility,
         "temperature_mixture": q_temperature_mixture,
@@ -1454,8 +1345,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "span_cores": q_span_cores,
         "pack_sequences": q_pack_sequences,
         "mixture_weights": q_mixture_weights,
-        "dedup_canonical": q_dedup_canonical,
-        "semdedup": q_semdedup,
         "gopher_quality_filters": q_gopher_quality_filters,
         "gopher_repetition": q_gopher_repetition,
         "c4_line_filters": q_c4_line_filters,
@@ -1470,27 +1359,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bigram_lm_scores": q_bigram_lm_scores,
         # --- new in r4 ------------------------------------------------------
         "repeated_passages": q_repeated_passages,
-        "dedup_components_star": q_dedup_components_star,
         "value_percentiles_tdigest": q_value_percentiles_tdigest,  # rows-only
         # --- r4-touched implementations (argmin assignment; checkpoint
         # discipline; epoch-floor oracle) — kept inside the window ----------
         "kmeans_assign": q_kmeans_assign,
-        # --- r7-touched implementations rotated INTO the window (shingle
-        # per-doc array_distinct; spread_small_scan in the vector bases) —
+        # --- r7-touched implementation rotated INTO the window —
         # swapped with rate_limit/alert/counter_rate/hll, all untouched
         # this round and r6-hash-verified --------------------------------
-        "minhash_lsh_neardup": q_minhash_lsh_neardup,
         "robust_outliers": q_robust_outliers,
-        "dedup_components": q_dedup_components,
         # --- r2/r3 backlog (first driver-checked in r3) ---------------------
-        "embedding_neardup": q_embedding_neardup,
         "stratified_sample": q_stratified_sample,
         "cms_user_counts": q_cms_user_counts,
         "knn_bruteforce": q_knn_bruteforce,
-        "simhash": q_simhash,
-        "ngram_jaccard_same_source": q_ngram_jaccard_same_source,
         "bloom_membership": q_bloom_membership,
-        "contamination_cross_source": q_contamination_cross_source,
         # non-SQL-expressible paths (rows-only checks; byte format and
         # batch shape are covered by pytest oracles instead) — rows-only
         # entries can never bank a hash-MATCH, so they must STAY inside
@@ -1541,7 +1422,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_sessionize": q_events_sessionize,
         "events_sessionize_window": q_events_sessionize_window,
         # training-data ops (documents/embeddings)
-        "dedup_exact": q_dedup_exact,
         "doc_fingerprint": q_doc_fingerprint,
         "token_count": q_token_count,
         "token_count_bpe": q_token_count_bpe,
@@ -1606,121 +1486,6 @@ def _retry_chain_sql() -> str:
   FROM seq
 )"""
     )
-def _minhash_sql(threshold: float = 0.5) -> str:
-    n = dd.N_HASHES
-    rpb = n // dd.N_BANDS
-    mins = ",\n    ".join(
-        f"min(md5('{j}:' || shingle)) AS m{j}" for j in range(n)
-    )
-    band_selects = " UNION ALL ".join(
-        "SELECT id, {b} AS band_idx, md5({concat}) AS band_key FROM sig".format(
-            b=b,
-            concat=" || ".join(f"m{b * rpb + r}" for r in range(rpb)),
-        )
-        for b in range(dd.N_BANDS)
-    )
-    agree = " + ".join(
-        f"(CASE WHEN sa.m{j} = sb.m{j} THEN 1 ELSE 0 END)" for j in range(n)
-    )
-    return f"""
-WITH docs_n AS (
-  SELECT doc_id AS id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
-  FROM documents
-), sh AS (
-  SELECT DISTINCT id, substr(norm, CAST(i AS INTEGER), {dd.SHINGLE_LEN}) AS shingle
-  FROM (SELECT id, norm,
-               unnest(range(1, length(norm) - {dd.SHINGLE_LEN - 2})) AS i
-        FROM docs_n WHERE length(norm) >= {dd.SHINGLE_LEN})
-), sig AS (
-  SELECT id, {mins} FROM sh GROUP BY id
-), bands AS ({band_selects}
-), cand0 AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.id < b.id
-), cand AS (
-  SELECT c.id_a, c.id_b
-  FROM cand0 c JOIN sig sa ON sa.id = c.id_a JOIN sig sb ON sb.id = c.id_b
-  WHERE ({agree}) >= {int(dd.EST_MIN * n)}
-), sizes AS (
-  SELECT id, count(*) AS n FROM sh GROUP BY id
-), inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS n_inter
-  FROM cand c
-  JOIN sh sa ON sa.id = c.id_a
-  JOIN sh sb ON sb.id = c.id_b AND sb.shingle = sa.shingle
-  GROUP BY c.id_a, c.id_b
-)
-SELECT c.id_a, c.id_b,
-       COALESCE(i.n_inter, 0) / (na.n + nb.n - COALESCE(i.n_inter, 0)) AS jaccard
-FROM cand c
-LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-JOIN sizes na ON na.id = c.id_a
-JOIN sizes nb ON nb.id = c.id_b
-WHERE COALESCE(i.n_inter, 0) / (na.n + nb.n - COALESCE(i.n_inter, 0)) >= {threshold}
-"""
-
-
-def _simhash_sql() -> str:
-    votes = []
-    for b in range(dd.SIMHASH_BITS):
-        nib_idx = b // 4 + 1
-        shift = 2 ** (b % 4)
-        nib = f"(instr('0123456789abcdef', substr(md5(shingle), {nib_idx}, 1)) - 1)"
-        bit = f"(CAST(floor({nib} / {shift}) AS BIGINT) % 2)"
-        votes.append(
-            f"sum(CASE WHEN {bit} = 1 THEN 1 ELSE -1 END) AS v{b}"
-        )
-    votes_sql = ",\n    ".join(votes)
-    hash_sql = " + ".join(
-        f"(CASE WHEN v{b} > 0 THEN {2**b} ELSE 0 END)" for b in range(dd.SIMHASH_BITS)
-    )
-    return f"""
-WITH docs_n AS (
-  SELECT doc_id AS id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
-  FROM documents
-), sh AS (
-  SELECT DISTINCT id, substr(norm, CAST(i AS INTEGER), {dd.SHINGLE_LEN}) AS shingle
-  FROM (SELECT id, norm,
-               unnest(range(1, length(norm) - {dd.SHINGLE_LEN - 2})) AS i
-        FROM docs_n WHERE length(norm) >= {dd.SHINGLE_LEN})
-), votes AS (
-  SELECT id, {votes_sql} FROM sh GROUP BY id
-)
-SELECT id AS doc_id, CAST({hash_sql} AS BIGINT) AS simhash FROM votes
-"""
-
-
-def _ngram_jaccard_sql(threshold: float = 0.2) -> str:
-    return f"""
-WITH docs_n AS (
-  SELECT doc_id AS id, source, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS norm
-  FROM documents
-), sh AS (
-  SELECT DISTINCT id, substr(norm, CAST(i AS INTEGER), {dd.SHINGLE_LEN}) AS shingle
-  FROM (SELECT id, norm,
-               unnest(range(1, length(norm) - {dd.SHINGLE_LEN - 2})) AS i
-        FROM docs_n WHERE length(norm) >= {dd.SHINGLE_LEN})
-), cand AS (
-  SELECT a.id AS id_a, b.id AS id_b
-  FROM docs_n a JOIN docs_n b ON a.source = b.source AND a.id < b.id
-), sizes AS (
-  SELECT id, count(*) AS n FROM sh GROUP BY id
-), inter AS (
-  SELECT c.id_a, c.id_b, count(*) AS n_inter
-  FROM cand c
-  JOIN sh sa ON sa.id = c.id_a
-  JOIN sh sb ON sb.id = c.id_b AND sb.shingle = sa.shingle
-  GROUP BY c.id_a, c.id_b
-)
-SELECT c.id_a, c.id_b,
-  round(COALESCE(i.n_inter, 0) / (na.n + nb.n - COALESCE(i.n_inter, 0)), 6) AS jaccard
-FROM cand c
-LEFT JOIN inter i ON i.id_a = c.id_a AND i.id_b = c.id_b
-JOIN sizes na ON na.id = c.id_a
-JOIN sizes nb ON nb.id = c.id_b
-WHERE COALESCE(i.n_inter, 0) / (na.n + nb.n - COALESCE(i.n_inter, 0)) >= {threshold}
-"""
 
 
 _COS_SQL = "(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
@@ -1830,68 +1595,6 @@ SELECT e.user_id, e.est_n, t.true_n
 FROM est e JOIN tru t ON t.user_id = e.user_id"""
 
 
-def _embedding_neardup_sql(threshold: float = 0.3) -> str:
-    cos = _COS_SQL.format(a="a.v", b="b.v")
-    return f"""
-WITH base AS (
-  SELECT vec_id AS id, label AS blk, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-)
-SELECT a.id AS id_a, b.id AS id_b, round({cos}, 6) AS cos
-FROM base a JOIN base b ON a.blk = b.blk AND a.id < b.id
-WHERE {cos} >= {threshold}
-"""
-
-
-def _components_sql(iters: int | None = None) -> str:
-    """Unrolled twin of operators/dedup.dedup_components over the
-    minhash near-dup pairs: round i's labels l{i} = LEAST(own label,
-    min over direct neighbors' labels)."""
-    from apm_opentelemetry_collector_spark.operators.dedup import CC_ITERS
-
-    iters = iters or CC_ITERS
-    # MATERIALIZED: each round references the previous one twice — an
-    # inlined CTE chain would re-evaluate the minhash subquery 2^iters
-    # times (the same blowup the Spark side prevents with per-round
-    # checkpoints)
-    ctes = [
-        f"pairs AS MATERIALIZED (SELECT id_a, id_b FROM ({_minhash_sql(0.5)}))",
-        "sym AS MATERIALIZED (SELECT id_a, id_b FROM pairs UNION ALL SELECT id_b AS id_a, id_a AS id_b FROM pairs)",
-        "l0 AS MATERIALIZED (SELECT DISTINCT id_a AS id, id_a AS comp FROM sym)",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"""l{i} AS MATERIALIZED (
-  SELECT l.id, LEAST(l.comp, COALESCE(n.m, l.comp)) AS comp
-  FROM l{i - 1} l LEFT JOIN (
-    SELECT s.id_a AS id, min(p.comp) AS m
-    FROM sym s JOIN l{i - 1} p ON p.id = s.id_b GROUP BY s.id_a
-  ) n ON n.id = l.id
-)"""
-        )
-    return "WITH " + ",\n".join(ctes) + f"\nSELECT id, comp AS component FROM l{iters}"
-
-
-def _components_star_sql() -> str:
-    """Exact twin of dedup_components_star: TRUE component minima via a
-    recursive-CTE transitive closure over the minhash near-dup pairs —
-    deliberately NOT a re-implementation of the star rounds, so the
-    check is independent of the iteration scheme (UNION dedup bounds the
-    recursion; near-dup components are tiny, so the closure is cheap)."""
-    return f"""
-WITH RECURSIVE pairs AS MATERIALIZED (
-  SELECT id_a, id_b FROM ({_minhash_sql(0.5)})
-), sym AS MATERIALIZED (
-  SELECT id_a AS u, id_b AS v FROM pairs
-  UNION
-  SELECT id_b AS u, id_a AS v FROM pairs
-), reach(u, v) AS (
-  SELECT u, v FROM sym
-  UNION
-  SELECT r.u, s.v FROM reach r JOIN sym s ON s.u = r.v
-)
-SELECT u AS id, least(u, min(v)) AS component FROM reach GROUP BY u"""
-
-
 def _kmeans_sql(k: int | None = None, iters: int | None = None, dim: int = 64) -> str:
     """Unrolled-CTE twin of operators/clustering.kmeans_assign: the same
     fixed Lloyd rounds — lowest-id seeding, squared-L2 nearest (ties to
@@ -1998,25 +1701,6 @@ SELECT doc_id, n_tokens, start_tok,
 FROM pre"""
 
 
-def _canonical_sql() -> str:
-    """Exact twin of operators/dedup.dedup_canonical: components via the
-    same unrolled min-label CTEs (nested as a subquery), winner per
-    component via the identical ROW_NUMBER (n_chars DESC, id ASC)."""
-    return f"""
-WITH comp AS MATERIALIZED (
-  SELECT * FROM ({_components_sql()})
-), base AS (
-  SELECT doc_id AS id, CAST(length(text) AS BIGINT) AS n_chars FROM documents
-), j AS (
-  SELECT b.id, COALESCE(c.component, b.id) AS component, b.n_chars
-  FROM base b LEFT JOIN comp c ON c.id = b.id
-)
-SELECT id AS doc_id, component, n_chars,
-       (row_number() OVER (PARTITION BY component
-                           ORDER BY n_chars DESC, id ASC) = 1) AS keep
-FROM j"""
-
-
 def _mixture_weights_sql(weights: dict[str, float] | None = None) -> str:
     """Exact twin of operators/sample.mixture_weights: integer token
     sums (exact), DECIMAL(18,6) weight accumulation (order-free), the
@@ -2051,35 +1735,6 @@ SELECT source, n_docs, tokens, token_share,
        raw / MAX(raw) OVER () AS rate,
        tokens * (raw / MAX(raw) OVER ()) AS expected_tokens
 FROM r"""
-
-
-def _semdedup_sql(threshold: float | None = None) -> str:
-    """Exact twin of operators/dedup.semdedup: the unrolled _kmeans_sql
-    assignment, within-cluster cosine pairs at the double-cast
-    threshold, and the no-smaller-id-τ-neighbor keep rule."""
-    from apm_opentelemetry_collector_spark.operators.dedup import SEMDEDUP_TAU
-
-    threshold = SEMDEDUP_TAU if threshold is None else threshold
-    cos = _COS_SQL.format(a="x.v", b="y.v")
-    return f"""
-WITH asg AS MATERIALIZED (SELECT vec_id, cluster FROM ({_kmeans_sql()})),
-base AS MATERIALIZED (
-  SELECT e.vec_id AS id, a.cluster, CAST(e.embedding AS DOUBLE[]) AS v
-  FROM embeddings e JOIN asg a USING (vec_id)
-), nbr AS (
-  SELECT id_a, id_b FROM (
-    SELECT x.id AS id_a, y.id AS id_b, {cos} AS cos
-    FROM base x JOIN base y ON y.cluster = x.cluster AND y.id <> x.id
-  ) WHERE cos >= CAST({threshold} AS DOUBLE)
-), agg AS (
-  SELECT id_a, CAST(count(*) AS BIGINT) AS n_similar,
-         bool_or(id_b < id_a) AS has_smaller
-  FROM nbr GROUP BY id_a
-)
-SELECT b.id AS vec_id, b.cluster,
-       COALESCE(g.n_similar, 0) AS n_similar,
-       COALESCE(NOT g.has_smaller, TRUE) AS keep
-FROM base b LEFT JOIN agg g ON g.id_a = b.id"""
 
 
 def _ewma_sql() -> str:
@@ -2427,10 +2082,6 @@ SELECT event_type,
        quantile_cont(value, 0.95) AS p95,
        min(value) AS vmin, max(value) AS vmax
 FROM events GROUP BY event_type""",
-        "dedup_exact": f"""
-SELECT {g.FINGERPRINT_SQL.format(col='text')} AS fingerprint,
-       min(doc_id) AS keep_id, count(*) AS n_dups
-FROM documents GROUP BY 1""",
         "doc_fingerprint": f"""
 SELECT doc_id, {g.FINGERPRINT_SQL.format(col='text')} AS fingerprint FROM documents""",
         "token_count": f"""
@@ -2459,10 +2110,6 @@ FROM documents""",
         "lang_id": f"""
 SELECT doc_id, {g.lang_id_sql('text')} AS lang_pred FROM documents""",
         "knn_bruteforce": _knn_sql(),
-        "minhash_lsh_neardup": _minhash_sql(0.5),
-        "simhash": _simhash_sql(),
-        "ngram_jaccard_same_source": _ngram_jaccard_sql(0.2),
-        "embedding_neardup": _embedding_neardup_sql(0.3),
         "cms_user_counts": _cms_sql(),
         "hll_distinct_users": _hll_users_sql(),
         "bloom_membership": _bloom_sql(),
@@ -2511,17 +2158,9 @@ WITH p AS (
 )
 SELECT doc_id, source FROM p
 WHERE p16 < {smp.stratified_threshold_sql(MIXTURE_RATES)}""",
-        "contamination_cross_source": f"""
-SELECT p.id_a, p.id_b, da.source AS source_a, db.source AS source_b, p.jaccard
-FROM ({_minhash_sql(0.5)}) p
-JOIN documents da ON da.doc_id = p.id_a
-JOIN documents db ON db.doc_id = p.id_b
-WHERE da.source <> db.source""",
         "weighted_reservoir": _wrs_sql(),
         "kmeans_assign": _kmeans_sql(),
         "tfidf_top_terms": textfn.tfidf_top_terms_sql(),
-        "dedup_components": _components_sql(),
-        "dedup_components_star": _components_star_sql(),
         "repeated_passages": dd.repeated_passages_sql(),
         "repeated_spans": dd.repeated_spans_sql(),
         "exactsubstr_dedup": dd.exactsubstr_dedup_sql(),
@@ -2529,20 +2168,6 @@ WHERE da.source <> db.source""",
         "trigram_lm_scores": textfn.trigram_lm_scores_sql(),
         "temperature_mixture": _temperature_mixture_sql(),
         "tokenizer_fertility": textfn.tokenizer_fertility_sql(),
-        "url_dedup": dd.url_dedup_sql(
-            table="urled",
-            pre_cte=(
-                "urled AS (SELECT doc_id,"
-                " 'https://' ||"
-                " CASE WHEN doc_id % 4 = 0 THEN 'www.' ELSE '' END ||"
-                " 'Site' || CAST(doc_id % 23 AS VARCHAR) ||"
-                " '.example.com/path/' || CAST(doc_id % 7 AS VARCHAR) ||"
-                " CASE WHEN doc_id % 3 = 0 THEN '?utm=x' || CAST(doc_id AS VARCHAR)"
-                " ELSE '' END ||"
-                " CASE WHEN doc_id % 5 = 0 THEN '#frag' ELSE '' END AS url"
-                " FROM documents)"
-            ),
-        ),
         "fineweb_filters": textfn.fineweb_filters_sql(
             table="lined",
             pre_cte=(
@@ -2564,9 +2189,7 @@ WHERE da.source <> db.source""",
         "span_cores": dd.span_cores_sql(),
         "pack_sequences": _pack_sequences_sql(),
         "mixture_weights": _mixture_weights_sql(),
-        "dedup_canonical": _canonical_sql(),
         "ewma_anomalies": _ewma_sql(),
-        "semdedup": _semdedup_sql(),
         "bigram_lm_scores": textfn.bigram_lm_scores_sql(),
         "gopher_quality_filters": textfn.gopher_quality_sql(),
         "gopher_repetition": textfn.gopher_repetition_sql(

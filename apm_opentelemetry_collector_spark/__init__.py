@@ -20,7 +20,8 @@ Layout:
                     truncate, enrich, route, pack, encode, aggregate,
                     sample, translate), time-series and analytics operators
                     (asof, resample, rates, skew, outliers, tdigest,
-                    analytics) and corpus-curation operators (dedup,
+                    analytics) and corpus-curation operators
+                    (substring-level dedup and decontamination,
                     curation, clustering)
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant of the collector path

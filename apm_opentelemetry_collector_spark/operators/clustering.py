@@ -13,8 +13,8 @@ Lloyd rounds expressed as a LAZY unrolled DataFrame plan —
           bit-identical centroids regardless of partial-agg order
 
 Squared L2 is composed as |v|² + |c|² − 2·v·c from the same left-fold
-dot product the cosine operators use, so both engines bit-match and the
-nearest-centroid choice (and therefore the whole trajectory) is
+dot product functions/vectors.cosine uses, so both engines bit-match
+and the nearest-centroid choice (and therefore the whole trajectory) is
 deterministic — the assignment table has an EXACT DuckDB twin built by
 unrolling the same iterations into CTEs (__spark_entry__._kmeans_sql).
 

@@ -1,141 +1,33 @@
-"""Deduplication operators for training-data curation.
+"""Substring-level deduplication and decontamination operators for
+training-data curation.
 
-Exact (hash groupBy), MinHash+LSH (shingle → minhash → band → bucket
-join → jaccard verify), SimHash, n-gram Jaccard, and embedding-cosine
-near-dup. Everything is built-in Column expressions — the hash family is
-md5-based so a pure ANSI-SQL oracle reproduces results exactly (no
-engine-specific hash like xxhash64 anywhere near a correctness gate).
+Detection: repeated_passages (strided fixed windows), repeated_spans
+(seed-and-extend maximal spans) and span_cores (shared cores counted
+by containment). Removal: exactsubstr_dedup (ExactSubstr, Lee et al.
+2022), c4_span_dedup (C4's duplicated three-line spans),
+ngram_decontaminate (the GPT-3 13-gram train/eval flag) and
+decontaminate_splice (its window-removal step). Every operator has a
+DuckDB ``_sql`` twin. Everything is built-in Column expressions, and
+the hash family is md5-based, so a pure ANSI-SQL oracle reproduces
+results exactly (no engine-specific hash like xxhash64 anywhere near a
+correctness gate).
 
-Scale notes (100 TB corpus):
-  - exact dedup is one hash-aggregate on the fingerprint — the classic
-    map-side-combinable groupBy, no skew (md5 keys are uniform);
-  - MinHash/LSH replaces the O(n²) pairwise scan with a band-bucket
-    equi-join: shingle explosion is embarrassingly parallel, signatures
-    are one groupBy(doc), and candidate generation shuffles only
-    (band_idx, band_key) — uniform md5 keys again. The final jaccard
-    verify touches only candidate pairs;
-  - banding parameters (N_HASHES=8, N_BANDS=4, rows=2) are configurable;
-    at real scale you'd use 128 hashes / 32 bands — same plan shape.
+Scale notes (100 TB corpus): the one shuffle that matters in each
+operator is keyed by a fixed-width gram or its md5 (uniform keys, no
+text); everything after it is result-bounded. No doc-cardinality
+table is force-broadcast (module invariant): AQE promotes a join to
+broadcast when the actual size fits.
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized
 from ..session import ensure_checkpoint_dir, spread_small_scan
-
-SHINGLE_LEN = 5
-N_HASHES = 8
-N_BANDS = 2  # rows per band = N_HASHES // N_BANDS = 4
-# signature-agreement prefilter: candidate pairs must agree on at least
-# this fraction of minhash components before the (expensive) exact-Jaccard
-# verify join. The minhash estimator E[agree/N] = J, so this prunes pairs
-# whose estimated similarity is far below the dedup threshold.
-EST_MIN = 0.5
-
-
-@dataclass(frozen=True)
-class MinHashConfig:
-    """Banding parameters. The defaults are the CI-scale setting the
-    DuckDB oracle mirrors (8 hashes / 2 bands); PRODUCTION is the
-    128-hash / 32-band configuration for real corpora — same plan shape,
-    just wider signatures (candidate probability 1-(1-J^4)^32).
-
-    distinct_scope picks WHERE shingle set-dedup happens (results are
-    identical — equality-tested):
-      - "corpus" (default everywhere): one distinct() over the whole
-        shingle table, shared by signatures and verify. Measured FASTER
-        on this machine at BOTH bandings (sf0.1 interleaved minima:
-        14.2 s vs 22.4 s at 8/2; 48.5 s vs 124.8 s at 128/32) —
-        shuffle is memory/disk-local here, so the single shared shuffle
-        beats the extra operators.
-      - "candidates" (opt-in for network-bound clusters): signatures
-        run on RAW shingles (min over a multiset = min over its set;
-        map-side combinable, so the shuffle is |docs|×n_hashes
-        signature rows, NOT the full shingle text), and distinct()
-        touches only candidate docs' shingles. The corpus-wide shingle
-        distinct moves ~5× the corpus TEXT bytes through the shuffle —
-        petabytes at 100 TB — while the signature shuffle is ~2% of
-        corpus; when shuffle crosses a real network, that byte ratio
-        dominates the locally-measured CPU overhead. Kept behind the
-        knob precisely because the local benchmark CANNOT witness the
-        network effect: measure on the target cluster, then flip.
-    """
-
-    n_hashes: int = N_HASHES
-    n_bands: int = N_BANDS
-    est_min: float = EST_MIN
-    distinct_scope: str = "corpus"
-
-    def __post_init__(self) -> None:
-        if self.n_hashes % self.n_bands:
-            raise ValueError(
-                f"n_hashes={self.n_hashes} not divisible by n_bands={self.n_bands}"
-            )
-        if self.distinct_scope not in ("corpus", "candidates"):
-            raise ValueError(f"distinct_scope={self.distinct_scope!r}")
-
-    @property
-    def rows_per_band(self) -> int:
-        return self.n_hashes // self.n_bands
-
-
-CI_BANDING = MinHashConfig()
-PRODUCTION_BANDING = MinHashConfig(n_hashes=128, n_bands=32)
-
-
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup: groups by normalized-text md5; keeps min id per group.
-
-    Output: fingerprint, keep_id, n_dups (group size).
-    """
-    from ..functions.text import fingerprint
-
-    return (
-        docs.select(F.col(id_col).alias("_id"), fingerprint(text_col).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(F.min("_id").alias("keep_id"), F.count("*").alias("n_dups"))
-    )
-
-
-def shingles(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    distinct: bool = True,
-) -> DataFrame:
-    """Character 5-gram shingles of the normalized text.
-
-    Output: id, shingle. Docs shorter than SHINGLE_LEN yield no rows.
-
-    distinct=True gives set semantics (needed by the Jaccard verify).
-    Because the dedup key is (id, shingle) and id is part of it, set
-    semantics is a PER-DOCUMENT property — computed map-side with
-    array_distinct over the doc's own shingle array, so there is NO
-    corpus-wide distinct shuffle at any scale (it used to be the
-    operator's largest; r7 removed it outright — guide §2.4).
-    distinct=False keeps the raw multiset (minhash signatures: min over
-    a multiset = min over its set).
-    """
-    norm = normalized(text_col)
-    base = spread_small_scan(
-        docs.select(F.col(id_col).alias("id"), norm.alias("norm")).filter(
-            F.length("norm") >= SHINGLE_LEN
-        )
-    )
-    arr = F.expr(
-        f"transform(sequence(1, length(norm) - {SHINGLE_LEN - 1}),"
-        f" i -> substring(norm, i, {SHINGLE_LEN}))"
-    )
-    if distinct:
-        arr = F.array_distinct(arr)
-    return base.select("id", F.explode(arr).alias("shingle"))
-
 
 PASSAGE_LEN = 40      # normalized chars per passage window
 PASSAGE_STRIDE = 7    # window stride (1 = exact; larger trades recall for volume)
@@ -402,8 +294,8 @@ def repeated_spans(
         # is a PER-DOCUMENT property: array_distinct over the doc's own
         # gram array dedups map-side, so the count is ONE keys-only
         # shuffle instead of the former two-level (fp, id) shuffle +
-        # count — the same corpus-distinct-shuffle removal the shingle
-        # pass got in r7 (guide §2.4), applied to the seed pass. Holds
+        # count — the corpus-distinct-shuffle removal of guide §2.4,
+        # applied to the seed pass. Holds
         # at every scale: the removed exchange carried one row per
         # stride-1 position (corpus chars × ~24 B), the surviving one
         # carries map-side-combined (gram, partial count) rows.
@@ -863,657 +755,6 @@ FROM kept s LEFT JOIN dropped dr
 WHERE dr.core IS NULL"""
 
 
-def minhash_signatures(sh: DataFrame, cfg: MinHashConfig = CI_BANDING) -> DataFrame:
-    """MinHash signature per doc: m0..m{n_hashes-1}, each the min over
-    shingles of md5('<j>:' || shingle).
-
-    Deliberately per-row md5 + map-side-combinable min aggregate: an r7
-    experiment hashing only DISTINCT shingle strings and joining back
-    (md5 count 8.2M → 16k at sf0.1) measured 2.3× SLOWER — the join
-    machinery costs more than the saved digests; parallel JVM md5 is
-    cheap. Kept as the measured-and-rejected alternative.
-    """
-    aggs = [
-        F.min(
-            F.md5(F.concat(F.lit(f"{j}:"), F.col("shingle")).cast("binary"))
-        ).alias(f"m{j}")
-        for j in range(cfg.n_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs)
-
-
-def lsh_bands(sig: DataFrame, cfg: MinHashConfig = CI_BANDING) -> DataFrame:
-    """Band keys: md5 of the concatenated rows of each band.
-
-    Output: id, band_idx, band_key.
-    """
-    rows_per_band = cfg.rows_per_band
-    bands = []
-    for b in range(cfg.n_bands):
-        cols = [F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-        bands.append(
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(F.concat(*cols).cast("binary")).alias("band_key"),
-            )
-        )
-    return sig.select("id", F.explode(F.array(*bands)).alias("band")).select(
-        "id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key")
-    )
-
-
-def candidate_pairs(bands: DataFrame) -> DataFrame:
-    """Distinct (id_a < id_b) pairs sharing at least one LSH bucket."""
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
-def estimate_filter(
-    pairs: DataFrame, sig: DataFrame, cfg: MinHashConfig = CI_BANDING
-) -> DataFrame:
-    """Prune candidates by minhash agreement ≥ est_min before exact verify.
-
-    Two equi-joins against the signature table + N component comparisons
-    per pair — orders of magnitude cheaper than the shingle-intersection
-    join it gates. The signature table is one row per DOCUMENT, so it
-    scales with the corpus: no forced F.broadcast() here (at 100 TB it is
-    billions of rows × n_hashes md5 strings). The ids are uniform md5-ish
-    keys, so AQE's shuffled hash join is the right strategy — and AQE is
-    still free to broadcast on its own when the actual size is below
-    autoBroadcastJoinThreshold (e.g. CI-scale fixtures).
-    """
-    n = cfg.n_hashes
-    sa = sig.select(
-        F.col("id").alias("id_a"), *[F.col(f"m{j}").alias(f"a{j}") for j in range(n)]
-    )
-    sb = sig.select(
-        F.col("id").alias("id_b"), *[F.col(f"m{j}").alias(f"b{j}") for j in range(n)]
-    )
-    agree = sum(
-        F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-        for j in range(n)
-    )
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(agree >= int(cfg.est_min * n))
-        .select("id_a", "id_b")
-    )
-
-
-def jaccard(pairs: DataFrame, sh: DataFrame) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs.
-
-    |∩| via an equi-join on shingle; |∪| = |A| + |B| − |∩|. Shingle sets
-    are already distinct. Output: id_a, id_b, jaccard (double).
-    """
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-    # intersection size via double equi-join on shingle
-    sh_a = sh.select(F.col("id").alias("id_a"), "shingle")
-    sh_b = sh.select(F.col("id").alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sh_a, "id_a").join(sh_b, ["id_b", "shingle"]).groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        pairs.join(inter, ["id_a", "id_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_inter")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-    )
-
-
-def minhash_lsh_dedup(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    cfg: MinHashConfig = CI_BANDING,
-) -> DataFrame:
-    """Near-duplicate pairs via MinHash+LSH with exact-Jaccard verify.
-
-    cfg picks the banding: CI_BANDING (8/2, oracle-mirrored) by default,
-    PRODUCTION_BANDING (128/32) for real corpora — same plan, wider
-    signatures.
-
-    Shuffle discipline: cfg.distinct_scope picks where shingle set-dedup
-    happens (see MinHashConfig — "corpus" is locally faster and the CI
-    default; "candidates" removes the corpus-wide distinct shuffle, the
-    operator's largest at cluster scale, and is the PRODUCTION setting;
-    results are identical and equality-tested). The shingle table is
-    persisted across its consumers; the result is checkpointed to
-    STORAGE (reliable checkpoint, not localCheckpoint) before the
-    unpersist: the materialized output lives in the checkpoint dir, not
-    pinned in executor memory, and survives executor loss — the behavior
-    you want when the shingle intermediate is TBs.
-    """
-    corpus_scope = cfg.distinct_scope == "corpus"
-    sh = shingles(docs, text_col, id_col, distinct=corpus_scope).persist()
-    out = pairs = sh_cand = sig = None
-    try:
-        # sig feeds THREE subtrees (band generation + both sides of the
-        # estimate filter); persisted so the n_hashes×|shingles| md5
-        # aggregation runs once, not three times (r7: one signature pass
-        # ≈ 0.7 s at sf0.1). One row per doc — tiny next to sh.
-        sig = minhash_signatures(sh, cfg).persist()
-        # pairs feeds jaccard() twice (intersection join + final left
-        # join) plus the candidate-id set; persist the tiny candidate
-        # table so band generation + prefilter run once, not per consumer
-        pairs = estimate_filter(
-            candidate_pairs(lsh_bands(sig, cfg)), sig, cfg
-        ).persist()
-        if corpus_scope:
-            sh_verify = sh
-        else:
-            cand_ids = (
-                pairs.select(F.col("id_a").alias("id"))
-                .union(pairs.select(F.col("id_b").alias("id")))
-                .distinct()
-            )
-            # set-semantics shingles for candidates only: the semi-join
-            # side is small (bounded by 2×|pairs|) → map-side filter +
-            # distinct over the surviving slice. Persisted: jaccard()
-            # consumes it three times (both intersection sides + sizes).
-            sh_cand = sh.join(cand_ids, "id", "left_semi").distinct().persist()
-            sh_verify = sh_cand
-        out = jaccard(pairs, sh_verify).filter(F.col("jaccard") >= threshold)
-        ensure_checkpoint_dir(docs.sparkSession.sparkContext)
-        # persist BEFORE the reliable checkpoint: the checkpoint job
-        # otherwise RECOMPUTES the whole lineage a second time (measured
-        # 1.8× on the sf0.1 bench). The cache is dropped right after —
-        # only the checkpoint files back the returned DataFrame.
-        out = out.persist()
-        ckpt = out.checkpoint(eager=True)
-    finally:
-        if out is not None:
-            out.unpersist()
-        if sh_cand is not None:
-            sh_cand.unpersist()
-        if pairs is not None:
-            pairs.unpersist()
-        if sig is not None:
-            sig.unpersist()
-        sh.unpersist()
-    return ckpt
-
-
-def cross_source_contamination(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    cfg: MinHashConfig = CI_BANDING,
-) -> DataFrame:
-    """Train/benchmark contamination check: near-duplicate pairs whose
-    members come from DIFFERENT sources (e.g. a training shard and an
-    eval set). Candidate generation is the same banded LSH — never an
-    all-pairs scan across corpora — with the cross-source constraint
-    applied to the verified pairs. Output: id_a, id_b, source_a,
-    source_b, jaccard.
-
-    The per-doc source map scales with the corpus — like the signature
-    table in estimate_filter it must NOT be force-broadcast; plain
-    equi-joins on uniform ids let AQE pick shuffled-hash (or broadcast
-    when genuinely small)."""
-    pairs = minhash_lsh_dedup(docs, threshold, text_col, id_col, cfg)
-    src = docs.select(F.col(id_col).alias("_id"), F.col(source_col).alias("_src"))
-    return (
-        pairs.join(src.selectExpr("_id AS id_a", "_src AS source_a"), "id_a")
-        .join(src.selectExpr("_id AS id_b", "_src AS source_b"), "id_b")
-        .filter(F.col("source_a") != F.col("source_b"))
-        .select("id_a", "id_b", "source_a", "source_b", "jaccard")
-    )
-
-
-CC_ITERS = 6
-
-
-def dedup_components(pairs: DataFrame, iters: int = CC_ITERS) -> DataFrame:
-    """Connected components over near-dup pairs — the step that turns
-    pairwise matches into DEDUP GROUPS (keep the min id per component,
-    drop the rest). Min-label propagation: every node starts labeled
-    with its own id; each round takes the min over direct neighbors'
-    labels; the component minimum floods one hop per round, so `iters`
-    rounds converge for any component of diameter ≤ iters (near-dup
-    groups are near-cliques — diameter 2-3 in practice; production
-    would use large-star/small-star for billion-edge graphs, same
-    output contract).
-
-    Deterministic and engine-exact: the unrolled rounds have a DuckDB
-    twin (__spark_entry__._components_sql) built from the same loop
-    (MATERIALIZED CTEs there, for the same reason as the checkpoints
-    here). Output: id, component (min reachable id within iters hops).
-
-    Iteration discipline: each round references the previous labels
-    TWICE (own label + the neighbor-min join), so a fully lazy unroll
-    doubles the lineage per round — 2^iters recomputation. Every round
-    is therefore cut with a NON-eager localCheckpoint: lineage is
-    truncated (Catalyst cannot re-derive and duplicate the subtree),
-    but materialization happens inside the caller's single action
-    instead of one driver-blocking job per round (r7: 6 serialized job
-    barriers → 0; measured 2.1 → 1.8 s on the sf0.1 pair set with
-    identical output). The label table is |nodes| rows of two ids —
-    small even when the corpus is not; a reliable storage checkpoint
-    per round is the swap for graphs where it isn't.
-    """
-    edges = pairs.select("id_a", "id_b")
-    # sym feeds every round's neighbor join: same non-eager cut (a
-    # persist would be dropped by the pre-action unpersist before any
-    # job ran, recomputing sym 2×iters times)
-    sym = edges.union(
-        edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).localCheckpoint(eager=False)
-    labels = (
-        sym.select(F.col("id_a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(iters):
-        nbr = (
-            sym.join(
-                labels.select(
-                    F.col("id").alias("id_b"), F.col("comp").alias("nbr_comp")
-                ),
-                "id_b",
-            )
-            .groupBy("id_a")
-            .agg(F.min("nbr_comp").alias("nbr_min"))
-            .select(F.col("id_a").alias("id"), "nbr_min")
-        )
-        labels = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_min"), F.col("comp"))
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return labels.select("id", F.col("comp").alias("component"))
-
-
-STAR_MAX_ROUNDS = 20  # safety bound; converges in O(log² n) rounds
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star round: every node connects its strictly-LARGER
-    neighbors to the minimum of its closed neighborhood. Emitted edges
-    always point larger → smaller (u > v)."""
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    m = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", "u").alias("m"))
-    )
-    return (
-        sym.join(m, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star round: every node connects its SMALLER neighbors (and
-    itself) to the minimum among them. Input and output edges point
-    larger → smaller."""
-    m = edges.groupBy("u").agg(F.min("v").alias("m"))
-    return (
-        edges.join(m, "u")
-        .select(F.col("v").alias("x"), "m")
-        .union(m.select(F.col("u").alias("x"), "m"))
-        .filter(F.col("x") != F.col("m"))
-        .select(F.greatest("x", "m").alias("u"), F.least("x", "m").alias("v"))
-        .distinct()
-    )
-
-
-def dedup_components_star(
-    pairs: DataFrame, max_rounds: int = STAR_MAX_ROUNDS
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star — the
-    billion-edge production algorithm dedup_components's docstring
-    promises (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"): each round is two hash-shuffles on node id (a groupBy min
-    + an equi-join back), the edge set only ever shrinks toward star
-    graphs, and convergence needs O(log² n) rounds REGARDLESS of
-    component diameter — where min-label propagation needs diameter
-    rounds and keeps the full |nodes| label table live, star rounds
-    operate on the (shrinking) edge list only.
-
-    Iterates to CONVERGENCE (edge set stable), not a fixed round count:
-    each round's edges are materialized to a reliable STORAGE checkpoint
-    (persist → checkpoint → unpersist — the same lineage-cut discipline
-    as dedup_components, but surviving executor loss and not pinning
-    executor memory), and a bounded 1-row aggregate per round compares
-    (count, hash-sum) fingerprints of consecutive edge sets.
-
-    Output contract identical to dedup_components: (id, component) with
-    component = the true minimum id of the node's component (exact —
-    equality-tested against min-label propagation, and oracled by a
-    recursive-CTE transitive closure in DuckDB).
-    """
-    ensure_checkpoint_dir(pairs.sparkSession.sparkContext)
-    # canonicalize: unique larger→smaller edges, no self-loops
-    edges = (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("u"),
-            F.least("id_a", "id_b").alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    nodes = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .distinct()
-    )
-    edges = edges.persist()
-    nodes = nodes.checkpoint(eager=True)
-    edges_ck = edges.checkpoint(eager=True)
-    edges.unpersist()
-    edges = edges_ck
-
-    def _fingerprint(e: DataFrame) -> tuple[int, int]:
-        # decimal accumulation: exact and overflow-free under ANSI mode
-        # (a bigint sum of xxhash64 values overflows within a handful
-        # of rows), order-independent, so the fingerprint is stable
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return int(row["n"]), int(row["h"])
-
-    fp = _fingerprint(edges)
-    converged = False
-    for _ in range(max_rounds):
-        nxt = _small_star(_large_star(edges)).persist()
-        nxt_ck = nxt.checkpoint(eager=True)
-        nxt.unpersist()
-        edges.unpersist()
-        edges = nxt_ck
-        nfp = _fingerprint(edges)
-        if nfp == fp:
-            converged = True
-            break
-        fp = nfp
-    if not converged:
-        # A non-star edge set would make the final left join emit
-        # duplicate/incorrect (id, component) rows — loud beats silent.
-        # Practically unreachable: O(log² n) rounds means 20 covers
-        # components far beyond any real corpus.
-        raise RuntimeError(
-            f"dedup_components_star: edge set did not converge within "
-            f"{max_rounds} rounds; raise max_rounds"
-        )
-    # converged star graph: every non-root points straight at its
-    # component minimum; roots (no outgoing edge) label themselves
-    return nodes.join(
-        edges.select(F.col("u").alias("id"), F.col("v").alias("root")),
-        "id",
-        "left",
-    ).select("id", F.coalesce("root", "id").alias("component"))
-
-
-# --- SimHash ---------------------------------------------------------------
-SIMHASH_BITS = 16  # 4 md5 hex nibbles; production would use 64
-
-
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """16-bit SimHash over shingle md5 prefixes.
-
-    bit b of the hash of shingle s = (nibble_{b//4}(md5(s)) >> (b%4)) & 1,
-    where nibble_i is the i-th hex char; the document bit is the majority
-    vote. Nibble math uses strpos on the hex alphabet so a SQL oracle
-    reproduces it without binary ops.
-    """
-    sh = shingles(docs, text_col, id_col)
-    bit_votes = []
-    for b in range(SIMHASH_BITS):
-        nib_idx = b // 4 + 1  # 1-based hex char of the md5
-        shift = b % 4
-        nib = F.expr(
-            f"instr('0123456789abcdef', substring(md5(cast(shingle as binary)), {nib_idx}, 1)) - 1"
-        )
-        bit = F.floor(nib / (2**shift)) % 2
-        bit_votes.append(F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"v{b}"))
-    votes = sh.groupBy("id").agg(*bit_votes)
-    hash_expr = None
-    for b in range(SIMHASH_BITS):
-        term = F.when(F.col(f"v{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
-        hash_expr = term if hash_expr is None else hash_expr + term
-    return votes.select(F.col("id").alias("doc_id"), hash_expr.cast("bigint").alias("simhash"))
-
-
-def embedding_neardup(
-    embeddings: DataFrame,
-    threshold: float = 0.3,
-    block_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Near-duplicate vector pairs: cosine ≥ threshold within a block.
-
-    Blocking on `block_col` (label / coarse cluster) keeps the self-join
-    from going quadratic over the corpus — the same role LSH bands play
-    for text. Output: id_a, id_b, cos.
-    """
-    from ..functions.vectors import as_double, cosine
-
-    base = spread_small_scan(
-        embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(block_col).alias("blk"),
-            as_double(vec_col).alias("v"),
-        )
-    )
-    a = base.select(F.col("id").alias("id_a"), F.col("blk"), F.col("v").alias("va"))
-    b = base.select(F.col("id").alias("id_b"), F.col("blk"), F.col("v").alias("vb"))
-    return (
-        a.join(b, "blk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
-    )
-
-
-SEMDEDUP_TAU = 0.3   # cosine threshold for "semantic duplicate"
-
-
-def semdedup(
-    embeddings: DataFrame,
-    threshold: float = SEMDEDUP_TAU,
-    k: int | None = None,
-    iters: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Semantic deduplication à la SemDeDup (Abbas, Tirumala, Simig,
-    Ganguli, Morcos, arXiv:2303.09540): k-means-cluster the embedding
-    space, then compare pairs ONLY within a cluster and keep, from each
-    set of mutually-similar documents, a single deterministic
-    representative.
-
-    Keep rule (deterministic, order-free): a document is DROPPED iff
-    some LOWER-id document in its cluster has cosine ≥ threshold with
-    it — the survivor set is EXACTLY the docs with no smaller-id
-    τ-neighbor, one aggregate, no iteration. PRECISE guarantee: within
-    any mutually-similar CLIQUE exactly one doc (the minimum id)
-    survives. For a similarity CHAIN the survivor count depends on how
-    ids fall along it: ids ascending along the chain collapse to the
-    lowest id (b drops because of a, c because of b — a dropped doc
-    still suppresses its own larger-id neighbors), but a chain whose
-    interior holds the LARGEST id keeps one doc per flank (e.g. edges
-    0–2 and 1–2 only: both 0 and 1 survive) — so a transitive group
-    may retain more than one near-duplicate (both behaviors tested).
-    This is the standard within-cluster ε-dedup approximation the
-    paper's pairwise pass makes; for strict one-per-transitive-
-    component semantics feed the τ-pair edge list to dedup_components /
-    dedup_components_star (dedup_canonical is that composition for
-    text).
-
-    Scale shape: the clustering bounds the self-join — pair volume is
-    Σ_c |c|² instead of n²; k grows with the corpus so clusters stay
-    bounded (the paper runs k ≈ n/10⁴). The cluster assignment is run
-    once to a reliable checkpoint (the self-join's two branches would
-    otherwise re-execute the Lloyd rounds); no forced broadcasts — both
-    join sides are corpus-cardinality (the dedup.py rule).
-
-    Output: vec_id, cluster, n_similar (τ-neighbors within the
-    cluster), keep (no smaller-id τ-neighbor). Exact DuckDB twin:
-    __spark_entry__._semdedup_sql (composes the unrolled _kmeans_sql).
-    """
-    from ..functions.vectors import as_double, dot
-    from ..functions.vectors import norm as vnorm
-    from .clustering import KMEANS_ITERS, KMEANS_K, kmeans_assign
-
-    k = k or KMEANS_K
-    iters = iters or KMEANS_ITERS
-    # the assignment table is (id, cluster) — two ids per row. A
-    # non-eager localCheckpoint cuts the lineage (the pair self-join's
-    # two branches cannot re-execute the Lloyd rounds) while
-    # materializing inside the query's own action instead of a separate
-    # eager checkpoint job (r7; the CC-labels discipline).
-    asg_ck = kmeans_assign(
-        embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-    ).select(F.col(id_col).alias("id"), "cluster").localCheckpoint(eager=False)
-
-    # per-row norm precomputed ONCE (cosine(a,b) recomputes ||a|| and
-    # ||b|| per PAIR otherwise — 3× the fold work on the quadratic pair
-    # volume; same expression per row, so the double is bit-identical)
-    base = spread_small_scan(
-        embeddings.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v"))
-    ).join(asg_ck, "id").withColumn("nv", vnorm(F.col("v")))
-    x = base.select(
-        F.col("id").alias("id_a"), "cluster",
-        F.col("v").alias("va"), F.col("nv").alias("na"),
-    )
-    y = base.select(
-        F.col("id").alias("id_b"), "cluster",
-        F.col("v").alias("vb"), F.col("nv").alias("nb"),
-    )
-    # the within-cluster pair join has only k distinct keys, so its
-    # compute parallelism is key-bound (and AQE coalesces the tiny-BYTE
-    # shuffle to ~1 partition while the pair EXPLOSION inside the join
-    # is quadratic CPU). Salt one side when k < parallelism: replicate
-    # x n_salt ways, bucket y by xxhash64(id_b) % n_salt, join on
-    # (cluster, salt) with an explicit co-partitioning both sides so
-    # AQE's byte-based coalescing cannot re-serialize it. Scale-adaptive
-    # by construction: production runs k ≈ n/10⁴ ≫ cores → n_salt = 1
-    # and the plan is byte-for-byte the unsalted one.
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    n_salt = max(1, par // max(int(k), 1))
-    if n_salt > 1:
-        x = x.withColumn(
-            "_s", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        ).repartition(par, "cluster", "_s")
-        y = y.withColumn(
-            "_s", F.pmod(F.xxhash64("id_b"), F.lit(n_salt)).cast("int")
-        ).repartition(par, "cluster", "_s")
-        join_keys = ["cluster", "_s"]
-    else:
-        join_keys = ["cluster"]
-    nbr = (
-        x.join(y, join_keys)
-        .filter(F.col("id_a") != F.col("id_b"))
-        .withColumn(
-            "cos", dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= F.lit(float(threshold)))
-    )
-    agg = nbr.groupBy("id_a").agg(
-        F.count("*").alias("n_similar"),
-        F.max(F.col("id_b") < F.col("id_a")).alias("has_smaller"),
-    )
-    return (
-        base.join(agg, base["id"] == agg["id_a"], "left")
-        .select(
-            F.col("id").alias(id_col),
-            "cluster",
-            F.coalesce("n_similar", F.lit(0).cast("long")).alias("n_similar"),
-            F.coalesce(~F.col("has_smaller"), F.lit(True)).alias("keep"),
-        )
-    )
-
-
-def dedup_canonical(
-    docs: DataFrame,
-    pairs: DataFrame | None = None,
-    threshold: float = 0.5,
-    iters: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Canonical-document selection — the step that closes the fuzzy-
-    dedup loop end-to-end: near-dup pairs (MinHash+LSH verified) →
-    connected components → keep exactly ONE representative per group by
-    the keep-longest rule (max char length, ties to the smaller doc id
-    — the C4/RefinedWeb-style choice of the most complete variant over
-    "keep the first seen"). Documents in no near-dup pair are their own
-    singleton components and always survive, so the output covers the
-    WHOLE corpus: the `keep` column IS the curation filter.
-
-    Scale shape: everything upstream is the banded/blocked minhash path
-    (never all-pairs) and bounded-round CC on the pair set only; this
-    layer adds one LEFT join of the corpus against the (tiny) component
-    table and one per-component window whose partition size is bounded
-    by the largest duplicate GROUP — skew-safe unless one document has
-    millions of near-identical variants, the same hazard bound as the
-    LSH bucket join upstream.
-
-    Output: doc_id, component, n_chars, keep. Oracle:
-    __spark_entry__._canonical_sql (components via the same unrolled
-    min-label CTEs, winner via the identical ROW_NUMBER ordering).
-    """
-    from pyspark.sql import Window
-
-    if pairs is None:
-        pairs = minhash_lsh_dedup(docs, threshold=threshold)
-    comp = dedup_components(pairs, iters=iters) if iters else dedup_components(pairs)
-    base = docs.select(
-        F.col(id_col).alias("id"),
-        F.length(text_col).cast("bigint").alias("n_chars"),
-    )
-    j = base.join(comp, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component"), "n_chars"
-    )
-    w = Window.partitionBy("component").orderBy(
-        F.col("n_chars").desc(), F.col("id").asc()
-    )
-    return j.select(
-        F.col("id").alias(id_col),
-        "component",
-        "n_chars",
-        (F.row_number().over(w) == 1).alias("keep"),
-    )
-
-
 # Exact n-gram decontamination (GPT-3 App. C / PaLM / Llama-2 style):
 # a training document is contaminated if it shares ANY word-level
 # 13-gram with an eval/benchmark document. 13 is the published GPT-3
@@ -1537,11 +778,10 @@ def ngram_decontaminate(
     word-level n-grams of every benchmark document; any training
     document sharing at least one of them is flagged (the downstream
     policy — drop the doc, or splice out the spans — consumes this
-    table). Complements cross_source_contamination: that one finds
-    NEAR-dup doc pairs via LSH; this one is the exact-overlap sweep the
-    eval-hygiene papers actually specify, and it catches a single
-    quoted benchmark sentence inside an otherwise-unique document,
-    which whole-doc similarity never will.
+    table). It is the exact-overlap sweep the eval-hygiene papers
+    specify, and it catches a single quoted benchmark sentence inside
+    an otherwise-unique document, which whole-doc similarity never
+    will.
 
     Spark shape (everything JVM-side, one shuffle that matters):
       * tokenize once — normalized text split on the collapsed single
@@ -2108,95 +1348,6 @@ SELECT b.id AS {id_col},
 FROM base b
 LEFT JOIN rm_cnt r ON b.id = r.id
 LEFT JOIN cleaned c ON b.id = c.id"""
-
-
-# URL-level dedup (RefinedWeb, Penedo et al. 2023 §3.2: URL dedup runs
-# BEFORE any content dedup — re-crawls and trivially mirrored pages are
-# the cheapest duplicates to kill). Normalization is the standard
-# crawl-pipeline form, frozen here and fed to both engines: lowercase,
-# drop scheme, drop a leading www., drop query string and fragment,
-# drop a trailing slash.
-URL_STRIP_QF_RE = r"[?#].*$"
-URL_STRIP_SCHEME_RE = r"^https?://"
-URL_STRIP_WWW_RE = r"^www\."
-URL_STRIP_SLASH_RE = r"/$"
-
-
-def normalized_url(url) -> "F.Column":
-    u = F.col(url) if isinstance(url, str) else url
-    u = F.lower(u)
-    u = F.regexp_replace(u, URL_STRIP_QF_RE, "")
-    u = F.regexp_replace(u, URL_STRIP_SCHEME_RE, "")
-    u = F.regexp_replace(u, URL_STRIP_WWW_RE, "")
-    return F.regexp_replace(u, URL_STRIP_SLASH_RE, "")
-
-
-def normalized_url_sql(col: str) -> str:
-    return (
-        "regexp_replace(regexp_replace(regexp_replace(regexp_replace("
-        f"lower({col}), '{URL_STRIP_QF_RE}', ''), "
-        f"'{URL_STRIP_SCHEME_RE}', ''), '{URL_STRIP_WWW_RE}', ''), "
-        f"'{URL_STRIP_SLASH_RE}', '')"
-    )
-
-
-def url_dedup(
-    docs: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """URL-level deduplication — the RefinedWeb pipeline's FIRST dedup
-    stage: normalize each document's URL (scheme/www/query/fragment/
-    trailing-slash stripped, lowercased), group identical normalized
-    URLs, keep the smallest doc_id per group. Runs before content
-    dedup because it needs no text at all — the cheapest pass in the
-    stack.
-
-    Spark shape: normalization is pure regexp projection; the ONE
-    shuffle is a keys-only window over (norm_url) carrying (doc_id,
-    host) — never text; host is the prefix up to the first '/' of the
-    normalized form (split, not a second regex pass).
-
-    Output: doc_id, norm_url, host, n_dups (group size), keep
-    (smallest id in group).
-    """
-    from pyspark.sql import Window
-
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        normalized_url(url_col).alias("norm_url"),
-    ).withColumn("host", F.split(F.col("norm_url"), "/").getItem(0))
-    w = Window.partitionBy("norm_url")
-    return base.select(
-        "doc_id",
-        "norm_url",
-        "host",
-        F.count("*").over(w).cast("bigint").alias("n_dups"),
-        (F.col("doc_id") == F.min("doc_id").over(w)).alias("keep"),
-    )
-
-
-def url_dedup_sql(
-    table: str = "documents",
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    pre_cte: str | None = None,
-) -> str:
-    """DuckDB twin of url_dedup (same regexp chain and keep rule)."""
-    pre = f"{pre_cte}, " if pre_cte else ""
-    return f"""
-WITH {pre}base AS (
-  SELECT {id_col} AS doc_id,
-         {normalized_url_sql(url_col)} AS norm_url
-  FROM {table}
-), hosted AS (
-  SELECT doc_id, norm_url, string_split(norm_url, '/')[1] AS host
-  FROM base
-)
-SELECT doc_id, norm_url, host,
-       CAST(count(*) OVER (PARTITION BY norm_url) AS BIGINT) AS n_dups,
-       (doc_id = min(doc_id) OVER (PARTITION BY norm_url)) AS keep
-FROM hosted"""
 
 
 # ExactSubstr removal (Lee et al. 2022, "Deduplicating Training Data

@@ -126,12 +126,11 @@ def leakage_safe_split(
     """Train/val/test fold label from a consistent hash of `key`.
 
     Leakage safety comes from CHOOSING the key: hash the duplicate-group
-    fingerprint (or a near-dup component id from dedup_components), not
-    the row id, and every duplicate of a document lands in the SAME
-    fold — the split a contamination-aware pipeline needs. Weights are
-    cumulative 16-bit thresholds, deterministic across replays; the
-    dict renders into the SQL twin (split_case_sql) — single source of
-    truth.
+    fingerprint, not the row id, and every duplicate of a document lands
+    in the SAME fold — the split a contamination-aware pipeline needs.
+    Weights are cumulative 16-bit thresholds, deterministic across
+    replays; the dict renders into the SQL twin (split_case_sql) —
+    single source of truth.
     """
     weights = weights or SPLIT_WEIGHTS
     if abs(sum(weights.values()) - 1.0) > 1e-9:

@@ -79,8 +79,6 @@ def main() -> None:
         "q1_pricing_summary",
         "q3_shipping_priority",
         "q5_local_supplier_volume",
-        "dedup_exact",
-        "minhash_lsh_neardup",
         "knn_bruteforce",
         "asof_last_event",
         "metrics_resample",
@@ -91,12 +89,7 @@ def main() -> None:
         "tfidf_top_terms",
         "events_funnel",
         "rate_limit_exceeded",
-        # r4 additions (dedup_components_star rotated OUT of the
-        # headline in r6 when the noop-sink fix recalibrated costs —
-        # BENCH/BASELINE.md §2i: its dominant cost, minhash candidate
-        # generation, is already carried by minhash_lsh_neardup and
-        # dedup_canonical, and it stays driver-gate-verified in
-        # queries(); plan story in BENCH/PLANS.md)
+        # r4 additions
         "value_percentiles_tdigest",
         "repeated_passages",
         # r5 additions
@@ -105,10 +98,8 @@ def main() -> None:
         "bigram_lm_scores",
         # r6 additions
         "span_cores",
-        "semdedup",
         "pack_sequences",
         "mixture_weights",
-        "dedup_canonical",
         "gopher_quality_filters",
         "gopher_repetition",
         "c4_line_filters",
@@ -123,7 +114,6 @@ def main() -> None:
         "temperature_mixture",
         "tokenizer_fertility",
         "fineweb_filters",
-        "url_dedup",
     ]
     # Per-query: best-of-REPS, INTERLEAVED round-robin so a transient host
     # slowdown (documented 3-5× contention spikes) hits all queries alike
@@ -139,17 +129,6 @@ def main() -> None:
     REPS = 3
     QUERY_BUDGET_S = 40.0
     SOFT_DEADLINE_S = 420.0
-    # r4 VERDICT #8 escape valve, engaged in r6 when span_cores joined
-    # the headline: the heaviest stable query runs once so the bench
-    # stays under the 5-minute budget (its round-over-round story is
-    # carried by the r4/r5 BENCH records; a single rep still catches
-    # regressions at the 2x level that matters). BUT a single rep is
-    # spike-vulnerable (an r6 draw recorded 60.6 s for a ~16 s query
-    # under host contention, unretried) — so if the lone rep exceeds
-    # SPIKE_RETRY_S it earns ONE later-in-the-round retry; quiet draws
-    # still pay a single rep.
-    SINGLE_REP = {"dedup_canonical"}
-    SPIKE_RETRY_S = 40.0
     E2E = "pipeline_e2e_synth"
     workdir = tempfile.mkdtemp(prefix="bench_")
     qmap = entry.queries()
@@ -161,9 +140,6 @@ def main() -> None:
                 n = len(times[name])
                 if n >= REPS:
                     continue
-                if name in SINGLE_REP and n >= 1:
-                    if n >= 2 or min(times[name]) <= SPIKE_RETRY_S:
-                        continue
                 if name != E2E:
                     # Budget caps use the MINIMUM so far and only after 2
                     # reps: a contention spike on rep 1 must neither lock

@@ -44,7 +44,6 @@ def bench_headline() -> list[str]:
 EXTRA = [
     "forward_fill",
     "shard_assign",
-    "dedup_components_star",
 ]
 
 def main() -> None:

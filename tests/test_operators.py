@@ -479,96 +479,6 @@ def test_tfidf_prefers_group_specific_terms(spark):
     assert ("s2", "gamma") in top and ("s2", "delta") in top
 
 
-def test_dedup_components_chain_and_cliques(spark):
-    """Min-label propagation: a 5-node chain (diameter 4 < CC_ITERS)
-    collapses to its min id; disjoint pairs stay separate components."""
-    from apm_opentelemetry_collector_spark.operators.dedup import dedup_components
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (20, 21), (21, 22)],
-        "id_a long, id_b long",
-    )
-    comp = {r["id"]: r["component"] for r in dedup_components(pairs).collect()}
-    assert {comp[i] for i in (1, 2, 3, 4, 5)} == {1}
-    assert comp[10] == comp[11] == 10
-    assert comp[20] == comp[21] == comp[22] == 20
-    assert len(comp) == 10
-
-
-def test_star_components_match_minlabel_and_handle_long_chains(spark):
-    """Large-star/small-star must agree with min-label propagation on
-    graphs min-label can solve, AND converge on a chain whose diameter
-    EXCEEDS the min-label round budget (the O(log² n)-vs-diameter
-    difference that makes star the billion-edge algorithm)."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        CC_ITERS,
-        dedup_components,
-        dedup_components_star,
-    )
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (20, 21), (21, 22)],
-        "id_a long, id_b long",
-    )
-    star = {r["id"]: r["component"] for r in dedup_components_star(pairs).collect()}
-    ml = {r["id"]: r["component"] for r in dedup_components(pairs).collect()}
-    assert star == ml
-
-    # 40-edge path: diameter 40 > CC_ITERS — fixed-round min-label CANNOT
-    # finish this, star converges (log² rounds) to the single min label
-    n = 41
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 100 + n - 1)], "id_a long, id_b long"
-    )
-    assert n - 1 > CC_ITERS
-    got = {r["id"]: r["component"] for r in dedup_components_star(chain).collect()}
-    assert got == {i: 100 for i in range(100, 100 + n)}
-
-
-def test_star_components_match_union_find_on_random_graphs(spark):
-    """Seeded random graphs (sparse, dense, and isolated-pair shapes)
-    checked against a Python union-find ground truth — star contraction
-    must produce the exact component-min labeling on all of them."""
-    import random
-
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        dedup_components_star,
-    )
-
-    def union_find(n_ids, edges):
-        parent = {i: i for i in n_ids}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # component min = root under min-merge union
-        return {i: find(i) for i in n_ids}
-
-    rng = random.Random(42)
-    shapes = [
-        [(rng.randrange(60), rng.randrange(60)) for _ in range(40)],   # sparse
-        [(rng.randrange(25), rng.randrange(25)) for _ in range(120)],  # dense
-        [(100 + 2 * i, 101 + 2 * i) for i in range(15)],               # pairs
-    ]
-    for edges in shapes:
-        edges = [(a, b) for a, b in edges if a != b]
-        nodes = sorted({x for e in edges for x in e})
-        want = union_find(nodes, edges)
-        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        got = {
-            r["id"]: r["component"]
-            for r in dedup_components_star(pairs).collect()
-        }
-        assert got == want
-
-
 def test_repeated_passages_finds_planted_boilerplate(spark):
     """The cross-document passage counter must flag a license block
     planted in many documents (regardless of surrounding text), count
@@ -754,10 +664,9 @@ def test_repeated_spans_finds_variable_length_boilerplate(spark):
 
 def test_ewma_batch_matches_sequential_truth(spark):
     """The truncated-Horner batch EWMA must reproduce the sequential
-    recurrence (the streaming operator's exact per-row loop) within the
-    documented bound ~2·(1-α)^W·max|x| — machine-precision for the
-    default W — and flag the identical anomaly set on a series with
-    planted spikes."""
+    EWMA recurrence within the documented bound ~2·(1-α)^W·max|x| —
+    machine-precision for the default W — and flag the identical
+    anomaly set on a series with planted spikes."""
     import numpy as np
 
     from apm_opentelemetry_collector_spark.operators.outliers import (
@@ -780,7 +689,7 @@ def test_ewma_batch_matches_sequential_truth(spark):
         .toPandas()
     )
 
-    # sequential truth: the streaming operator's exact loop
+    # sequential truth: the sequential EWMA recurrence
     alpha, k, min_points = EWMA_ALPHA, EWMA_K, EWMA_MIN_POINTS
     mean, var, n = 0.0, 0.0, 0
     zs, flags = [], []
@@ -1637,30 +1546,6 @@ def test_fineweb_filters_rule_semantics(spark):
     # doc 3: 3 of 4 lines shorter than 30 chars → 0.75 >= 0.67
     assert not out[3]["pass_short_lines"] and not out[3]["keep"]
     assert out[3]["n_short_lines"] == 3
-
-
-def test_url_dedup_normalization_and_keep(spark):
-    """Hand URLs: scheme/case/www/query/fragment/trailing-slash
-    variants collapse to one class keeping the smallest doc_id; a
-    genuinely different path stays its own class; host extraction."""
-    from apm_opentelemetry_collector_spark.operators.dedup import url_dedup
-
-    rows = [
-        (1, "https://WWW.Example.com/A/B?utm=1#top"),
-        (2, "http://example.com/a/b/"),
-        (3, "example.com/a/b"),
-        (4, "https://example.com/a/c"),
-        (5, "https://www.other.org/"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, url string")
-    out = {r["doc_id"]: r.asDict() for r in url_dedup(docs).collect()}
-
-    assert out[1]["norm_url"] == out[2]["norm_url"] == out[3]["norm_url"] == "example.com/a/b"
-    assert out[1]["keep"] and not out[2]["keep"] and not out[3]["keep"]
-    assert out[1]["n_dups"] == 3
-    assert out[4]["keep"] and out[4]["n_dups"] == 1
-    assert out[4]["host"] == "example.com"
-    assert out[5]["norm_url"] == "other.org" and out[5]["host"] == "other.org"
 
 
 def test_curate_job_exactsubstr_swaps_changed_docs_only(spark, tmp_path, monkeypatch):

@@ -26,20 +26,11 @@ MUST_BE_IN_WINDOW = {
     # implementation-touched in r7 (the optimization round — outputs are
     # hash-identical by construction, but the touched-goes-in-window
     # policy makes the driver re-verify exactly the code that moved):
-    # spread_small_scan paths, the semdedup salt + norm precompute, the
-    # shingle per-doc array_distinct (minhash/simhash/jaccard family),
-    # the span_cores level-set fold and lazy CC round checkpoints
+    # spread_small_scan paths and the span_cores level-set fold
     "repeated_passages",
     "repeated_spans",
     "span_cores",
     "exactsubstr_dedup",
-    "minhash_lsh_neardup",
-    "simhash",
-    "ngram_jaccard_same_source",
-    "dedup_components",
-    "dedup_canonical",
-    "embedding_neardup",
-    "semdedup",
     "ngram_decontaminate",
     "decontaminate_splice",
     "gopher_quality_filters",
