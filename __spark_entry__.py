@@ -29,9 +29,7 @@ from apm_opentelemetry_collector_spark.config import PipelineConfig
 from apm_opentelemetry_collector_spark.functions import sharding, sqlgen
 from apm_opentelemetry_collector_spark.functions import text as textfn
 from apm_opentelemetry_collector_spark.functions.parse import with_parsed
-from apm_opentelemetry_collector_spark.functions.vectors import brute_force_knn
 from apm_opentelemetry_collector_spark.operators import analytics as _analytics
-from apm_opentelemetry_collector_spark.operators import dedup as dd
 from apm_opentelemetry_collector_spark.operators.aggregate import (
     sink_outcome_counts,
 )
@@ -698,12 +696,6 @@ def q_lang_id(spark, sf_dir):
     return docs.select("doc_id", textfn.lang_id("text").alias("lang_pred"))
 
 
-def q_knn_bruteforce(spark, sf_dir):
-    emb = _load(spark, sf_dir, "embeddings")
-    out = brute_force_knn(emb, emb.filter(F.col("vec_id") < 5), k=10)
-    return out.withColumn("cos", F.round("cos", 6))
-
-
 def q_record_encode_stats(spark, sf_dir):
     """P5/P6 + A4 (rows-only check: gzip bytes are not SQL-expressible):
     encoded sink records with compress factors. The byte format itself is
@@ -897,17 +889,6 @@ def q_tdigest_value_quantiles(spark, sf_dir):
     return out.select("event_type", "q", F.round("est", 6).alias("est"))
 
 
-def q_kmeans_assign(spark, sf_dir):
-    """Distributed k-means (2 Lloyd rounds, deterministic lowest-id
-    seeding): the iterative-algorithm representative — broadcast
-    centroids, exact-decimal means, squared-L2 composed in the oracle's
-    operation order so the whole trajectory bit-matches the unrolled-CTE
-    DuckDB twin."""
-    from apm_opentelemetry_collector_spark.operators.clustering import kmeans_assign
-
-    return kmeans_assign(_load(spark, sf_dir, "embeddings"))
-
-
 def q_tfidf_top_terms(spark, sf_dir):
     """Top-5 terms per source by TF-IDF (tf × ln(N/df), shared regex and
     op order with the SQL twin). One tokenize pass, map-side-combinable
@@ -915,14 +896,6 @@ def q_tfidf_top_terms(spark, sf_dir):
     from apm_opentelemetry_collector_spark.functions.text import tfidf_top_terms
 
     return tfidf_top_terms(_load(spark, sf_dir, "documents"))
-
-
-def q_repeated_passages(spark, sf_dir):
-    """Cross-document repeated passages (boilerplate/memorization
-    check): 40-char normalized windows at stride 7, counted by md5 KEY
-    only in the big shuffle (two-pass — passage text is fetched for the
-    hot keys afterwards), kept when ≥2 distinct docs share them."""
-    return dd.repeated_passages(_load(spark, sf_dir, "documents"))
 
 
 def q_bigram_lm_scores(spark, sf_dir):
@@ -947,27 +920,6 @@ def q_ewma_anomalies(spark, sf_dir):
     return ewma_anomalies_batch(
         ev, ["event_type"], ["ts", "event_id"], "value"
     )
-
-
-def q_repeated_spans(spark, sf_dir):
-    """Variable-length repeated substrings (maximal spans): stride-1
-    16-char seed windows counted by md5 key, hot runs extended per doc
-    via gaps-and-islands, spans ≥24 chars kept when ≥2 docs share them
-    — the distributed seed-and-extend twin of suffix-array/LCP dedup,
-    reporting each memorized span at its FULL extent where the fixed
-    40-char window fragments or misses it."""
-    return dd.repeated_spans(_load(spark, sf_dir, "documents"))
-
-
-def q_span_cores(spark, sf_dir):
-    """Containment-counted shared cores (r6): repeated_spans' islands
-    split a shared core's support across differently-extended variants;
-    span_cores decomposes each island's seed-support profile into its
-    level-set runs (the block-local suffix-rank signal), counts each
-    candidate's support by CONTAINMENT via a first-gram-blocked
-    position join, and keeps maximal cores — the distributed
-    relational form of suffix-array/LCP duplicate-span support."""
-    return dd.span_cores(_load(spark, sf_dir, "documents"))
 
 
 def q_pack_sequences(spark, sf_dir):
@@ -1060,38 +1012,6 @@ def q_c4_line_filters(spark, sf_dir):
     return textfn.c4_line_filters(docs)
 
 
-def q_c4_span_dedup(spark, sf_dir):
-    """Published C4 GLOBAL dedup rule (Raffel et al. 2020 §2.2):
-    discard all but one of any three-line span occurring more than
-    once in the corpus, rewriting the affected docs. The corpus is
-    single-line, so the query fabricates deterministic lines per doc:
-    full text; a doc_id-modulated leading slice; docs with doc_id%5==0
-    share a constant 3-line footer (the cross-doc duplicate — only the
-    smallest doc_id keeps it); docs with doc_id%7==0 append the slice
-    four more times (a WITHIN-doc duplicate span — the first position
-    wins). Same construction in the oracle pre-CTE."""
-    from apm_opentelemetry_collector_spark.operators.dedup import c4_span_dedup
-
-    did = F.col("doc_id")
-    w1 = F.array_join(
-        F.slice(F.split(F.col("text"), " "), F.lit(1), (did % 6 + 1).cast("int")),
-        " ",
-    )
-    footer = F.when(
-        did % 5 == 0,
-        F.lit("\nshared footer alpha.\nshared footer beta.\nshared footer gamma."),
-    ).otherwise(F.lit(""))
-    rep = F.when(
-        did % 7 == 0,
-        F.concat(*([F.lit("\n"), w1] * 4)),
-    ).otherwise(F.lit(""))
-    docs = _load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(F.col("text"), F.lit("\n"), w1, footer, rep).alias("text"),
-    )
-    return c4_span_dedup(docs)
-
-
 def q_dsir_weights(spark, sf_dir):
     """DSIR importance weights (Xie et al. 2023): hashed-unigram
     (4096-bucket md5) log-likelihood ratio of each doc under the
@@ -1108,42 +1028,6 @@ def q_ccnet_buckets(spark, sf_dir):
     KenLM). Exact per-lang percentile thresholds; bucket comparisons
     are interpolation-robust (see the operator's parity note)."""
     return textfn.ccnet_buckets(_load(spark, sf_dir, "documents"))
-
-
-DECONTAM_EVAL_SOURCES = ("src0", "src1")
-
-
-def q_ngram_decontaminate(spark, sf_dir):
-    """Exact 13-gram train/eval decontamination (GPT-3 App. C / PaLM /
-    Llama-2): flag every training doc sharing any word-level 13-gram
-    with the benchmark slices (src0/src1 stand in for the eval sets).
-    md5-keyed gram join, eval side DISTINCT, no forced broadcast."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        ngram_decontaminate,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    return ngram_decontaminate(docs, DECONTAM_EVAL_SOURCES)
-
-
-SPLICE_TEST_PARAMS = dict(window_chars=40, min_piece_chars=10, max_pieces=10)
-
-
-def q_decontaminate_splice(spark, sf_dir):
-    """GPT-3 App. C removal step: excise a window around every
-    colliding 13-gram, split into pieces, discard short pieces, drop
-    over-fragmented docs. Published 200/200/10 constants are the
-    operator defaults; the driver query scales them to the synthetic
-    docs' ~300-char lengths (the corpus is densely contaminated, so
-    published sizes fully cover every flagged doc → empty result)."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        decontaminate_splice,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    return decontaminate_splice(
-        docs, DECONTAM_EVAL_SOURCES, **SPLICE_TEST_PARAMS
-    )
 
 
 def q_fineweb_filters(spark, sf_dir):
@@ -1227,16 +1111,6 @@ def q_curation_funnel(spark, sf_dir):
     )
 
     return curation_funnel(curation_lined(_load(spark, sf_dir, "documents")))
-
-
-def q_exactsubstr_dedup(spark, sf_dir):
-    """ExactSubstr REMOVAL (Lee et al. 2022): excise every occurrence
-    of every maximal duplicated substring ≥32 chars (including the
-    first — the published tool's choice) and rewrite the corpus — the
-    apply step repeated_spans' detection feeds. One keys-only stride-1
-    seed shuffle; the rewrite is a per-doc higher-order cursor fold
-    over sorted removal intervals, integer-exact on both engines."""
-    return dd.exactsubstr_dedup(_load(spark, sf_dir, "documents"))
 
 
 RATE_WINDOW_S = 86400
@@ -1341,28 +1215,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "temperature_mixture": q_temperature_mixture,
         "trigram_lm_scores": q_trigram_lm_scores,
         "curation_funnel": q_curation_funnel,
-        "exactsubstr_dedup": q_exactsubstr_dedup,
-        "span_cores": q_span_cores,
         "pack_sequences": q_pack_sequences,
         "mixture_weights": q_mixture_weights,
         "gopher_quality_filters": q_gopher_quality_filters,
         "gopher_repetition": q_gopher_repetition,
         "c4_line_filters": q_c4_line_filters,
-        "c4_span_dedup": q_c4_span_dedup,
         "dsir_weights": q_dsir_weights,
         "ccnet_buckets": q_ccnet_buckets,
-        "ngram_decontaminate": q_ngram_decontaminate,
-        "decontaminate_splice": q_decontaminate_splice,
         # --- new in r5 ------------------------------------------------------
-        "repeated_spans": q_repeated_spans,
         "ewma_anomalies": q_ewma_anomalies,
         "bigram_lm_scores": q_bigram_lm_scores,
         # --- new in r4 ------------------------------------------------------
-        "repeated_passages": q_repeated_passages,
         "value_percentiles_tdigest": q_value_percentiles_tdigest,  # rows-only
-        # --- r4-touched implementations (argmin assignment; checkpoint
-        # discipline; epoch-floor oracle) — kept inside the window ----------
-        "kmeans_assign": q_kmeans_assign,
         # --- r7-touched implementation rotated INTO the window —
         # swapped with rate_limit/alert/counter_rate/hll, all untouched
         # this round and r6-hash-verified --------------------------------
@@ -1370,7 +1234,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- r2/r3 backlog (first driver-checked in r3) ---------------------
         "stratified_sample": q_stratified_sample,
         "cms_user_counts": q_cms_user_counts,
-        "knn_bruteforce": q_knn_bruteforce,
         "bloom_membership": q_bloom_membership,
         # non-SQL-expressible paths (rows-only checks; byte format and
         # batch shape are covered by pytest oracles instead) — rows-only
@@ -1421,7 +1284,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "metrics_resample": q_metrics_resample,
         "events_sessionize": q_events_sessionize,
         "events_sessionize_window": q_events_sessionize_window,
-        # training-data ops (documents/embeddings)
+        # training-data ops (documents)
         "doc_fingerprint": q_doc_fingerprint,
         "token_count": q_token_count,
         "token_count_bpe": q_token_count_bpe,
@@ -1486,29 +1349,6 @@ def _retry_chain_sql() -> str:
   FROM seq
 )"""
     )
-
-
-_COS_SQL = "(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
-
-
-def _knn_sql(k: int = 10) -> str:
-    cos = _COS_SQL.format(a="q.qv", b="c.cv")
-    return f"""
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id < 5
-), c AS (
-  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-), scored AS (
-  SELECT q.query_id, c.neighbor_id, {cos} AS cos
-  FROM q, c WHERE q.query_id <> c.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos FROM ranked WHERE rank <= {k}
-"""
 
 
 def _hll_users_sql() -> str:
@@ -1593,55 +1433,6 @@ WITH cells AS ({cells}
 )
 SELECT e.user_id, e.est_n, t.true_n
 FROM est e JOIN tru t ON t.user_id = e.user_id"""
-
-
-def _kmeans_sql(k: int | None = None, iters: int | None = None, dim: int = 64) -> str:
-    """Unrolled-CTE twin of operators/clustering.kmeans_assign: the same
-    fixed Lloyd rounds — lowest-id seeding, squared-L2 nearest (ties to
-    the lower cluster), exact-decimal centroid means — iteration i's
-    assignment CTE a{i} feeds means m{i}/centroids c{i} feeds a{i+1}."""
-    from apm_opentelemetry_collector_spark.operators.clustering import (
-        KMEANS_ITERS,
-        KMEANS_K,
-    )
-
-    k = k or KMEANS_K
-    iters = iters or KMEANS_ITERS
-    d2 = (
-        "(list_dot_product(p.v, p.v) + list_dot_product(c.c, c.c)"
-        " - 2.0 * list_dot_product(p.v, c.c))"
-    )
-    ctes = [
-        "pts AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
-        f"""c0 AS (
-  SELECT row_number() OVER (ORDER BY id ASC) - 1 AS cluster, v AS c
-  FROM (SELECT id, v FROM pts ORDER BY id ASC LIMIT {k})
-)""",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"""a{i} AS (
-  SELECT id, v, cluster FROM (
-    SELECT p.id, p.v, c.cluster,
-           row_number() OVER (PARTITION BY p.id ORDER BY {d2} ASC, c.cluster ASC) AS rn
-    FROM pts p, c{i - 1} c
-  ) WHERE rn = 1
-)"""
-        )
-        if i < iters:
-            ctes.append(
-                f"""m{i} AS (
-  SELECT cluster, CAST(j AS INTEGER) AS pos,
-         CAST(sum(CAST(v[CAST(j AS INTEGER) + 1] AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-  FROM a{i}, range(0, {dim}) t(j) GROUP BY cluster, pos
-)""",
-            )
-            ctes.append(
-                f"c{i} AS (SELECT cluster, list(m ORDER BY pos) AS c FROM m{i} GROUP BY cluster)"
-            )
-    return (
-        "WITH " + ",\n".join(ctes) + f"\nSELECT id AS vec_id, cluster FROM a{iters}"
-    )
 
 
 def _curation_lined_cte(**kw) -> str:
@@ -2109,7 +1900,6 @@ SELECT doc_id,
 FROM documents""",
         "lang_id": f"""
 SELECT doc_id, {g.lang_id_sql('text')} AS lang_pred FROM documents""",
-        "knn_bruteforce": _knn_sql(),
         "cms_user_counts": _cms_sql(),
         "hll_distinct_users": _hll_users_sql(),
         "bloom_membership": _bloom_sql(),
@@ -2159,11 +1949,7 @@ WITH p AS (
 SELECT doc_id, source FROM p
 WHERE p16 < {smp.stratified_threshold_sql(MIXTURE_RATES)}""",
         "weighted_reservoir": _wrs_sql(),
-        "kmeans_assign": _kmeans_sql(),
         "tfidf_top_terms": textfn.tfidf_top_terms_sql(),
-        "repeated_passages": dd.repeated_passages_sql(),
-        "repeated_spans": dd.repeated_spans_sql(),
-        "exactsubstr_dedup": dd.exactsubstr_dedup_sql(),
         "curation_funnel": _curation_funnel_sql(),
         "trigram_lm_scores": textfn.trigram_lm_scores_sql(),
         "temperature_mixture": _temperature_mixture_sql(),
@@ -2186,7 +1972,6 @@ WHERE p16 < {smp.stratified_threshold_sql(MIXTURE_RATES)}""",
                 " FROM documents))"
             ),
         ),
-        "span_cores": dd.span_cores_sql(),
         "pack_sequences": _pack_sequences_sql(),
         "mixture_weights": _mixture_weights_sql(),
         "ewma_anomalies": _ewma_sql(),
@@ -2213,29 +1998,8 @@ WHERE p16 < {smp.stratified_threshold_sql(MIXTURE_RATES)}""",
             table="lined",
             pre_cte=_curation_lined_cte(template=None, stop_tail=""),
         ),
-        "c4_span_dedup": dd.c4_span_dedup_sql(
-            table="lined",
-            pre_cte=(
-                "lined AS (SELECT doc_id, text || chr(10) ||"
-                " array_to_string(string_split(text, ' ')"
-                "[1:CAST(doc_id % 6 AS INTEGER) + 1], ' ')"
-                " || CASE WHEN doc_id % 5 = 0 THEN"
-                " chr(10) || 'shared footer alpha.' ||"
-                " chr(10) || 'shared footer beta.' ||"
-                " chr(10) || 'shared footer gamma.' ELSE '' END"
-                " || CASE WHEN doc_id % 7 = 0 THEN"
-                " repeat(chr(10) || array_to_string(string_split(text, ' ')"
-                "[1:CAST(doc_id % 6 AS INTEGER) + 1], ' '), 4)"
-                " ELSE '' END AS text"
-                " FROM documents)"
-            ),
-        ),
         "dsir_weights": textfn.dsir_weights_sql(),
         "ccnet_buckets": textfn.ccnet_buckets_sql(),
-        "ngram_decontaminate": dd.ngram_decontaminate_sql(DECONTAM_EVAL_SOURCES),
-        "decontaminate_splice": dd.decontaminate_splice_sql(
-            DECONTAM_EVAL_SOURCES, **SPLICE_TEST_PARAMS
-        ),
         "leakage_safe_split": f"""
 SELECT doc_id, {smp.split_case_sql(g.FINGERPRINT_SQL.format(col='text'))} AS split
 FROM documents""",

@@ -185,10 +185,9 @@ def curation_funnel(docs: DataFrame) -> DataFrame:
     # keep-first winner per duplicate class as ONE aggregate: min_by on
     # the unique doc_id is argmin with no window and no join-back. The
     # string payload makes this a SortAggregate (string/struct buffers
-    # aren't hash-aggregable — the repeated_spans min(span) precedent);
-    # the sort is per-partition on the fp exchange the dedup needs
-    # anyway, cheaper at scale than the join-back that a hash-only
-    # min(doc_id) would buy
+    # aren't hash-aggregable); the sort is per-partition on the fp
+    # exchange the dedup needs anyway, cheaper at scale than the
+    # join-back that a hash-only min(doc_id) would buy
     winners = (
         per_doc.filter("keep_both")
         .groupBy("fp")

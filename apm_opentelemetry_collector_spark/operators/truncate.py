@@ -53,7 +53,7 @@ def truncate_oversize(df: DataFrame, cfg: PipelineConfig | None = None) -> DataF
         if c != "`text`"
         else (
             f"CASE WHEN {trunc} THEN concat({marker}, "
-            f"substring(text, 1, greatest({keep}, 0))) ELSE text END AS text"
+            f"{_utf8_prefix('text', f'greatest({keep}, 0)')}) ELSE text END AS text"
         )
         for c in passthrough(df, ("truncated", "drop_reason", "outcome"))
     ]
@@ -61,3 +61,26 @@ def truncate_oversize(df: DataFrame, cfg: PipelineConfig | None = None) -> DataF
         df, fatal, DROP_FATAL_ENCODING, "CAST(NULL AS STRING)"
     )
     return df.selectExpr(*cols, f"{trunc} AS truncated", drop_reason, outcome)
+
+
+def _utf8_prefix(text: str, n_bytes: str) -> str:
+    """SQL for the longest prefix of `text` whose UTF-8 encoding fits in
+    `n_bytes` bytes. Cutting `n_bytes` characters would overshoot the
+    budget on multibyte text, so the bytes are cut instead, backing off
+    (at most 3 bytes) while the first dropped byte is a continuation
+    byte (0b10xxxxxx): no character is split. On ASCII text this equals
+    substring(text, 1, n_bytes)."""
+    b = f"CAST({text} AS BINARY)"
+
+    def cont(pos: str) -> str:
+        byte = f"substring({b}, {pos}, 1)"
+        return f"({byte} >= X'80' AND {byte} < X'C0')"
+
+    k = n_bytes
+    cut = (
+        f"CASE WHEN NOT {cont(f'{k} + 1')} THEN {k} "
+        f"WHEN NOT {cont(k)} THEN {k} - 1 "
+        f"WHEN NOT {cont(f'{k} - 1')} THEN {k} - 2 "
+        f"ELSE {k} - 3 END"
+    )
+    return f"CAST(substring({b}, 1, {cut}) AS STRING)"

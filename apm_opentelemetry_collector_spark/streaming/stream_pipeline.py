@@ -197,8 +197,7 @@ def dedup_stream(
 ) -> DataFrame:
     """Exactly-once turn delivery under at-least-once ingest: drop
     duplicate (conv_id, turn_idx) rows across micro-batches, keeping
-    state only within the watermark horizon (bounded state — the
-    streaming twin of the batch engine's exact dedup).
+    state only within the watermark horizon (bounded state).
 
     The reference tolerates duplicate sends (at-least-once with retries,
     exporter.go:194-235); a consumer that needs exactly-once semantics

@@ -79,36 +79,27 @@ def main() -> None:
         "q1_pricing_summary",
         "q3_shipping_priority",
         "q5_local_supplier_volume",
-        "knn_bruteforce",
         "asof_last_event",
         "metrics_resample",
         # r3 additions
         "weighted_reservoir",
         "tdigest_value_quantiles",
-        "kmeans_assign",
         "tfidf_top_terms",
         "events_funnel",
         "rate_limit_exceeded",
         # r4 additions
         "value_percentiles_tdigest",
-        "repeated_passages",
         # r5 additions
-        "repeated_spans",
         "ewma_anomalies",
         "bigram_lm_scores",
         # r6 additions
-        "span_cores",
         "pack_sequences",
         "mixture_weights",
         "gopher_quality_filters",
         "gopher_repetition",
         "c4_line_filters",
-        "c4_span_dedup",
         "dsir_weights",
         "ccnet_buckets",
-        "ngram_decontaminate",
-        "decontaminate_splice",
-        "exactsubstr_dedup",
         "curation_funnel",
         "trigram_lm_scores",
         "temperature_mixture",
@@ -160,8 +151,7 @@ def main() -> None:
                 # no driver transfer and no disk. count() (used through
                 # r6) is NOT that: Catalyst prunes all columns under a
                 # count, eliminating unique-key left joins and whole
-                # projection pipelines — rewrite operators (exactsubstr,
-                # c4_span_dedup) and pure-projection scorers (gopher,
+                # projection pipelines — pure-projection scorers (gopher,
                 # c4_line_filters) timed as bare corpus counts. Numbers
                 # recalibrate upward at the switch (BENCH/BASELINE.md
                 # §2i); the flagship e2e is unaffected (run_job always

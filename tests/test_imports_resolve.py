@@ -1,0 +1,82 @@
+"""Every import of a package name resolves, lazy ones included.
+
+Scripts, benchmarks, tests and several operators import package names
+inside functions, so importing the module that holds such an import does
+not check it: a name deleted from the package would surface only when
+that function runs. This walks the AST of those files instead and
+resolves each `from apm_opentelemetry_collector_spark... import name` and
+each `import apm_opentelemetry_collector_spark...` wherever it sits.
+Imports the modules, starts no Spark session.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import importlib
+import importlib.util
+import os
+
+PKG = "apm_opentelemetry_collector_spark"
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _files() -> list[str]:
+    pats = (
+        "__spark_entry__.py", "bench.py", "bench_extra.py", "scripts/*.py",
+        "perfbench/*.py", "tests/*.py", f"{PKG}/**/*.py",
+    )
+    out = []
+    for pat in pats:
+        out += glob.glob(os.path.join(_ROOT, pat), recursive=True)
+    return sorted(out)
+
+
+def _package_of(path: str) -> str | None:
+    """Dotted package that holds `path`, for resolving relative imports."""
+    rel = os.path.relpath(os.path.dirname(path), _ROOT)
+    return rel.replace(os.sep, ".") if rel.split(os.sep)[0] == PKG else None
+
+
+def _imports(path: str):
+    """(line, module, names) for every package import in the file."""
+    tree = ast.parse(open(path, encoding="utf-8").read(), path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == PKG:
+                    yield node.lineno, a.name, []
+        elif isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level:
+                pkg = _package_of(path)
+                assert pkg, f"{path}:{node.lineno}: relative import outside {PKG}"
+                mod = importlib.util.resolve_name("." * node.level + mod, pkg)
+            if mod.split(".")[0] == PKG:
+                yield node.lineno, mod, [a.name for a in node.names]
+
+
+def test_every_package_import_resolves():
+    files = _files()
+    assert any(f.endswith("__spark_entry__.py") for f in files)
+    broken, checked = [], 0
+    for path in files:
+        where = os.path.relpath(path, _ROOT)
+        for line, mod, names in _imports(path):
+            checked += 1
+            try:
+                m = importlib.import_module(mod)
+            except ImportError as e:
+                broken.append(f"{where}:{line}: {mod} ({e})")
+                continue
+            for name in names:
+                if name == "*" or hasattr(m, name):
+                    continue
+                # a submodule not imported yet is only found on a package
+                if not (
+                    hasattr(m, "__path__")
+                    and importlib.util.find_spec(f"{mod}.{name}")
+                ):
+                    broken.append(f"{where}:{line}: {mod} has no {name}")
+    assert checked > 100, checked
+    assert not broken, "\n".join(broken)

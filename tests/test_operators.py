@@ -120,6 +120,28 @@ def test_truncation_rewrites_oversized_text(spark):
     assert not out[1]["truncated"] and out[1]["text"] == "small"
     assert out[0]["outcome"] is None  # truncated but delivered
 
+    # the cap is in bytes: multibyte text (2-, 3- and 4-byte characters,
+    # shifted by ASCII so the byte budget ends at every offset inside a
+    # character) is cut on a character boundary and still fits the cap
+    multi = [
+        "é" * 80, "a" + "é" * 80,
+        "a" + "中" * 60, "中" * 60, "ab" + "中" * 60,
+        "😀" * 40, "a" + "😀" * 40, "abc" + "😀" * 40,
+    ]
+    mdf = turns(spark, [("m", i, "user", t, None) for i, t in enumerate(multi)])
+    rows = truncate_oversize(mdf, cfg).collect()
+    assert len(rows) == len(multi)
+    for r in rows:
+        src, got = multi[r["turn_idx"]], r["text"]
+        marker = f"[TRUNCATED reason=max_span_size size={len(src.encode())}] "
+        assert r["truncated"] and got.startswith(marker)
+        assert len(got.encode()) <= cfg.max_span_size, (src[:3], len(got.encode()))
+        body = got[len(marker):]
+        assert "\ufffd" not in body and src.startswith(body)
+        # longest fitting prefix: one more character would overshoot
+        keep = cfg.max_span_size - len(marker.encode())
+        assert len(src[: len(body) + 1].encode()) > keep
+
 
 def test_truncation_fatal_drop_when_cap_below_marker(spark):
     cfg = PipelineConfig(max_span_size=10)  # marker alone exceeds the cap
@@ -443,25 +465,6 @@ def test_weighted_reservoir_bias_and_determinism(spark):
     assert again == ids
 
 
-def test_kmeans_deterministic_and_partitions_points(spark):
-    """Lloyd assignment: every point exactly once, deterministic across
-    parallelism, clusters converge on the planted structure."""
-    from apm_opentelemetry_collector_spark.operators.clustering import (
-        kmeans_assign,
-        kmeans_sizes,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = {r["vec_id"]: r["cluster"] for r in kmeans_assign(emb).collect()}
-    b = {
-        r["vec_id"]: r["cluster"]
-        for r in kmeans_assign(emb.repartition(7)).collect()
-    }
-    assert a == b and len(a) == emb.count()
-    sizes = {r["cluster"]: r["n_points"] for r in kmeans_sizes(emb).collect()}
-    assert sum(sizes.values()) == len(a) and len(sizes) >= 2
-
-
 def test_tfidf_prefers_group_specific_terms(spark):
     from apm_opentelemetry_collector_spark.functions.text import tfidf_top_terms
 
@@ -477,36 +480,6 @@ def test_tfidf_prefers_group_specific_terms(spark):
     # terms in every doc)
     assert ("s1", "alpha") in top and ("s1", "beta") in top
     assert ("s2", "gamma") in top and ("s2", "delta") in top
-
-
-def test_repeated_passages_finds_planted_boilerplate(spark):
-    """The cross-document passage counter must flag a license block
-    planted in many documents (regardless of surrounding text), count
-    distinct docs exactly, and stay silent on unique-content docs."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        repeated_passages,
-    )
-
-    license_block = (
-        "this software is provided as is without warranty of any kind "
-        "express or implied including fitness"
-    )
-    rows = []
-    for i in range(8):
-        rows.append((i, f"{license_block} document body number {i} " + "x" * i))
-    for i in range(8, 16):
-        rows.append((i, f"unique content {i} " + " ".join(f"w{i}{j}" for j in range(30))))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    out = repeated_passages(docs, passage_len=40, stride=7, min_docs=3).collect()
-    assert out, "planted boilerplate not found"
-    # the license block's leading window is shared by all 8 planted docs
-    lead = [r for r in out if r["passage"] == license_block[:40]]
-    assert lead and lead[0]["n_docs"] == 8 and lead[0]["n_total"] == 8
-    # nothing from the unique docs: every flagged passage lies in the
-    # shared region (license block + the common filler that follows)
-    shared = f"{license_block} document body number"
-    assert all(r["passage"] in shared for r in out)
 
 
 def test_leakage_safe_split_groups_share_folds(spark):
@@ -613,55 +586,6 @@ def test_sliding_rate_window_boundaries(spark):
     assert got == {(1, t(60)): 2, (1, t(120)): 2}
 
 
-def test_repeated_spans_finds_variable_length_boilerplate(spark):
-    """Seed-and-extend must recover planted boilerplate at its FULL
-    maximal length: a 25-char block (shorter than the 40-char fixed
-    window — repeated_passages structurally misses it) and a ~90-char
-    block (the fixed window only reports 40-char fragments), each
-    planted in several docs with unique flanking text; unique-content
-    docs contribute nothing."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        repeated_passages,
-        repeated_spans,
-    )
-
-    short_block = "short legal header block"          # 24 norm chars
-    long_block = (
-        "this software is provided as is without warranty of any kind "
-        "express or implied including"
-    )  # 90 norm chars
-    rows = []
-    for i in range(5):
-        rows.append((i, f"alpha{i}{i} {short_block} omega{i}{i}"))
-    for i in range(5, 10):
-        rows.append((i, f"intro{i}{i} {long_block} outro{i}{i}"))
-    for i in range(10, 16):
-        rows.append(
-            (i, " ".join(f"w{i}x{j}q" for j in range(30)))  # unique filler
-        )
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    out = repeated_spans(docs, seed_len=16, min_len=20, min_docs=3).collect()
-    spans = {r["span"]: r for r in out}
-    # MAXIMAL extent: the recovered span is the full shared substring —
-    # the planted block plus the shared flank fragments (" " before,
-    # "omega"/"outro" prefix after), ending exactly where docs diverge
-    short_span = f" {short_block} omega"
-    long_span = f" {long_block} outro"
-    assert short_span in spans, sorted(spans)
-    assert spans[short_span]["n_docs"] == 5
-    assert spans[short_span]["span_len"] == len(short_span)
-    assert long_span in spans
-    assert spans[long_span]["n_docs"] == 5
-    assert spans[long_span]["span_len"] == len(long_span)
-    # maximality: nothing shorter/fragmented reported for those docs
-    assert len(spans) == 2
-    # and the fixed 40-char window indeed cannot see the short block
-    fixed = repeated_passages(docs, passage_len=40, stride=7, min_docs=3).collect()
-    assert all(short_block not in r["passage"] for r in fixed)
-    assert all(len(r["passage"]) == 40 for r in fixed)  # long block fragments
-
-
 def test_ewma_batch_matches_sequential_truth(spark):
     """The truncated-Horner batch EWMA must reproduce the sequential
     EWMA recurrence within the documented bound ~2·(1-α)^W·max|x| —
@@ -711,160 +635,6 @@ def test_ewma_batch_matches_sequential_truth(spark):
     )
     assert got["is_anomaly"].tolist() == flags
     assert got.loc[[60, 200, 333], "is_anomaly"].all()
-
-
-def test_repeated_spans_island_counting_semantics(spark):
-    """Documents that EXTEND a shared block differently produce
-    different maximal islands, counted separately (support is on exact
-    island text, not containment): the shared core alone is NOT its own
-    row, but docs agreeing on the extent still group. Documents the
-    limitation stated in the repeated_spans docstring."""
-    from apm_opentelemetry_collector_spark.operators.dedup import repeated_spans
-
-    core = "the quick brown fox jumps over it"   # 33 norm chars
-    rows = [
-        # A and B extend the core identically on the left
-        (0, f"prefix shared {core} tailA0"),
-        (1, f"prefix shared {core} tailB1"),
-        # C contains only the core with unique flanks
-        (2, f"zq9 {core} xw7"),
-        (3, "totally unrelated filler " + " ".join(f"u{j}" for j in range(20))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["span"]: r for r in repeated_spans(
-        docs, seed_len=16, min_len=20, min_docs=2
-    ).collect()}
-    # A∪B∪C share the core, so its seeds are hot in all three; A/B's
-    # islands include the shared "prefix shared " extension, C's island
-    # is just " core " bounded by its unique flanks — different texts.
-    ab = [s for s in out if "prefix shared" in s]
-    assert len(ab) == 1 and out[ab[0]]["n_docs"] == 2
-    # C's differently-flanked island has support 1 → filtered; the bare
-    # core is NOT reported as its own row (the documented limitation)
-    assert all("prefix shared" in s for s in out), sorted(out)
-
-
-def test_span_cores_containment_support(spark):
-    """r5 VERDICT missing #2, inverted from documenting-the-limitation
-    to asserting-the-fix: two doc groups extend a planted core
-    differently; repeated_spans splits the support across island
-    variants and never reports the core, while span_cores counts
-    support by CONTAINMENT — the core reports n_docs = both groups (3:
-    A, B, and C) at its maximal shared extent, and the A/B-extended
-    variant still reports separately at its own support (2)."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        repeated_spans,
-        span_cores,
-    )
-
-    core = "the quick brown fox jumps over it"   # 33 norm chars
-    rows = [
-        (0, f"prefix shared {core} tailA0"),
-        (1, f"prefix shared {core} tailB1"),
-        (2, f"zq9 {core} xw7"),
-        (3, "totally unrelated filler " + " ".join(f"u{j}" for j in range(20))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    got = {r["core"]: r for r in span_cores(
-        docs, seed_len=16, min_len=20, min_docs=2
-    ).collect()}
-    # the shared core at maximal CONTAINMENT extent (boundary spaces are
-    # shared by all three docs) with support from BOTH groups
-    core_span = f" {core} "
-    assert core_span in got, sorted(got)
-    assert got[core_span]["n_docs"] == 3 and got[core_span]["n_total"] == 3
-    # the A/B variant is longer, has its own (smaller) support, and is
-    # NOT pruned (maximality only drops equal-support containment)
-    ab = [s for s in got if "prefix shared" in s]
-    assert len(ab) == 1 and got[ab[0]]["n_docs"] == 2
-    assert len(got) == 2
-    # contrast: repeated_spans (exact-island support) misses the core
-    old = {r["span"] for r in repeated_spans(
-        docs, seed_len=16, min_len=20, min_docs=2
-    ).collect()}
-    assert core_span not in old
-
-
-def test_span_cores_agreeing_docs_match_repeated_spans(spark):
-    """When all sharing docs AGREE on the maximal extent (no divergent
-    flanks), containment support equals exact-island support: span_cores
-    and repeated_spans report the same rows."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        repeated_spans,
-        span_cores,
-    )
-
-    block = "this software is provided as is without warranty"
-    rows = [(i, f"alpha{i}{i} {block} omega{i}{i}") for i in range(5)]
-    rows += [(10 + i, " ".join(f"w{i}x{j}q" for j in range(25))) for i in range(4)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    a = sorted(
-        (r["core"], r["core_len"], r["n_docs"], r["n_total"])
-        for r in span_cores(docs, seed_len=16, min_len=20, min_docs=3).collect()
-    )
-    b = sorted(
-        (r["span"], r["span_len"], r["n_docs"], r["n_total"])
-        for r in repeated_spans(docs, seed_len=16, min_len=20, min_docs=3).collect()
-    )
-    assert a == b and len(a) == 1
-
-
-def test_repeated_spans_prefilter_is_output_invariant(spark):
-    """The counting-bucket prefilter is FALSE-POSITIVE-ONLY (a seed in
-    ≥ min_docs docs occurs ≥ min_docs times, so its bucket always
-    reaches the threshold): output must be bit-identical with the
-    prefilter on and off — on a dense fixture (planted boilerplate),
-    a sparse one (hash soup + one planted block), and an all-unique
-    corpus where the filter prunes everything and the result is empty
-    both ways."""
-    from pyspark.sql import functions as FF
-
-    from apm_opentelemetry_collector_spark.operators.dedup import repeated_spans
-
-    def canon(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    # dense: the boilerplate fixture from the maximal-extent test
-    block = "this text is repeated verbatim in many docs"
-    dense = spark.createDataFrame(
-        [(i, f"alpha{i}{i} {block} omega{i}{i}") for i in range(6)]
-        + [(10 + i, " ".join(f"w{i}x{j}q" for j in range(30))) for i in range(4)],
-        "doc_id long, text string",
-    )
-    a = canon(repeated_spans(dense, seed_len=16, min_len=20, min_docs=3,
-                             prefilter=False))
-    b = canon(repeated_spans(dense, seed_len=16, min_len=20, min_docs=3,
-                             prefilter=True))
-    assert a == b and len(a) >= 1
-
-    # sparse: pseudo-random docs, one planted block in a few
-    boiler = "subscribe to our newsletter today"
-    sparse = spark.range(200).select(
-        FF.col("id").alias("doc_id"),
-        FF.when(
-            FF.col("id") % 40 == 0,
-            FF.concat(FF.sha2(FF.col("id").cast("string"), 256),
-                      FF.lit(" " + boiler + " "),
-                      FF.sha2(FF.concat(FF.lit("z"), FF.col("id").cast("string")), 256)),
-        ).otherwise(
-            FF.concat(FF.sha2(FF.concat(FF.lit("a"), FF.col("id").cast("string")), 256),
-                      FF.sha2(FF.concat(FF.lit("b"), FF.col("id").cast("string")), 256))
-        ).alias("text"),
-    )
-    a = canon(repeated_spans(sparse, seed_len=16, min_len=20, min_docs=2,
-                             prefilter=False))
-    b = canon(repeated_spans(sparse, seed_len=16, min_len=20, min_docs=2,
-                             prefilter=True))
-    assert a == b and any(boiler in r[1] for r in a)
-
-    # all-unique: filter prunes everything, result empty on both paths
-    uniq = spark.range(50).select(
-        FF.col("id").alias("doc_id"),
-        FF.sha2(FF.concat(FF.lit("u"), FF.col("id").cast("string")), 256).alias("text"),
-    )
-    assert canon(repeated_spans(uniq, prefilter=True)) == []
-    assert canon(repeated_spans(uniq, prefilter=False)) == []
 
 
 def test_bigram_lm_scores_rank_gibberish_below_prose(spark):
@@ -1099,38 +869,6 @@ def test_c4_line_filters_rules(spark):
     assert out[5]["n_kept_lines"] == 1
 
 
-def test_c4_span_dedup_global_first_occurrence(spark):
-    """Crafted corpus: the globally-first (doc_id, position) occurrence
-    of a duplicated 3-line span is kept, every other occurrence loses
-    its lines (cross-doc AND within-doc), overlapping duplicate spans
-    remove the union of their lines, and untouched docs pass through."""
-    from apm_opentelemetry_collector_spark.operators.dedup import c4_span_dedup
-
-    footer = "f one.\nf two.\nf three."
-    rows = [
-        (0, "a0.\nb0.\n" + footer),          # first footer occurrence
-        (1, "a1.\nb1.\n" + footer),          # loses the footer lines
-        (2, "x.\nx.\nx.\nx.\nx."),           # within-doc: j=1 kept, 2-3 dup
-        (3, "solo one.\nsolo two."),          # < 3 lines: no spans
-        (4, footer + "\ntail4."),            # footer at j=1, still later by id
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in c4_span_dedup(docs).collect()}
-
-    assert out[0]["changed"] is False and out[0]["cleaned_text"] == rows[0][1]
-    assert out[1]["changed"] is True and out[1]["n_removed_lines"] == 3
-    assert out[1]["cleaned_text"] == "a1.\nb1."
-    # overlapping dup occurrences (j=2 covers 2-4, j=3 covers 3-5)
-    # remove the union 2..5; the first occurrence's line 1 survives
-    assert out[2]["n_removed_lines"] == 4
-    assert out[2]["cleaned_text"] == "x."
-    assert out[3]["changed"] is False and out[3]["n_removed_lines"] == 0
-    # global order is (doc_id, j): doc 0's footer at j=3 precedes doc 4's
-    # at j=1, so doc 4 loses it despite the smaller position
-    assert out[4]["n_removed_lines"] == 3
-    assert out[4]["cleaned_text"] == "tail4."
-
-
 def test_ccnet_buckets_per_lang_terciles(spark):
     """Docs whose common-bigram mass rises monotonically bucket into
     tail/middle/head terciles in score order — and thresholds are
@@ -1183,153 +921,8 @@ def test_dsir_weights_rank_target_like_docs(spark):
     assert out[20]["log_weight"] == out[0]["log_weight"]
 
 
-def test_ngram_decontaminate_exact_13gram_boundary(spark):
-    """The published rule is sharp: a 13-token run copied from an eval
-    doc flags the train doc; a 12-token overlap does not. Counts are
-    occurrences (n_hits) and distinct grams; eval docs never appear in
-    the output; a doc quoting TWO eval sources yields one row each."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        ngram_decontaminate,
-    )
-
-    ev_a = " ".join(f"a{i}" for i in range(20))  # 20 tokens → 8 13-grams
-    ev_b = " ".join(f"b{i}" for i in range(13))  # exactly one 13-gram
-    quote13_a = " ".join(f"a{i}" for i in range(13))   # first 13-gram of ev_a
-    quote12_a = " ".join(f"a{i}" for i in range(12))   # one token short
-    filler = " ".join(f"x{i}" for i in range(15))
-    rows = [
-        (0, ev_a, "eval0"),
-        (1, ev_b, "eval1"),
-        (10, f"{filler} {quote13_a}", "train"),              # 1 hit on eval0
-        (11, f"{filler} {quote12_a}", "train"),              # clean: 12 < 13
-        (12, f"{quote13_a} end {quote13_a}", "train"),       # same gram twice
-        (13, f"{quote13_a} {filler} {ev_b}", "train"),       # both eval sets
-        (14, filler, "train"),                               # clean
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {
-        (r["doc_id"], r["eval_source"]): r
-        for r in ngram_decontaminate(docs, ("eval0", "eval1")).collect()
-    }
-    assert set(out) == {(10, "eval0"), (12, "eval0"), (13, "eval0"), (13, "eval1")}
-    assert out[(10, "eval0")]["n_hits"] == 1
-    assert out[(10, "eval0")]["n_distinct_grams"] == 1
-    # doc 12 repeats the SAME gram: 2 occurrences, 1 distinct — plus the
-    # bridging grams across " end " match nothing
-    assert out[(12, "eval0")]["n_hits"] == 2
-    assert out[(12, "eval0")]["n_distinct_grams"] == 1
-    assert out[(13, "eval1")]["n_hits"] == 1
-
-
-def test_ngram_decontaminate_prefilter_is_output_invariant(spark):
-    """The bloom prefilter is false-positive-only and the exact verify
-    join still runs, so prefilter=True must be bit-identical to the
-    plain path — including at an aggressively small bitmap (high FP
-    rate lets extra grams through; the join must kill them all)."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        ngram_decontaminate,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plain = ngram_decontaminate(docs, ("src0", "src1"))
-    for bits in (1 << 20, 256):  # sane sizing AND a collision-heavy one
-        filtered = ngram_decontaminate(
-            docs, ("src0", "src1"), prefilter=True, bloom_bits=bits
-        )
-        assert filtered.exceptAll(plain).count() == 0
-        assert plain.exceptAll(filtered).count() == 0
-
-
-def test_decontaminate_splice_gpt3_rules(spark):
-    """GPT-3 App. C removal semantics: the window is centered on the
-    colliding gram and excised (no surviving piece contains it), short
-    pieces are discarded, over-fragmented docs are dropped entirely,
-    and fully-covered docs yield no pieces."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        decontaminate_splice,
-    )
-
-    quote = " ".join(f"q{i}" for i in range(13))          # the eval 13-gram
-    pad = lambda tag, k: " ".join(f"{tag}{i}" for i in range(k))
-    rows = [
-        (0, quote, "eval"),
-        # long flanks: one excision → two long pieces, neither holding the quote
-        (10, f"{pad('a', 40)} {quote} {pad('b', 40)}", "train"),
-        # the quote IS the doc (plus a hair): fully covered → zero pieces
-        (11, f"x {quote}", "train"),
-        # quote repeated with long gaps → many pieces; max_pieces=2 drops it
-        (12, f"{pad('c', 40)} {quote} {pad('d', 40)} {quote} {pad('e', 40)}", "train"),
-        (13, pad("f", 100), "train"),                     # clean, absent
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = decontaminate_splice(
-        docs, ("eval",), window_chars=60, min_piece_chars=30, max_pieces=2
-    ).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    # doc 10: survives with 2 pieces, quote text gone from both
-    assert sorted(by_doc) == [10]
-    p10 = sorted(by_doc[10], key=lambda r: r["piece_idx"])
-    assert [r["n_pieces"] for r in p10] == [2, 2]
-    assert all("q0" not in r["piece"] and "q12" not in r["piece"] for r in p10)
-    assert all(r["n_chars"] >= 30 for r in p10)
     # doc 12 fragments into 3 pieces > max_pieces=2 → dropped (absent);
     # doc 11 fully covered → absent; doc 13 clean → absent
-
-
-def test_exactsubstr_dedup_removal_rules(spark):
-    """Lee et al. ExactSubstr removal on a crafted corpus: a >=32-char
-    block shared by two docs is excised from BOTH at its maximal shared
-    extent (including the shared 'a start' flank the seed chaining
-    finds), sub-threshold duplicates survive, a fully-duplicated doc
-    rewrites to '', within-doc repeats count as duplication, and
-    keep_first retains exactly the globally-first occurrence."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        exactsubstr_dedup,
-    )
-
-    block = "the quick brown fox jumps over the lazy dog repeatedly"
-    short_dup = "tiny duplicate bit"  # 18 chars < min_len=32
-    rows = [
-        (0, "alpha start " + block + " alpha end"),
-        (1, "beta start " + block + " beta end"),
-        (2, "unique text with no repeats anywhere in this corpus at all"),
-        (3, short_dup + " padding one xxxxxxxxxxxxx"),
-        (4, short_dup + " padding two yyyyyyyyyyyyy"),
-        (5, block),
-        (6, "self " + block + " mid " + block + " done"),
-        (7, "tiny"),  # < seed_len: no windows, passes through
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in exactsubstr_dedup(docs).collect()}
-
-    # both occurrences excised — the maximal shared substring is
-    # "a start the ... repeatedly " (the flank 'a start ' is shared too)
-    assert out[0]["changed"] and out[0]["cleaned_text"] == "alphalpha end"
-    assert out[1]["changed"] and out[1]["cleaned_text"] == "betbeta end"
-    assert out[0]["n_removed_chars"] == out[1]["n_removed_chars"] == 63
-    # unique and sub-threshold docs pass through unchanged (normalized)
-    for i in (2, 3, 4, 7):
-        assert not out[i]["changed"] and out[i]["n_removed_chars"] == 0
-        assert out[i]["cleaned_text"] == rows[i][1]
-    # fully-duplicated doc rewrites to empty
-    assert out[5]["changed"] and out[5]["cleaned_text"] == ""
-    assert out[5]["n_removed_chars"] == out[5]["n_chars"] == len(block)
-    # within-doc repetition is duplication: both copies excised
-    assert out[6]["n_spans_removed"] == 2
-    assert out[6]["cleaned_text"] == "selfmiddone"
-
-    kept = {
-        r["doc_id"]: r.asDict()
-        for r in exactsubstr_dedup(docs, keep_first=True).collect()
-    }
-    # globally-first occurrence of the shared span text survives intact
-    assert not kept[0]["changed"]
-    assert kept[0]["cleaned_text"] == rows[0][1]
-    assert kept[1]["changed"] and kept[1]["cleaned_text"] == "betbeta end"
-    # doc 6's first within-doc copy survives, the second is excised
-    assert kept[6]["n_spans_removed"] == 1
 
 
 def test_curation_funnel_stage_semantics(spark):
@@ -1471,47 +1064,6 @@ def test_tokenizer_fertility_hand_counts(spark):
     assert (xx["ws_tokens"], xx["bpe_tokens"]) == (3, 4)
 
 
-def test_curate_job_cli_consistent_with_funnel_query(spark, tmp_path, monkeypatch):
-    """The spark-submit curation runner's written outputs agree with the
-    curation_funnel operator: same per-stage totals, n_final == rows in
-    the cleaned parquet, and the summary JSON matches the funnel table."""
-    import json
-    import sys
-
-    sys.path.insert(0, "scripts")
-    import curate_job
-
-    out = str(tmp_path / "curated")
-    monkeypatch.setattr(
-        sys,
-        "argv",
-        ["curate_job.py", "--input", "/root/testdata/sf0.001",
-         "--output", out, "--demo-lined"],
-    )
-    curate_job.main()
-
-    from apm_opentelemetry_collector_spark.operators.curation import (
-        curation_funnel,
-        curation_lined,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    funnel = {
-        r["source"]: r.asDict()
-        for r in curation_funnel(curation_lined(docs)).collect()
-    }
-    summary = json.load(open(f"{out}/_summary.json"))
-    cleaned = spark.read.parquet(f"{out}/cleaned")
-    assert summary["totals"]["n_final"] == cleaned.count()
-    for src, row in summary["sources"].items():
-        q = funnel[src]
-        assert row["n_raw"] == q["n_raw"]
-        assert row["n_after_c4"] == q["n_after_c4"]
-        assert row["n_after_gopher"] == q["n_after_gopher"]
-        assert row["n_final"] == q["n_after_dedup"]
-        assert row["tokens_final"] == q["tokens_kept"]
-
-
 def test_fineweb_filters_rule_semantics(spark):
     """Hand-built docs crossing each FineWeb rule exactly: a no-punct
     doc fails the 0.12 punct-line rule, a doc whose duplicated line is
@@ -1547,59 +1099,3 @@ def test_fineweb_filters_rule_semantics(spark):
     assert not out[3]["pass_short_lines"] and not out[3]["keep"]
     assert out[3]["n_short_lines"] == 3
 
-
-def test_curate_job_exactsubstr_swaps_changed_docs_only(spark, tmp_path, monkeypatch):
-    """--exactsubstr must rewrite ONLY docs that actually lost a
-    duplicated span: a unique surviving doc keeps its original-cased
-    multi-line C4-cleaned text, while duplicated-span docs come back
-    rewritten (regression for the review finding)."""
-    import sys
-
-    sys.path.insert(0, "scripts")
-    import curate_job
-
-    # doc 1 shares NO >=16-char run with docs 2/3 (unique wording)
-    good = (
-        "The Unique Report covers migration of the warehouse and that "
-        "is why we keep it around for the audit trail of the quarter.\n"
-        "every sentence in this particular document is written with "
-        "fresh phrasing that appears nowhere else in the batch of it.\n"
-        "so the report survives curation with its casing and newlines "
-        "preserved exactly as the crawler and that is of it captured."
-    )
-    block = "a duplicated boilerplate clause long enough to excise"
-    mk = (
-        "the {} page opens with an introduction and that is of course "
-        "fine because we want clean data for the training corpus.\n"
-        "{} middle context sentence with plenty of usual words here "
-        "and the shared part follows now {} then the page goes on.\n"
-        "a closing sentence unique to the {} page wraps this one up "
-        "and that is of it for the record being archived today."
-    )
-    dup = mk.format("first", "some", block, "first")
-    dup2 = mk.format("second", "other", block, "second")
-    rows = [(1, "src_a", "en", good), (2, "src_a", "en", dup),
-            (3, "src_b", "en", dup2)]
-    inp = str(tmp_path / "in")
-    spark.createDataFrame(
-        rows, "doc_id long, source string, lang string, text string"
-    ).write.parquet(inp)
-
-    out = str(tmp_path / "curated")
-    monkeypatch.setattr(
-        sys, "argv",
-        ["curate_job.py", "--input", inp, "--output", out, "--exactsubstr"],
-    )
-    curate_job.main()
-
-    cleaned = {
-        r["doc_id"]: r["cleaned_text"]
-        for r in spark.read.parquet(f"{out}/cleaned").collect()
-    }
-    # doc 1 has no duplicated >=32-char span: original case + newlines kept
-    assert cleaned[1] == good
-    # docs 2/3 shared the block: both rewritten (normalized domain,
-    # block excised)
-    for i in (2, 3):
-        assert block not in cleaned[i]
-        assert "\n" not in cleaned[i] and cleaned[i] == cleaned[i].lower()

@@ -271,21 +271,20 @@ def test_new_queries_no_python_nodes(spark):
                  "hll_distinct_users", "alert_sustained_utilization",
                  "counter_rate", "cube_orders", "events_hourly_rollup",
                  "stratified_sample", "weighted_reservoir",
-                 "tdigest_value_quantiles", "kmeans_assign",
+                 "tdigest_value_quantiles",
                  "tfidf_top_terms", "leakage_safe_split", "robust_outliers",
                  "events_funnel", "cohort_retention", "events_json_props",
                  "rate_limit_exceeded",
                  # r5
-                 "repeated_spans", "ewma_anomalies",
+                 "ewma_anomalies",
                  "bigram_lm_scores",
                  # r6
-                 "span_cores", "pack_sequences",
+                 "pack_sequences",
                  "mixture_weights",
                  "gopher_quality_filters", "gopher_repetition",
-                 "c4_line_filters", "c4_span_dedup", "dsir_weights",
+                 "c4_line_filters", "dsir_weights",
                  "ccnet_buckets",
-                 "ngram_decontaminate", "decontaminate_splice",
-                 "exactsubstr_dedup", "curation_funnel",
+                 "curation_funnel",
                  "trigram_lm_scores", "temperature_mixture",
                  "tokenizer_fertility", "fineweb_filters"):
         plan = plan_of(qs[name](spark, SF))
@@ -321,46 +320,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
-
-
-def test_kmeans_assignment_no_sort_no_per_round_window(spark):
-    """VERDICT r3 #2: nearest-centroid assignment must be map-side — no
-    Sort anywhere in the plan at ANY iteration count (the row_number
-    window shuffled+sorted k× rows per Lloyd round; the min(struct)
-    swap degraded to SortAggregate), and the only Window is the k-row
-    seed numbering, independent of rounds."""
-    from apm_opentelemetry_collector_spark.operators.clustering import (
-        kmeans_assign,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for iters in (2, 4):
-        plan = plan_of(kmeans_assign(emb, iters=iters))
-        assert "Sort" not in plan, plan
-        assert plan.count("Window") == 1, plan
-
-
-def test_repeated_passages_plan_pruned_and_python_free(spark):
-    """The passage counter is pure Column expressions: no Python nodes,
-    and the parquet scan reads only (doc_id, text) — the explode and
-    both aggregation levels stay JVM-side. dedup.py as a whole forces no
-    broadcast of a doc-cardinality table: that bypasses
-    autoBroadcastJoinThreshold and OOMs executors at 100 TB."""
-    import inspect
-
-    from apm_opentelemetry_collector_spark.operators import dedup
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        repeated_passages,
-    )
-
-    src = inspect.getsource(dedup)
-    assert "join(F.broadcast(" not in src and "F.broadcast(s" not in src, (
-        "doc-cardinality forced broadcast in dedup.py"
-    )
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = plan_of(repeated_passages(docs))
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan, plan
 
 
 def test_ewma_batch_plan_vectorized_no_python(spark):

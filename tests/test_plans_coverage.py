@@ -30,12 +30,17 @@ def test_every_bench_headline_query_has_a_plan_section():
     )
 
     # the reverse: no section and no plans/r07 snapshot outlives its
-    # query (snapshots are named <query>_<tag>.txt)
+    # query. Snapshot names are matched whole, not by prefix: live names
+    # such as token_count prefix others (token_count_bpe), so a prefix
+    # match would keep a retired query's snapshots alive.
     names = set(entrymod.queries())
     stale = sorted(sections - names)
     assert not stale, f"BENCH/PLANS.md sections for removed queries: {stale}"
     snaps = os.listdir(os.path.join(_ROOT, "plans", "r07"))
-    stale = sorted(
-        f for f in snaps if not any(f.startswith(f"{n}_") for n in names)
-    )
+    live = {
+        f"{n}_{tag}.txt"
+        for n in names
+        for tag in ("before", "after", "full_before", "full_after")
+    }
+    stale = sorted(f for f in snaps if f not in live)
     assert not stale, f"plans/r07 snapshots for removed queries: {stale}"

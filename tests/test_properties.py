@@ -169,225 +169,3 @@ def test_u48_sql_matches_python(doc_id):
         f"SELECT {u48_sql('doc_id')} AS u FROM (SELECT {doc_id} AS doc_id)"
     ).fetchone()[0]
     assert got == want
-
-
-# --- repeated_spans vs an INDEPENDENT pure-Python reference -----------------
-# The DuckDB oracle shares the operator's structural decomposition
-# (windows → hot → islands); this reference implements the SAME
-# semantics from the definition alone, so a shared structural mistake
-# would be caught here.
-
-
-def _spans_reference(texts, seed_len, min_len, min_docs):
-    import re
-    from collections import Counter, defaultdict
-
-    norm = {
-        i: re.sub(r"\s+", " ", t.lower()).strip() for i, t in enumerate(texts)
-    }
-    seed_docs = defaultdict(set)
-    for i, s in norm.items():
-        for p in range(len(s) - seed_len + 1):
-            seed_docs[s[p : p + seed_len]].add(i)
-    hot = {g for g, ds in seed_docs.items() if len(ds) >= min_docs}
-    span_occ = Counter()
-    span_docs = defaultdict(set)
-    for i, s in norm.items():
-        positions = [
-            p for p in range(len(s) - seed_len + 1) if s[p : p + seed_len] in hot
-        ]
-        runs = []
-        for p in positions:
-            if runs and p == runs[-1][1] + 1:
-                runs[-1] = (runs[-1][0], p)
-            else:
-                runs.append((p, p))
-        for p0, p1 in runs:
-            span = s[p0 : p1 + seed_len]
-            if len(span) >= min_len:
-                span_occ[span] += 1
-                span_docs[span].add(i)
-    return {
-        sp: (len(span_docs[sp]), n)
-        for sp, n in span_occ.items()
-        if len(span_docs[sp]) >= min_docs
-    }
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab x", min_size=0, max_size=60),
-        min_size=2,
-        max_size=10,
-    ),
-    st.integers(min_value=3, max_value=6),
-)
-def test_repeated_spans_matches_python_reference(spark, texts, seed_len):
-    """Random tiny-alphabet corpora (forced repeats, whitespace runs,
-    empty docs): the Spark operator's (span → n_docs, n_total) map must
-    equal the from-the-definition Python reference exactly."""
-    from apm_opentelemetry_collector_spark.operators.dedup import repeated_spans
-
-    min_len, min_docs = seed_len + 2, 2
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    got = {
-        r["span"]: (r["n_docs"], r["n_total"])
-        for r in repeated_spans(
-            docs, seed_len=seed_len, min_len=min_len, min_docs=min_docs
-        ).collect()
-    }
-    want = _spans_reference(texts, seed_len, min_len, min_docs)
-    assert got == want
-
-
-# --- exactsubstr_dedup vs an INDEPENDENT pure-Python reference ---------------
-# Same rationale as the repeated_spans reference above: the DuckDB twin
-# shares the operator's windows → hot → islands → complement structure;
-# this implements the removal semantics from the definition alone.
-
-
-def _exactsubstr_reference(texts, seed_len, min_len, min_copies):
-    import re
-    from collections import Counter
-
-    norm = {
-        i: re.sub(r"\s+", " ", t.lower()).strip() for i, t in enumerate(texts)
-    }
-    seed_count = Counter()
-    for s in norm.values():
-        for p in range(len(s) - seed_len + 1):
-            seed_count[s[p : p + seed_len]] += 1
-    hot = {g for g, c in seed_count.items() if c >= min_copies}
-    out = {}
-    for i, s in norm.items():
-        positions = [
-            p for p in range(len(s) - seed_len + 1) if s[p : p + seed_len] in hot
-        ]
-        runs = []
-        for p in positions:
-            if runs and p == runs[-1][1] + 1:
-                runs[-1] = (runs[-1][0], p)
-            else:
-                runs.append((p, p))
-        iv = [
-            (p0, p1 + seed_len - 1)
-            for p0, p1 in runs
-            if (p1 + seed_len - 1) - p0 + 1 >= min_len
-        ]
-        cleaned, cur = [], 0
-        for lo, hi in iv:
-            cleaned.append(s[cur:lo])
-            cur = hi + 1
-        cleaned.append(s[cur:])
-        out[i] = (
-            len(s),
-            sum(hi - lo + 1 for lo, hi in iv),
-            len(iv),
-            bool(iv),
-            "".join(cleaned),
-        )
-    return out
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.text(alphabet="ab x", min_size=0, max_size=60),
-        min_size=2,
-        max_size=10,
-    ),
-    st.integers(min_value=3, max_value=6),
-)
-def test_exactsubstr_dedup_matches_python_reference(spark, texts, seed_len):
-    """Random tiny-alphabet corpora (forced repeats, within-doc repeats,
-    whitespace runs, empty docs): the Spark rewrite's full row map
-    (n_chars, n_removed_chars, n_spans_removed, changed, cleaned_text)
-    must equal the from-the-definition Python reference exactly."""
-    from apm_opentelemetry_collector_spark.operators.dedup import (
-        exactsubstr_dedup,
-    )
-
-    min_len, min_copies = seed_len + 2, 2
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: (
-            r["n_chars"],
-            r["n_removed_chars"],
-            r["n_spans_removed"],
-            r["changed"],
-            r["cleaned_text"],
-        )
-        for r in exactsubstr_dedup(
-            docs, seed_len=seed_len, min_len=min_len, min_copies=min_copies
-        ).collect()
-    }
-    want = _exactsubstr_reference(texts, seed_len, min_len, min_copies)
-    assert got == want
-
-
-# --- c4_span_dedup vs an INDEPENDENT pure-Python reference -------------------
-
-
-def _c4_span_reference(texts, n=3):
-    from collections import defaultdict
-
-    lines = {i: t.split("\n") for i, t in enumerate(texts)}
-    removed: dict[int, set] = defaultdict(set)
-    seen = set()
-    for i in sorted(lines):
-        ls = lines[i]
-        for j in range(len(ls) - n + 1):
-            key = "\n".join(ls[j : j + n])
-            if key in seen:
-                removed[i].update(range(j, j + n))
-            else:
-                seen.add(key)
-    out = {}
-    for i, ls in lines.items():
-        rm = removed.get(i, set())
-        kept = [l for k, l in enumerate(ls) if k not in rm]
-        out[i] = (
-            len(ls),
-            len(rm),
-            bool(rm),
-            "\n".join(kept) if rm else texts[i],
-        )
-    return out
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.lists(
-            st.sampled_from(["a", "b", "ab", "x", ""]), min_size=0, max_size=8
-        ).map("\n".join),
-        min_size=2,
-        max_size=8,
-    )
-)
-def test_c4_span_dedup_matches_python_reference(spark, texts):
-    """Random tiny-line corpora (forced duplicate 3-line windows, empty
-    lines, short docs): c4_span_dedup's (n_lines, n_removed_lines,
-    changed, cleaned_text) per doc must equal the from-the-definition
-    global-first-occurrence reference exactly."""
-    from apm_opentelemetry_collector_spark.operators.dedup import c4_span_dedup
-
-    docs = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    got = {
-        r["doc_id"]: (
-            r["n_lines"],
-            r["n_removed_lines"],
-            r["changed"],
-            r["cleaned_text"],
-        )
-        for r in c4_span_dedup(docs).collect()
-    }
-    want = _c4_span_reference(texts)
-    assert got == want

@@ -26,18 +26,10 @@ MUST_BE_IN_WINDOW = {
     # implementation-touched in r7 (the optimization round — outputs are
     # hash-identical by construction, but the touched-goes-in-window
     # policy makes the driver re-verify exactly the code that moved):
-    # spread_small_scan paths and the span_cores level-set fold
-    "repeated_passages",
-    "repeated_spans",
-    "span_cores",
-    "exactsubstr_dedup",
-    "ngram_decontaminate",
-    "decontaminate_splice",
+    # spread_small_scan paths
     "gopher_quality_filters",
     "gopher_repetition",
     "curation_funnel",
-    "knn_bruteforce",
-    "kmeans_assign",
 }
 
 
