@@ -29,6 +29,7 @@ from apm_opentelemetry_collector_spark.config import PipelineConfig
 from apm_opentelemetry_collector_spark.functions import sharding, sqlgen
 from apm_opentelemetry_collector_spark.functions import text as textfn
 from apm_opentelemetry_collector_spark.functions.parse import with_parsed
+from apm_opentelemetry_collector_spark.functions.vectors import brute_force_knn
 from apm_opentelemetry_collector_spark.operators import analytics as _analytics
 from apm_opentelemetry_collector_spark.operators.aggregate import (
     sink_outcome_counts,
@@ -696,6 +697,12 @@ def q_lang_id(spark, sf_dir):
     return docs.select("doc_id", textfn.lang_id("text").alias("lang_pred"))
 
 
+def q_knn_bruteforce(spark, sf_dir):
+    emb = _load(spark, sf_dir, "embeddings")
+    out = brute_force_knn(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    return out.withColumn("cos", F.round("cos", 6))
+
+
 def q_record_encode_stats(spark, sf_dir):
     """P5/P6 + A4 (rows-only check: gzip bytes are not SQL-expressible):
     encoded sink records with compress factors. The byte format itself is
@@ -887,6 +894,17 @@ def q_tdigest_value_quantiles(spark, sf_dir):
     ev = _load(spark, sf_dir, "events")
     out = tdigest_quantiles(ev, "value", ["event_type"], "event_id", TDIGEST_QS)
     return out.select("event_type", "q", F.round("est", 6).alias("est"))
+
+
+def q_kmeans_assign(spark, sf_dir):
+    """Distributed k-means (2 Lloyd rounds, deterministic lowest-id
+    seeding): the iterative-algorithm representative — broadcast
+    centroids, exact-decimal means, squared-L2 composed in the oracle's
+    operation order so the whole trajectory bit-matches the unrolled-CTE
+    DuckDB twin."""
+    from apm_opentelemetry_collector_spark.operators.clustering import kmeans_assign
+
+    return kmeans_assign(_load(spark, sf_dir, "embeddings"))
 
 
 def q_tfidf_top_terms(spark, sf_dir):
@@ -1227,6 +1245,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bigram_lm_scores": q_bigram_lm_scores,
         # --- new in r4 ------------------------------------------------------
         "value_percentiles_tdigest": q_value_percentiles_tdigest,  # rows-only
+        # --- r4-touched implementations (argmin assignment; checkpoint
+        # discipline; epoch-floor oracle) — kept inside the window ----------
+        "kmeans_assign": q_kmeans_assign,
         # --- r7-touched implementation rotated INTO the window —
         # swapped with rate_limit/alert/counter_rate/hll, all untouched
         # this round and r6-hash-verified --------------------------------
@@ -1234,6 +1255,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- r2/r3 backlog (first driver-checked in r3) ---------------------
         "stratified_sample": q_stratified_sample,
         "cms_user_counts": q_cms_user_counts,
+        "knn_bruteforce": q_knn_bruteforce,
         "bloom_membership": q_bloom_membership,
         # non-SQL-expressible paths (rows-only checks; byte format and
         # batch shape are covered by pytest oracles instead) — rows-only
@@ -1284,7 +1306,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "metrics_resample": q_metrics_resample,
         "events_sessionize": q_events_sessionize,
         "events_sessionize_window": q_events_sessionize_window,
-        # training-data ops (documents)
+        # training-data ops (documents/embeddings)
         "doc_fingerprint": q_doc_fingerprint,
         "token_count": q_token_count,
         "token_count_bpe": q_token_count_bpe,
@@ -1349,6 +1371,29 @@ def _retry_chain_sql() -> str:
   FROM seq
 )"""
     )
+
+
+_COS_SQL = "(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
+
+
+def _knn_sql(k: int = 10) -> str:
+    cos = _COS_SQL.format(a="q.qv", b="c.cv")
+    return f"""
+WITH q AS (
+  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
+  FROM embeddings WHERE vec_id < 5
+), c AS (
+  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
+), scored AS (
+  SELECT q.query_id, c.neighbor_id, {cos} AS cos
+  FROM q, c WHERE q.query_id <> c.neighbor_id
+), ranked AS (
+  SELECT query_id, neighbor_id, cos,
+         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+  FROM scored
+)
+SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos FROM ranked WHERE rank <= {k}
+"""
 
 
 def _hll_users_sql() -> str:
@@ -1433,6 +1478,55 @@ WITH cells AS ({cells}
 )
 SELECT e.user_id, e.est_n, t.true_n
 FROM est e JOIN tru t ON t.user_id = e.user_id"""
+
+
+def _kmeans_sql(k: int | None = None, iters: int | None = None, dim: int = 64) -> str:
+    """Unrolled-CTE twin of operators/clustering.kmeans_assign: the same
+    fixed Lloyd rounds — lowest-id seeding, squared-L2 nearest (ties to
+    the lower cluster), exact-decimal centroid means — iteration i's
+    assignment CTE a{i} feeds means m{i}/centroids c{i} feeds a{i+1}."""
+    from apm_opentelemetry_collector_spark.operators.clustering import (
+        KMEANS_ITERS,
+        KMEANS_K,
+    )
+
+    k = k or KMEANS_K
+    iters = iters or KMEANS_ITERS
+    d2 = (
+        "(list_dot_product(p.v, p.v) + list_dot_product(c.c, c.c)"
+        " - 2.0 * list_dot_product(p.v, c.c))"
+    )
+    ctes = [
+        "pts AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
+        f"""c0 AS (
+  SELECT row_number() OVER (ORDER BY id ASC) - 1 AS cluster, v AS c
+  FROM (SELECT id, v FROM pts ORDER BY id ASC LIMIT {k})
+)""",
+    ]
+    for i in range(1, iters + 1):
+        ctes.append(
+            f"""a{i} AS (
+  SELECT id, v, cluster FROM (
+    SELECT p.id, p.v, c.cluster,
+           row_number() OVER (PARTITION BY p.id ORDER BY {d2} ASC, c.cluster ASC) AS rn
+    FROM pts p, c{i - 1} c
+  ) WHERE rn = 1
+)"""
+        )
+        if i < iters:
+            ctes.append(
+                f"""m{i} AS (
+  SELECT cluster, CAST(j AS INTEGER) AS pos,
+         CAST(sum(CAST(v[CAST(j AS INTEGER) + 1] AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
+  FROM a{i}, range(0, {dim}) t(j) GROUP BY cluster, pos
+)""",
+            )
+            ctes.append(
+                f"c{i} AS (SELECT cluster, list(m ORDER BY pos) AS c FROM m{i} GROUP BY cluster)"
+            )
+    return (
+        "WITH " + ",\n".join(ctes) + f"\nSELECT id AS vec_id, cluster FROM a{iters}"
+    )
 
 
 def _curation_lined_cte(**kw) -> str:
@@ -1900,6 +1994,7 @@ SELECT doc_id,
 FROM documents""",
         "lang_id": f"""
 SELECT doc_id, {g.lang_id_sql('text')} AS lang_pred FROM documents""",
+        "knn_bruteforce": _knn_sql(),
         "cms_user_counts": _cms_sql(),
         "hll_distinct_users": _hll_users_sql(),
         "bloom_membership": _bloom_sql(),
@@ -1949,6 +2044,7 @@ WITH p AS (
 SELECT doc_id, source FROM p
 WHERE p16 < {smp.stratified_threshold_sql(MIXTURE_RATES)}""",
         "weighted_reservoir": _wrs_sql(),
+        "kmeans_assign": _kmeans_sql(),
         "tfidf_top_terms": textfn.tfidf_top_terms_sql(),
         "curation_funnel": _curation_funnel_sql(),
         "trigram_lm_scores": textfn.trigram_lm_scores_sql(),

@@ -15,13 +15,13 @@ Layout:
   session         — SparkSession builder tuned for the pipeline
   sources/        — transcript derivation + synthetic generators + fixtures
   functions/      — column-expression libraries (parse, sharding, sqlgen,
-                    sketch, text)
+                    sketch, text, vectors)
   operators/      — collector-path operators (validate, forward-fill,
                     truncate, enrich, route, pack, encode, aggregate,
                     sample, translate), time-series and analytics operators
                     (asof, resample, rates, skew, outliers, tdigest,
-                    analytics) and the corpus-curation funnel
-                    (curation)
+                    analytics) and corpus-curation operators
+                    (curation, clustering)
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant of the collector path
                     (stateful forward fill, watermarked counts, dedup,

@@ -79,11 +79,13 @@ def main() -> None:
         "q1_pricing_summary",
         "q3_shipping_priority",
         "q5_local_supplier_volume",
+        "knn_bruteforce",
         "asof_last_event",
         "metrics_resample",
         # r3 additions
         "weighted_reservoir",
         "tdigest_value_quantiles",
+        "kmeans_assign",
         "tfidf_top_terms",
         "events_funnel",
         "rate_limit_exceeded",

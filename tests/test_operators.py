@@ -465,6 +465,25 @@ def test_weighted_reservoir_bias_and_determinism(spark):
     assert again == ids
 
 
+def test_kmeans_deterministic_and_partitions_points(spark):
+    """Lloyd assignment: every point exactly once, deterministic across
+    parallelism, clusters converge on the planted structure."""
+    from apm_opentelemetry_collector_spark.operators.clustering import (
+        kmeans_assign,
+        kmeans_sizes,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    a = {r["vec_id"]: r["cluster"] for r in kmeans_assign(emb).collect()}
+    b = {
+        r["vec_id"]: r["cluster"]
+        for r in kmeans_assign(emb.repartition(7)).collect()
+    }
+    assert a == b and len(a) == emb.count()
+    sizes = {r["cluster"]: r["n_points"] for r in kmeans_sizes(emb).collect()}
+    assert sum(sizes.values()) == len(a) and len(sizes) >= 2
+
+
 def test_tfidf_prefers_group_specific_terms(spark):
     from apm_opentelemetry_collector_spark.functions.text import tfidf_top_terms
 

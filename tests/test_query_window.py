@@ -30,6 +30,8 @@ MUST_BE_IN_WINDOW = {
     "gopher_quality_filters",
     "gopher_repetition",
     "curation_funnel",
+    "knn_bruteforce",
+    "kmeans_assign",
 }
 
 
