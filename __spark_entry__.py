@@ -32,16 +32,19 @@ from apm_opentelemetry_collector_spark.functions.parse import with_parsed
 from apm_opentelemetry_collector_spark.functions.vectors import brute_force_knn
 from apm_opentelemetry_collector_spark.operators import analytics as _analytics
 from apm_opentelemetry_collector_spark.operators.aggregate import (
+    dropped_stats,
+    flushed_stats,
     sink_outcome_counts,
 )
 from apm_opentelemetry_collector_spark.operators.enrich import enrich
 from apm_opentelemetry_collector_spark.operators.forward_fill import forward_fill
-from apm_opentelemetry_collector_spark.operators.pack import assign_batches
+from apm_opentelemetry_collector_spark.operators.pack import (
+    assign_batches,
+    record_stats,
+)
 from apm_opentelemetry_collector_spark.operators.route import fan_out, with_send_outcome
 from apm_opentelemetry_collector_spark.operators import sample as smp
-from apm_opentelemetry_collector_spark.operators.sample import (
-    sample_conversations_nibble,
-)
+from apm_opentelemetry_collector_spark.operators.sample import sample_conversations
 from apm_opentelemetry_collector_spark.operators.translate import (
     memorymonitor_scrape,
     signalfx_oracle_sql,
@@ -147,30 +150,15 @@ def q_receiver_counts(spark, sf_dir):
 
 def q_record_packing(spark, sf_dir):
     accepted = _chain_sharded(spark, sf_dir).filter(F.col("outcome") == "accepted")
-    packed = assign_batches(accepted, CFG, use_char_length=True)
-    return packed.groupBy("sink", "shard_id", "batch_no").agg(
-        F.count("*").alias("span_count"),
-        F.sum(F.length("text")).alias("uncompressed_bytes"),
-        F.min("conv_id").alias("partition_key"),
-    )
+    return record_stats(assign_batches(accepted, CFG))
 
 
 def q_flushed_stats(spark, sf_dir):
-    recs = q_record_packing(spark, sf_dir)
-    return recs.groupBy("sink", "shard_id").agg(
-        F.sum("span_count").alias("flushed_spans"),
-        F.count("*").alias("flushed_batches"),
-        F.sum("uncompressed_bytes").alias("flushed_bytes"),
-    )
+    return flushed_stats(q_record_packing(spark, sf_dir))
 
 
 def q_dropped_stats(spark, sf_dir):
-    return (
-        _chain_outcomes(spark, sf_dir)
-        .filter(F.col("outcome") == "dropped")
-        .groupBy("sink", "drop_reason")
-        .agg(F.count("*").alias("dropped_spans"))
-    )
+    return dropped_stats(_chain_outcomes(spark, sf_dir))
 
 
 def q_conservation(spark, sf_dir):
@@ -186,7 +174,7 @@ def q_conservation(spark, sf_dir):
 
 
 def q_sampler_counts(spark, sf_dir):
-    sampled = sample_conversations_nibble(derive_transcripts(spark, sf_dir), 4)
+    sampled = sample_conversations(derive_transcripts(spark, sf_dir), 0.25)
     return sampled.groupBy("role").agg(F.count("*").alias("n"))
 
 
@@ -711,8 +699,7 @@ def q_record_encode_stats(spark, sf_dir):
 
     sharded = _chain_sharded(spark, sf_dir)
     accepted = sharded.filter(F.col("outcome") == "accepted")
-    packed = assign_batches(accepted, CFG, use_char_length=True)
-    recs = encode_records(packed)
+    recs = encode_records(assign_batches(accepted, CFG))
     return recs.select(
         "sink",
         "shard_id",
@@ -907,24 +894,6 @@ def q_kmeans_assign(spark, sf_dir):
     return kmeans_assign(_load(spark, sf_dir, "embeddings"))
 
 
-def q_tfidf_top_terms(spark, sf_dir):
-    """Top-5 terms per source by TF-IDF (tf × ln(N/df), shared regex and
-    op order with the SQL twin). One tokenize pass, map-side-combinable
-    aggregates, WindowGroupLimit top-n."""
-    from apm_opentelemetry_collector_spark.functions.text import tfidf_top_terms
-
-    return tfidf_top_terms(_load(spark, sf_dir, "documents"))
-
-
-def q_bigram_lm_scores(spark, sf_dir):
-    """Corpus-trained bigram LM score per document (CCNet/Gopher-style
-    perplexity filter): three map-side-combinable count aggregates, two
-    token-key hash joins, decimal-exact per-doc mean of log-probs."""
-    from apm_opentelemetry_collector_spark.functions.text import bigram_lm_scores
-
-    return bigram_lm_scores(_load(spark, sf_dir, "documents"))
-
-
 def q_ewma_anomalies(spark, sf_dir):
     """Batch EWMA anomaly detection over events.value per event_type
     (ordered by ts, event_id): vectorized truncated-Horner folds — no
@@ -963,131 +932,6 @@ def q_mixture_weights(spark, sf_dir):
     return mixture_weights(_load(spark, sf_dir, "documents"))
 
 
-def q_gopher_quality_filters(spark, sf_dir):
-    """Published Gopher pretraining quality heuristics (Rae et al.
-    2021, App. A1.1) as per-rule booleans + overall keep: word-count
-    bounds, mean-word-length bounds, symbol-to-word ratio, bullet /
-    ellipsis line fractions, alpha-word fraction, stop-word presence.
-    Pure codegen'd Column expressions over one corpus scan — zero
-    shuffles; booleans decided by integer cross-multiplication so both
-    engines agree bit-exactly."""
-    return textfn.gopher_quality(_load(spark, sf_dir, "documents"))
-
-
-def q_gopher_repetition(spark, sf_dir):
-    """Published Gopher REPETITION heuristics (Rae et al. 2021, App.
-    A1.2) — the companion to the A1.1 quality rules: duplicate line /
-    paragraph fractions (by count and by char mass), most-frequent
-    2/3/4-gram char fraction, duplicated 5..10-gram char coverage.
-    The corpus is single-line token soup, so the query fabricates a
-    deterministic 4-line / 2-paragraph doc per row (the c4_line_filters
-    construction pattern): full text; a doc_id-modulated leading slice;
-    that slice again when doc_id%3==0 (duplicate line) else a middle
-    slice; then a paragraph break and the WHOLE text again when
-    doc_id%4==0 (duplicated n-grams) else the middle slice. Same
-    construction in the oracle pre-CTE; rules stay the published
-    constants. Zero shuffles — every rule is doc-local HOF folds."""
-    did = F.col("doc_id")
-    w = F.split(F.col("text"), " ")
-    slice_b = F.array_join(F.slice(w, F.lit(1), (did % 7 + 1).cast("int")), " ")
-    slice_c = F.array_join(F.slice(w, F.lit(3), (did % 5 + 2).cast("int")), " ")
-    line3 = F.when(did % 3 == 0, slice_b).otherwise(slice_c)
-    tail = F.when(did % 4 == 0, F.col("text")).otherwise(slice_c)
-    docs = _load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit("\n"),
-            slice_b,
-            F.lit("\n"),
-            line3,
-            F.lit("\n\n"),
-            tail,
-        ).alias("text"),
-    )
-    return textfn.gopher_repetition(docs)
-
-
-def q_c4_line_filters(spark, sf_dir):
-    """Published C4 line-level cleaning rules (Raffel et al. 2020 §2.2)
-    over deterministically "lined" documents: the corpus is single-line
-    token soup, so the query first fabricates a 4-line doc from each
-    row (full text; a 2-word stub; the front half; a (doc_id%8)+2-word
-    leading slice — each period-terminated). The operator then drops
-    the stub (< 5 words), keeps the full/half lines, and keeps or drops
-    the sliced line by its doc_id-modulated word count, so
-    n_kept_lines and keep genuinely vary per doc. The lining is the
-    SHARED curation_lined construction (template/stop-tail branches
-    off — the plain fixture shape), so the parity-critical arithmetic
-    lives in one Spark/SQL pair; rules stay the published constants."""
-    from apm_opentelemetry_collector_spark.operators.curation import (
-        curation_lined,
-    )
-
-    docs = curation_lined(
-        _load(spark, sf_dir, "documents"), template=None, stop_tail=""
-    )
-    return textfn.c4_line_filters(docs)
-
-
-def q_dsir_weights(spark, sf_dir):
-    """DSIR importance weights (Xie et al. 2023): hashed-unigram
-    (4096-bucket md5) log-likelihood ratio of each doc under the
-    src0-slice target distribution vs the whole corpus, add-one
-    smoothed, DECIMAL-exact per-doc accumulation — the published
-    data-selection scorer that feeds weighted resampling."""
-    return textfn.dsir_weights(_load(spark, sf_dir, "documents"))
-
-
-def q_ccnet_buckets(spark, sf_dir):
-    """CCNet quality stratification (Wenzek et al. 2020): per-language
-    head/middle/tail LM-score terciles over the documents table (the
-    corpus-trained bigram LM stands in for CCNet's per-language
-    KenLM). Exact per-lang percentile thresholds; bucket comparisons
-    are interpolation-robust (see the operator's parity note)."""
-    return textfn.ccnet_buckets(_load(spark, sf_dir, "documents"))
-
-
-def q_fineweb_filters(spark, sf_dir):
-    """FineWeb custom filters (Penedo et al. 2024): punct-ending line
-    fraction >= 0.12, duplicated-line char fraction <= 0.10, short-line
-    (<30 chars) fraction < 0.67 — the third published rule set after
-    Gopher/C4. The corpus is single-line soup, so the query fabricates
-    4 deterministic lines per doc with branches that cross each rule:
-    doc_id%5==0 strips terminal punctuation (punct rule), %7==0 swaps
-    three lines for short stubs (short rule), %11==0 duplicates line 1
-    (dup-chars rule). Same construction in the oracle pre-CTE."""
-    did = F.col("doc_id")
-    p = F.when(did % 5 == 0, F.lit("")).otherwise(F.lit("."))
-    half = F.expr("substring(text, 1, CAST(length(text) AS BIGINT) DIV 2)")
-    sliced = F.expr(
-        "array_join(slice(split(text, ' '), 1, CAST(doc_id % 8 AS INT) + 2), ' ')"
-    )
-    l1 = F.concat(F.col("text"), p)
-    l2 = F.when(did % 7 == 0, F.lit("a b")).otherwise(F.concat(half, p))
-    l3 = F.when(did % 7 == 0, F.lit("c d")).otherwise(F.concat(sliced, p))
-    l4 = (
-        F.when(did % 11 == 0, l1)
-        .when(did % 7 == 0, F.lit("e f"))
-        .otherwise(F.lit("tail words enough to be long line here"))
-    )
-    nl = F.lit("\n")
-    docs = _load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(l1, nl, l2, nl, l3, nl, l4).alias("text"),
-    )
-    return textfn.fineweb_filters(docs)
-
-
-def q_tokenizer_fertility(spark, sf_dir):
-    """Per-language tokenizer fertility (subword tokens per whitespace
-    word, chars per subword) under the GPT-2-style pretokenizer proxy —
-    the multilingual tokenizer-health report. Pure map-side counting
-    into one groupBy(lang); integer sums, int/int ratio doubles,
-    bit-exact twin."""
-    return textfn.tokenizer_fertility(_load(spark, sf_dir, "documents"))
-
-
 def q_temperature_mixture(spark, sf_dir):
     """Temperature-scaled mixture smoothing (Conneau & Lample 2019 /
     T5 §3.4.3) at the published T=2: per-source sampling rates that
@@ -1101,34 +945,6 @@ def q_temperature_mixture(spark, sf_dir):
     )
 
     return temperature_mixture(_load(spark, sf_dir, "documents"))
-
-
-def q_trigram_lm_scores(spark, sf_dir):
-    """Stupid-backoff trigram LM scoring (Brants et al. 2007) under a
-    target-domain model (trained on the src0 slice — the CCNet setup):
-    S = c123/c12, backing off through 0.4·c23/c2 to 0.16·c3/N with a
-    1/N OOV floor. Count-join-shaped (three map-side aggregates + five
-    token-key hash joins), integer-decided branches, DECIMAL-exact
-    per-doc mean — the KenLM-shaped fluency filter one rung above
-    bigram_lm_scores."""
-    return textfn.trigram_lm_scores(_load(spark, sf_dir, "documents"))
-
-
-def q_curation_funnel(spark, sf_dir):
-    """The published curation stack composed as ONE job: C4 line
-    filters → Gopher quality on the cleaned text → exact keep-first
-    dedup, reported as a per-source survival funnel + surviving token
-    budget. Stage logic reuses the already-oracled operators and their
-    SQL generators verbatim (single source of truth); the corpus is
-    single-line soup, so the query fabricates the c4_line_filters
-    4-line construction with a stopword tail and a shared-template
-    branch (doc_id%10==0) so every stage has real, varied work."""
-    from apm_opentelemetry_collector_spark.operators.curation import (
-        curation_funnel,
-        curation_lined,
-    )
-
-    return curation_funnel(curation_lined(_load(spark, sf_dir, "documents")))
 
 
 RATE_WINDOW_S = 86400
@@ -1228,21 +1044,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """
     return {
         # --- new in r6 ------------------------------------------------------
-        "fineweb_filters": q_fineweb_filters,
-        "tokenizer_fertility": q_tokenizer_fertility,
         "temperature_mixture": q_temperature_mixture,
-        "trigram_lm_scores": q_trigram_lm_scores,
-        "curation_funnel": q_curation_funnel,
         "pack_sequences": q_pack_sequences,
         "mixture_weights": q_mixture_weights,
-        "gopher_quality_filters": q_gopher_quality_filters,
-        "gopher_repetition": q_gopher_repetition,
-        "c4_line_filters": q_c4_line_filters,
-        "dsir_weights": q_dsir_weights,
-        "ccnet_buckets": q_ccnet_buckets,
         # --- new in r5 ------------------------------------------------------
         "ewma_anomalies": q_ewma_anomalies,
-        "bigram_lm_scores": q_bigram_lm_scores,
         # --- new in r4 ------------------------------------------------------
         "value_percentiles_tdigest": q_value_percentiles_tdigest,  # rows-only
         # --- r4-touched implementations (argmin assignment; checkpoint
@@ -1265,7 +1071,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tdigest_value_quantiles": q_tdigest_value_quantiles,  # rows-only
         # --- new in r3 ------------------------------------------------------
         "weighted_reservoir": q_weighted_reservoir,
-        "tfidf_top_terms": q_tfidf_top_terms,
         "leakage_safe_split": q_leakage_safe_split,
         "events_funnel": q_events_funnel,
         "cohort_retention": q_cohort_retention,
@@ -1529,28 +1334,12 @@ def _kmeans_sql(k: int | None = None, iters: int | None = None, dim: int = 64) -
     )
 
 
-def _curation_lined_cte(**kw) -> str:
-    from apm_opentelemetry_collector_spark.operators.curation import (
-        curation_lined_cte,
-    )
-
-    return curation_lined_cte(**kw)
-
-
 def _temperature_mixture_sql() -> str:
     from apm_opentelemetry_collector_spark.operators.sample import (
         temperature_mixture_sql,
     )
 
     return temperature_mixture_sql()
-
-
-def _curation_funnel_sql() -> str:
-    from apm_opentelemetry_collector_spark.operators.curation import (
-        curation_funnel_sql,
-    )
-
-    return curation_funnel_sql()
 
 
 def _pack_sequences_sql(seq_len: int | None = None) -> str:
@@ -1716,14 +1505,14 @@ FROM transcripts t JOIN invalid_convs i ON i.conv_id = t.conv_id""",
         + """
 SELECT sink, shard_id, batch_no,
        count(*) AS span_count,
-       CAST(sum(length(text)) AS BIGINT) AS uncompressed_bytes,
+       CAST(sum(strlen(text)) AS BIGINT) AS uncompressed_bytes,
        min(conv_id) AS partition_key
 FROM packed GROUP BY sink, shard_id, batch_no""",
         "flushed_stats": sqlgen.chain_to_packed(SHARDS, CFG.max_record_size)
         + """
 , recs AS (
   SELECT sink, shard_id, batch_no, count(*) AS span_count,
-         sum(length(text)) AS uncompressed_bytes
+         sum(strlen(text)) AS uncompressed_bytes
   FROM packed GROUP BY sink, shard_id, batch_no
 )
 SELECT sink, shard_id, CAST(sum(span_count) AS BIGINT) AS flushed_spans,
@@ -2045,57 +1834,10 @@ SELECT doc_id, source FROM p
 WHERE p16 < {smp.stratified_threshold_sql(MIXTURE_RATES)}""",
         "weighted_reservoir": _wrs_sql(),
         "kmeans_assign": _kmeans_sql(),
-        "tfidf_top_terms": textfn.tfidf_top_terms_sql(),
-        "curation_funnel": _curation_funnel_sql(),
-        "trigram_lm_scores": textfn.trigram_lm_scores_sql(),
         "temperature_mixture": _temperature_mixture_sql(),
-        "tokenizer_fertility": textfn.tokenizer_fertility_sql(),
-        "fineweb_filters": textfn.fineweb_filters_sql(
-            table="lined",
-            pre_cte=(
-                "lined AS (SELECT doc_id,"
-                " text || p || chr(10) ||"
-                " CASE WHEN doc_id % 7 = 0 THEN 'a b'"
-                " ELSE substr(text, 1, length(text) // 2) || p END || chr(10) ||"
-                " CASE WHEN doc_id % 7 = 0 THEN 'c d'"
-                " ELSE array_to_string(string_split(text, ' ')"
-                "[1:CAST(doc_id % 8 AS INT) + 2], ' ') || p END || chr(10) ||"
-                " CASE WHEN doc_id % 11 = 0 THEN text || p"
-                " WHEN doc_id % 7 = 0 THEN 'e f'"
-                " ELSE 'tail words enough to be long line here' END AS text"
-                " FROM (SELECT doc_id, text,"
-                " CASE WHEN doc_id % 5 = 0 THEN '' ELSE '.' END AS p"
-                " FROM documents))"
-            ),
-        ),
         "pack_sequences": _pack_sequences_sql(),
         "mixture_weights": _mixture_weights_sql(),
         "ewma_anomalies": _ewma_sql(),
-        "bigram_lm_scores": textfn.bigram_lm_scores_sql(),
-        "gopher_quality_filters": textfn.gopher_quality_sql(),
-        "gopher_repetition": textfn.gopher_repetition_sql(
-            table="lined",
-            pre_cte=(
-                "lined AS (SELECT doc_id, text || chr(10) ||"
-                " array_to_string(string_split(text, ' ')"
-                "[1:CAST(doc_id % 7 AS INTEGER) + 1], ' ') || chr(10) ||"
-                " CASE WHEN doc_id % 3 = 0 THEN array_to_string("
-                "string_split(text, ' ')[1:CAST(doc_id % 7 AS INTEGER) + 1], ' ')"
-                " ELSE array_to_string(string_split(text, ' ')"
-                "[3:CAST(doc_id % 5 AS INTEGER) + 4], ' ') END"
-                " || chr(10) || chr(10) ||"
-                " CASE WHEN doc_id % 4 = 0 THEN text"
-                " ELSE array_to_string(string_split(text, ' ')"
-                "[3:CAST(doc_id % 5 AS INTEGER) + 4], ' ') END AS text"
-                " FROM documents)"
-            ),
-        ),
-        "c4_line_filters": textfn.c4_line_filters_sql(
-            table="lined",
-            pre_cte=_curation_lined_cte(template=None, stop_tail=""),
-        ),
-        "dsir_weights": textfn.dsir_weights_sql(),
-        "ccnet_buckets": textfn.ccnet_buckets_sql(),
         "leakage_safe_split": f"""
 SELECT doc_id, {smp.split_case_sql(g.FINGERPRINT_SQL.format(col='text'))} AS split
 FROM documents""",

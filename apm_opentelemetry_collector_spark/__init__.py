@@ -20,8 +20,7 @@ Layout:
                     truncate, enrich, route, pack, encode, aggregate,
                     sample, translate), time-series and analytics operators
                     (asof, resample, rates, skew, outliers, tdigest,
-                    analytics) and corpus-curation operators
-                    (curation, clustering)
+                    analytics) and embedding clustering (clustering)
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant of the collector path
                     (stateful forward fill, watermarked counts, dedup,

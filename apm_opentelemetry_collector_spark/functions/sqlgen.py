@@ -14,8 +14,9 @@ This module is the single source of truth for the shared semantics:
 
 Portability notes (probed against DuckDB 1.0 / Spark 4.1):
   - regexp_extract returns '' on no-match in both → wrap with NULLIF;
-  - length() (char) is used instead of octet_length (DuckDB's is
-    BLOB-only); generated text is ASCII so they agree;
+  - byte sizes use strlen(), which counts UTF-8 bytes of a VARCHAR
+    like Spark's octet_length (DuckDB's octet_length takes BLOBs only;
+    its length() counts characters);
   - md5(varchar) → identical lowercase hex in both;
   - lexicographic compare of fixed-width lowercase hex == unsigned
     128-bit compare (the sharding invariant).
@@ -114,7 +115,7 @@ sharded AS (
 PACKED_CTE = """
 packed AS (
   SELECT sharded.*,
-    CAST(floor(COALESCE(SUM(length(text)) OVER (
+    CAST(floor(COALESCE(SUM(strlen(text)) OVER (
         PARTITION BY sink, shard_id ORDER BY conv_id, turn_idx
         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / {max_record_size}.0)
       AS BIGINT) AS batch_no
@@ -156,13 +157,6 @@ def chain_to_outcomes() -> str:
     )
 
 
-def chain_to_sharded(shards: list[dict]) -> str:
-    return pipeline_with(
-        TRANSCRIPTS_CTE, INVALID_CTE, FILLED_CTE, VALID_CTE, ROUTED_CTE, OUTCOME_CTE,
-        SHARDED_CTE, shards=shards,
-    )
-
-
 def chain_to_packed(shards: list[dict], max_record_size: int = 100_000) -> str:
     return pipeline_with(
         TRANSCRIPTS_CTE, INVALID_CTE, FILLED_CTE, VALID_CTE, ROUTED_CTE, OUTCOME_CTE,
@@ -183,7 +177,6 @@ __all__ = [
     "chain_to_transcripts",
     "chain_to_valid",
     "chain_to_outcomes",
-    "chain_to_sharded",
     "chain_to_packed",
     "routes_values_sql",
     "service_dim_values_sql",

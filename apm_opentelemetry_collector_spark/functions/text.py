@@ -1,8 +1,7 @@
 """Text-analysis primitives for training-data pipelines.
 
-Beyond the reference's operator set, a 100 TB transcript/document corpus
-needs the standard curation operators: token counting, quality scoring,
-language ID, and document fingerprinting. All are pure Column
+Beyond the reference's operator set: token counting, quality features,
+PII scrubbing, language ID, and document fingerprinting. All are pure Column
 expressions — JVM-side, codegen'd, no Python on the hot path — and each
 has an exact ANSI-SQL twin for the DuckDB oracle.
 """
@@ -11,8 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..session import spread_small_scan
 
 PUNCT_RE = r"[.,!?;:]"
 WS_RE = r"\s+"
@@ -199,1491 +196,3 @@ def lang_id_sql(col: str) -> str:
     )
     # DuckDB lacks lateral column alias in same select; inline _best
     return f"(CASE {whens} ELSE 'und' END)".replace("_best", f"({best})")
-
-
-# --- TF-IDF ------------------------------------------------------------------
-TFIDF_TOKEN_RE = "[a-z]{2,}"  # lowercase alpha runs, len >= 2
-
-
-def tfidf_top_terms(
-    docs,
-    top_n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "source",
-):
-    """Top-n terms per group by TF-IDF: tf(term in group) × ln(N/df).
-
-    One tokenize pass feeds both aggregates (term frequency per group,
-    document frequency per term); N is a lazy 1-row aggregate
-    cross-joined in (no driver action). Score arithmetic keeps the
-    exact operation order of the SQL twin (tf * ln(N/df), integer÷
-    integer promoted to double in both engines) so selection and the
-    rounded output bit-match. Output: group_col, term, tf, df,
-    tfidf (rounded 6dp); ≤ top_n rows per group (score desc, term asc).
-
-    Scale: tokenize is map-side; tf and df are map-side-combinable
-    aggregates on uniform term keys; the final top-n is a per-group
-    WindowGroupLimit — no corpus-sized state anywhere.
-    """
-    from pyspark.sql import Window
-
-    toks = docs.select(
-        F.col(group_col),
-        F.col(id_col).alias("_doc"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TFIDF_TOKEN_RE), 0)
-        ).alias("term"),
-    )
-    tf = toks.groupBy(group_col, "term").agg(F.count("*").cast("bigint").alias("tf"))
-    df_ = (
-        toks.select("_doc", "term")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count("*").cast("bigint").alias("df"))
-    )
-    n_docs = docs.agg(F.count("*").cast("bigint").alias("_n"))
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("_score").desc(), F.col("term").asc()
-    )
-    return (
-        tf.join(df_, "term")
-        .crossJoin(n_docs)
-        .withColumn("_score", F.col("tf") * F.log(F.col("_n") / F.col("df")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= top_n)
-        .select(
-            group_col, "term", "tf", "df", F.round("_score", 6).alias("tfidf")
-        )
-    )
-
-
-def tfidf_top_terms_sql(
-    top_n: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "source",
-    table: str = "documents",
-) -> str:
-    """DuckDB twin of tfidf_top_terms (same regex, same score order)."""
-    return f"""
-WITH toks AS (
-  SELECT {group_col}, {id_col} AS _doc, unnest(
-    regexp_extract_all(lower({text_col}), '{TFIDF_TOKEN_RE}')
-  ) AS term
-  FROM {table}
-), tf AS (
-  SELECT {group_col}, term, CAST(count(*) AS BIGINT) AS tf
-  FROM toks GROUP BY {group_col}, term
-), df AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df
-  FROM (SELECT DISTINCT _doc, term FROM toks) GROUP BY term
-), n AS (SELECT CAST(count(*) AS BIGINT) AS _n FROM {table}
-), scored AS (
-  SELECT tf.{group_col}, tf.term, tf.tf, df.df,
-         tf.tf * ln(n._n / df.df) AS _score
-  FROM tf JOIN df USING (term) CROSS JOIN n
-), ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY {group_col} ORDER BY _score DESC, term ASC
-  ) AS _rn FROM scored
-)
-SELECT {group_col}, term, tf, df, round(_score, 6) AS tfidf
-FROM ranked WHERE _rn <= {top_n}"""
-
-
-# --- bigram LM quality scoring ----------------------------------------------
-
-LM_SMOOTH_K = 1.0  # add-one smoothing
-
-
-def bigram_lm_scores(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Corpus-trained bigram language-model score per document — the
-    perplexity-style quality filter a curation stack runs after the
-    cheap heuristics (CCNet/Gopher-style: prose scores high, boilerplate
-    token soup and gibberish score low; score = mean log P(w_i|w_{i-1})
-    under add-one smoothing, trained on the corpus being scored).
-
-    Spark shape:
-      * tokenize once (normalized text split on the collapsed single
-        space — identical tokens to the SQL twin's string_split);
-      * unigram counts c1(w), bigram counts c12(w1,w2), vocab size V:
-        three map-side-combinable aggregates over uniform token keys;
-      * score: each doc's bigrams equi-join the count tables (token
-        keys, no skew beyond natural Zipf — AQE handles the head), then
-        logp = ln((c12+k)/(c1+k·V));
-      * per-doc mean with DECIMAL(28,12) accumulation of the logp terms
-        — exact and order-independent, so Spark's partial-agg order and
-        the oracle's scan order produce bit-identical sums (the same
-        trick as the centroid means).
-
-    At 100 TB the bigram table is the big intermediate (Zipf-bounded,
-    far sub-quadratic in V in practice); counts are classic map-side
-    combinable aggregates and scoring is two hash joins on token keys —
-    the canonical distributed-LM-count shape. Docs with < 2 tokens
-    yield no bigrams and drop out (no score is defensible for one-token
-    docs; COUNT them upstream if needed).
-
-    Output: doc_id, n_bigrams (bigint), avg_logp (double, rounded 6dp);
-    ascending avg_logp = most-gibberish-first.
-    """
-    from pyspark.sql import Window
-
-    k = LM_SMOOTH_K
-    norm = normalized(text_col)
-    toks = (
-        docs.select(F.col(id_col).alias("id"), F.split(norm, " ").alias("l"))
-        .select(
-            "id", F.posexplode("l").alias("pos", "w")
-        )
-        .filter(F.col("w") != "")
-    )
-    w_ = Window.partitionBy("id").orderBy("pos")
-    bigrams = (
-        toks.withColumn("w2", F.lead("w").over(w_))
-        .filter(F.col("w2").isNotNull())
-        .select("id", F.col("w").alias("w1"), "w2")
-    )
-    c1 = toks.groupBy("w").agg(F.count("*").cast("bigint").alias("c1"))
-    c12 = bigrams.groupBy("w1", "w2").agg(
-        F.count("*").cast("bigint").alias("c12")
-    )
-    vocab = toks.agg(F.countDistinct("w").cast("bigint").alias("v"))
-    logp = F.log(
-        (F.col("c12") + F.lit(k)) / (F.col("c1") + F.lit(k) * F.col("v"))
-    )
-    scored = (
-        bigrams.join(c12, ["w1", "w2"])
-        .join(c1.withColumnRenamed("w", "w1"), "w1")
-        .crossJoin(F.broadcast(vocab))
-        .select("id", logp.alias("_lp"))
-    )
-    return (
-        scored.groupBy("id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_bigrams"),
-            (
-                F.sum(F.col("_lp").cast("decimal(28,12)")).cast("double")
-                / F.count("*")
-            ).alias("_avg"),
-        )
-        .select(
-            F.col("id").alias("doc_id"),
-            "n_bigrams",
-            F.round("_avg", 6).alias("avg_logp"),
-        )
-    )
-
-
-def bigram_lm_scores_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """DuckDB twin of bigram_lm_scores (same normalize/tokenize/
-    smoothing/decimal-mean op order)."""
-    k = LM_SMOOTH_K
-    return f"""
-WITH docs_n AS (
-  SELECT {id_col} AS id,
-         string_split(trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g')), ' ') AS l
-  FROM {table}
-), toks AS (
-  SELECT id, CAST(j AS INTEGER) AS pos, l[CAST(j AS INTEGER)] AS w
-  FROM (SELECT id, l, unnest(range(1, len(l) + 1)) AS j FROM docs_n)
-  WHERE l[CAST(j AS INTEGER)] <> ''
-), bigrams AS (
-  SELECT a.id, a.w AS w1, b.w AS w2
-  FROM toks a JOIN toks b ON a.id = b.id AND b.pos = a.pos + 1
-), c1 AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w
-), c12 AS (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12 FROM bigrams GROUP BY w1, w2
-), vocab AS (
-  SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM toks
-), scored AS (
-  SELECT g.id, ln((c12.c12 + {k!r}) / (c1.c1 + {k!r} * vocab.v)) AS lp
-  FROM bigrams g
-  JOIN c12 ON g.w1 = c12.w1 AND g.w2 = c12.w2
-  JOIN c1 ON g.w1 = c1.w
-  CROSS JOIN vocab
-)
-SELECT id AS doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       round(CAST(sum(CAST(lp AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS avg_logp
-FROM scored GROUP BY id"""
-
-
-# --- tokenizer fertility -------------------------------------------------------
-
-
-def tokenizer_fertility(
-    docs,
-    text_col: str = "text",
-    lang_col: str = "lang",
-):
-    """Per-language tokenizer fertility — subword tokens per whitespace
-    word (the multilingual-tokenizer health metric: high fertility =
-    the vocabulary serves that language poorly and its token budget
-    buys fewer words), plus chars-per-subword-token. The subword proxy
-    is the repo's GPT-2-style pretokenizer count (bpe_token_count).
-
-    100 TB shape: pure map-side counting expressions (two regexp
-    counts + length) folded by ONE map-side-combinable groupBy(lang) —
-    a handful of output rows regardless of corpus size. All sums are
-    integers (exact under any partial-agg order); the reported ratios
-    are int/int doubles computed in the same operand order on both
-    engines, so the oracle is bit-exact.
-
-    Output: lang, n_docs, ws_tokens, bpe_tokens, n_chars, fertility
-    (bpe/ws), chars_per_bpe (chars/bpe).
-    """
-    per = docs.groupBy(lang_col).agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(token_count(text_col)).cast("bigint").alias("ws_tokens"),
-        F.sum(bpe_token_count(text_col)).cast("bigint").alias("bpe_tokens"),
-        F.sum(F.length(text_col).cast("bigint")).cast("bigint").alias("n_chars"),
-    )
-    safe_ws = F.when(F.col("ws_tokens") > 0, F.col("ws_tokens")).otherwise(F.lit(1))
-    safe_bpe = F.when(F.col("bpe_tokens") > 0, F.col("bpe_tokens")).otherwise(F.lit(1))
-    # fixed output name 'lang' regardless of lang_col — the SQL twin
-    # hardcodes the alias (ADVICE r6; no-op under the default)
-    return per.select(
-        F.col(lang_col).alias("lang"),
-        "n_docs",
-        "ws_tokens",
-        "bpe_tokens",
-        "n_chars",
-        (F.col("bpe_tokens") / safe_ws).alias("fertility"),
-        (F.col("n_chars") / safe_bpe).alias("chars_per_bpe"),
-    )
-
-
-def tokenizer_fertility_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    lang_col: str = "lang",
-) -> str:
-    """DuckDB twin of tokenizer_fertility (same counting expressions
-    and operand order)."""
-    tc = TOKEN_COUNT_SQL.format(col=text_col)
-    bc = bpe_token_count_sql(text_col)
-    return f"""
-WITH per AS (
-  SELECT {lang_col} AS lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum({tc}) AS BIGINT) AS ws_tokens,
-         CAST(sum({bc}) AS BIGINT) AS bpe_tokens,
-         CAST(sum(length({text_col})) AS BIGINT) AS n_chars
-  FROM {table} GROUP BY {lang_col}
-)
-SELECT lang, n_docs, ws_tokens, bpe_tokens, n_chars,
-       bpe_tokens / (CASE WHEN ws_tokens > 0 THEN ws_tokens ELSE 1 END) AS fertility,
-       n_chars / (CASE WHEN bpe_tokens > 0 THEN bpe_tokens ELSE 1 END) AS chars_per_bpe
-FROM per"""
-
-
-# --- trigram LM with stupid backoff -------------------------------------------
-# Brants et al. 2007 ("Large Language Models in Machine Translation"):
-# S(w3|w1 w2) = c123/c12 when the trigram was seen in training, else
-# alpha * S(w3|w2), recursing to alpha^2 * c3/N at the unigram — the
-# web-scale LM scoring scheme that skips normalization entirely (that
-# is what makes it count-join-shaped and exactly distributable).
-# alpha = 0.4 is the paper's value. An out-of-vocabulary unigram floors
-# at 1/N (frozen choice, fed to both engines). Training runs on a
-# TARGET-DOMAIN slice (the CCNet setup: score fluency under the target
-# LM), which is also what makes backoff genuinely fire — a model
-# trained on the scored corpus itself has c123 > 0 everywhere.
-LM_ALPHA = 0.4
-
-
-def trigram_lm_scores(
-    docs,
-    train_sources: tuple[str, ...] | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-):
-    """Per-document mean log stupid-backoff trigram score under an LM
-    trained on `train_sources` — the KenLM-shaped fluency filter
-    (CCNet trains on Wikipedia; here the target slice), one rung above
-    bigram_lm_scores: longer context where evidence exists, graceful
-    count-ratio backoff where it doesn't.
-
-    Spark shape:
-      * tokens and n-grams are per-doc higher-order folds (transform
-        over sequence + element_at — the array never leaves its row)
-        exploded once; training counts (c1, c12, c123, N) are THREE
-        map-side-combinable aggregates over the train slice's token
-        keys plus one bounded total;
-      * scoring LEFT-joins each doc trigram against c123/(c12 ctx)/
-        (c23)/(c2)/(c3) — five hash joins on uniform-ish token keys
-        (Zipf heads handled by AQE, the bigram_lm_scores note), N
-        broadcast;
-      * the branch taken is integer-decided (count > 0), every branch
-        is a count ratio times double alpha literals — identical fp op
-        order in both engines — and the per-doc mean accumulates
-        DECIMAL(28,12) log terms, so the oracle hash is independent of
-        partial-agg order.
-
-    Docs with < 3 tokens yield no trigrams and drop out (the
-    bigram_lm_scores contract). Output: doc_id, n_trigrams, n_hit
-    (trigram-path positions), n_bo1 (bigram backoff), n_bo2 (unigram
-    backoff), avg_logs (double, rounded 6dp; ascending = least fluent
-    under the target LM first).
-    """
-    # default deferred: DSIR_TARGET_SOURCE is defined later in this module
-    train_sources = train_sources or (DSIR_TARGET_SOURCE,)
-    alpha = F.lit(LM_ALPHA)
-    norm = normalized(text_col)
-    base = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(source_col).isin(list(train_sources)).alias("is_train"),
-        F.filter(F.split(norm, " "), lambda w: w != "").alias("l"),
-    )
-    tri_expr = F.expr(
-        "transform(sequence(1, size(l) - 2), j -> struct("
-        "element_at(l, j) AS w1, element_at(l, j + 1) AS w2,"
-        " element_at(l, j + 2) AS w3))"
-    )
-    bi_expr = F.expr(
-        "transform(sequence(1, size(l) - 1), j -> struct("
-        "element_at(l, j) AS w1, element_at(l, j + 1) AS w2))"
-    )
-    toks = base.select("id", "is_train", F.explode("l").alias("w"))
-    bis = base.filter(F.size("l") >= 2).select(
-        "is_train", F.explode(bi_expr).alias("g")
-    )
-    tris = base.filter(F.size("l") >= 3).select(
-        "id", "is_train", F.explode(tri_expr).alias("g")
-    ).select("id", "is_train", "g.w1", "g.w2", "g.w3")
-    c1 = (
-        toks.filter("is_train")
-        .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    c12 = (
-        bis.filter("is_train")
-        .select("g.w1", "g.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    c123 = (
-        tris.filter("is_train")
-        .groupBy("w1", "w2", "w3")
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    n_tok = toks.filter("is_train").agg(
-        F.count("*").cast("bigint").alias("n")
-    )
-    sc = (
-        tris.select("id", "w1", "w2", "w3")
-        .join(
-            c123.select("w1", "w2", "w3", F.col("c").alias("c123")),
-            ["w1", "w2", "w3"],
-            "left",
-        )
-        .join(
-            c12.select("w1", "w2", F.col("c").alias("c12")), ["w1", "w2"], "left"
-        )
-        .join(
-            c12.select(
-                F.col("w1").alias("w2"),
-                F.col("w2").alias("w3"),
-                F.col("c").alias("c23"),
-            ),
-            ["w2", "w3"],
-            "left",
-        )
-        .join(c1.select(F.col("w").alias("w2"), F.col("c").alias("c2")), "w2", "left")
-        .join(c1.select(F.col("w").alias("w3"), F.col("c").alias("c3")), "w3", "left")
-        .crossJoin(F.broadcast(n_tok))
-    )
-    z = F.lit(0).cast("bigint")
-    c123n = F.coalesce("c123", z)
-    c23n = F.coalesce("c23", z)
-    c3n = F.coalesce("c3", z)
-    s = (
-        F.when(c123n > 0, c123n / F.col("c12"))
-        .when(c23n > 0, alpha * (c23n / F.col("c2")))
-        .otherwise(
-            alpha * alpha * (F.when(c3n > 0, c3n).otherwise(F.lit(1)) / F.col("n"))
-        )
-    )
-    path = F.when(c123n > 0, F.lit(0)).when(c23n > 0, F.lit(1)).otherwise(F.lit(2))
-    scored = sc.select("id", F.log(s).alias("_lp"), path.alias("_p"))
-    return (
-        scored.groupBy("id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_trigrams"),
-            F.sum((F.col("_p") == 0).cast("bigint")).cast("bigint").alias("n_hit"),
-            F.sum((F.col("_p") == 1).cast("bigint")).cast("bigint").alias("n_bo1"),
-            F.sum((F.col("_p") == 2).cast("bigint")).cast("bigint").alias("n_bo2"),
-            (
-                F.sum(F.col("_lp").cast("decimal(28,12)")).cast("double")
-                / F.count("*")
-            ).alias("_avg"),
-        )
-        .select(
-            F.col("id").alias("doc_id"),
-            "n_trigrams",
-            "n_hit",
-            "n_bo1",
-            "n_bo2",
-            F.round("_avg", 6).alias("avg_logs"),
-        )
-    )
-
-
-def trigram_lm_scores_sql(
-    train_sources: tuple[str, ...] | None = None,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-) -> str:
-    """DuckDB twin of trigram_lm_scores (same tokenize/count/backoff
-    branch order and fp op order; DECIMAL-exact per-doc mean)."""
-    train_sources = train_sources or (DSIR_TARGET_SOURCE,)
-    srcs = ", ".join(f"'{s}'" for s in train_sources)
-    a = "CAST(0.4 AS DOUBLE)"
-    return f"""
-WITH docs_n AS (
-  SELECT {id_col} AS id, {source_col} IN ({srcs}) AS is_train,
-         list_filter(string_split(trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g')), ' '),
-                     w -> w <> '') AS l
-  FROM {table}
-), toks AS (
-  SELECT id, is_train, unnest(l) AS w FROM docs_n
-), bis AS (
-  SELECT is_train, l[CAST(j AS INTEGER)] AS w1, l[CAST(j AS INTEGER) + 1] AS w2
-  FROM (SELECT is_train, l, unnest(range(1, len(l))) AS j
-        FROM docs_n WHERE len(l) >= 2)
-), tris AS (
-  SELECT id, is_train,
-         l[CAST(j AS INTEGER)] AS w1,
-         l[CAST(j AS INTEGER) + 1] AS w2,
-         l[CAST(j AS INTEGER) + 2] AS w3
-  FROM (SELECT id, is_train, l, unnest(range(1, len(l) - 1)) AS j
-        FROM docs_n WHERE len(l) >= 3)
-), c1 AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS c FROM toks WHERE is_train GROUP BY w
-), c12 AS (
-  SELECT w1, w2, CAST(count(*) AS BIGINT) AS c FROM bis WHERE is_train GROUP BY w1, w2
-), c123 AS (
-  SELECT w1, w2, w3, CAST(count(*) AS BIGINT) AS c FROM tris WHERE is_train GROUP BY w1, w2, w3
-), n_tok AS (
-  SELECT CAST(count(*) AS BIGINT) AS n FROM toks WHERE is_train
-), sc AS (
-  SELECT t.id,
-         coalesce(g3.c, 0) AS c123, g2a.c AS c12,
-         coalesce(g2b.c, 0) AS c23, u2.c AS c2,
-         coalesce(u3.c, 0) AS c3, n_tok.n AS n
-  FROM tris t
-  LEFT JOIN c123 g3 ON t.w1 = g3.w1 AND t.w2 = g3.w2 AND t.w3 = g3.w3
-  LEFT JOIN c12 g2a ON t.w1 = g2a.w1 AND t.w2 = g2a.w2
-  LEFT JOIN c12 g2b ON t.w2 = g2b.w1 AND t.w3 = g2b.w2
-  LEFT JOIN c1 u2 ON t.w2 = u2.w
-  LEFT JOIN c1 u3 ON t.w3 = u3.w
-  CROSS JOIN n_tok
-), scored AS (
-  SELECT id,
-         ln(CASE WHEN c123 > 0 THEN c123 / c12
-                 WHEN c23 > 0 THEN {a} * (c23 / c2)
-                 ELSE {a} * {a} * ((CASE WHEN c3 > 0 THEN c3 ELSE 1 END) / n)
-            END) AS lp,
-         CASE WHEN c123 > 0 THEN 0 WHEN c23 > 0 THEN 1 ELSE 2 END AS p
-  FROM sc
-)
-SELECT id AS doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-       CAST(sum(CASE WHEN p = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-       CAST(sum(CASE WHEN p = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_bo1,
-       CAST(sum(CASE WHEN p = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_bo2,
-       round(CAST(sum(CAST(lp AS DECIMAL(28,12))) AS DOUBLE) / count(*), 6) AS avg_logs
-FROM scored GROUP BY id"""
-
-
-# --- Gopher quality rules ----------------------------------------------------
-# The published Gopher pretraining quality heuristics (Rae et al. 2021,
-# "Scaling Language Models: Methods, Analysis & Insights from Training
-# Gopher", App. A1.1), re-expressed as pure Column expressions. Every
-# pass/fail boolean is decided with INTEGER cross-multiplication
-# (10*symbols < words instead of symbols/words < 0.1) so the booleans
-# are bit-exact across engines regardless of float literal/rounding
-# behavior; the reported ratio columns are exact int/int doubles.
-# These constants feed BOTH the Spark plan and the DuckDB oracle
-# (gopher_quality_sql) — single source of truth, never fork.
-GOPHER_STOP_WORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
-GOPHER_BULLET_RE = r"^\s*[-*•]"
-GOPHER_ELLIPSIS_RE = r"(\.\.\.|…)\s*$"
-GOPHER_ELLIPSIS_COUNT_RE = r"(\.\.\.|…)"  # ASCII or unicode ellipsis
-GOPHER_MIN_WORDS = 50
-GOPHER_MAX_WORDS = 100_000
-GOPHER_MIN_MEAN_WORD_LEN = 3  # inclusive: 3 <= mean <= 10
-GOPHER_MAX_MEAN_WORD_LEN = 10
-# ratio rules as integer cross-multiplication (num_mult, den_mult):
-# the paper drops a doc when EITHER the hash ratio OR the ellipsis ratio
-# exceeds 0.1 — two independent ratios, not one pooled count (r6 review)
-GOPHER_SYMBOL_RATIO = (10, 1)  # sym/words  < 0.1   <=> 10*sym  < 1*words
-GOPHER_BULLET_FRAC = (10, 9)  # bullets/lines < 0.9   <=> 10*bul  < 9*lines
-GOPHER_ELLIPSIS_FRAC = (10, 3)  # ell_ln/lines  < 0.3   <=> 10*ell  < 3*lines
-GOPHER_ALPHA_FRAC = (5, 4)  # alpha/words   > 0.8   <=> 5*alpha > 4*words
-GOPHER_MIN_STOP_WORDS = 2
-
-
-def gopher_quality(
-    df,
-    text_col: str = "text",
-    id_cols: tuple[str, ...] = ("doc_id",),
-    spread: bool = True,
-):
-    """Per-document Gopher rule metrics + per-rule booleans + overall keep.
-
-    100 TB shape: one narrow projection over the corpus scan — zero
-    shuffles, zero joins, every expression inside WholeStageCodegen
-    (rlike/split/filter are JVM higher-order functions, no Python).
-
-    spread=False skips the small-scan parallelization for callers that
-    embed this in a larger composed pipeline (curation_funnel: the
-    mid-pipeline exchange measured as a net loss there, while the
-    standalone scorer gains 2.3×).
-    """
-    if spread:
-        df = spread_small_scan(df)
-    c = F.col(text_col)
-    t = F.trim(c)
-    words = F.split(t, WS_RE)
-    n_words = token_count(c)
-    # sum of word lengths == count of non-whitespace chars (words are the
-    # \s+ split), so mean word length needs no per-word fold
-    non_ws = F.length(F.regexp_replace(c, r"\s", "")).cast("bigint")
-    n_hash = F.regexp_count(c, F.lit("#")).cast("bigint")
-    n_ellipsis = F.regexp_count(c, F.lit(GOPHER_ELLIPSIS_COUNT_RE)).cast("bigint")
-    lines = F.split(c, "\n")
-    n_lines = F.size(lines).cast("bigint")
-    n_bullets = F.size(
-        F.filter(lines, lambda x: x.rlike(GOPHER_BULLET_RE))
-    ).cast("bigint")
-    n_ell_lines = F.size(
-        F.filter(lines, lambda x: x.rlike(GOPHER_ELLIPSIS_RE))
-    ).cast("bigint")
-    # empty/ws-only text splits to [''] which has no alpha char -> 0
-    n_alpha = F.size(F.filter(words, lambda x: x.rlike("[A-Za-z]"))).cast("bigint")
-    n_stop = sum(
-        (
-            (marker_count(c, w) > 0).cast("bigint")
-            for w in GOPHER_STOP_WORDS
-        ),
-        start=F.lit(0).cast("bigint"),
-    )
-    safe_words = F.when(n_words > 0, n_words).otherwise(F.lit(1))
-    sym_n, sym_d = GOPHER_SYMBOL_RATIO
-    bul_n, bul_d = GOPHER_BULLET_FRAC
-    ell_n, ell_d = GOPHER_ELLIPSIS_FRAC
-    alp_n, alp_d = GOPHER_ALPHA_FRAC
-    passes = {
-        "pass_word_count": (n_words >= GOPHER_MIN_WORDS)
-        & (n_words <= GOPHER_MAX_WORDS),
-        "pass_mean_word_len": (n_words > 0)
-        & (GOPHER_MIN_MEAN_WORD_LEN * n_words <= non_ws)
-        & (non_ws <= GOPHER_MAX_MEAN_WORD_LEN * n_words),
-        "pass_symbol_ratio": (sym_n * n_hash < sym_d * n_words)
-        & (sym_n * n_ellipsis < sym_d * n_words),
-        "pass_bullet_lines": bul_n * n_bullets < bul_d * n_lines,
-        "pass_ellipsis_lines": ell_n * n_ell_lines < ell_d * n_lines,
-        "pass_alpha_words": alp_n * n_alpha > alp_d * n_words,
-        "pass_stopwords": n_stop >= GOPHER_MIN_STOP_WORDS,
-    }
-    keep = None
-    for b in passes.values():
-        keep = b if keep is None else (keep & b)
-    return df.select(
-        *id_cols,
-        n_words.alias("n_words"),
-        n_lines.alias("n_lines"),
-        F.when(n_words > 0, non_ws / safe_words).otherwise(F.lit(0.0)).alias(
-            "mean_word_len"
-        ),
-        (n_hash / safe_words).alias("hash_ratio"),
-        (n_ellipsis / safe_words).alias("ellipsis_ratio"),
-        (n_bullets / n_lines).alias("bullet_line_frac"),
-        (n_ell_lines / n_lines).alias("ellipsis_line_frac"),
-        (n_alpha / safe_words).alias("alpha_word_frac"),
-        n_stop.alias("n_stopwords_present"),
-        *[expr.alias(name) for name, expr in passes.items()],
-        keep.alias("keep"),
-    )
-
-
-def gopher_quality_sql(table: str = "documents", id_col: str = "doc_id", col: str = "text") -> str:
-    """DuckDB twin of gopher_quality — rendered from the SAME constants.
-
-    Booleans use the identical integer cross-multiplication, so they are
-    bit-exact; ratio columns are exact int/int doubles in both engines.
-    """
-    stop_sum = " + ".join(
-        f"(CASE WHEN {marker_count_sql(col, w)} > 0 THEN 1 ELSE 0 END)"
-        for w in GOPHER_STOP_WORDS
-    )
-    sym_n, sym_d = GOPHER_SYMBOL_RATIO
-    bul_n, bul_d = GOPHER_BULLET_FRAC
-    ell_n, ell_d = GOPHER_ELLIPSIS_FRAC
-    alp_n, alp_d = GOPHER_ALPHA_FRAC
-    conds = {
-        "pass_word_count": (
-            f"(n_words >= {GOPHER_MIN_WORDS} AND n_words <= {GOPHER_MAX_WORDS})"
-        ),
-        "pass_mean_word_len": (
-            f"(n_words > 0 AND {GOPHER_MIN_MEAN_WORD_LEN} * n_words <= non_ws"
-            f" AND non_ws <= {GOPHER_MAX_MEAN_WORD_LEN} * n_words)"
-        ),
-        "pass_symbol_ratio": (
-            f"({sym_n} * n_hash < {sym_d} * n_words"
-            f" AND {sym_n} * n_ellipsis < {sym_d} * n_words)"
-        ),
-        "pass_bullet_lines": f"({bul_n} * n_bullets < {bul_d} * n_lines)",
-        "pass_ellipsis_lines": f"({ell_n} * n_ell_lines < {ell_d} * n_lines)",
-        "pass_alpha_words": f"({alp_n} * n_alpha > {alp_d} * n_words)",
-        "pass_stopwords": f"(n_stop >= {GOPHER_MIN_STOP_WORDS})",
-    }
-    pass_cols = ",\n  ".join(f"{cond} AS {name}" for name, cond in conds.items())
-    keep = " AND ".join(conds.values())
-    return f"""
-WITH m AS (
-  SELECT {id_col},
-    CAST({TOKEN_COUNT_SQL.format(col=col)} AS BIGINT) AS n_words,
-    CAST(length(regexp_replace({col}, '\\s', '', 'g')) AS BIGINT) AS non_ws,
-    CAST(len(regexp_extract_all({col}, '#')) AS BIGINT) AS n_hash,
-    CAST(len(regexp_extract_all({col}, '{GOPHER_ELLIPSIS_COUNT_RE}')) AS BIGINT) AS n_ellipsis,
-    CAST(len(string_split({col}, chr(10))) AS BIGINT) AS n_lines,
-    CAST(len(list_filter(string_split({col}, chr(10)),
-         x -> regexp_matches(x, '{GOPHER_BULLET_RE}'))) AS BIGINT) AS n_bullets,
-    CAST(len(list_filter(string_split({col}, chr(10)),
-         x -> regexp_matches(x, '{GOPHER_ELLIPSIS_RE}'))) AS BIGINT) AS n_ell_lines,
-    CAST(len(list_filter(regexp_split_to_array(trim({col}), '\\s+'),
-         x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS n_alpha,
-    CAST({stop_sum} AS BIGINT) AS n_stop
-  FROM {table}
-)
-SELECT {id_col}, n_words, n_lines,
-  CASE WHEN n_words > 0 THEN non_ws / n_words ELSE CAST(0 AS DOUBLE) END AS mean_word_len,
-  n_hash / (CASE WHEN n_words > 0 THEN n_words ELSE 1 END) AS hash_ratio,
-  n_ellipsis / (CASE WHEN n_words > 0 THEN n_words ELSE 1 END) AS ellipsis_ratio,
-  n_bullets / n_lines AS bullet_line_frac,
-  n_ell_lines / n_lines AS ellipsis_line_frac,
-  n_alpha / (CASE WHEN n_words > 0 THEN n_words ELSE 1 END) AS alpha_word_frac,
-  n_stop AS n_stopwords_present,
-  {pass_cols},
-  ({keep}) AS keep
-FROM m"""
-
-
-# --- C4 line filters ---------------------------------------------------------
-# The published C4 line-level cleaning rules (Raffel et al. 2020, §2.2):
-# keep lines that end in terminal punctuation AND have >= 5 words; drop
-# the whole page when it has < 3 retained lines, mentions "lorem ipsum",
-# or contains a curly brace (code). Constants feed BOTH engines.
-C4_TERMINAL_RE = r'[.!?"]\s*$'
-C4_MIN_LINE_WORDS = 5
-C4_MIN_KEPT_LINES = 3
-C4_LOREM = "lorem ipsum"
-C4_BRACE = "{"
-
-
-def c4_line_filters(df, text_col: str = "text", id_cols: tuple[str, ...] = ("doc_id",)):
-    """C4 line-level cleaning: per-doc retained-line stats + the CLEANED
-    text (retained lines re-joined) + doc-level keep.
-
-    100 TB shape: one pruned corpus scan, all line logic as JVM
-    higher-order array functions inside the projection — zero shuffles,
-    no Python. The rewritten text column makes this the one curation
-    operator that EDITS documents rather than scoring them; downstream
-    fingerprints/dedup run on cleaned_text.
-    """
-    c = F.col(text_col)
-    lines = F.split(c, "\n")
-    kept = F.filter(
-        lines,
-        lambda x: x.rlike(C4_TERMINAL_RE)
-        & (F.size(F.split(F.trim(x), WS_RE)) >= C4_MIN_LINE_WORDS),
-    )
-    n_lines = F.size(lines).cast("bigint")
-    n_kept = F.size(kept).cast("bigint")
-    has_lorem = F.lower(c).contains(C4_LOREM)
-    has_brace = c.contains(C4_BRACE)
-    return df.select(
-        *id_cols,
-        n_lines.alias("n_lines"),
-        n_kept.alias("n_kept_lines"),
-        F.array_join(kept, "\n").alias("cleaned_text"),
-        has_lorem.alias("has_lorem"),
-        has_brace.alias("has_brace"),
-        ((n_kept >= C4_MIN_KEPT_LINES) & ~has_lorem & ~has_brace).alias("keep"),
-    )
-
-
-def c4_line_filters_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    col: str = "text",
-    pre_cte: str | None = None,
-) -> str:
-    """DuckDB twin of c4_line_filters (same constants, same line rules).
-    `pre_cte` lets the caller prepend an input-shaping CTE ("lined AS
-    (...)") without nesting WITH clauses."""
-    kept = (
-        f"list_filter(string_split({col}, chr(10)), "
-        f"x -> regexp_matches(x, '{C4_TERMINAL_RE}') "
-        f"AND len(regexp_split_to_array(trim(x), '\\s+')) >= {C4_MIN_LINE_WORDS})"
-    )
-    pre = f"{pre_cte}, " if pre_cte else ""
-    return f"""
-WITH {pre}m AS (
-  SELECT {id_col},
-    CAST(len(string_split({col}, chr(10))) AS BIGINT) AS n_lines,
-    CAST(len({kept}) AS BIGINT) AS n_kept_lines,
-    COALESCE(array_to_string({kept}, chr(10)), '') AS cleaned_text,
-    contains(lower({col}), '{C4_LOREM}') AS has_lorem,
-    contains({col}, '{C4_BRACE}') AS has_brace
-  FROM {table}
-)
-SELECT {id_col}, n_lines, n_kept_lines, cleaned_text, has_lorem, has_brace,
-       (n_kept_lines >= {C4_MIN_KEPT_LINES} AND NOT has_lorem AND NOT has_brace) AS keep
-FROM m"""
-
-
-# --- FineWeb custom filters ----------------------------------------------------
-# The three custom heuristics FineWeb (Penedo et al. 2024, "The FineWeb
-# Datasets") adds ON TOP of its Gopher/C4 stages — developed against
-# Gopher-rule failure modes on Common Crawl:
-#   drop when the fraction of lines ending in punctuation is < 0.12;
-#   drop when the fraction of chars in duplicated lines is > 0.10;
-#   drop when the fraction of lines shorter than 30 chars is >= 0.67.
-# "Ends in punctuation" is frozen to the C4 terminal set (the paper
-# inherits C4's notion). All thresholds are integer cross-multiplied —
-# constants feed BOTH engines.
-FINEWEB_PUNCT_FRAC = (25, 3)     # keep: 25*n_punct >= 3*n_lines  (>= 0.12)
-FINEWEB_DUP_CHAR_FRAC = (10, 1)  # keep: 10*dup_chars <= 1*total  (<= 0.10)
-FINEWEB_SHORT_LINE_CHARS = 30
-FINEWEB_SHORT_FRAC = (100, 67)   # keep: 100*n_short < 67*n_lines (< 0.67)
-
-
-def fineweb_filters(df, text_col: str = "text", id_cols: tuple[str, ...] = ("doc_id",)):
-    """The FineWeb custom line-statistics filters as per-rule booleans +
-    keep — the third published rule set (after Gopher App. A1 and C4
-    §2.2) a curation stack layers, targeting list-like and
-    boilerplate-heavy pages the earlier rules pass.
-
-    100 TB shape: one pruned corpus scan, every statistic a per-doc
-    higher-order list fold (filter/length/array_distinct — nothing
-    leaves its row), zero shuffles, no Python; booleans by integer
-    cross-multiplication ⇒ bit-exact DuckDB twin.
-
-    Output: id_cols…, n_lines, n_punct_lines, n_short_lines,
-    line_chars, dup_line_chars, punct_line_frac, short_line_frac,
-    dup_char_frac, pass_punct_lines, pass_dup_chars, pass_short_lines,
-    keep.
-    """
-    lines = F.split(F.col(text_col), "\n")
-    n_lines = F.size(lines).cast("bigint")
-    n_punct = F.size(
-        F.filter(lines, lambda x: x.rlike(C4_TERMINAL_RE))
-    ).cast("bigint")
-    n_short = F.size(
-        F.filter(lines, lambda x: F.length(x) < FINEWEB_SHORT_LINE_CHARS)
-    ).cast("bigint")
-    total = _arr_chars(lines)
-    dup = total - _arr_chars(F.array_distinct(lines))
-    pn, pd_ = FINEWEB_PUNCT_FRAC
-    dn, dd = FINEWEB_DUP_CHAR_FRAC
-    sn, sd = FINEWEB_SHORT_FRAC
-    safe_total = F.when(total > 0, total).otherwise(F.lit(1))
-    passes = {
-        "pass_punct_lines": pn * n_punct >= pd_ * n_lines,
-        "pass_dup_chars": dn * dup <= dd * total,
-        "pass_short_lines": sn * n_short < sd * n_lines,
-    }
-    keep = None
-    for b in passes.values():
-        keep = b if keep is None else (keep & b)
-    return df.select(
-        *id_cols,
-        n_lines.alias("n_lines"),
-        n_punct.alias("n_punct_lines"),
-        n_short.alias("n_short_lines"),
-        total.alias("line_chars"),
-        dup.alias("dup_line_chars"),
-        (n_punct / n_lines).alias("punct_line_frac"),
-        (n_short / n_lines).alias("short_line_frac"),
-        (dup / safe_total).alias("dup_char_frac"),
-        *[expr.alias(name) for name, expr in passes.items()],
-        keep.alias("keep"),
-    )
-
-
-def fineweb_filters_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    col: str = "text",
-    pre_cte: str | None = None,
-) -> str:
-    """DuckDB twin of fineweb_filters (same list folds — list_filter /
-    list_transform + list_sum / list_distinct; integer sums are
-    order-free so list_distinct's unspecified order is immaterial)."""
-    pre = f"{pre_cte}, " if pre_cte else ""
-    ls = f"string_split({col}, chr(10))"
-    chars = "CAST(coalesce(list_sum(list_transform({l}, x -> length(x))), 0) AS BIGINT)"
-    pn, pd_ = FINEWEB_PUNCT_FRAC
-    dn, dd = FINEWEB_DUP_CHAR_FRAC
-    sn, sd = FINEWEB_SHORT_FRAC
-    conds = {
-        "pass_punct_lines": f"({pn} * n_punct_lines >= {pd_} * n_lines)",
-        "pass_dup_chars": f"({dn} * dup_line_chars <= {dd} * line_chars)",
-        "pass_short_lines": f"({sn} * n_short_lines < {sd} * n_lines)",
-    }
-    pass_cols = ",\n  ".join(f"{c} AS {name}" for name, c in conds.items())
-    keep = " AND ".join(conds.values())
-    return f"""
-WITH {pre}m AS (
-  SELECT {id_col},
-    CAST(len({ls}) AS BIGINT) AS n_lines,
-    CAST(len(list_filter({ls}, x -> regexp_matches(x, '{C4_TERMINAL_RE}'))) AS BIGINT) AS n_punct_lines,
-    CAST(len(list_filter({ls}, x -> length(x) < {FINEWEB_SHORT_LINE_CHARS})) AS BIGINT) AS n_short_lines,
-    {chars.format(l=ls)} AS line_chars,
-    {chars.format(l=ls)} - {chars.format(l=f"list_distinct({ls})")} AS dup_line_chars
-  FROM {table}
-)
-SELECT {id_col}, n_lines, n_punct_lines, n_short_lines, line_chars, dup_line_chars,
-  n_punct_lines / n_lines AS punct_line_frac,
-  n_short_lines / n_lines AS short_line_frac,
-  dup_line_chars / (CASE WHEN line_chars > 0 THEN line_chars ELSE 1 END) AS dup_char_frac,
-  {pass_cols},
-  ({keep}) AS keep
-FROM m"""
-
-
-# --- DSIR importance weights -------------------------------------------------
-# Data Selection via Importance Resampling (Xie et al. 2023): score every
-# document by how much more likely its hashed-unigram features are under
-# a TARGET distribution than under the raw-corpus distribution; resample
-# by weight downstream. Bucket = first 3 md5 hex nibbles (4096 buckets),
-# add-one smoothing on both sides. Constants feed BOTH engines.
-DSIR_BUCKETS = 4096  # = 16^DSIR_NIBBLES; bucket ids are the raw nibble value
-DSIR_NIBBLES = 3
-DSIR_TARGET_SOURCE = "src0"
-
-
-def dsir_weights(
-    docs,
-    target_source: str = DSIR_TARGET_SOURCE,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-):
-    """Per-document DSIR log importance weight vs an in-corpus target.
-
-    log w(doc) = Σ_tokens [ln p_target(b(w)) − ln p_raw(b(w))] with
-    hashed-unigram buckets b(w) = int(md5(w)[:3 nibbles]) and add-one
-    smoothing; p_target is trained on the `target_source` slice, p_raw
-    on the whole corpus (one conditional aggregate — not two count
-    passes).
-
-    Spark shape: the corpus is scanned TWICE — a training pass and a
-    scoring pass — but the exploded token stream is never materialized
-    (persisting it at 100 TB would cost more than the map-side re-scan
-    it saves). Training is ONE map-side-combinable groupBy(bucket) with
-    a conditional target count, run once to a reliable checkpoint (the
-    4096-row count table feeds both the totals and the log-ratio table,
-    which would otherwise each re-run the corpus aggregate); the
-    checkpointed log-ratio table broadcasts onto the scoring pass's
-    token stream (map-side join); the per-doc sum accumulates
-    DECIMAL(28,12) log-ratio terms — order-independent, so the oracle
-    hash is independent of partial-agg order (the bigram-LM trick).
-    Zero non-broadcast joins; the only shuffles are the bucket count
-    (4096 keys) and the per-doc sum.
-
-    Output: doc_id, n_tokens, log_weight (double, rounded 6dp);
-    descending log_weight = most-target-like first.
-    """
-    from ..session import ensure_checkpoint_dir
-
-    b_expr = F.conv(
-        F.substring(F.md5(F.col("w").cast("binary")), 1, DSIR_NIBBLES), 16, 10
-    ).cast("bigint")
-    toks = (
-        docs.select(
-            F.col(id_col).alias("id"),
-            F.col(source_col).alias("src"),
-            F.explode(F.split(normalized(text_col), " ")).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .select("id", "src", b_expr.alias("b"))
-    )
-    counts = toks.groupBy("b").agg(
-        F.count("*").cast("bigint").alias("c_r"),
-        F.sum(F.when(F.col("src") == target_source, 1).otherwise(0))
-        .cast("bigint")
-        .alias("c_t"),
-    )
-    # counts is consumed by BOTH totals and lr: persist -> reliable
-    # checkpoint of the 4096-row table -> unpersist (repo discipline),
-    # so the corpus-wide training aggregate executes exactly once
-    ensure_checkpoint_dir(docs.sparkSession.sparkContext)
-    counts = counts.persist()
-    counts_ck = counts.checkpoint(eager=True)
-    counts.unpersist()
-    counts = counts_ck
-    totals = counts.agg(
-        F.sum("c_r").cast("bigint").alias("tot_r"),
-        F.sum("c_t").cast("bigint").alias("tot_t"),
-    )
-    lr = counts.crossJoin(F.broadcast(totals)).select(
-        "b",
-        (
-            F.log((F.col("c_t") + 1) / (F.col("tot_t") + DSIR_BUCKETS))
-            - F.log((F.col("c_r") + 1) / (F.col("tot_r") + DSIR_BUCKETS))
-        )
-        .cast("decimal(28,12)")
-        .alias("lr"),
-    )
-    return (
-        toks.join(F.broadcast(lr), "b")
-        .groupBy("id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_tokens"),
-            F.round(F.sum("lr").cast("double"), 6).alias("log_weight"),
-        )
-        .select(F.col("id").alias(id_col), "n_tokens", "log_weight")
-    )
-
-
-def dsir_weights_sql(
-    table: str = "documents",
-    target_source: str = DSIR_TARGET_SOURCE,
-    id_col: str = "doc_id",
-    col: str = "text",
-    source_col: str = "source",
-) -> str:
-    """DuckDB twin of dsir_weights (same tokenizer, buckets, smoothing,
-    decimal accumulation)."""
-    nib = "instr('0123456789abcdef', substr(md5(w), {i}, 1)) - 1"
-    b_sql = " + ".join(
-        f"({nib.format(i=i + 1)}) * {16 ** (DSIR_NIBBLES - 1 - i)}"
-        for i in range(DSIR_NIBBLES)
-    )
-    return f"""
-WITH docs_n AS (
-  SELECT {id_col} AS id, {source_col} AS src,
-         string_split(trim(regexp_replace(lower({col}), '\\s+', ' ', 'g')), ' ') AS l
-  FROM {table}
-), toks AS (
-  SELECT id, src, CAST({b_sql} AS BIGINT) AS b
-  FROM (SELECT id, src, unnest(l) AS w FROM docs_n)
-  WHERE w <> ''
-), counts AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS c_r,
-         CAST(sum(CASE WHEN src = '{target_source}' THEN 1 ELSE 0 END) AS BIGINT) AS c_t
-  FROM toks GROUP BY b
-), totals AS (
-  SELECT CAST(sum(c_r) AS BIGINT) AS tot_r, CAST(sum(c_t) AS BIGINT) AS tot_t FROM counts
-), lr AS (
-  SELECT b, CAST(ln((c_t + 1) / (tot_t + {DSIR_BUCKETS}))
-             - ln((c_r + 1) / (tot_r + {DSIR_BUCKETS})) AS DECIMAL(28,12)) AS lr
-  FROM counts CROSS JOIN totals
-)
-SELECT id AS {id_col}, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(CAST(sum(lr) AS DOUBLE), 6) AS log_weight
-FROM toks JOIN lr USING (b)
-GROUP BY id"""
-
-
-# --- Gopher repetition rules (Rae et al. 2021, App. A1.2) ---------------------
-# The companion suite to gopher_quality's A1.1 heuristics: drop documents
-# dominated by REPETITION — duplicate lines/paragraphs (by count and by
-# character mass) and repeated word n-grams (most-frequent-n-gram char
-# fraction for n=2..4, duplicated-n-gram char coverage for n=5..10).
-# Published thresholds, stored as (A, B) integer pairs meaning
-# keep iff A*numerator <= B*denominator  (threshold = B/A), so every
-# boolean is integer cross-multiplication — bit-exact across engines.
-# Frozen definitions (published implementations vary; these feed BOTH
-# engines — single source of truth, never fork):
-#   * lines = split(text, '\n'); paragraphs = split(text, '\n\n');
-#   * a duplicate is an occurrence BEYOND THE FIRST of an identical
-#     string; dup char mass = total chars - chars of the distinct set;
-#     count fractions are over n_lines / n_paras, char fractions over
-#     length(text);
-#   * n-grams are single-space joins of n consecutive whitespace
-#     tokens of the NORMALIZED (lowercased, ws-collapsed) text; gram
-#     char fractions are over the normalized text length;
-#   * top n-gram = max occurrence count, ties to the lexicographically
-#     smallest gram; its char mass = count * length(gram);
-#   * dup n-gram coverage = chars of the normalized text covered by
-#     occurrences of any n-gram occurring >= 2 times, with overlapping
-#     TOKEN runs merged (adjacent-but-disjoint runs stay separate, so
-#     the uncovered inter-run space is never counted).
-GOPHER_REP_DUP_LINE = (10, 3)  # dup line frac        <= 0.30
-GOPHER_REP_DUP_PARA = (10, 3)  # dup paragraph frac   <= 0.30
-GOPHER_REP_DUP_LINE_CHAR = (5, 1)  # dup line char frac   <= 0.20
-GOPHER_REP_DUP_PARA_CHAR = (5, 1)  # dup para char frac   <= 0.20
-GOPHER_REP_TOP_NGRAM = {2: (5, 1), 3: (50, 9), 4: (25, 4)}  # .20/.18/.16
-GOPHER_REP_DUP_NGRAM = {
-    5: (20, 3),  # 0.15
-    6: (50, 7),  # 0.14
-    7: (100, 13),  # 0.13
-    8: (25, 3),  # 0.12
-    9: (100, 11),  # 0.11
-    10: (10, 1),  # 0.10
-}
-
-
-def _rep_gram_expr(n: int) -> str:
-    """SQL expr: sorted array of single-space-joined n-grams over _toks
-    (empty if < n tokens).
-
-    REJECTED r7 experiment, with numbers: building the 9 widths
-    incrementally (gram_n[i] = gram_{n-1}[i] + ' ' + tok[i+n-1] through
-    a chain of projections) halves the isolated gram-build phase on the
-    raw corpus (1.29 → 0.69 s) but LOSES on the driver query's longer
-    constructed docs (interleaved fresh-JVM A/B minima 2.40/2.67 vs
-    2.18/1.99): each chained projection re-materializes every carried
-    intermediate array per row, and that copy volume outgrows the
-    slice+join work it saves. The direct one-stage spelling stands."""
-    return (
-        "array_sort(CASE WHEN size(_toks) >= {n} THEN "
-        "transform(sequence(1, size(_toks) - {m}), j -> array_join(slice(_toks, j, {n}), ' ')) "
-        "ELSE CAST(array() AS ARRAY<STRING>) END) AS _g{n}"
-    ).format(n=n, m=n - 1)
-
-
-def _rep_gram_struct_expr(n: int) -> str:
-    """SQL expr: sorted array of (gram, start-token-index) structs (g
-    first, so array_sort groups equal grams; empty if < n tokens)."""
-    return (
-        "array_sort(CASE WHEN size(_toks) >= {n} THEN "
-        "transform(sequence(1, size(_toks) - {m}), j -> "
-        "named_struct('g', array_join(slice(_toks, j, {n}), ' '), 'j', j)) "
-        "ELSE CAST(array() AS ARRAY<STRUCT<g: STRING, j: INT>>) END) AS _s{n}"
-    ).format(n=n, m=n - 1)
-
-
-# run2 of the top-gram fold: current run length after seeing x against a
-# SORTED gram array (adjacent-equal extends the run). Spelled out at each
-# use site because SQL lambdas have no let-binding; identical subtrees
-# codegen to the same result.
-_REP_RUN2 = "(CASE WHEN x = acc.prev THEN acc.run + 1 ELSE CAST(1 AS BIGINT) END)"
-
-
-def _rep_top_run_expr(n: int) -> str:
-    """SQL expr: (best_cnt, best_key) of the most frequent gram in the
-    SORTED _g{n} — one linear fold over adjacent runs; strictly-greater
-    update means ties resolve to the lexicographically smallest gram
-    (the SQL twin's ORDER BY cnt DESC, g ASC)."""
-    return (
-        "aggregate(_g{n}, "
-        "named_struct('prev', '', 'run', CAST(0 AS BIGINT), "
-        "'best_cnt', CAST(0 AS BIGINT), 'best_key', ''), "
-        "(acc, x) -> named_struct("
-        "'prev', x, "
-        "'run', {r}, "
-        "'best_cnt', CASE WHEN {r} > acc.best_cnt THEN {r} ELSE acc.best_cnt END, "
-        "'best_key', CASE WHEN {r} > acc.best_cnt THEN x ELSE acc.best_key END)"
-        ") AS _t{n}"
-    ).format(n=n, r=_REP_RUN2)
-
-
-def _rep_dup_starts_expr(n: int) -> str:
-    """SQL expr: ascending start indices of grams occurring >= 2 times,
-    read off the (g, j)-sorted struct array _s{n} by neighbor equality
-    (the run-length signal — no per-element rescan of the array)."""
-    s = "_s{n}".format(n=n)
-    return (
-        "array_sort(transform(filter(transform({s}, (x, i) -> named_struct("
-        "'j', x.j, "
-        "'d', (CASE WHEN i > 0 THEN element_at({s}, i).g = x.g ELSE false END) "
-        "OR (CASE WHEN i < size({s}) - 1 THEN element_at({s}, i + 2).g = x.g ELSE false END))"
-        "), x -> x.d), x -> x.j)) AS _dj{n}"
-    ).format(s=s, n=n)
-
-
-def _rep_dup_cover_expr(n: int) -> str:
-    """SQL expr: chars of the normalized text covered by duplicated
-    n-grams — fold over ascending start indices in _dj{n} merging
-    token-OVERLAPPING runs (j <= current run end; ce=0 is the
-    no-open-run sentinel since token indices are 1-based), charging each
-    closed run its exact joined length. Integer-exact; O(total run
-    tokens) slice work per doc."""
-    overlap = "((NOT (acc.ce = 0)) AND (j <= acc.ce))"
-    runchars = (
-        "CAST(length(array_join(slice(_toks, acc.cs, acc.ce - acc.cs + 1), ' ')) "
-        "AS BIGINT)"
-    )
-    return (
-        "aggregate(_dj{n}, "
-        "named_struct('cov', CAST(0 AS BIGINT), 'cs', 0, 'ce', 0), "
-        "(acc, j) -> named_struct("
-        "'cov', CASE WHEN (acc.ce = 0) OR {ov} THEN acc.cov ELSE acc.cov + {rc} END, "
-        "'cs', CASE WHEN {ov} THEN acc.cs ELSE j END, "
-        "'ce', CASE WHEN {ov} THEN greatest(acc.ce, j + {m}) ELSE j + {m} END), "
-        "acc -> CASE WHEN acc.ce = 0 THEN acc.cov ELSE acc.cov + {rc} END"
-        ") AS _dc{n}"
-    ).format(n=n, m=n - 1, ov=overlap, rc=runchars)
-
-
-def _arr_chars(arr) -> Column:
-    return F.aggregate(
-        arr, F.lit(0).cast("bigint"), lambda a, x: a + F.length(x)
-    )
-
-
-_ARR_CHARS_SQL = "aggregate({a}, CAST(0 AS BIGINT), (a, x) -> a + length(x))"
-
-
-def gopher_repetition(df, text_col: str = "text", id_cols: tuple[str, ...] = ("doc_id",)):
-    """Per-document Gopher repetition metrics + per-rule booleans + keep.
-
-    100 TB shape: every rule is document-LOCAL, so the whole suite is a
-    zero-shuffle projection chain over one pruned corpus scan — JVM
-    higher-order functions only (array_sort + linear folds; the top-gram
-    count is a run-length fold over a sorted gram array, the dup-gram
-    coverage an interval-merge fold over sorted duplicate starts). The
-    per-doc cost is O(G log G) for the 9 gram sorts; nothing leaves its
-    row. Booleans are integer cross-multiplication (bit-exact vs the
-    DuckDB twin); the reported fractions are exact int/int doubles.
-
-    The stages are SQL-expr strings, not Column chains: the 9 HOF folds
-    cost ~1.7 s of per-invocation Python-side construction (thousands of
-    py4j round trips) as Column objects vs ~0.2 s parsed from strings —
-    measured r7, bit-identical output (same Catalyst expressions either
-    way). Driver-side construction cost recurs on every submission, so
-    this is a production win too, not a bench artifact.
-    """
-    c = f"`{text_col}`"
-    ids = [f"`{i}`" for i in id_cols]
-    base = spread_small_scan(
-        df.selectExpr(
-            *ids,
-            f"CAST(length({c}) AS BIGINT) AS _text_len",
-            f"split({c}, '\\n') AS _lines",
-            f"split({c}, '\\n\\n') AS _paras",
-            # normalized(text) split on single spaces, empties dropped
-            f"filter(split(trim(regexp_replace(lower({c}), '\\\\s+', ' ')), ' '), "
-            "w -> w != '') AS _toks",
-        )
-    )
-    stage2 = base.selectExpr(
-        *ids,
-        "_text_len",
-        "_lines",
-        "_paras",
-        "_toks",
-        "CAST(length(array_join(_toks, ' ')) AS BIGINT) AS _norm_len",
-        *[_rep_gram_expr(n) for n in GOPHER_REP_TOP_NGRAM],
-        *[_rep_gram_struct_expr(n) for n in GOPHER_REP_DUP_NGRAM],
-    )
-    stage3 = stage2.selectExpr(
-        *ids,
-        "_text_len",
-        "_lines",
-        "_paras",
-        "_toks",
-        "_norm_len",
-        *[_rep_top_run_expr(n) for n in GOPHER_REP_TOP_NGRAM],
-        *[_rep_dup_starts_expr(n) for n in GOPHER_REP_DUP_NGRAM],
-    )
-    stage4 = stage3.selectExpr(
-        *ids,
-        "_text_len",
-        "_norm_len",
-        "CAST(size(_lines) AS BIGINT) AS _n_lines",
-        "CAST(size(_paras) AS BIGINT) AS _n_paras",
-        "CAST(size(_lines) - size(array_distinct(_lines)) AS BIGINT) AS _dup_lines",
-        "CAST(size(_paras) - size(array_distinct(_paras)) AS BIGINT) AS _dup_paras",
-        f"{_ARR_CHARS_SQL.format(a='_lines')} - "
-        f"{_ARR_CHARS_SQL.format(a='array_distinct(_lines)')} AS _dup_line_chars",
-        f"{_ARR_CHARS_SQL.format(a='_paras')} - "
-        f"{_ARR_CHARS_SQL.format(a='array_distinct(_paras)')} AS _dup_para_chars",
-        *[
-            f"CAST(_t{n}.best_cnt * length(_t{n}.best_key) AS BIGINT) AS _tc{n}"
-            for n in GOPHER_REP_TOP_NGRAM
-        ],
-        *[_rep_dup_cover_expr(n) for n in GOPHER_REP_DUP_NGRAM],
-    )
-
-    def safe(d):
-        return f"(CASE WHEN {d} > 0 THEN {d} ELSE 1 END)"
-
-    passes = {
-        "pass_dup_lines": f"{GOPHER_REP_DUP_LINE[0]} * _dup_lines "
-        f"<= {GOPHER_REP_DUP_LINE[1]} * _n_lines",
-        "pass_dup_line_chars": f"{GOPHER_REP_DUP_LINE_CHAR[0]} * _dup_line_chars "
-        f"<= {GOPHER_REP_DUP_LINE_CHAR[1]} * _text_len",
-        "pass_dup_paras": f"{GOPHER_REP_DUP_PARA[0]} * _dup_paras "
-        f"<= {GOPHER_REP_DUP_PARA[1]} * _n_paras",
-        "pass_dup_para_chars": f"{GOPHER_REP_DUP_PARA_CHAR[0]} * _dup_para_chars "
-        f"<= {GOPHER_REP_DUP_PARA_CHAR[1]} * _text_len",
-        **{
-            f"pass_top_{n}gram": f"{a} * _tc{n} <= {b} * _norm_len"
-            for n, (a, b) in GOPHER_REP_TOP_NGRAM.items()
-        },
-        **{
-            f"pass_dup_{n}gram": f"{a} * _dc{n} <= {b} * _norm_len"
-            for n, (a, b) in GOPHER_REP_DUP_NGRAM.items()
-        },
-    }
-    keep = " AND ".join(f"({e})" for e in passes.values())
-    return stage4.selectExpr(
-        *ids,
-        "_n_lines AS n_lines",
-        "_n_paras AS n_paras",
-        f"_dup_lines / {safe('_n_lines')} AS dup_line_frac",
-        f"_dup_line_chars / {safe('_text_len')} AS dup_line_char_frac",
-        f"_dup_paras / {safe('_n_paras')} AS dup_para_frac",
-        f"_dup_para_chars / {safe('_text_len')} AS dup_para_char_frac",
-        *[
-            f"_tc{n} / {safe('_norm_len')} AS top_{n}gram_char_frac"
-            for n in GOPHER_REP_TOP_NGRAM
-        ],
-        *[
-            f"_dc{n} / {safe('_norm_len')} AS dup_{n}gram_char_frac"
-            for n in GOPHER_REP_DUP_NGRAM
-        ],
-        *[f"({e}) AS {name}" for name, e in passes.items()],
-        f"({keep}) AS keep",
-    )
-
-
-def gopher_repetition_sql(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    col: str = "text",
-    pre_cte: str | None = None,
-) -> str:
-    """DuckDB twin of gopher_repetition — rendered from the SAME
-    constants and frozen definitions (duplicates-beyond-first, top-gram
-    ties to the smallest gram, overlap-only token-run merging), so the
-    integer char masses and cross-multiplied booleans are bit-exact.
-    `pre_cte` prepends an input-shaping CTE (the c4_line_filters_sql
-    pattern)."""
-    pre = f"{pre_cte}, " if pre_cte else ""
-    top_ns = ", ".join(f"({n})" for n in GOPHER_REP_TOP_NGRAM)
-    dup_ns = ", ".join(f"({n})" for n in GOPHER_REP_DUP_NGRAM)
-    tc_piv = ",\n         ".join(
-        f"CAST(coalesce(sum(CASE WHEN n = {n} THEN top_chars END), 0) AS BIGINT) AS tc{n}"
-        for n in GOPHER_REP_TOP_NGRAM
-    )
-    dc_piv = ",\n         ".join(
-        f"CAST(coalesce(sum(CASE WHEN n = {n} THEN chars END), 0) AS BIGINT) AS dc{n}"
-        for n in GOPHER_REP_DUP_NGRAM
-    )
-    conds = {
-        "pass_dup_lines": (
-            f"({GOPHER_REP_DUP_LINE[0]} * dup_lines"
-            f" <= {GOPHER_REP_DUP_LINE[1]} * n_lines)"
-        ),
-        "pass_dup_line_chars": (
-            f"({GOPHER_REP_DUP_LINE_CHAR[0]} * dup_line_chars"
-            f" <= {GOPHER_REP_DUP_LINE_CHAR[1]} * text_len)"
-        ),
-        "pass_dup_paras": (
-            f"({GOPHER_REP_DUP_PARA[0]} * dup_paras"
-            f" <= {GOPHER_REP_DUP_PARA[1]} * n_paras)"
-        ),
-        "pass_dup_para_chars": (
-            f"({GOPHER_REP_DUP_PARA_CHAR[0]} * dup_para_chars"
-            f" <= {GOPHER_REP_DUP_PARA_CHAR[1]} * text_len)"
-        ),
-        **{
-            f"pass_top_{n}gram": f"({a} * tc{n} <= {b} * norm_len)"
-            for n, (a, b) in GOPHER_REP_TOP_NGRAM.items()
-        },
-        **{
-            f"pass_dup_{n}gram": f"({a} * dc{n} <= {b} * norm_len)"
-            for n, (a, b) in GOPHER_REP_DUP_NGRAM.items()
-        },
-    }
-    pass_cols = ",\n  ".join(f"{cond} AS {name}" for name, cond in conds.items())
-    keep = " AND ".join(conds.values())
-    tfrac = ",\n  ".join(
-        f"tc{n} / (CASE WHEN norm_len > 0 THEN norm_len ELSE 1 END)"
-        f" AS top_{n}gram_char_frac"
-        for n in GOPHER_REP_TOP_NGRAM
-    )
-    dfrac = ",\n  ".join(
-        f"dc{n} / (CASE WHEN norm_len > 0 THEN norm_len ELSE 1 END)"
-        f" AS dup_{n}gram_char_frac"
-        for n in GOPHER_REP_DUP_NGRAM
-    )
-    return f"""
-WITH {pre}base AS (
-  SELECT {id_col} AS id,
-         CAST(length({col}) AS BIGINT) AS text_len,
-         string_split({col}, chr(10)) AS lines,
-         string_split({col}, chr(10) || chr(10)) AS paras,
-         list_filter(string_split(trim(regexp_replace(lower({col}), '\\s+', ' ', 'g')), ' '),
-                     w -> w <> '') AS l
-  FROM {table}
-), m AS (
-  SELECT id, text_len,
-         CAST(len(lines) AS BIGINT) AS n_lines,
-         CAST(len(paras) AS BIGINT) AS n_paras,
-         CAST(len(lines) - len(list_distinct(lines)) AS BIGINT) AS dup_lines,
-         CAST(len(paras) - len(list_distinct(paras)) AS BIGINT) AS dup_paras,
-         CAST(coalesce(list_sum(list_transform(lines, x -> length(x))), 0)
-            - coalesce(list_sum(list_transform(list_distinct(lines), x -> length(x))), 0) AS BIGINT) AS dup_line_chars,
-         CAST(coalesce(list_sum(list_transform(paras, x -> length(x))), 0)
-            - coalesce(list_sum(list_transform(list_distinct(paras), x -> length(x))), 0) AS BIGINT) AS dup_para_chars,
-         CAST(length(array_to_string(l, ' ')) AS BIGINT) AS norm_len
-  FROM base
-), tg AS (
-  SELECT id, n, array_to_string(list_slice(l, CAST(j AS INTEGER), CAST(j AS INTEGER) + n - 1), ' ') AS g
-  FROM (SELECT id, l, n, unnest(range(1, len(l) - n + 2)) AS j
-        FROM base CROSS JOIN (VALUES {top_ns}) ns(n) WHERE len(l) >= n)
-), tg_cnt AS (
-  SELECT id, n, g, CAST(count(*) AS BIGINT) AS cnt FROM tg GROUP BY id, n, g
-), tg_best AS (
-  SELECT id, n, CAST(cnt * length(g) AS BIGINT) AS top_chars
-  FROM (SELECT *, row_number() OVER (PARTITION BY id, n ORDER BY cnt DESC, g ASC) AS rn
-        FROM tg_cnt)
-  WHERE rn = 1
-), top_piv AS (
-  SELECT id, {tc_piv}
-  FROM tg_best GROUP BY id
-), dg AS (
-  SELECT id, n, CAST(j AS INTEGER) AS j,
-         array_to_string(list_slice(l, CAST(j AS INTEGER), CAST(j AS INTEGER) + n - 1), ' ') AS g
-  FROM (SELECT id, l, n, unnest(range(1, len(l) - n + 2)) AS j
-        FROM base CROSS JOIN (VALUES {dup_ns}) ns(n) WHERE len(l) >= n)
-), dups AS (
-  SELECT id, n, j, j + n - 1 AS eo
-  FROM (SELECT *, count(*) OVER (PARTITION BY id, n, g) AS cnt FROM dg)
-  WHERE cnt > 1
-), marked AS (
-  SELECT id, n, j, eo,
-         CASE WHEN max(eo) OVER w IS NULL OR j > max(eo) OVER w THEN 1 ELSE 0 END AS brk
-  FROM dups
-  WINDOW w AS (PARTITION BY id, n ORDER BY j
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-), isl AS (
-  SELECT id, n, j, eo,
-         sum(brk) OVER (PARTITION BY id, n ORDER BY j
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS k
-  FROM marked
-), runs AS (
-  SELECT id, n, min(j) AS s, max(eo) AS e FROM isl GROUP BY id, n, k
-), run_chars AS (
-  SELECT r.id, r.n,
-         CAST(length(array_to_string(list_slice(b.l, r.s, r.e), ' ')) AS BIGINT) AS chars
-  FROM runs r JOIN base b ON r.id = b.id
-), dup_piv AS (
-  SELECT id, {dc_piv}
-  FROM run_chars GROUP BY id
-), j AS (
-  SELECT m.*,
-         {", ".join(f"coalesce(tc{n}, 0) AS tc{n}" for n in GOPHER_REP_TOP_NGRAM)},
-         {", ".join(f"coalesce(dc{n}, 0) AS dc{n}" for n in GOPHER_REP_DUP_NGRAM)}
-  FROM m LEFT JOIN top_piv ON m.id = top_piv.id
-         LEFT JOIN dup_piv ON m.id = dup_piv.id
-)
-SELECT id AS {id_col}, n_lines, n_paras,
-  dup_lines / (CASE WHEN n_lines > 0 THEN n_lines ELSE 1 END) AS dup_line_frac,
-  dup_line_chars / (CASE WHEN text_len > 0 THEN text_len ELSE 1 END) AS dup_line_char_frac,
-  dup_paras / (CASE WHEN n_paras > 0 THEN n_paras ELSE 1 END) AS dup_para_frac,
-  dup_para_chars / (CASE WHEN text_len > 0 THEN text_len ELSE 1 END) AS dup_para_char_frac,
-  {tfrac},
-  {dfrac},
-  {pass_cols},
-  ({keep}) AS keep
-FROM j"""
-
-
-# --- CCNet perplexity bucketing ----------------------------------------------
-# CCNet (Wenzek et al. 2020): after language ID, score every document
-# with a language model and split each language's corpus into
-# head / middle / tail perplexity TERCILES — the published
-# quality-stratification step that downstream pipelines sample from
-# (head for clean pretraining data, tail for filtering studies). The
-# bucketing operator is the surface here; the in-repo corpus-trained
-# bigram LM (bigram_lm_scores) stands in for CCNet's per-language
-# KenLM. Tercile fractions feed BOTH engines.
-CCNET_TERCILES = (1.0 / 3.0, 2.0 / 3.0)
-
-
-def ccnet_buckets(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-):
-    """Per-language LM-score terciles: head = top third by avg_logp
-    (lowest perplexity), middle, tail. Docs with < 2 tokens have no
-    bigram score and drop out (bigram_lm_scores contract).
-
-    Spark shape: the LM scoring is bigram_lm_scores' map-side-combinable
-    count aggregates; this adds one doc-cardinality equi-join to attach
-    the language (dwarfed by the token-level work upstream), one
-    #langs-row exact-percentile aggregate, and a threshold join AQE
-    broadcasts. The exact per-lang percentile sorts each language's
-    scores on one reducer (#langs-bounded parallelism) — the same trade
-    robust_zscore_outliers documents; tdigest_quantiles is the bounded-
-    state swap at 100 TB (CCNet itself buckets on a sampled histogram).
-
-    Threshold parity note: both engines interpolate at fractional
-    positions ((n-1)/3 mod 1 ∈ {0, 1/3, 2/3}), and avg_logp is rounded
-    to 6dp upstream, so a threshold is either exactly a data value or
-    ≥ ~3e-7 from every data value — 1-ulp interpolation differences
-    between engines can never flip a bucket comparison.
-
-    Output: doc_id, lang, n_bigrams, avg_logp, bucket.
-    """
-    q1, q2 = CCNET_TERCILES
-    scores = bigram_lm_scores(docs, text_col=text_col, id_col=id_col)
-    j = scores.join(docs.select(id_col, lang_col), id_col)
-    th = j.groupBy(lang_col).agg(
-        F.expr(
-            f"percentile(avg_logp, array(CAST({q1!r} AS DOUBLE),"
-            f" CAST({q2!r} AS DOUBLE)))"
-        ).alias("_qs")
-    )
-    return j.join(th, lang_col).select(
-        F.col(id_col),
-        F.col(lang_col),
-        "n_bigrams",
-        "avg_logp",
-        F.when(F.col("avg_logp") >= F.element_at("_qs", 2), F.lit("head"))
-        .when(F.col("avg_logp") >= F.element_at("_qs", 1), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
-
-
-def ccnet_buckets_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-) -> str:
-    """DuckDB twin of ccnet_buckets (bigram_lm_scores_sql composed as a
-    CTE; quantile_cont ≡ Spark percentile interpolation — see the
-    operator's threshold parity note)."""
-    q1, q2 = CCNET_TERCILES
-    inner = bigram_lm_scores_sql(table=table, text_col=text_col, id_col=id_col)
-    return f"""
-WITH scores AS ({inner}
-), langs AS (
-  SELECT {id_col}, {lang_col} FROM {table}
-), j AS (
-  SELECT s.{id_col}, s.n_bigrams, s.avg_logp, l.{lang_col}
-  FROM scores s JOIN langs l USING ({id_col})
-), th AS (
-  SELECT {lang_col},
-         quantile_cont(avg_logp, {q1!r}) AS t1,
-         quantile_cont(avg_logp, {q2!r}) AS t2
-  FROM j GROUP BY {lang_col}
-)
-SELECT j.{id_col}, j.{lang_col}, j.n_bigrams, j.avg_logp,
-       CASE WHEN j.avg_logp >= th.t2 THEN 'head'
-            WHEN j.avg_logp >= th.t1 THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM j JOIN th USING ({lang_col})"""

@@ -35,21 +35,17 @@ def assign_batches(
     cfg: PipelineConfig | None = None,
     group_cols: tuple[str, ...] = ("sink", "shard_id"),
     size_col: str = "text",
-    use_char_length: bool = False,
     gate: F.Column | None = None,
 ) -> DataFrame:
-    """Adds `batch_no` (int64) per group under the byte budget.
-
-    use_char_length switches the size probe from octet_length to length —
-    identical on ASCII payloads; the oracle SQL uses length (DuckDB's
-    octet_length is BLOB-only).
+    """Adds `batch_no` (int64) per group under the byte budget: rows are
+    sized by the UTF-8 byte length of `size_col` (the oracle's strlen).
 
     gate (optional bool Column): rows failing it contribute 0 bytes and
     get NULL batch_no — this packs exactly the gated subset (e.g. only
     accepted sends) without splitting the DataFrame into two scans.
     """
     cfg = cfg or PipelineConfig()
-    size = F.length(size_col) if use_char_length else F.octet_length(size_col)
+    size = F.octet_length(size_col)
     if gate is not None:
         size = F.when(gate, size).otherwise(F.lit(0))
     w = (

@@ -168,17 +168,3 @@ def with_retry_outcome(
         .withColumn("result_code", result_code)
         .withColumn("attempts", attempts.cast("int"))
     )
-
-
-def write_sinks(routed: DataFrame, out_dir: str) -> None:
-    """One fan-out write, partitioned by sink — each sink is a directory.
-
-    Equivalent to N per-exporter writes but with a single pass over the
-    data; partition pruning makes per-sink reads cheap. At cluster scale
-    this is the move that avoids re-scanning the fact table once per sink.
-    """
-    (
-        routed.write.mode("overwrite")
-        .partitionBy("sink")
-        .parquet(out_dir)
-    )

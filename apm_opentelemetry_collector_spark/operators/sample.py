@@ -5,9 +5,9 @@ cmd/omnitelsvc/components.go:94) keeps a span iff a hash of its traceID
 falls below the sampling-rate threshold — sampling is CONSISTENT per
 trace, so whole conversations are kept or discarded together.
 
-Spark-first: filter on a prefix of md5(conv_id). Using the first hex
-nibble gives 1/16-granularity rates that a SQL oracle reproduces exactly;
-a finer 16-bit variant uses F.conv (Spark-only, still deterministic).
+Spark-first: filter on the 16-bit md5(conv_id) prefix (F.conv, still
+deterministic). Rates that are multiples of 1/16 cut on the first hex
+digit, so a SQL oracle reproduces them exactly (0.25 ≡ digit < 4).
 """
 
 from __future__ import annotations
@@ -16,17 +16,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def sample_conversations_nibble(df: DataFrame, keep_nibbles: int = 4) -> DataFrame:
-    """Keep conversations whose md5 first hex digit < keep_nibbles (k/16 rate)."""
-    if not 0 <= keep_nibbles <= 16:
-        raise ValueError("keep_nibbles in [0,16]")
-    allowed = "0123456789abcdef"[:keep_nibbles]
-    first = F.substring(F.md5(F.col("conv_id").cast("binary")), 1, 1)
-    return df.filter(first.isin(*allowed) if allowed else F.lit(False))
-
-
 def sample_conversations(df: DataFrame, rate: float) -> DataFrame:
-    """Fine-grained consistent sampling: md5 16-bit prefix < rate * 65536."""
+    """Consistent per-conversation sampling: md5 16-bit prefix < rate * 65536."""
+    if not 0 <= rate <= 1:
+        raise ValueError("rate in [0,1]")
     threshold = int(rate * 65536)
     prefix16 = F.conv(F.substring(F.md5(F.col("conv_id").cast("binary")), 1, 4), 16, 10).cast("bigint")
     return df.filter(prefix16 < threshold)
@@ -267,8 +260,8 @@ def mixture_weights(
     rate = F.col("raw") / F.max("raw").over(w_all)
     # fixed output name 'source' regardless of stratum_col: the SQL twin
     # hardcodes that alias, and the driver hashes values sorted by
-    # column name (ADVICE r6; the curation_funnel pattern). No-op under
-    # the default stratum_col="source".
+    # column name (ADVICE r6). No-op under the default
+    # stratum_col="source".
     return per.select(
         F.col(stratum_col).alias("source"),
         "n_docs",
@@ -337,8 +330,8 @@ def temperature_mixture(
     per = per.withColumn("_sm", smoothed)
     # the smoothed-mass total is a sum of DOUBLES (sqrt outputs) — raw
     # double summation is partial-agg-order-dependent, so accumulate
-    # DECIMAL(28,12) (order-free) and divide as double, the
-    # bigram_lm_scores discipline; integer token sums are exact as-is
+    # DECIMAL(28,12) (order-free) and divide as double; integer token
+    # sums are exact as-is
     sm_total = (
         F.sum(F.col("_sm").cast("decimal(28,12)")).over(w_all).cast("double")
     )

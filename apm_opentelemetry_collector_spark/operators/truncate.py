@@ -42,9 +42,12 @@ def truncate_oversize(df: DataFrame, cfg: PipelineConfig | None = None) -> DataF
     # alone is over the cap → irreducible → drop (ErrEncodingFailed
     # analog). Column order matches the withColumn form: originals with
     # text rewritten in place, then truncated / drop_reason / outcome.
+    # The marker is ASCII, so its byte length is arithmetic: no marker is
+    # built just to be measured.
     cap = int(cfg.max_span_size)
-    marker = f"concat('{TRUNC_MARKER}', CAST(octet_length(text) AS STRING), '] ')"
-    keep = f"CAST({cap} - octet_length({marker}) AS INT)"
+    size = "CAST(octet_length(text) AS STRING)"
+    marker = f"concat('{TRUNC_MARKER}', {size}, '] ')"
+    keep = f"CAST({cap - len(TRUNC_MARKER) - 2} - length({size}) AS INT)"
     over = f"(octet_length(text) > {cap})"
     fatal = f"({over} AND {keep} < 0)"
     trunc = f"({over} AND NOT {fatal})"

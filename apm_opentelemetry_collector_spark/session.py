@@ -190,18 +190,3 @@ def read_input_table(spark: SparkSession, path: str):
         _PARQUET_SCHEMAS[key] = df.schema
         return df
     return spark.read.schema(sch).parquet(path)
-
-
-def assert_no_rowwise_python(df) -> None:
-    """North-star audit: no per-row Python on the hot path.
-
-    Raises if the physical plan contains BatchEvalPython (row-at-a-time
-    Python UDF). ArrowEvalPython (pandas UDF) is allowed — that is the
-    designated vectorized slow path for the parse stage.
-    """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "BatchEvalPython" in plan:
-        raise AssertionError(
-            "physical plan contains row-at-a-time Python UDF (BatchEvalPython):\n"
-            + plan
-        )

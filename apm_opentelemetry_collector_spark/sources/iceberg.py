@@ -41,14 +41,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def catalog_configured(spark: SparkSession, catalog: str = "local") -> bool:
-    """True when `catalog` is declared as an Iceberg catalog in the conf."""
-    try:
-        return bool(spark.conf.get(f"spark.sql.catalog.{catalog}"))
-    except Exception:
-        return False
-
-
 def is_table_identifier(target: str) -> bool:
     """Heuristic: catalog.db.table identifiers vs filesystem paths."""
     return "/" not in target and not target.startswith("file:")

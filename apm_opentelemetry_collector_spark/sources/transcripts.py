@@ -60,9 +60,6 @@ TRANSCRIPT_SCHEMA = T.StructType(
     ]
 )
 
-TOOLS = ["none", "search", "code", "browser"]
-ROLE_BY_EVENT_TYPE = {"error": "tool", "signup": "system", "purchase": "assistant"}
-
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import read_input_table

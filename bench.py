@@ -86,27 +86,16 @@ def main() -> None:
         "weighted_reservoir",
         "tdigest_value_quantiles",
         "kmeans_assign",
-        "tfidf_top_terms",
         "events_funnel",
         "rate_limit_exceeded",
         # r4 additions
         "value_percentiles_tdigest",
-        # r5 additions
+        # r5 addition
         "ewma_anomalies",
-        "bigram_lm_scores",
         # r6 additions
         "pack_sequences",
         "mixture_weights",
-        "gopher_quality_filters",
-        "gopher_repetition",
-        "c4_line_filters",
-        "dsir_weights",
-        "ccnet_buckets",
-        "curation_funnel",
-        "trigram_lm_scores",
         "temperature_mixture",
-        "tokenizer_fertility",
-        "fineweb_filters",
     ]
     # Per-query: best-of-REPS, INTERLEAVED round-robin so a transient host
     # slowdown (documented 3-5× contention spikes) hits all queries alike
@@ -153,8 +142,8 @@ def main() -> None:
                 # no driver transfer and no disk. count() (used through
                 # r6) is NOT that: Catalyst prunes all columns under a
                 # count, eliminating unique-key left joins and whole
-                # projection pipelines — pure-projection scorers (gopher,
-                # c4_line_filters) timed as bare corpus counts. Numbers
+                # projection pipelines — pure-projection scorers timed as
+                # bare corpus counts. Numbers
                 # recalibrate upward at the switch (BENCH/BASELINE.md
                 # §2i); the flagship e2e is unaffected (run_job always
                 # wrote real output).

@@ -6,7 +6,7 @@ work can time a single query (or a short list) in a fresh JVM with the
 noop sink, optionally under config overrides, without paying for the
 whole headline. Usage:
 
-    python bench_extra.py curation_funnel tfidf_top_terms --reps 3
+    python bench_extra.py pack_sequences mixture_weights --reps 3
     python bench_extra.py pipeline_e2e_synth --rows 2000000
     SPARK_GRAFT_EXTRA_CONF="spark.foo=bar,spark.baz=1" python bench_extra.py ...
 
@@ -75,7 +75,7 @@ def main() -> None:
             for name in args.queries:
                 spark.sparkContext.setJobDescription(f"{name} rep{_rep}")
                 if name == "pipeline_e2e_synth":
-                    from bench import BENCH_CFG, time_pipeline_e2e
+                    from bench import time_pipeline_e2e
 
                     times[name].append(
                         time_pipeline_e2e(spark, args.rows, workdir)

@@ -6,7 +6,9 @@ not check it: a name deleted from the package would surface only when
 that function runs. This walks the AST of those files instead and
 resolves each `from apm_opentelemetry_collector_spark... import name` and
 each `import apm_opentelemetry_collector_spark...` wherever it sits.
-Imports the modules, starts no Spark session.
+The same walk also finds top-level definitions that nothing references,
+which a retired slice can leave behind. Imports the modules, starts no
+Spark session.
 """
 
 from __future__ import annotations
@@ -80,3 +82,41 @@ def test_every_package_import_resolves():
                     broken.append(f"{where}:{line}: {mod} has no {name}")
     assert checked > 100, checked
     assert not broken, "\n".join(broken)
+
+
+def _refs(tree: ast.AST):
+    """(name, line) for every name the tree reads, attributes and
+    imported names included."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id, node.lineno
+        elif isinstance(node, ast.Attribute):
+            yield node.attr, node.lineno
+        elif isinstance(node, ast.alias):
+            yield node.name.split(".")[-1], node.lineno
+
+
+def test_every_top_level_definition_is_referenced():
+    """No dead definitions: every top-level def/class of the package and
+    of __spark_entry__.py is referenced by name somewhere in the walked
+    files, outside its own body (a recursive call does not count)."""
+    files = _files()
+    trees = {p: ast.parse(open(p, encoding="utf-8").read(), p) for p in files}
+    refs: dict[str, list[tuple[str, int]]] = {}
+    for path, tree in trees.items():
+        for name, line in _refs(tree):
+            refs.setdefault(name, []).append((path, line))
+    orphans = []
+    for path, tree in trees.items():
+        if _package_of(path) is None and not path.endswith("__spark_entry__.py"):
+            continue
+        for node in tree.body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            if not any(
+                p != path or not first <= line <= node.end_lineno
+                for p, line in refs.get(node.name, ())
+            ):
+                orphans.append(f"{os.path.relpath(path, _ROOT)}:{node.lineno}: {node.name}")
+    assert not orphans, "unreferenced definitions:\n" + "\n".join(orphans)

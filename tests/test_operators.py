@@ -465,6 +465,28 @@ def test_weighted_reservoir_bias_and_determinism(spark):
     assert again == ids
 
 
+def test_sample_conversations_keeps_whole_conversations(spark):
+    """Consistent sampling: a conversation is kept or dropped whole, and
+    rate 0.25 keeps exactly the conversations whose md5 starts with a hex
+    digit below 4 (the oracle's cut)."""
+    import hashlib
+
+    from apm_opentelemetry_collector_spark.operators.sample import (
+        sample_conversations,
+    )
+
+    tr = synth_transcripts(spark, 2000, 200)
+    kept = sample_conversations(tr, 0.25)
+    assert kept.count() == tr.join(kept.select("conv_id").distinct(), "conv_id").count()
+    convs = {r["conv_id"] for r in tr.select("conv_id").distinct().collect()}
+    want = {c for c in convs if hashlib.md5(c.encode()).hexdigest()[0] in "0123"}
+    assert {r["conv_id"] for r in kept.select("conv_id").distinct().collect()} == want
+    assert 0 < len(want) < len(convs)
+    for bad in (-0.1, 1.5):
+        with pytest.raises(ValueError, match="rate"):
+            sample_conversations(tr, bad)
+
+
 def test_kmeans_deterministic_and_partitions_points(spark):
     """Lloyd assignment: every point exactly once, deterministic across
     parallelism, clusters converge on the planted structure."""
@@ -482,23 +504,6 @@ def test_kmeans_deterministic_and_partitions_points(spark):
     assert a == b and len(a) == emb.count()
     sizes = {r["cluster"]: r["n_points"] for r in kmeans_sizes(emb).collect()}
     assert sum(sizes.values()) == len(a) and len(sizes) >= 2
-
-
-def test_tfidf_prefers_group_specific_terms(spark):
-    from apm_opentelemetry_collector_spark.functions.text import tfidf_top_terms
-
-    rows = (
-        [(i, "alpha beta common words here", "s1") for i in range(20)]
-        + [(100 + i, "gamma delta common words here", "s2") for i in range(20)]
-    )
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    top = {
-        (r["source"], r["term"]) for r in tfidf_top_terms(docs, top_n=2).collect()
-    }
-    # group-exclusive terms outrank corpus-wide ones (ln(N/df)=0 for
-    # terms in every doc)
-    assert ("s1", "alpha") in top and ("s1", "beta") in top
-    assert ("s2", "gamma") in top and ("s2", "delta") in top
 
 
 def test_leakage_safe_split_groups_share_folds(spark):
@@ -656,26 +661,6 @@ def test_ewma_batch_matches_sequential_truth(spark):
     assert got.loc[[60, 200, 333], "is_anomaly"].all()
 
 
-def test_bigram_lm_scores_rank_gibberish_below_prose(spark):
-    """The corpus-trained bigram score must order documents sensibly:
-    docs made of a repeated common phrase (high-count bigrams) score
-    ABOVE docs of unique token soup (every bigram count 1), and
-    single-token docs yield no row."""
-    from apm_opentelemetry_collector_spark.functions.text import bigram_lm_scores
-
-    phrase = "the quick brown fox jumps"
-    rows = [(i, " ".join([phrase] * 4)) for i in range(6)]            # prose-ish
-    rows += [(10 + i, " ".join(f"zx{i}q{j}" for j in range(20))) for i in range(6)]
-    rows += [(100, "solo")]                                           # 1 token
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in bigram_lm_scores(docs).collect()}
-    assert 100 not in out
-    prose = [out[i]["avg_logp"] for i in range(6)]
-    soup = [out[10 + i]["avg_logp"] for i in range(6)]
-    assert min(prose) > max(soup), (prose, soup)
-    assert out[0]["n_bigrams"] == 19  # 20 tokens → 19 bigrams
-
-
 def test_pack_sequences_matches_serial_packing(spark):
     """Concat-and-chunk vs a from-the-definition serial walk, plus
     n_ranges invariance (the two-pass ranged prefix sum must be a pure
@@ -750,285 +735,8 @@ def test_mixture_weights_realizes_target_shares(spark):
     assert max(r["rate"] for r in out2.values()) == 1.0
 
 
-def test_gopher_quality_filters_each_rule_fires(spark):
-    """Crafted fixtures: each Gopher rule fails on exactly the doc built
-    to violate it (and only that rule), the clean prose doc passes all
-    seven, and an empty doc fails closed."""
-    from apm_opentelemetry_collector_spark.functions.text import gopher_quality
-
-    base = "the cat and the dog have seen that story with great interest today"
-    good = " ".join([base] * 5)  # 65 words, mean len ~4.2, 5 stop words
-    rows = [
-        (0, good),
-        (1, "\n".join("- " + base for _ in range(10))),        # all lines bulleted
-        (2, "\n".join([base + " ..."] * 4 + [base] * 6)),      # 40% ellipsis lines
-        (3, good + " " + " ".join(["#"] * 10)),                # symbol ratio > 0.1
-        (4, base),                                              # 13 words < 50
-        (5, " ".join(["the", "of"] + ["pneumonoultramicroscopic"] * 60)),  # mean len > 10
-        (6, good + " " + " ".join(str(n) for n in range(40))),  # alpha frac <= 0.8
-        (7, " ".join(["red green blue small large"] * 13)),     # no stop words
-        (8, "   "),                                             # empty: fails closed
-        (9, " ".join(["…"] * 10) + " " + good),                 # unicode ellipsis ratio
-        # the published rule is per-symbol: 4 hashes + 4 ellipses in 73
-        # words is ~0.055 EACH — passes, though the pooled 8/73 would not
-        (10, " ".join(["#"] * 4 + ["..."] * 4) + " " + good),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in gopher_quality(docs).collect()}
-
-    flags = [k for k in out[0] if k.startswith("pass_")]
-    assert out[0]["keep"] is True and all(out[0][f] for f in flags)
-    expected_fail = {
-        1: "pass_bullet_lines",
-        2: "pass_ellipsis_lines",
-        3: "pass_symbol_ratio",
-        4: "pass_word_count",
-        5: "pass_mean_word_len",
-        6: "pass_alpha_words",
-        7: "pass_stopwords",
-        9: "pass_symbol_ratio",
-    }
-    for doc_id, failing in expected_fail.items():
-        got_failing = {f for f in flags if not out[doc_id][f]}
-        assert got_failing == {failing}, (doc_id, got_failing)
-        assert out[doc_id]["keep"] is False
-    # empty text: word-count and derived rules fail, nothing passes it in
-    assert out[8]["keep"] is False and out[8]["n_words"] == 0
-    assert out[8]["mean_word_len"] == 0.0
-    # hash and ellipsis ratios are INDEPENDENT (each < 0.1): ~0.055 each
-    # passes even though the pooled count would cross the threshold
-    assert out[10]["keep"] is True and out[10]["pass_symbol_ratio"] is True
-
-
-def test_gopher_repetition_rules(spark):
-    """Crafted fixtures for the A1.2 repetition suite: duplicate lines /
-    paragraphs, top-n-gram dominance with the smallest-gram tie-break,
-    duplicated-n-gram coverage with overlap merge vs separate runs, and
-    the vacuous pass on empty text."""
-    from apm_opentelemetry_collector_spark.functions.text import (
-        gopher_repetition,
-    )
-
-    # all-distinct words, long enough that a count-1 "top" n-gram is a
-    # small char fraction (the published thresholds assume real docs)
-    clean = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliet "
-        "kilo lima mike november oscar papa quebec romeo sierra tango "
-        "uniform victor whiskey xray yankee zulu one two three four five "
-        "six seven eight nine ten eleven twelve thirteen fourteen"
-    )
-    rows = [
-        (0, clean),
-        # 10 identical lines: dup_line_frac = 0.9 > 0.3, char frac ~0.9
-        (1, "\n".join(["same line here"] * 10)),
-        # duplicate paragraph (and the 3-line view has 1 dup of 3)
-        (2, "para one here\n\npara one here"),
-        # dominant 2-gram: "x y" x3 of 5 grams -> 9/11 chars > 0.2
-        (3, "x y x y x y"),
-        # overlapping repeated 5-gram: 7x 'a' -> merged run covers all
-        (4, "a a a a a a a"),
-        # two separate runs of the same 5-gram with an uncovered gap
-        (5, "p q r s t z1 z2 p q r s t"),
-        (6, ""),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in gopher_repetition(docs).collect()}
-    flags = [k for k in out[0] if k.startswith("pass_")]
-
-    assert out[0]["keep"] is True and all(out[0][f] for f in flags)
-    assert out[1]["dup_line_frac"] == 0.9
-    assert out[1]["pass_dup_lines"] is False
-    assert out[1]["pass_dup_line_chars"] is False
-    assert out[2]["dup_para_frac"] == 0.5
-    assert out[2]["pass_dup_paras"] is False and out[2]["keep"] is False
-    # top 2-gram "x y" (count 3, ties broken to the smallest gram):
-    # 3 * len("x y") = 9 of 11 normalized chars
-    assert abs(out[3]["top_2gram_char_frac"] - 9 / 11) < 1e-12
-    assert out[3]["pass_top_2gram"] is False
-    # overlapping occurrences merge into ONE run covering all 13 chars
-    assert out[4]["dup_5gram_char_frac"] == 1.0
-    # separate runs: 2 * len("p q r s t") = 18 of the 25 normalized
-    # chars; the " z1 z2 " gap is never counted
-    assert abs(out[5]["dup_5gram_char_frac"] - 18 / 25) < 1e-12
-    assert out[5]["pass_dup_5gram"] is False
-    # empty doc: zero repetition everywhere -> vacuous keep (the A1.1
-    # quality rules are what reject empties)
-    assert out[6]["keep"] is True
-    assert out[6]["dup_5gram_char_frac"] == 0.0
-
-
-def test_c4_line_filters_rules(spark):
-    """Crafted fixtures: terminal-punctuation and min-word line rules,
-    kept-line rejoin, and the three doc-level drops (too few kept
-    lines, lorem ipsum, curly brace)."""
-    from apm_opentelemetry_collector_spark.functions.text import c4_line_filters
-
-    good_line = "this sentence has at least five words."
-    rows = [
-        (0, "\n".join([good_line] * 3)),                    # 3 kept -> keep
-        (1, "\n".join([good_line, "too short.", "no terminal punctuation here at all", good_line, good_line])),
-        (2, "\n".join([good_line] * 2)),                    # only 2 kept -> drop
-        (3, "\n".join([good_line] * 3) + "\nsee Lorem Ipsum text."),
-        (4, "\n".join([good_line] * 3) + "\nvar x = { a: 1 };"),
-        (5, 'is a quote fine as terminal punctuation?" yes it is."'),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in c4_line_filters(docs).collect()}
-
-    assert out[0]["keep"] is True and out[0]["n_kept_lines"] == 3
-    assert out[0]["cleaned_text"] == "\n".join([good_line] * 3)
-    # short + unterminated lines dropped, the three good ones kept
-    assert out[1]["n_kept_lines"] == 3 and out[1]["keep"] is True
-    assert "too short." not in out[1]["cleaned_text"]
-    assert "no terminal" not in out[1]["cleaned_text"]
-    assert out[2]["keep"] is False and out[2]["n_kept_lines"] == 2
-    assert out[3]["keep"] is False and out[3]["has_lorem"] is True
-    assert out[4]["keep"] is False and out[4]["has_brace"] is True
-    # single line ending in a double quote counts as terminal
-    assert out[5]["n_kept_lines"] == 1
-
-
-def test_ccnet_buckets_per_lang_terciles(spark):
-    """Docs whose common-bigram mass rises monotonically bucket into
-    tail/middle/head terciles in score order — and thresholds are
-    PER-LANGUAGE: the three lowest-scoring constructions, alone in a
-    second language, span all three buckets there."""
-    from apm_opentelemetry_collector_spark.functions.text import ccnet_buckets
-
-    def doc(i, tag):
-        return "common pair " * (i + 1) + f"rare{tag}{i}"
-
-    rows = [(i, doc(i, "en"), "en") for i in range(9)]
-    rows += [(100 + i, doc(i, "de"), "de") for i in range(3)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = {r["doc_id"]: r.asDict() for r in ccnet_buckets(docs).collect()}
-
-    # scores rise with i (the unique rare-word bigram's weight shrinks)
-    en_scores = [out[i]["avg_logp"] for i in range(9)]
-    assert en_scores == sorted(en_scores)
-    assert [out[i]["bucket"] for i in range(9)] == (
-        ["tail"] * 3 + ["middle"] * 3 + ["head"] * 3
-    )
-    # per-language thresholds: the same three low constructions span
-    # all three buckets inside 'de'
-    assert [out[100 + i]["bucket"] for i in range(3)] == [
-        "tail",
-        "middle",
-        "head",
-    ]
-
-
-def test_dsir_weights_rank_target_like_docs(spark):
-    """DSIR must rank same-length docs by target-likeness: a doc made of
-    target vocabulary scores above a mixed doc, which scores above an
-    off-vocabulary doc — regardless of which source the doc sits in."""
-    from apm_opentelemetry_collector_spark.functions.text import dsir_weights
-
-    tgt_words, off_words = "alpha beta gamma delta", "zulu yankee xray whiskey"
-    rows = [(i, " ".join([tgt_words] * 4), "tgt") for i in range(5)]
-    rows += [(10 + i, " ".join([off_words] * 4), "other") for i in range(3)]
-    rows += [(20, " ".join([tgt_words] * 4), "other")]            # target-like
-    rows += [(21, " ".join([tgt_words, off_words] * 2), "other")]  # mixed
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {
-        r["doc_id"]: r
-        for r in dsir_weights(docs, target_source="tgt").collect()
-    }
-    assert all(out[i]["n_tokens"] == 16 for i in out)
-    assert out[20]["log_weight"] > out[21]["log_weight"] > out[10]["log_weight"]
-    # target-vocab docs score identically wherever they live
-    assert out[20]["log_weight"] == out[0]["log_weight"]
-
-
     # doc 12 fragments into 3 pieces > max_pieces=2 → dropped (absent);
     # doc 11 fully covered → absent; doc 13 clean → absent
-
-
-def test_curation_funnel_stage_semantics(spark):
-    """Hand-lined corpus through the composed C4 → Gopher → exact-dedup
-    funnel: a brace doc dies at C4, a short doc dies at Gopher word
-    count, an exact duplicate of a surviving doc is collapsed
-    keep-first, and tokens_kept sums the surviving CLEANED texts."""
-    from apm_opentelemetry_collector_spark.operators.curation import (
-        curation_funnel,
-    )
-
-    # 63 words, 3 keepable lines, stopword-rich, alpha-heavy
-    good = (
-        "the pipeline reads every record and that is the point of the "
-        "whole exercise because we want clean data for training runs.\n"
-        "it should be obvious that each of these lines ends with a "
-        "proper sentence terminator and has plenty of ordinary words.\n"
-        "finally the document closes with one more full sentence so "
-        "the line filters keep at least three of them intact."
-    )
-    short = (
-        "one short sentence that ends properly here.\n"
-        "another short sentence that also ends well.\n"
-        "and that is of course all there is."
-    )
-    rows = [
-        (1, "src_a", good),
-        (7, "src_a", good),                      # exact dup of doc 1
-        (3, "src_a", good + "\ncode { brace }."),  # brace → fails C4
-        (4, "src_b", short),                     # < 50 words → fails Gopher
-        (5, "src_b", good + "\nplus one extra closing sentence to differ."),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = {r["source"]: r.asDict() for r in curation_funnel(docs).collect()}
-
-    assert out["src_a"]["n_raw"] == 3
-    assert out["src_a"]["n_after_c4"] == 2        # brace doc dropped
-    assert out["src_a"]["n_after_gopher"] == 2
-    assert out["src_a"]["n_after_dedup"] == 1     # dup collapsed to doc 1
-    # tokens of ONE surviving cleaned text (all 3 lines kept = 63 words)
-    assert out["src_a"]["tokens_kept"] == 63
-    assert out["src_b"]["n_raw"] == 2
-    assert out["src_b"]["n_after_c4"] == 2
-    assert out["src_b"]["n_after_gopher"] == 1    # short doc dropped
-    assert out["src_b"]["n_after_dedup"] == 1
-
-
-def test_trigram_lm_stupid_backoff_branches(spark):
-    """Hand-counted stupid-backoff arithmetic: a train doc scores pure
-    trigram hits (S = c123/c12), a held-out doc exercises every branch
-    — seen trigram, bigram backoff (0.4·c23/c2), unigram backoff with
-    and without the OOV 1/N floor — and avg_logs matches the
-    from-the-definition value."""
-    import math
-
-    from apm_opentelemetry_collector_spark.functions.text import (
-        trigram_lm_scores,
-    )
-
-    rows = [
-        (0, "a b c a b d", "train"),   # N=6; c1 a2 b2 c1 d1; ab=2 bc ca bd=1
-        (1, "a b c x b d", "other"),   # abc hit; bcx/cxb bo2; xbd bo1
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {
-        r["doc_id"]: r.asDict()
-        for r in trigram_lm_scores(docs, train_sources=("train",)).collect()
-    }
-
-    # train doc: every trigram seen once; contexts ab=2, bc=1, ca=1
-    t0 = out[0]
-    assert (t0["n_hit"], t0["n_bo1"], t0["n_bo2"]) == (4, 0, 0)
-    exp0 = (math.log(1 / 2) + math.log(1 / 1) + math.log(1 / 1) + math.log(1 / 2)) / 4
-    assert abs(t0["avg_logs"] - exp0) < 1e-6
-
-    # held-out doc: abc -> 1/2 (hit); bcx -> unigram OOV floor
-    # 0.4*0.4*(1/6); cxb -> unigram 0.4*0.4*(2/6); xbd -> bigram
-    # backoff 0.4*(bd=1 / b=2)
-    t1 = out[1]
-    assert (t1["n_hit"], t1["n_bo1"], t1["n_bo2"]) == (1, 1, 2)
-    exp1 = (
-        math.log(1 / 2)
-        + math.log(0.4 * 0.4 * (1 / 6))
-        + math.log(0.4 * 0.4 * (2 / 6))
-        + math.log(0.4 * (1 / 2))
-    ) / 4
-    assert abs(t1["avg_logs"] - exp1) < 1e-6
 
 
 def test_temperature_mixture_t2_smoothing(spark):
@@ -1056,65 +764,4 @@ def test_temperature_mixture_t2_smoothing(spark):
     # big downsamples to 1/3: smoothed ratio 3:1 over a 9:1 corpus
     assert abs(out["big"]["rate"] - 1 / 3) < 1e-9
     assert abs(out["big"]["expected_tokens"] - 30.0) < 1e-6
-
-
-def test_tokenizer_fertility_hand_counts(spark):
-    """Hand-counted fertility: contractions and punctuation inflate the
-    subword count over the whitespace count per the GPT-2 pretokenizer
-    ("don't stop now!" = don / 't / stop / now / ! = 5 subwords over 3
-    words), and per-language rows aggregate independently."""
-    from apm_opentelemetry_collector_spark.functions.text import (
-        tokenizer_fertility,
-    )
-
-    rows = [
-        (0, "don't stop now!", "en"),     # 5 bpe / 3 ws / 15 chars
-        (1, "plain words here", "en"),    # 3 bpe / 3 ws / 16 chars
-        (2, "abc 123 x9", "xx"),          # abc,123,x,9 = 4 bpe / 3 ws
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    out = {r["lang"]: r.asDict() for r in tokenizer_fertility(docs).collect()}
-
-    en = out["en"]
-    assert (en["n_docs"], en["ws_tokens"], en["bpe_tokens"]) == (2, 6, 8)
-    assert en["n_chars"] == len(rows[0][1]) + len(rows[1][1])
-    assert abs(en["fertility"] - 8 / 6) < 1e-12
-    xx = out["xx"]
-    assert (xx["ws_tokens"], xx["bpe_tokens"]) == (3, 4)
-
-
-def test_fineweb_filters_rule_semantics(spark):
-    """Hand-built docs crossing each FineWeb rule exactly: a no-punct
-    doc fails the 0.12 punct-line rule, a doc whose duplicated line is
-    >10% of its chars fails the dup-chars rule, a doc of mostly <30-char
-    lines fails the 0.67 short-line rule, and a clean doc keeps."""
-    from apm_opentelemetry_collector_spark.functions.text import (
-        fineweb_filters,
-    )
-
-    long_line = "this is a long enough line of ordinary prose text."
-    rows = [
-        (0, "\n".join([long_line] * 3 + ["another distinct long closing line."])),
-        (1, "\n".join([long_line.rstrip(".")] * 1
-                      + ["second line without terminal punct here",
-                         "third line also with no punctuation mark",
-                         "fourth line still not ending in punct"])),
-        (2, "\n".join([long_line, long_line,
-                       "a different long line to pad the total chars."])),
-        (3, "\n".join(["a b", "c d", "e f", long_line])),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r.asDict() for r in fineweb_filters(docs).collect()}
-
-    # doc 0: dup! 3 copies of long_line → dup chars = 2*len >> 10%
-    assert not out[0]["pass_dup_chars"] and not out[0]["keep"]
-    assert out[0]["pass_punct_lines"] and out[0]["pass_short_lines"]
-    # doc 1: zero punct-ending lines → 0 < 0.12
-    assert not out[1]["pass_punct_lines"] and not out[1]["keep"]
-    # doc 2: one duplicated copy of long_line (~33% of chars) → fails
-    # dup; punct fine; shorts fine
-    assert not out[2]["pass_dup_chars"]
-    # doc 3: 3 of 4 lines shorter than 30 chars → 0.75 >= 0.67
-    assert not out[3]["pass_short_lines"] and not out[3]["keep"]
-    assert out[3]["n_short_lines"] == 3
 

@@ -272,21 +272,15 @@ def test_new_queries_no_python_nodes(spark):
                  "counter_rate", "cube_orders", "events_hourly_rollup",
                  "stratified_sample", "weighted_reservoir",
                  "tdigest_value_quantiles", "kmeans_assign",
-                 "tfidf_top_terms", "leakage_safe_split", "robust_outliers",
+                 "leakage_safe_split", "robust_outliers",
                  "events_funnel", "cohort_retention", "events_json_props",
                  "rate_limit_exceeded",
                  # r5
                  "ewma_anomalies",
-                 "bigram_lm_scores",
                  # r6
                  "pack_sequences",
                  "mixture_weights",
-                 "gopher_quality_filters", "gopher_repetition",
-                 "c4_line_filters", "dsir_weights",
-                 "ccnet_buckets",
-                 "curation_funnel",
-                 "trigram_lm_scores", "temperature_mixture",
-                 "tokenizer_fertility", "fineweb_filters"):
+                 "temperature_mixture"):
         plan = plan_of(qs[name](spark, SF))
         assert "BatchEvalPython" not in plan, name
 

@@ -27,11 +27,18 @@ MUST_BE_IN_WINDOW = {
     # hash-identical by construction, but the touched-goes-in-window
     # policy makes the driver re-verify exactly the code that moved):
     # spread_small_scan paths
-    "gopher_quality_filters",
-    "gopher_repetition",
-    "curation_funnel",
     "knn_bruteforce",
     "kmeans_assign",
+    # implementation-touched since: byte-measured packing (strlen oracle,
+    # record_stats), the package's flushed/dropped aggregates, the single
+    # conversation sampler, and the UTF-8 cut and arithmetic marker
+    # length of XL truncation
+    "record_packing",
+    "flushed_stats",
+    "dropped_stats",
+    "sampler_counts",
+    "doc_truncation",
+    "xl_span_stats",
 }
 
 

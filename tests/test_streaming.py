@@ -431,7 +431,7 @@ def _wait_state_empty(q, timeout_s=90.0):
     return _wait_for(check, timeout_s)
 
 
-def test_forward_fill_and_ewma_state_ttl_evict_idle_keys(spark, tmp_path):
+def test_forward_fill_state_ttl_evicts_idle_keys(spark, tmp_path):
     """forward_fill_stateful honors state_ttl_s via the TTL helpers:
     idle conversations are evicted under key churn, and a revived
     conversation starts with NO inherited role/tool (leading nulls stay
@@ -578,58 +578,3 @@ def test_forward_fill_event_time_ttl_evicts_by_watermark(spark, tmp_path):
     c1 = got[(got["conv_id"] == "c1") & (got["turn_idx"] == 1)].iloc[0]
     assert pd.isna(c1["role"]) and pd.isna(c1["tool"])      # nothing inherited
 
-
-def test_curation_scorers_run_on_streams(spark, tmp_path):
-    """The doc-local curation scorers (c4_line_filters, gopher_quality,
-    fineweb_filters) are pure projections, so they run UNCHANGED on a
-    streaming DataFrame — the admission-gate deployment — and emit
-    exactly the batch rows."""
-    from apm_opentelemetry_collector_spark.functions.text import (
-        c4_line_filters,
-        fineweb_filters,
-        gopher_quality,
-    )
-
-    good = (
-        "the pipeline reads every record and that is the point of the "
-        "whole exercise because we want clean data for training runs.\n"
-        "it should be obvious that each of these lines ends with a "
-        "proper sentence terminator and has plenty of ordinary words.\n"
-        "finally the document closes with one more full sentence so "
-        "the line filters keep at least three of them intact."
-    )
-    rows = [(0, good), (1, "short { code }"), (2, "no punct\nstill none")]
-    schema = "doc_id long, text string"
-    path = str(tmp_path / "gate_in")
-    for lo, hi in ((0, 2), (2, 3)):
-        spark.createDataFrame(rows[lo:hi], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(path)
-    batch_df = spark.createDataFrame(rows, schema)
-
-    for name, op in (
-        ("c4", c4_line_filters),
-        ("gq", gopher_quality),
-        ("fw", fineweb_filters),
-    ):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(path)
-        )
-        q = (
-            op(stream)
-            .writeStream.format("memory")
-            .queryName(f"gate_{name}")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = spark.sql(f"SELECT * FROM gate_{name}").toPandas()
-        finally:
-            q.stop()
-        want = op(batch_df).toPandas()
-        got = got.sort_values("doc_id").reset_index(drop=True)
-        want = want.sort_values("doc_id").reset_index(drop=True)
-        assert got.equals(want), name
