@@ -27,9 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from apm_opentelemetry_collector_spark.config import PipelineConfig
 from apm_opentelemetry_collector_spark.functions import sharding, sqlgen
-from apm_opentelemetry_collector_spark.functions import text as textfn
 from apm_opentelemetry_collector_spark.functions.parse import with_parsed
-from apm_opentelemetry_collector_spark.functions.vectors import brute_force_knn
 from apm_opentelemetry_collector_spark.operators import analytics as _analytics
 from apm_opentelemetry_collector_spark.operators.aggregate import (
     dropped_stats,
@@ -43,7 +41,6 @@ from apm_opentelemetry_collector_spark.operators.pack import (
     record_stats,
 )
 from apm_opentelemetry_collector_spark.operators.route import fan_out, with_send_outcome
-from apm_opentelemetry_collector_spark.operators import sample as smp
 from apm_opentelemetry_collector_spark.operators.sample import sample_conversations
 from apm_opentelemetry_collector_spark.operators.translate import (
     memorymonitor_scrape,
@@ -218,14 +215,16 @@ def q_doc_truncation(spark, sf_dir):
     return out.select(
         "doc_id",
         "truncated",
-        F.length("text").alias("new_len"),
+        F.octet_length("text").alias("new_len"),
         F.col("text").alias("new_text"),
     )
 
 
 def q_xl_span_stats(spark, sf_dir):
     """A2: omnishard_xl_span_size/_spans — Sum/Count of truncated spans
-    per group (telemetry.go:80-94); grouped by source here."""
+    per group (telemetry.go:80-94); grouped by source here. A span is
+    truncated by its byte size; xl_size sums the table's stored n_chars
+    column."""
     from apm_opentelemetry_collector_spark.operators.truncate import truncate_oversize
 
     docs = _load(spark, sf_dir, "documents")
@@ -351,7 +350,7 @@ def q_sent_stats(spark, sf_dir):
     out = with_retry_outcome(routed, CFG, retry_queue_size=RETRY_CAP)
     return out.groupBy("sink", "result_code").agg(
         F.count("*").alias("sent_spans"),
-        F.sum(F.length("text")).alias("sent_bytes"),
+        F.sum(F.octet_length("text")).alias("sent_bytes"),
         F.sum("attempts").alias("total_attempts"),
     )
 
@@ -638,59 +637,6 @@ def q_pivot_status_by_priority(spark, sf_dir):
     return out
 
 
-# ----------------------------------------------------------- training-data
-def q_doc_fingerprint(spark, sf_dir):
-    docs = _load(spark, sf_dir, "documents")
-    return docs.select("doc_id", textfn.fingerprint("text").alias("fingerprint"))
-
-
-def q_token_count(spark, sf_dir):
-    docs = _load(spark, sf_dir, "documents")
-    return docs.select("doc_id", textfn.token_count("text").alias("n_tokens"))
-
-
-def q_pii_scrub(spark, sf_dir):
-    """Curation scrubbing: mask emails/URLs/IPs/long numbers with stable
-    tokens + per-rule audit counts; one regexp chain, rules rendered
-    into both engines from functions.text.SCRUB_RULES."""
-    docs = _load(spark, sf_dir, "documents")
-    counts = textfn.scrub_counts("text")
-    return docs.select(
-        "doc_id",
-        textfn.scrub_text("text").alias("scrubbed"),
-        *[c.alias(f"n_{name}") for name, c in counts.items()],
-    )
-
-
-def q_token_count_bpe(spark, sf_dir):
-    """Whitespace + BPE-ish pretokenizer counts side by side — the two
-    token estimators a curation pass runs before real tokenization."""
-    docs = _load(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        textfn.token_count("text").alias("n_tokens_ws"),
-        textfn.bpe_token_count("text").alias("n_tokens_bpe"),
-    )
-
-
-def q_quality_score(spark, sf_dir):
-    docs = _load(spark, sf_dir, "documents")
-    return docs.select("doc_id", textfn.quality_struct("text").alias("q")).select(
-        "doc_id", "q.*"
-    )
-
-
-def q_lang_id(spark, sf_dir):
-    docs = _load(spark, sf_dir, "documents")
-    return docs.select("doc_id", textfn.lang_id("text").alias("lang_pred"))
-
-
-def q_knn_bruteforce(spark, sf_dir):
-    emb = _load(spark, sf_dir, "embeddings")
-    out = brute_force_knn(emb, emb.filter(F.col("vec_id") < 5), k=10)
-    return out.withColumn("cos", F.round("cos", 6))
-
-
 def q_record_encode_stats(spark, sf_dir):
     """P5/P6 + A4 (rows-only check: gzip bytes are not SQL-expressible):
     encoded sink records with compress factors. The byte format itself is
@@ -833,38 +779,6 @@ def q_cms_user_counts(spark, sf_dir):
     return est.join(true, "user_id")
 
 
-MIXTURE_RATES = {"src0": 1.0, "src1": 0.5, "_default": 0.25}
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Dataset-mixing sampler: per-source keep rates, deterministic per
-    doc_id (consistent md5 hashing — same family as the conversation
-    sampler). Rates in MIXTURE_RATES render into BOTH engines."""
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        stratified_sample,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    return stratified_sample(docs, MIXTURE_RATES).select("doc_id", "source")
-
-
-WRS_K = 50
-
-
-def q_weighted_reservoir(spark, sf_dir):
-    """Weighted sampling without replacement (Efraimidis–Spirakis A-ES):
-    docs kept proportional-to-size by text length via key = ln(u)/w and
-    a distributed top-k — deterministic u from md5, oracle-exact."""
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        weighted_reservoir_sample,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    w = F.length("text").cast("double") + F.lit(1.0)
-    out = weighted_reservoir_sample(docs.withColumn("weight", w), WRS_K, "weight")
-    return out.select("doc_id", "source", F.col("weight").cast("bigint").alias("weight"))
-
-
 TDIGEST_QS = (0.5, 0.9, 0.99)
 
 
@@ -883,17 +797,6 @@ def q_tdigest_value_quantiles(spark, sf_dir):
     return out.select("event_type", "q", F.round("est", 6).alias("est"))
 
 
-def q_kmeans_assign(spark, sf_dir):
-    """Distributed k-means (2 Lloyd rounds, deterministic lowest-id
-    seeding): the iterative-algorithm representative — broadcast
-    centroids, exact-decimal means, squared-L2 composed in the oracle's
-    operation order so the whole trajectory bit-matches the unrolled-CTE
-    DuckDB twin."""
-    from apm_opentelemetry_collector_spark.operators.clustering import kmeans_assign
-
-    return kmeans_assign(_load(spark, sf_dir, "embeddings"))
-
-
 def q_ewma_anomalies(spark, sf_dir):
     """Batch EWMA anomaly detection over events.value per event_type
     (ordered by ts, event_id): vectorized truncated-Horner folds — no
@@ -907,44 +810,6 @@ def q_ewma_anomalies(spark, sf_dir):
     return ewma_anomalies_batch(
         ev, ["event_type"], ["ts", "event_id"], "value"
     )
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Concat-and-chunk sequence packing (r6): documents concatenated
-    in doc_id order, cut into fixed 256-token context windows, split
-    across boundaries allowed — per-doc global token offset + chunk
-    span + boundary-crossing flag. The global prefix sum runs as the
-    two-pass ranged design (keys-only range shuffle, bounded totals
-    table, broadcast offsets), never a single-partition window."""
-    from apm_opentelemetry_collector_spark.operators.pack import pack_sequences
-
-    return pack_sequences(_load(spark, sf_dir, "documents"))
-
-
-def q_mixture_weights(spark, sf_dir):
-    """Data-mixing rate solver (r6): per-source sampling rates that
-    realize relative target TOKEN shares without upsampling — the
-    binding source keeps everything, the rest downsample
-    proportionally. One map-side-combinable groupBy(source); every
-    window runs over the strata-bounded table."""
-    from apm_opentelemetry_collector_spark.operators.sample import mixture_weights
-
-    return mixture_weights(_load(spark, sf_dir, "documents"))
-
-
-def q_temperature_mixture(spark, sf_dir):
-    """Temperature-scaled mixture smoothing (Conneau & Lample 2019 /
-    T5 §3.4.3) at the published T=2: per-source sampling rates that
-    realize smoothed shares ∝ sqrt(tokens) — low-resource sources gain,
-    the binding source keeps rate 1, no upsampling. One map-side
-    groupBy(source); strata-bounded windows; sqrt is the one power both
-    engines round identically, and the smoothed-mass total accumulates
-    DECIMAL so the oracle hash is partial-agg-order-free."""
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        temperature_mixture,
-    )
-
-    return temperature_mixture(_load(spark, sf_dir, "documents"))
 
 
 RATE_WINDOW_S = 86400
@@ -999,21 +864,6 @@ def q_events_json_props(spark, sf_dir):
     )
 
 
-def q_leakage_safe_split(spark, sf_dir):
-    """Contamination-aware train/val/test split: fold = consistent hash
-    of the duplicate-group FINGERPRINT (not the row id), so exact dups
-    always share a fold. Weights dict renders into both engines."""
-    from apm_opentelemetry_collector_spark.functions.text import fingerprint
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        leakage_safe_split,
-    )
-
-    docs = _load(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", leakage_safe_split(fingerprint("text")).alias("split")
-    )
-
-
 def q_robust_outliers(spark, sf_dir):
     """Median/MAD modified z-score outliers of events.value per
     event_type (Iglewicz–Hoban, |z| > 3.5) — robust quality filtering
@@ -1038,30 +888,21 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     insertion order. After r3 every query has been driver-checked at
     least once (r2 ∪ r3 union), so the policy is simply newest/touched
     first: the r4 additions lead, then everything r4 touched or r3
-    added, then the core pipeline/training queries; entries past the
+    added, then the core pipeline queries; entries past the
     cutoff all hold an earlier hash-MATCH row (r2 or r3 —
     tests/test_query_window.py enforces against both JSONs).
     """
     return {
-        # --- new in r6 ------------------------------------------------------
-        "temperature_mixture": q_temperature_mixture,
-        "pack_sequences": q_pack_sequences,
-        "mixture_weights": q_mixture_weights,
         # --- new in r5 ------------------------------------------------------
         "ewma_anomalies": q_ewma_anomalies,
         # --- new in r4 ------------------------------------------------------
         "value_percentiles_tdigest": q_value_percentiles_tdigest,  # rows-only
-        # --- r4-touched implementations (argmin assignment; checkpoint
-        # discipline; epoch-floor oracle) — kept inside the window ----------
-        "kmeans_assign": q_kmeans_assign,
         # --- r7-touched implementation rotated INTO the window —
         # swapped with rate_limit/alert/counter_rate/hll, all untouched
         # this round and r6-hash-verified --------------------------------
         "robust_outliers": q_robust_outliers,
         # --- r2/r3 backlog (first driver-checked in r3) ---------------------
-        "stratified_sample": q_stratified_sample,
         "cms_user_counts": q_cms_user_counts,
-        "knn_bruteforce": q_knn_bruteforce,
         "bloom_membership": q_bloom_membership,
         # non-SQL-expressible paths (rows-only checks; byte format and
         # batch shape are covered by pytest oracles instead) — rows-only
@@ -1070,8 +911,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "record_encode_stats": q_record_encode_stats,
         "tdigest_value_quantiles": q_tdigest_value_quantiles,  # rows-only
         # --- new in r3 ------------------------------------------------------
-        "weighted_reservoir": q_weighted_reservoir,
-        "leakage_safe_split": q_leakage_safe_split,
         "events_funnel": q_events_funnel,
         "cohort_retention": q_cohort_retention,
         "events_json_props": q_events_json_props,
@@ -1111,14 +950,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "metrics_resample": q_metrics_resample,
         "events_sessionize": q_events_sessionize,
         "events_sessionize_window": q_events_sessionize_window,
-        # training-data ops (documents/embeddings)
-        "doc_fingerprint": q_doc_fingerprint,
-        "token_count": q_token_count,
-        "token_count_bpe": q_token_count_bpe,
-        "pii_scrub": q_pii_scrub,
-        "quality_score": q_quality_score,
-        "lang_id": q_lang_id,
-        # --- past the driver's 50-query window: r2-hash-verified, static ----
         # retry/backpressure taxonomy splits (S4, A3, A6)
         "sent_stats": q_sent_stats,
         "enqueued_stats": q_enqueued_stats,
@@ -1133,6 +964,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "distinct_users_per_type": q_distinct_users_per_type,
         "value_percentiles": q_value_percentiles,
         "rollup_orders": q_rollup_orders,
+        # --- past the 50-query correctness window: r2-hash-verified, static -
         "cube_orders": q_cube_orders,
         "events_hourly_rollup": q_events_hourly_rollup,
         "pivot_status_by_priority": q_pivot_status_by_priority,
@@ -1176,29 +1008,6 @@ def _retry_chain_sql() -> str:
   FROM seq
 )"""
     )
-
-
-_COS_SQL = "(list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b}))))"
-
-
-def _knn_sql(k: int = 10) -> str:
-    cos = _COS_SQL.format(a="q.qv", b="c.cv")
-    return f"""
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id < 5
-), c AS (
-  SELECT vec_id AS neighbor_id, CAST(embedding AS DOUBLE[]) AS cv FROM embeddings
-), scored AS (
-  SELECT q.query_id, c.neighbor_id, {cos} AS cos
-  FROM q, c WHERE q.query_id <> c.neighbor_id
-), ranked AS (
-  SELECT query_id, neighbor_id, cos,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank, round(cos, 6) AS cos FROM ranked WHERE rank <= {k}
-"""
 
 
 def _hll_users_sql() -> str:
@@ -1285,132 +1094,6 @@ SELECT e.user_id, e.est_n, t.true_n
 FROM est e JOIN tru t ON t.user_id = e.user_id"""
 
 
-def _kmeans_sql(k: int | None = None, iters: int | None = None, dim: int = 64) -> str:
-    """Unrolled-CTE twin of operators/clustering.kmeans_assign: the same
-    fixed Lloyd rounds — lowest-id seeding, squared-L2 nearest (ties to
-    the lower cluster), exact-decimal centroid means — iteration i's
-    assignment CTE a{i} feeds means m{i}/centroids c{i} feeds a{i+1}."""
-    from apm_opentelemetry_collector_spark.operators.clustering import (
-        KMEANS_ITERS,
-        KMEANS_K,
-    )
-
-    k = k or KMEANS_K
-    iters = iters or KMEANS_ITERS
-    d2 = (
-        "(list_dot_product(p.v, p.v) + list_dot_product(c.c, c.c)"
-        " - 2.0 * list_dot_product(p.v, c.c))"
-    )
-    ctes = [
-        "pts AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)",
-        f"""c0 AS (
-  SELECT row_number() OVER (ORDER BY id ASC) - 1 AS cluster, v AS c
-  FROM (SELECT id, v FROM pts ORDER BY id ASC LIMIT {k})
-)""",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(
-            f"""a{i} AS (
-  SELECT id, v, cluster FROM (
-    SELECT p.id, p.v, c.cluster,
-           row_number() OVER (PARTITION BY p.id ORDER BY {d2} ASC, c.cluster ASC) AS rn
-    FROM pts p, c{i - 1} c
-  ) WHERE rn = 1
-)"""
-        )
-        if i < iters:
-            ctes.append(
-                f"""m{i} AS (
-  SELECT cluster, CAST(j AS INTEGER) AS pos,
-         CAST(sum(CAST(v[CAST(j AS INTEGER) + 1] AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-  FROM a{i}, range(0, {dim}) t(j) GROUP BY cluster, pos
-)""",
-            )
-            ctes.append(
-                f"c{i} AS (SELECT cluster, list(m ORDER BY pos) AS c FROM m{i} GROUP BY cluster)"
-            )
-    return (
-        "WITH " + ",\n".join(ctes) + f"\nSELECT id AS vec_id, cluster FROM a{iters}"
-    )
-
-
-def _temperature_mixture_sql() -> str:
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        temperature_mixture_sql,
-    )
-
-    return temperature_mixture_sql()
-
-
-def _pack_sequences_sql(seq_len: int | None = None) -> str:
-    """Exact twin of operators/pack.pack_sequences: one SUM() OVER
-    (ORDER BY doc_id) exclusive-prefix window — the single-partition
-    form the ranged two-pass design replaces at scale. Integer //
-    division on both engines (Spark F.floor(a/b) on nonneg bigints ≡
-    DuckDB //); token counts via the shared TOKEN_COUNT_SQL."""
-    from apm_opentelemetry_collector_spark.operators.pack import SEQ_LEN
-
-    L = seq_len or SEQ_LEN
-    toks = textfn.TOKEN_COUNT_SQL.format(col="text")
-    return f"""
-WITH toks AS (
-  SELECT doc_id, CAST({toks} AS BIGINT) AS n_tokens FROM documents
-), pre AS (
-  SELECT doc_id, n_tokens,
-         CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                  0) AS BIGINT) AS start_tok
-  FROM toks
-)
-SELECT doc_id, n_tokens, start_tok,
-  CAST(start_tok // {L} AS BIGINT) AS start_chunk,
-  CAST(CASE WHEN n_tokens > 0 THEN (start_tok + n_tokens - 1) // {L}
-            ELSE start_tok // {L} END AS BIGINT) AS end_chunk,
-  CAST(CASE WHEN n_tokens > 0
-            THEN (start_tok + n_tokens - 1) // {L} - start_tok // {L} + 1
-            ELSE 0 END AS BIGINT) AS n_chunks,
-  (CASE WHEN n_tokens > 0
-        THEN (start_tok + n_tokens - 1) // {L} > start_tok // {L}
-        ELSE FALSE END) AS crosses_boundary
-FROM pre"""
-
-
-def _mixture_weights_sql(weights: dict[str, float] | None = None) -> str:
-    """Exact twin of operators/sample.mixture_weights: integer token
-    sums (exact), DECIMAL(18,6) weight accumulation (order-free), the
-    same double divisions in the same operand order. SUM() windows cast
-    back to BIGINT/DOUBLE (DuckDB widens to HUGEINT/DECIMAL(38,6))."""
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        DEFAULT_TARGET_WEIGHTS,
-        mixture_weight_case_sql,
-    )
-
-    wcase = mixture_weight_case_sql(weights or DEFAULT_TARGET_WEIGHTS)
-    toks = textfn.TOKEN_COUNT_SQL.format(col="text")
-    return f"""
-WITH per AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum({toks}) AS BIGINT) AS tokens,
-         {wcase} AS weight
-  FROM documents GROUP BY source
-), sh AS (
-  SELECT *,
-         tokens / CAST(SUM(tokens) OVER () AS BIGINT) AS token_share,
-         CAST(weight AS DOUBLE)
-           / CAST(SUM(weight) OVER () AS DOUBLE) AS target_share
-  FROM per
-), r AS (
-  SELECT *, CASE WHEN tokens > 0 THEN target_share / token_share
-                 ELSE 0.0 END AS raw
-  FROM sh
-)
-SELECT source, n_docs, tokens, token_share,
-       CAST(weight AS DOUBLE) AS weight, target_share,
-       raw / MAX(raw) OVER () AS rate,
-       tokens * (raw / MAX(raw) OVER ()) AS expected_tokens
-FROM r"""
-
-
 def _ewma_sql() -> str:
     from apm_opentelemetry_collector_spark.operators.outliers import (
         ewma_anomalies_sql,
@@ -1430,23 +1113,9 @@ def _outliers_sql() -> str:
     return robust_zscore_sql("events", "value", "event_type", "event_id")
 
 
-def _wrs_sql() -> str:
-    from apm_opentelemetry_collector_spark.operators.sample import u48_sql
-
-    return f"""
-WITH keyed AS (
-  SELECT doc_id, source, CAST(length(text) + 1 AS BIGINT) AS weight,
-         ln({u48_sql("doc_id")}) / (length(text) + 1.0) AS wrs_key
-  FROM documents
-)
-SELECT doc_id, source, weight FROM keyed
-ORDER BY wrs_key DESC, doc_id ASC LIMIT {WRS_K}"""
-
-
 def oracle_sql() -> dict[str, str]:
     dim = fixtures.service_dim_values_sql("d")
     shards_sql = fixtures.shards_values_sql(SHARDS, "s")
-    g = textfn
 
     return {
         "transcripts_derive": sqlgen.chain_to_transcripts()
@@ -1557,25 +1226,29 @@ WITH sfx AS (
 SELECT g.name, g.host, g.ts, s.last_value
 FROM grid g ASOF LEFT JOIN sfx s
   ON g.name = s.name AND g.host = s.host AND g.ts >= s.ts""",
+        # sizes in UTF-8 bytes (strlen); an oversized text keeps its
+        # longest character prefix whose bytes fit beside the marker
+        # (a k-character prefix has at least k bytes, so k <= TRUNC_CAP)
         "doc_truncation": f"""
 WITH m AS (
   SELECT doc_id, text,
-         '[TRUNCATED reason=max_span_size size=' || CAST(length(text) AS VARCHAR) || '] ' AS marker,
-         length(text) > {TRUNC_CAP} AS over_cap
+         '[TRUNCATED reason=max_span_size size=' || CAST(strlen(text) AS VARCHAR) || '] ' AS marker,
+         strlen(text) > {TRUNC_CAP} AS over_cap
   FROM documents
+), t AS (
+  SELECT doc_id, over_cap,
+         CASE WHEN over_cap
+              THEN marker || substr(text, 1, list_max(list_filter(
+                     range(0, least(length(text), {TRUNC_CAP}) + 1),
+                     k -> strlen(substr(text, 1, k)) <= {TRUNC_CAP} - strlen(marker)))::BIGINT)
+              ELSE text END AS new_text
+  FROM m
 )
-SELECT doc_id,
-       over_cap AS truncated,
-       CASE WHEN over_cap
-            THEN length(marker || substr(text, 1, {TRUNC_CAP} - length(marker)))
-            ELSE length(text) END AS new_len,
-       CASE WHEN over_cap
-            THEN marker || substr(text, 1, {TRUNC_CAP} - length(marker))
-            ELSE text END AS new_text
-FROM m""",
+SELECT doc_id, over_cap AS truncated, strlen(new_text) AS new_len, new_text
+FROM t""",
         "xl_span_stats": f"""
 SELECT source, count(*) AS xl_spans, CAST(sum(n_chars) AS BIGINT) AS xl_size
-FROM documents WHERE length(text) > {TRUNC_CAP}
+FROM documents WHERE strlen(text) > {TRUNC_CAP}
 GROUP BY source""",
         "retry_outcomes": _retry_chain_sql()
         + """
@@ -1584,7 +1257,7 @@ FROM retry""",
         "sent_stats": _retry_chain_sql()
         + """
 SELECT sink, result_code, count(*) AS sent_spans,
-       CAST(sum(length(text)) AS BIGINT) AS sent_bytes,
+       CAST(sum(strlen(text)) AS BIGINT) AS sent_bytes,
        CAST(sum(attempts) AS BIGINT) AS total_attempts
 FROM retry GROUP BY sink, result_code""",
         "enqueued_stats": sqlgen.chain_to_outcomes()
@@ -1756,34 +1429,6 @@ SELECT event_type,
        quantile_cont(value, 0.95) AS p95,
        min(value) AS vmin, max(value) AS vmax
 FROM events GROUP BY event_type""",
-        "doc_fingerprint": f"""
-SELECT doc_id, {g.FINGERPRINT_SQL.format(col='text')} AS fingerprint FROM documents""",
-        "token_count": f"""
-SELECT doc_id, CAST({g.TOKEN_COUNT_SQL.format(col='text')} AS BIGINT) AS n_tokens
-FROM documents""",
-        "pii_scrub": f"""
-SELECT doc_id,
-  {g.scrub_sql('text')} AS scrubbed,
-  {", ".join(f"CAST({g.scrub_count_sql('text', n)} AS BIGINT) AS n_{n}" for n, _p, _m in g.SCRUB_RULES)}
-FROM documents""",
-        "token_count_bpe": f"""
-SELECT doc_id,
-  CAST({g.TOKEN_COUNT_SQL.format(col='text')} AS BIGINT) AS n_tokens_ws,
-  CAST({g.bpe_token_count_sql('text')} AS BIGINT) AS n_tokens_bpe
-FROM documents""",
-        "quality_score": f"""
-SELECT doc_id,
-  CAST(length(text) AS BIGINT) AS n_chars,
-  CAST({g.TOKEN_COUNT_SQL.format(col='text')} AS BIGINT) AS n_tokens,
-  CAST({g.PUNCT_COUNT_SQL.format(col='text')} AS BIGINT) AS n_punct,
-  ({g.PUNCT_COUNT_SQL.format(col='text')}) / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END) AS punct_ratio,
-  ({g.SPACE_COUNT_SQL.format(col='text')}) / (CASE WHEN length(text) > 0 THEN length(text) ELSE 1 END) AS space_ratio,
-  length(text) / (CASE WHEN ({g.TOKEN_COUNT_SQL.format(col='text')}) > 0
-                       THEN ({g.TOKEN_COUNT_SQL.format(col='text')}) ELSE 1 END) AS avg_token_len
-FROM documents""",
-        "lang_id": f"""
-SELECT doc_id, {g.lang_id_sql('text')} AS lang_pred FROM documents""",
-        "knn_bruteforce": _knn_sql(),
         "cms_user_counts": _cms_sql(),
         "hll_distinct_users": _hll_users_sql(),
         "bloom_membership": _bloom_sql(),
@@ -1821,26 +1466,7 @@ SELECT host, count(*) AS n_ticks,
        max(value) AS max_util
 FROM util GROUP BY host, island
 HAVING count(*) >= {ALERT_MIN_TICKS}""",
-        "stratified_sample": f"""
-WITH p AS (
-  SELECT doc_id, source,
-         (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-       + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-       + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-       + (instr('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) AS p16
-  FROM documents
-)
-SELECT doc_id, source FROM p
-WHERE p16 < {smp.stratified_threshold_sql(MIXTURE_RATES)}""",
-        "weighted_reservoir": _wrs_sql(),
-        "kmeans_assign": _kmeans_sql(),
-        "temperature_mixture": _temperature_mixture_sql(),
-        "pack_sequences": _pack_sequences_sql(),
-        "mixture_weights": _mixture_weights_sql(),
         "ewma_anomalies": _ewma_sql(),
-        "leakage_safe_split": f"""
-SELECT doc_id, {smp.split_case_sql(g.FINGERPRINT_SQL.format(col='text'))} AS split
-FROM documents""",
         "robust_outliers": _outliers_sql(),
         "events_funnel": _analytics.funnel_sql(),
         "cohort_retention": _analytics.cohort_retention_sql(),

@@ -15,12 +15,12 @@ Layout:
   session         — SparkSession builder tuned for the pipeline
   sources/        — transcript derivation + synthetic generators + fixtures
   functions/      — column-expression libraries (parse, sharding, sqlgen,
-                    sketch, text, vectors)
+                    sketch)
   operators/      — collector-path operators (validate, forward-fill,
                     truncate, enrich, route, pack, encode, aggregate,
-                    sample, translate), time-series and analytics operators
-                    (asof, resample, rates, skew, outliers, tdigest,
-                    analytics) and embedding clustering (clustering)
+                    sample, translate) and time-series and analytics
+                    operators (asof, resample, rates, skew, outliers,
+                    tdigest, analytics)
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant of the collector path
                     (stateful forward fill, watermarked counts, dedup,

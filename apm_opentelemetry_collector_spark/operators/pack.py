@@ -74,105 +74,3 @@ def record_stats(packed: DataFrame, group_cols: tuple[str, ...] = ("sink", "shar
         ).alias("partition_key"),
     )
 
-
-SEQ_LEN = 256  # context-window token budget; renders into the oracle
-
-
-def pack_sequences(
-    docs: DataFrame,
-    seq_len: int = SEQ_LEN,
-    n_ranges: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Concat-and-chunk sequence packing for LLM pretraining: documents
-    concatenated in `id_col` order into one token stream, the stream cut
-    into fixed `seq_len`-token context windows, documents split across
-    window boundaries (the standard GPT-style packing; contrast
-    assign_batches, which never splits a row across records). Emits per
-    document its global token offset and the chunk span it lands in —
-    the metadata a training loader needs to materialize windows and the
-    curation signal (boundary-crossing rate) packing QA dashboards plot.
-
-    The global prefix sum is the scale problem: a single ORDER BY window
-    funnels the corpus through ONE partition. Two-pass ranged design
-    instead (the textbook distributed scan): (1) ONE keys-only range
-    shuffle of (id, n_tokens) pairs — the text never moves; (2)
-    per-partition token totals (n_ranges rows, bounded by config) get
-    their exclusive prefix via a single-partition window over that TINY
-    table; (3) partition offsets broadcast-join back and the
-    within-partition running sum completes the global offset map-side of
-    any further exchange. The ranged projection is persisted and
-    reliably checkpointed so the totals branch and the join branch share
-    ONE range exchange (and spark_partition_id, which is only
-    well-defined against a materialized partitioning). Output is
-    independent of n_ranges (tested), so partition count is purely a
-    memory knob at 100 TB.
-
-    Chunk math (empty docs occupy no chunk: n_chunks=0, end=start,
-    crosses=false):
-      start_chunk = start_tok // seq_len
-      end_chunk   = (start_tok + n_tokens - 1) // seq_len
-      n_chunks    = end_chunk - start_chunk + 1
-
-    Oracle: __spark_entry__._pack_sequences_sql — one SUM() OVER
-    (ORDER BY) window; fine in DuckDB at sf, the exact thing the ranged
-    design replaces at scale. Reference analog: shard_encoder.go:274-296
-    packs by a size budget per record; this is the token-budget,
-    split-allowed variant training pipelines use.
-    """
-    from ..functions.text import token_count
-    from ..session import ensure_checkpoint_dir
-
-    spark = docs.sparkSession
-    if n_ranges is None:
-        n_ranges = spark.sparkContext.defaultParallelism
-    ranged = (
-        docs.select(F.col(id_col).alias("id"), token_count(text_col).alias("n_tokens"))
-        .repartitionByRange(n_ranges, F.col("id"))
-        .withColumn("pid", F.spark_partition_id())
-    )
-    ensure_checkpoint_dir(spark.sparkContext)
-    ranged = ranged.persist()
-    ranged_ck = ranged.checkpoint(eager=True)
-    ranged.unpersist()
-
-    totals = ranged_ck.groupBy("pid").agg(F.sum("n_tokens").alias("p_tokens"))
-    # single-partition window over ≤ n_ranges rows — bounded by config,
-    # never by data
-    w_pid = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "pid", F.coalesce(F.sum("p_tokens").over(w_pid), F.lit(0)).alias("p_offset")
-    )
-
-    w_in = (
-        Window.partitionBy("pid")
-        .orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    start = (
-        F.col("p_offset") + F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0))
-    ).alias("start_tok")
-    out = (
-        ranged_ck.join(F.broadcast(offsets), "pid")
-        .select(F.col("id").alias(id_col), "n_tokens", start)
-    )
-    sc = F.floor(F.col("start_tok") / F.lit(seq_len)).cast("bigint")
-    ec_hot = F.floor((F.col("start_tok") + F.col("n_tokens") - 1) / F.lit(seq_len)).cast(
-        "bigint"
-    )
-    ec = F.when(F.col("n_tokens") > 0, ec_hot).otherwise(sc)
-    return out.select(
-        id_col,
-        "n_tokens",
-        "start_tok",
-        sc.alias("start_chunk"),
-        ec.alias("end_chunk"),
-        F.when(F.col("n_tokens") > 0, ec_hot - sc + 1)
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("n_chunks"),
-        F.when(F.col("n_tokens") > 0, ec_hot > sc)
-        .otherwise(F.lit(False))
-        .alias("crosses_boundary"),
-    )

@@ -8,10 +8,7 @@ multi-executor deployment.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -104,48 +101,6 @@ def get_spark(
         )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def ensure_checkpoint_dir(sc) -> None:
-    """Point the context at a checkpoint dir if none is set.
-
-    On a real cluster the caller sets durable shared storage; a scratch
-    dir is the single-node stand-in, registered for removal at
-    interpreter exit so repeated checkpointing operators in a long
-    session don't leak files in /tmp (the ContextCleaner only removes
-    them with cleanCheckpoints=true, a startup-only conf).
-    """
-    if sc.getCheckpointDir() is None:
-        scratch = tempfile.mkdtemp(prefix="spark-ckpt-")
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-        sc.setCheckpointDir(scratch)
-
-
-def spread_small_scan(df, min_parts: int | None = None):
-    """Parallelize a few-split input (guide §2.5 "input skew": one huge
-    unsplittable file — or here, one SMALL single-row-group parquet file
-    — scans as a single task, so per-row-heavy downstream work like
-    stride-1 window explodes, n-gram folds and signature hashing
-    serializes on one core). If the scan plans fewer partitions than the
-    session's default parallelism, round-robin repartition to spread it;
-    an input that already has >= parallelism splits (any real-scale
-    corpus) passes through UNCHANGED — the check makes this
-    scale-adaptive, not a local-mode constant: at 100 TB the scan has
-    thousands of splits and no extra exchange is ever added.
-
-    Call it on the NARROW projection (id + the columns the operator
-    needs), never the raw table, so the added exchange moves only the
-    bytes the operator was going to shuffle anyway.
-    """
-    sc = df.sparkSession.sparkContext
-    target = min_parts or sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive: planning-only probe
-        return df
-    if n >= target:
-        return df
-    return df.repartition(target)
 
 
 def file_listing(spark: SparkSession, paths) -> list[tuple[str, int, int]]:

@@ -15,14 +15,14 @@ from pyspark.sql import SparkSession
 
 TABLES = (
     "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
+    "events documents"
 ).split()
 
 
 def register_views(
     spark: SparkSession, sf_dir: str, include_pipeline: bool = True
 ) -> list[str]:
-    """Register temp views: the ten parquet tables, `transcripts`
+    """Register temp views: the nine parquet tables, `transcripts`
     (frozen events→transcripts derivation), and — when
     include_pipeline — `routed` (enrich→route→outcome→shard→pack output).
     Returns the view names registered."""

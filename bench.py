@@ -79,23 +79,16 @@ def main() -> None:
         "q1_pricing_summary",
         "q3_shipping_priority",
         "q5_local_supplier_volume",
-        "knn_bruteforce",
         "asof_last_event",
         "metrics_resample",
         # r3 additions
-        "weighted_reservoir",
         "tdigest_value_quantiles",
-        "kmeans_assign",
         "events_funnel",
         "rate_limit_exceeded",
         # r4 additions
         "value_percentiles_tdigest",
         # r5 addition
         "ewma_anomalies",
-        # r6 additions
-        "pack_sequences",
-        "mixture_weights",
-        "temperature_mixture",
     ]
     # Per-query: best-of-REPS, INTERLEAVED round-robin so a transient host
     # slowdown (documented 3-5× contention spikes) hits all queries alike

@@ -26,7 +26,7 @@ def duck():
     con = duckdb.connect()
     for name in (
         "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
+        "documents".split()
     ):
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_TINY}/{name}.parquet')"

@@ -6,9 +6,9 @@ not check it: a name deleted from the package would surface only when
 that function runs. This walks the AST of those files instead and
 resolves each `from apm_opentelemetry_collector_spark... import name` and
 each `import apm_opentelemetry_collector_spark...` wherever it sits.
-The same walk also finds top-level definitions that nothing references,
-which a retired slice can leave behind. Imports the modules, starts no
-Spark session.
+The same walk also finds top-level definitions and constants that
+nothing references, which a retired slice can leave behind. Imports the
+modules, starts no Spark session.
 """
 
 from __future__ import annotations
@@ -86,9 +86,9 @@ def test_every_package_import_resolves():
 
 def _refs(tree: ast.AST):
     """(name, line) for every name the tree reads, attributes and
-    imported names included."""
+    imported names included; assignment targets are not reads."""
     for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
             yield node.id, node.lineno
         elif isinstance(node, ast.Attribute):
             yield node.attr, node.lineno
@@ -96,10 +96,28 @@ def _refs(tree: ast.AST):
             yield node.name.split(".")[-1], node.lineno
 
 
+def _top_level_names(path: str, tree: ast.Module):
+    """(name, first line, last line) of each top-level def, class and
+    assigned constant. Dunders are exempt, and so are config.py's
+    constants, which document the reference's defaults."""
+    constants = not path.endswith(os.path.join(PKG, "config.py"))
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            yield node.name, first, node.end_lineno
+        elif constants and isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                        yield n.id, node.lineno, node.end_lineno
+
+
 def test_every_top_level_definition_is_referenced():
-    """No dead definitions: every top-level def/class of the package and
-    of __spark_entry__.py is referenced by name somewhere in the walked
-    files, outside its own body (a recursive call does not count)."""
+    """No dead definitions: every top-level def, class and constant of
+    the package and of __spark_entry__.py is referenced by name
+    somewhere in the walked files, outside its own body (a recursive
+    call does not count)."""
     files = _files()
     trees = {p: ast.parse(open(p, encoding="utf-8").read(), p) for p in files}
     refs: dict[str, list[tuple[str, int]]] = {}
@@ -110,13 +128,10 @@ def test_every_top_level_definition_is_referenced():
     for path, tree in trees.items():
         if _package_of(path) is None and not path.endswith("__spark_entry__.py"):
             continue
-        for node in tree.body:
-            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
-                continue
-            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+        for name, first, last in _top_level_names(path, tree):
             if not any(
-                p != path or not first <= line <= node.end_lineno
-                for p, line in refs.get(node.name, ())
+                p != path or not first <= line <= last
+                for p, line in refs.get(name, ())
             ):
-                orphans.append(f"{os.path.relpath(path, _ROOT)}:{node.lineno}: {node.name}")
+                orphans.append(f"{os.path.relpath(path, _ROOT)}:{first}: {name}")
     assert not orphans, "unreferenced definitions:\n" + "\n".join(orphans)

@@ -395,37 +395,6 @@ def test_salted_join_equals_plain_join(spark):
     assert n_salts_used > 4
 
 
-def test_pii_scrub_rules_fire(spark):
-    """The scrub rules must actually fire (the testdata corpus contains
-    no PII, so the driver oracle alone would be vacuous)."""
-    from apm_opentelemetry_collector_spark.functions.text import (
-        scrub_counts,
-        scrub_text,
-    )
-
-    rows = [
-        (1, "contact alice.smith+x@example.co.uk or https://ex.com/a?b=1 now"),
-        (2, "server 192.168.001.250 responded; card 4111111111111111 used"),
-        (3, "clean text, no sensitive content here"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    counts = scrub_counts("text")
-    out = {
-        r["doc_id"]: r
-        for r in df.select(
-            "doc_id",
-            scrub_text("text").alias("s"),
-            *[c.alias(f"n_{n}") for n, c in counts.items()],
-        ).collect()
-    }
-    assert out[1]["s"] == "contact <EMAIL> or <URL> now"
-    assert out[1]["n_email"] == 1 and out[1]["n_url"] == 1
-    assert out[2]["s"] == "server <IP> responded; card <NUM> used"
-    assert out[2]["n_ipv4"] == 1 and out[2]["n_long_number"] == 1
-    assert out[3]["s"] == rows[2][1]
-    assert all(out[3][f"n_{n}"] == 0 for n in ("email", "url", "ipv4", "long_number"))
-
-
 def test_salted_join_rejects_outer_modes(spark):
     """ADVICE r2: right/full outer would replicate unmatched small-side
     rows once per salt — salted_join must refuse those modes."""
@@ -440,29 +409,6 @@ def test_salted_join_rejects_outer_modes(spark):
             salted_join(big, small, ["conv_id"], salt_from="turn_idx", how=how)
     # allowed modes still run
     assert salted_join(big, small, ["conv_id"], salt_from="turn_idx", how="left").count() == 1
-
-
-def test_weighted_reservoir_bias_and_determinism(spark):
-    """A-ES sampling: heavy items dominate the sample in proportion to
-    weight; result is deterministic across parallelism and exactly k."""
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        weighted_reservoir_sample,
-    )
-
-    rows = [(i, 100.0 if i < 500 else 1.0) for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id long, weight double")
-    got = weighted_reservoir_sample(df, 100, "weight")
-    ids = sorted(r["doc_id"] for r in got.collect())
-    assert len(ids) == 100 and len(set(ids)) == 100
-    heavy = sum(1 for i in ids if i < 500)
-    # E[heavy] ≈ 97 of 100 at 100:1 weights; far above any noise floor
-    assert heavy >= 85, heavy
-
-    again = sorted(
-        r["doc_id"]
-        for r in weighted_reservoir_sample(df.repartition(13), 100, "weight").collect()
-    )
-    assert again == ids
 
 
 def test_sample_conversations_keeps_whole_conversations(spark):
@@ -485,61 +431,6 @@ def test_sample_conversations_keeps_whole_conversations(spark):
     for bad in (-0.1, 1.5):
         with pytest.raises(ValueError, match="rate"):
             sample_conversations(tr, bad)
-
-
-def test_kmeans_deterministic_and_partitions_points(spark):
-    """Lloyd assignment: every point exactly once, deterministic across
-    parallelism, clusters converge on the planted structure."""
-    from apm_opentelemetry_collector_spark.operators.clustering import (
-        kmeans_assign,
-        kmeans_sizes,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    a = {r["vec_id"]: r["cluster"] for r in kmeans_assign(emb).collect()}
-    b = {
-        r["vec_id"]: r["cluster"]
-        for r in kmeans_assign(emb.repartition(7)).collect()
-    }
-    assert a == b and len(a) == emb.count()
-    sizes = {r["cluster"]: r["n_points"] for r in kmeans_sizes(emb).collect()}
-    assert sum(sizes.values()) == len(a) and len(sizes) >= 2
-
-
-def test_leakage_safe_split_groups_share_folds(spark):
-    """Exact duplicates (same fingerprint) must land in the SAME fold,
-    and the fold ratios must approximate the weights."""
-    from apm_opentelemetry_collector_spark.functions.text import fingerprint
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        leakage_safe_split,
-    )
-    from pyspark.sql import functions as FF
-
-    # 300 base docs, each duplicated once (whitespace/case variants
-    # normalize to the same fingerprint)
-    rows = []
-    for i in range(300):
-        rows.append((2 * i, f"Document body number {i} with content"))
-        rows.append((2 * i + 1, f"  DOCUMENT body NUMBER {i}   with CONTENT "))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = docs.select(
-        "doc_id",
-        fingerprint("text").alias("fp"),
-        leakage_safe_split(fingerprint("text")).alias("split"),
-    )
-    # same fingerprint → same split, for every group
-    n_violations = (
-        out.groupBy("fp")
-        .agg(FF.countDistinct("split").alias("k"), FF.count("*").alias("n"))
-        .filter((FF.col("k") > 1) | (FF.col("n") != 2))
-        .count()
-    )
-    assert n_violations == 0
-    frac = {
-        r["split"]: r["c"] / 600
-        for r in out.groupBy("split").agg(FF.count("*").alias("c")).collect()
-    }
-    assert 0.7 <= frac["train"] <= 0.9 and frac.get("test", 0) > 0.03
 
 
 def test_robust_outliers_flags_planted_spikes(spark):
@@ -659,109 +550,3 @@ def test_ewma_batch_matches_sequential_truth(spark):
     )
     assert got["is_anomaly"].tolist() == flags
     assert got.loc[[60, 200, 333], "is_anomaly"].all()
-
-
-def test_pack_sequences_matches_serial_packing(spark):
-    """Concat-and-chunk vs a from-the-definition serial walk, plus
-    n_ranges invariance (the two-pass ranged prefix sum must be a pure
-    implementation detail) and empty-doc semantics (occupies no chunk)."""
-    from apm_opentelemetry_collector_spark.operators.pack import pack_sequences
-
-    rows = [
-        (0, "a b c"),                       # 3 tokens
-        (1, " ".join(f"t{j}" for j in range(10))),
-        (2, "   "),                          # 0 tokens — no chunk
-        (3, "one"),
-        (4, " ".join(f"u{j}" for j in range(7))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for n_ranges in (1, 3, 8):
-        got = {
-            r["doc_id"]: r
-            for r in pack_sequences(docs, seq_len=4, n_ranges=n_ranges).collect()
-        }
-        # serial truth
-        start = 0
-        for doc_id, text in rows:
-            n = len(text.split())
-            r = got[doc_id]
-            assert r["n_tokens"] == n
-            assert r["start_tok"] == start
-            sc = start // 4
-            assert r["start_chunk"] == sc
-            if n:
-                ec = (start + n - 1) // 4
-                assert r["end_chunk"] == ec
-                assert r["n_chunks"] == ec - sc + 1
-                assert r["crosses_boundary"] == (ec > sc)
-            else:
-                assert (r["end_chunk"], r["n_chunks"], r["crosses_boundary"]) == (
-                    sc, 0, False,
-                )
-            start += n
-
-
-def test_mixture_weights_realizes_target_shares(spark):
-    """The binding source keeps rate 1; every surviving token mass is
-    proportional to the target weights (the defining property of the
-    no-upsampling mixing solve)."""
-    from apm_opentelemetry_collector_spark.operators.sample import mixture_weights
-
-    rows = (
-        [(i, "w " * 100, "big") for i in range(10)]
-        + [(100 + i, "w " * 10, "small") for i in range(10)]
-        + [(200 + i, "w " * 30, "mid") for i in range(10)]
-    )
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {
-        r["source"]: r
-        for r in mixture_weights(
-            docs, weights={"big": 1.0, "small": 1.0, "mid": 1.0}
-        ).collect()
-    }
-    # equal targets: the scarcest source (small) binds at rate 1
-    assert out["small"]["rate"] == 1.0
-    # expected tokens equalized across sources at the binding level
-    for s in ("big", "mid"):
-        assert abs(out[s]["expected_tokens"] - out["small"]["expected_tokens"]) < 1e-9
-    # skewed targets: 3:1:1 → expected tokens in 3:1:1 ratio
-    out2 = {
-        r["source"]: r
-        for r in mixture_weights(
-            docs, weights={"big": 3.0, "_default": 1.0}
-        ).collect()
-    }
-    assert abs(out2["big"]["expected_tokens"] / out2["mid"]["expected_tokens"] - 3.0) < 1e-9
-    assert max(r["rate"] for r in out2.values()) == 1.0
-
-
-    # doc 12 fragments into 3 pieces > max_pieces=2 → dropped (absent);
-    # doc 11 fully covered → absent; doc 13 clean → absent
-
-
-def test_temperature_mixture_t2_smoothing(spark):
-    """T=2 smoothing on a 90/10-token two-source corpus: smoothed
-    shares go ∝ sqrt (0.75/0.25), the low-resource source binds at
-    rate 1, and the big source downsamples to realize the smoothed
-    ratio exactly (hand-computed expectations)."""
-    from apm_opentelemetry_collector_spark.operators.sample import (
-        temperature_mixture,
-    )
-
-    rows = [
-        (1, "big", " ".join(f"w{i}" for i in range(90))),
-        (2, "small", " ".join(f"v{i}" for i in range(10))),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = {r["source"]: r.asDict() for r in temperature_mixture(docs).collect()}
-
-    assert out["big"]["tokens"] == 90 and out["small"]["tokens"] == 10
-    assert abs(out["big"]["token_share"] - 0.9) < 1e-12
-    # sqrt smoothing: 9.4868../(9.4868..+3.1622..) = 0.75
-    assert abs(out["big"]["smoothed_share"] - 0.75) < 1e-9
-    assert abs(out["small"]["smoothed_share"] - 0.25) < 1e-9
-    assert out["small"]["rate"] == 1.0
-    # big downsamples to 1/3: smoothed ratio 3:1 over a 9:1 corpus
-    assert abs(out["big"]["rate"] - 1 / 3) < 1e-9
-    assert abs(out["big"]["expected_tokens"] - 30.0) < 1e-6
-

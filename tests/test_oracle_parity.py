@@ -58,8 +58,53 @@ def test_query_matches_oracle(name, spark, duck):
         assert len(sdf.columns) > 0
         assert len(sdf) >= 0
         return
-    odf = duck.sql(ORACLES[name]).df()
+    _assert_frames_match(name, sdf, duck.sql(ORACLES[name]).df())
 
+
+# Spellings of 1-, 2-, 3- and 4-byte characters (and a mix), at character
+# lengths around and well past the byte cap of the truncation queries.
+MULTIBYTE_UNITS = ("a", "é", "中", "😀", "a中😀")
+MULTIBYTE_LENGTHS = (100, 133, 134, 200, 201, 399, 400, 401, 700)
+
+
+def test_truncation_queries_measure_bytes_on_multibyte_text(spark, tmp_path):
+    """doc_truncation and xl_span_stats size text in UTF-8 bytes on both
+    engines: the testdata documents are ASCII, where bytes and
+    characters agree, so this runs both queries and their oracles on a
+    small documents table of multibyte text around TRUNC_CAP."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    texts = [
+        (unit * n)[:n] for unit in MULTIBYTE_UNITS for n in MULTIBYTE_LENGTHS
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": texts,
+                "lang": ["xx"] * len(texts),
+                "source": [f"src{i % 3}" for i in range(len(texts))],
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'documents.parquet'}')"
+    )
+    try:
+        for name in ("doc_truncation", "xl_span_stats"):
+            sdf = QUERIES[name](spark, str(tmp_path)).toPandas()
+            _assert_frames_match(name, sdf, con.sql(ORACLES[name]).df())
+    finally:
+        con.close()
+
+
+def _assert_frames_match(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> None:
     assert len(sdf) == len(odf), f"{name}: rowcount spark={len(sdf)} duck={len(odf)}"
     assert sorted(map(str.lower, sdf.columns)) == sorted(
         map(str.lower, odf.columns)

@@ -266,21 +266,15 @@ def test_new_queries_no_python_nodes(spark):
     qs = entrymod.queries()
     for name in ("asof_last_event", "metrics_resample",
                  "q3_shipping_priority", "q5_local_supplier_volume",
-                 "q14_promo_revenue", "token_count_bpe",
+                 "q14_promo_revenue",
                  "events_sessionize_window", "cms_user_counts",
                  "hll_distinct_users", "alert_sustained_utilization",
                  "counter_rate", "cube_orders", "events_hourly_rollup",
-                 "stratified_sample", "weighted_reservoir",
-                 "tdigest_value_quantiles", "kmeans_assign",
-                 "leakage_safe_split", "robust_outliers",
+                 "tdigest_value_quantiles", "robust_outliers",
                  "events_funnel", "cohort_retention", "events_json_props",
                  "rate_limit_exceeded",
                  # r5
-                 "ewma_anomalies",
-                 # r6
-                 "pack_sequences",
-                 "mixture_weights",
-                 "temperature_mixture"):
+                 "ewma_anomalies"):
         plan = plan_of(qs[name](spark, SF))
         assert "BatchEvalPython" not in plan, name
 
@@ -314,23 +308,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
-
-
-def test_kmeans_assignment_no_sort_no_per_round_window(spark):
-    """VERDICT r3 #2: nearest-centroid assignment must be map-side — no
-    Sort anywhere in the plan at ANY iteration count (the row_number
-    window shuffled+sorted k× rows per Lloyd round; the min(struct)
-    swap degraded to SortAggregate), and the only Window is the k-row
-    seed numbering, independent of rounds."""
-    from apm_opentelemetry_collector_spark.operators.clustering import (
-        kmeans_assign,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    for iters in (2, 4):
-        plan = plan_of(kmeans_assign(emb, iters=iters))
-        assert "Sort" not in plan, plan
-        assert plan.count("Window") == 1, plan
 
 
 def test_ewma_batch_plan_vectorized_no_python(spark):

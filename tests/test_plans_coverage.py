@@ -31,8 +31,8 @@ def test_every_bench_headline_query_has_a_plan_section():
 
     # the reverse: no section and no plans/r07 snapshot outlives its
     # query. Snapshot names are matched whole, not by prefix: live names
-    # such as token_count prefix others (token_count_bpe), so a prefix
-    # match would keep a retired query's snapshots alive.
+    # such as value_percentiles prefix others (value_percentiles_tdigest),
+    # so a prefix match would keep a retired query's snapshots alive.
     names = set(entrymod.queries())
     stale = sorted(sections - names)
     assert not stale, f"BENCH/PLANS.md sections for removed queries: {stale}"

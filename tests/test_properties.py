@@ -150,22 +150,3 @@ def test_tdigest_two_level_merge_within_rank_tolerance(vals, n_parts, q):
     lo = np.quantile(srt, max(q - 0.05, 0.0), method="lower")
     hi = np.quantile(srt, min(q + 0.05, 1.0), method="higher")
     assert lo - 1e-9 <= est <= hi + 1e-9
-
-
-@given(st.integers(min_value=0, max_value=2**62))
-@settings(max_examples=80, deadline=None)
-def test_u48_sql_matches_python(doc_id):
-    """The nibble-arithmetic SQL twin of the 48-bit md5 uniform must
-    produce exactly the Python/Spark value for any id."""
-    import hashlib
-
-    import duckdb
-
-    from apm_opentelemetry_collector_spark.operators.sample import u48_sql
-
-    hx = hashlib.md5(str(doc_id).encode()).hexdigest()[:12]
-    want = (int(hx, 16) + 0.5) / float(1 << 48)
-    got = duckdb.sql(
-        f"SELECT {u48_sql('doc_id')} AS u FROM (SELECT {doc_id} AS doc_id)"
-    ).fetchone()[0]
-    assert got == want

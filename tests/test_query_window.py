@@ -23,22 +23,20 @@ EARLIER_ROUNDS = [
 ]
 
 MUST_BE_IN_WINDOW = {
-    # implementation-touched in r7 (the optimization round — outputs are
-    # hash-identical by construction, but the touched-goes-in-window
-    # policy makes the driver re-verify exactly the code that moved):
-    # spread_small_scan paths
-    "knn_bruteforce",
-    "kmeans_assign",
-    # implementation-touched since: byte-measured packing (strlen oracle,
-    # record_stats), the package's flushed/dropped aggregates, the single
-    # conversation sampler, and the UTF-8 cut and arithmetic marker
-    # length of XL truncation
+    # implementation-touched (outputs are hash-identical on the testdata,
+    # but the touched-goes-in-window policy makes the correctness check
+    # re-verify exactly the code that moved): byte-measured packing
+    # (strlen oracle, record_stats), the package's flushed/dropped
+    # aggregates, the single conversation sampler, the UTF-8 cut and
+    # arithmetic marker length of XL truncation, and byte-measured
+    # truncation and sent-bytes metrics
     "record_packing",
     "flushed_stats",
     "dropped_stats",
     "sampler_counts",
     "doc_truncation",
     "xl_span_stats",
+    "sent_stats",
 }
 
 
