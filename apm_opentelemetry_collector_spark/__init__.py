@@ -14,13 +14,11 @@ Layout:
   config          — reference defaults (exporter/omnishard/factory.go:31-35)
   session         — SparkSession builder tuned for the pipeline
   sources/        — transcript derivation + synthetic generators + fixtures
-  functions/      — column-expression libraries (parse, sharding, sqlgen,
-                    sketch)
+  functions/      — column-expression libraries (parse, sharding, sqlgen)
   operators/      — collector-path operators (validate, forward-fill,
                     truncate, enrich, route, pack, encode, aggregate,
                     sample, translate) and time-series and analytics
-                    operators (asof, resample, rates, skew, outliers,
-                    tdigest, analytics)
+                    operators (asof, resample, rates, skew, analytics)
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant of the collector path
                     (stateful forward fill, watermarked counts, dedup,

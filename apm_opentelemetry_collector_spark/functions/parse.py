@@ -39,7 +39,10 @@ from pyspark.sql import types as T
 
 SEVERITY_RE = r"\[(INFO|WARN|ERROR)\]"
 TOOL_CALL_RE = r"tool_call\(name=([A-Za-z0-9_-]+), arg=([A-Za-z0-9_-]+)\)"
-KV_RE = r"([A-Za-z_][A-Za-z0-9_]*)=([A-Za-z0-9_.-]+)"
+# A key never starts inside a word: without the lookbehind every start
+# position in a run of word characters rescans the run to its end looking
+# for '=', which is quadratic in the run's length.
+KV_RE = r"(?<![A-Za-z0-9_])([A-Za-z_][A-Za-z0-9_]*)=([A-Za-z0-9_.-]+)"
 
 PARSED_SCHEMA = T.StructType(
     [

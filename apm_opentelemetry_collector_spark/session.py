@@ -73,10 +73,11 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
         )
         # shuffle blocks never cross a NIC in local mode and the scratch
-        # disk outruns lz4 here (measured: ewma window shuffle 2.3 s →
-        # 1.4 s), so compression is pure CPU overhead locally. On a
-        # network-bound cluster set SPARK_GRAFT_SHUFFLE_COMPRESS=true
-        # (and consider zstd) — the byte ratio dominates there.
+        # disk outruns lz4 here (measured on a window-heavy query's
+        # shuffle: 2.3 s → 1.4 s), so compression is pure CPU overhead
+        # locally. On a network-bound cluster set
+        # SPARK_GRAFT_SHUFFLE_COMPRESS=true (and consider zstd) — the
+        # byte ratio dominates there.
         .config(
             "spark.shuffle.compress",
             os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"),

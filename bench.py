@@ -82,13 +82,8 @@ def main() -> None:
         "asof_last_event",
         "metrics_resample",
         # r3 additions
-        "tdigest_value_quantiles",
         "events_funnel",
         "rate_limit_exceeded",
-        # r4 additions
-        "value_percentiles_tdigest",
-        # r5 addition
-        "ewma_anomalies",
     ]
     # Per-query: best-of-REPS, INTERLEAVED round-robin so a transient host
     # slowdown (documented 3-5× contention spikes) hits all queries alike

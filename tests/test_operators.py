@@ -175,6 +175,9 @@ def test_parse_cols_equals_pandas_twin(spark):
             ("[WARN] tool_call(name=grep, arg=x1) k=v a_b=1 z=3.5",),
             ("[INFO] user=alice n=42 tool_call(name=ls-2, arg=dir) [ERROR]",),
             ("no markers at all",),
+            # a key never starts inside a word, so a long word scans once
+            ("9abc=1 x",),
+            ("a" * 20000 + " k=1",),
         ],
         "text string",
     )
@@ -184,6 +187,8 @@ def test_parse_cols_equals_pandas_twin(spark):
     assert all(r["sql"] == r["arrow"] for r in rows)
     assert rows[0]["sql"]["tool_call_name"] == "grep"
     assert rows[0]["sql"]["kv"] == {"k": "v", "a_b": "1", "z": "3.5"}
+    assert rows[3]["sql"]["kv"] == {}
+    assert rows[4]["sql"]["kv"] == {"k": "1"}
     with pytest.raises(TypeError):
         parse_cols(F.col("text"))
 
@@ -433,20 +438,6 @@ def test_sample_conversations_keeps_whole_conversations(spark):
             sample_conversations(tr, bad)
 
 
-def test_robust_outliers_flags_planted_spikes(spark):
-    from apm_opentelemetry_collector_spark.operators.outliers import (
-        robust_zscore_outliers,
-    )
-
-    rows = [(i, "g", float(50 + (i % 11))) for i in range(500)]
-    rows += [(1000, "g", 10_000.0), (1001, "g", -9_999.0)]
-    df = spark.createDataFrame(rows, "event_id long, event_type string, value double")
-    got = {r["event_id"]: r["z"] for r in
-           robust_zscore_outliers(df, "value", ["event_type"], ["event_id"]).collect()}
-    assert set(got) == {1000, 1001}
-    assert got[1000] > 3.5 and got[1001] < -3.5
-
-
 def test_funnel_requires_strict_order(spark):
     """A user with purchase BEFORE click must not count as completing
     the funnel; step counts are non-increasing."""
@@ -499,54 +490,3 @@ def test_sliding_rate_window_boundaries(spark):
     got = {(r["user_id"], r["ts"]): r["n_in_window"]
            for r in sliding_rate_exceeded(ev, ["user_id"], "ts", 60, 1).collect()}
     assert got == {(1, t(60)): 2, (1, t(120)): 2}
-
-
-def test_ewma_batch_matches_sequential_truth(spark):
-    """The truncated-Horner batch EWMA must reproduce the sequential
-    EWMA recurrence within the documented bound ~2·(1-α)^W·max|x| —
-    machine-precision for the default W — and flag the identical
-    anomaly set on a series with planted spikes."""
-    import numpy as np
-
-    from apm_opentelemetry_collector_spark.operators.outliers import (
-        EWMA_ALPHA,
-        EWMA_K,
-        EWMA_MIN_POINTS,
-        _ewma_window,
-        ewma_anomalies_batch,
-    )
-
-    rng = np.random.default_rng(7)
-    xs = (50 + 5 * rng.standard_normal(400)).round(3)
-    xs[[60, 200, 333]] = [500.0, -400.0, 900.0]  # planted spikes
-    rows = [(int(i), "h", float(x)) for i, x in enumerate(xs)]
-    df = spark.createDataFrame(rows, "seq long, host string, value double")
-
-    got = (
-        ewma_anomalies_batch(df, ["host"], ["seq"], "value")
-        .orderBy("seq")
-        .toPandas()
-    )
-
-    # sequential truth: the sequential EWMA recurrence
-    alpha, k, min_points = EWMA_ALPHA, EWMA_K, EWMA_MIN_POINTS
-    mean, var, n = 0.0, 0.0, 0
-    zs, flags = [], []
-    for x in xs:
-        z = (x - mean) / var**0.5 if n >= min_points and var > 0 else 0.0
-        zs.append(z)
-        flags.append(abs(z) > k)
-        if n == 0:
-            mean, var = float(x), 0.0
-        else:
-            d = x - mean
-            mean += alpha * d
-            var = (1 - alpha) * (var + alpha * d * d)
-        n += 1
-
-    bound = 2 * (1 - alpha) ** _ewma_window(alpha) * np.abs(xs).max() + 1e-9
-    assert np.abs(got["zscore"].to_numpy() - np.array(zs)).max() <= max(
-        bound * 100, 1e-6
-    )
-    assert got["is_anomaly"].tolist() == flags
-    assert got.loc[[60, 200, 333], "is_anomaly"].all()

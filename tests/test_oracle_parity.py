@@ -71,7 +71,9 @@ def test_truncation_queries_measure_bytes_on_multibyte_text(spark, tmp_path):
     """doc_truncation and xl_span_stats size text in UTF-8 bytes on both
     engines: the testdata documents are ASCII, where bytes and
     characters agree, so this runs both queries and their oracles on a
-    small documents table of multibyte text around TRUNC_CAP."""
+    small documents table of multibyte text around TRUNC_CAP. xl_size is
+    also checked against the byte sizes computed in Python, since both
+    engines could count characters alike."""
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -102,6 +104,13 @@ def test_truncation_queries_measure_bytes_on_multibyte_text(spark, tmp_path):
             _assert_frames_match(name, sdf, con.sql(ORACLES[name]).df())
     finally:
         con.close()
+    want = {}
+    for i, t in enumerate(texts):
+        n = len(t.encode())
+        if n > entrymod.TRUNC_CAP:
+            want[f"src{i % 3}"] = want.get(f"src{i % 3}", 0) + n
+    # sdf holds xl_span_stats, the loop's last query
+    assert dict(zip(sdf["source"], sdf["xl_size"])) == want
 
 
 def _assert_frames_match(name: str, sdf: pd.DataFrame, odf: pd.DataFrame) -> None:

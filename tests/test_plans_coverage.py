@@ -31,7 +31,7 @@ def test_every_bench_headline_query_has_a_plan_section():
 
     # the reverse: no section and no plans/r07 snapshot outlives its
     # query. Snapshot names are matched whole, not by prefix: live names
-    # such as value_percentiles prefix others (value_percentiles_tdigest),
+    # such as events_sessionize prefix others (events_sessionize_window),
     # so a prefix match would keep a retired query's snapshots alive.
     names = set(entrymod.queries())
     stale = sorted(sections - names)

@@ -76,77 +76,3 @@ def test_record_codec_round_trip(rows):
     data = RECORD_MAGIC + gzip.compress(payload)
     decoded = decode_record(data)
     assert decoded == [(c, i, t) for c, i, t in rows]
-
-
-@given(
-    st.lists(
-        st.tuples(st.floats(min_value=-1e6, max_value=1e6), st.integers(1, 1000)),
-        min_size=1,
-        max_size=400,
-    ),
-    st.floats(min_value=0.01, max_value=0.99),
-)
-@settings(max_examples=60, deadline=None)
-def test_tdigest_merge_invariants(points, q):
-    """Pure-Python core of the t-digest: weight conservation, sorted
-    means, bounded size, and quantile inside the data range — for any
-    weighted input."""
-    import numpy as np
-
-    from apm_opentelemetry_collector_spark.operators.tdigest import (
-        _merge,
-        _quantile,
-    )
-
-    pts = sorted(points)
-    means = np.array([p[0] for p in pts], dtype=float)
-    weights = np.array([p[1] for p in pts], dtype=float)
-    m, w = _merge(means, weights, 100)
-    assert abs(float(w.sum()) - float(weights.sum())) < 1e-6 * max(1.0, weights.sum())
-    assert np.all(np.diff(m) >= -1e-12)
-    assert len(m) <= 300
-    est = _quantile(m, w, q)
-    assert means.min() - 1e-9 <= est <= means.max() + 1e-9
-
-
-@given(
-    st.lists(
-        st.floats(min_value=-1e6, max_value=1e6), min_size=2, max_size=600
-    ),
-    st.integers(min_value=2, max_value=8),
-    st.floats(min_value=0.05, max_value=0.95),
-)
-@settings(max_examples=40, deadline=None)
-def test_tdigest_two_level_merge_within_rank_tolerance(vals, n_parts, q):
-    """SQL-aggregate composition property: splitting the values into
-    any number of partial digests and merging (the tdigest_merge_agg
-    path) must estimate q within ±0.05 RANK of the true quantile —
-    merging partials loses a little resolution vs a single-pass digest,
-    but the rank guarantee holds."""
-    import numpy as np
-
-    from apm_opentelemetry_collector_spark.operators.tdigest import (
-        _encode_digest,
-        _merge,
-        _merge_encoded,
-        _quantile,
-    )
-
-    arr = np.asarray(vals, dtype=float)
-    parts = []
-    for i in range(n_parts):
-        chunk = np.sort(arr[i::n_parts])
-        if len(chunk):
-            m, w = _merge(chunk, np.ones(len(chunk)), 100)
-            parts.append(_encode_digest(m, w))
-    m, w = _merge_encoded(parts, 100)
-    assert abs(float(w.sum()) - len(arr)) < 1e-6 * max(1.0, len(arr))
-    est = _quantile(m, w, q)
-    srt = np.sort(arr)
-    # rank-based bracket (floor/ceil order statistics, not value
-    # interpolation — the latter over-tightens for tiny n, where e.g.
-    # the exact rank-0 answer at n=2, q=0.25 sits below the linearly
-    # interpolated 0.2)
-    lo = np.quantile(srt, max(q - 0.05, 0.0), method="lower")
-    hi = np.quantile(srt, min(q + 0.05, 1.0), method="higher")
-    assert lo - 1e-9 <= est <= hi + 1e-9

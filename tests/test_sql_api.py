@@ -36,151 +36,3 @@ def test_sql_views_match_dataframe_plans(spark):
     ).collect()
     assert len(top) == 2
 
-
-def test_sql_digest_aggregates_compose_and_stay_arrow(spark):
-    """VERDICT r3 #4: digest partials as groupBy-composable SQL
-    aggregates — tdigest_agg builds an array-encoded digest,
-    tdigest_merge_agg merges digests, tdigest_quantile reads one.
-    Two-level (salted) merge must agree with the single-pass digest
-    within the sketch's ±0.03 rank tolerance, both must bracket the
-    exact quantiles, and the plan must stay Arrow-batched."""
-    import numpy as np
-
-    from apm_opentelemetry_collector_spark.operators.tdigest import (
-        register_digest_sql,
-    )
-
-    register_digest_sql(spark)
-    spark.read.parquet(f"{SF_TINY}/events.parquet").createOrReplaceTempView(
-        "ev_digest"
-    )
-    single = spark.sql("""
-        SELECT event_type,
-               tdigest_quantile(tdigest_agg(value), 0.5) AS p50,
-               tdigest_quantile(tdigest_agg(value), 0.95) AS p95
-        FROM ev_digest GROUP BY event_type""")
-    plan = single._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "ArrowAggregatePython" in plan or "AggregateInPandas" in plan
-
-    two_level = spark.sql("""
-        SELECT event_type,
-               tdigest_quantile(tdigest_merge_agg(d), 0.5) AS p50,
-               tdigest_quantile(tdigest_merge_agg(d), 0.95) AS p95
-        FROM (SELECT event_type, tdigest_agg(value) AS d
-              FROM ev_digest GROUP BY event_type, pmod(xxhash64(event_id), 8))
-        GROUP BY event_type""")
-
-    s1 = {r["event_type"]: r for r in single.collect()}
-    s2 = {r["event_type"]: r for r in two_level.collect()}
-    vals_by_type = {
-        r["event_type"]: np.sort(np.array(r["vals"]))
-        for r in spark.sql(
-            "SELECT event_type, collect_list(value) AS vals "
-            "FROM ev_digest GROUP BY event_type"
-        ).collect()
-    }
-    assert set(s1) == set(s2) == set(vals_by_type)
-    for etype, vals in vals_by_type.items():
-        for col, q in (("p50", 0.5), ("p95", 0.95)):
-            lo = np.quantile(vals, max(q - 0.03, 0.0))
-            hi = np.quantile(vals, min(q + 0.03, 1.0))
-            for src in (s1, s2):
-                assert lo - 1e-9 <= src[etype][col] <= hi + 1e-9, (
-                    etype, col, src[etype][col], lo, hi,
-                )
-
-
-def test_tdigest_quantiles_sql_generator_matches_engine_path(spark):
-    """r4 VERDICT #3: the generated two-level salted SQL must (a) agree
-    with the engine-path tdigest_quantiles within the sketch's rank
-    tolerance, (b) contain NO naive single-level aggregate over raw
-    values (the inner GROUP BY carries the salt), and (c) work with and
-    without group columns."""
-    import numpy as np
-
-    from apm_opentelemetry_collector_spark.operators.tdigest import (
-        register_digest_sql,
-        tdigest_quantiles,
-    )
-    from apm_opentelemetry_collector_spark.sources.sql_api import (
-        tdigest_quantiles_sql,
-    )
-
-    register_digest_sql(spark)
-    ev = spark.read.parquet(f"{SF_TINY}/events.parquet")
-    ev.createOrReplaceTempView("ev_gen")
-
-    qs = (0.5, 0.95)
-    sql = tdigest_quantiles_sql(
-        "ev_gen", "value", ("event_type",), qs, n_salt=8,
-        salt_expr="pmod(xxhash64(event_id), 8)",
-    )
-    # the unsafe form never appears: every tdigest_agg group carries the salt
-    inner = sql.split("GROUP BY")[1]
-    assert "xxhash64" in inner or "hash(" in inner
-    got = {(r["event_type"], r["q"]): r["est"] for r in spark.sql(sql).collect()}
-
-    eng = {
-        (r["event_type"], r["q"]): r["est"]
-        for r in tdigest_quantiles(
-            ev, "value", ["event_type"], "event_id", qs
-        ).collect()
-    }
-    assert set(got) == set(eng)
-
-    # both estimators must land within ±0.05 RANK of each other's value
-    # on the exact distribution (value-space comparison over-tightens)
-    vals_by_type = {
-        r["event_type"]: np.sort(np.array(r["vals"]))
-        for r in spark.sql(
-            "SELECT event_type, collect_list(value) AS vals "
-            "FROM ev_gen GROUP BY event_type"
-        ).collect()
-    }
-    for (et, q), est in got.items():
-        vals = vals_by_type[et]
-        rank_sql = np.searchsorted(vals, est) / len(vals)
-        rank_eng = np.searchsorted(vals, eng[(et, q)]) / len(vals)
-        assert abs(rank_sql - q) <= 0.05, (et, q)
-        assert abs(rank_sql - rank_eng) <= 0.05, (et, q)
-
-    # global (no group columns) form parses and returns one row per q
-    g = spark.sql(tdigest_quantiles_sql("ev_gen", "value", (), qs, n_salt=8))
-    rows = g.collect()
-    assert [r["q"] for r in rows] == sorted(qs)
-    assert all(r["est"] is not None for r in rows)
-
-
-def test_lint_digest_sql_flags_naive_form_and_passes_generator():
-    """r5 VERDICT 'What's missing #3': the naive single-level
-    tdigest_agg GROUP BY (no partial aggregation in grouped-agg pandas
-    UDFs → one aggregator holds every raw value of its group) must WARN
-    when linted; the safe generator's output must lint silent."""
-    import warnings
-
-    import pytest
-
-    from apm_opentelemetry_collector_spark.operators.tdigest import lint_digest_sql
-    from apm_opentelemetry_collector_spark.sources.sql_api import (
-        tdigest_quantiles_sql,
-    )
-
-    naive = (
-        "SELECT event_type, tdigest_quantile(tdigest_agg(value), 0.5) AS p50 "
-        "FROM events GROUP BY event_type"
-    )
-    with pytest.warns(UserWarning, match="two-level salted"):
-        findings = lint_digest_sql(naive)
-    assert len(findings) == 1
-
-    # warn=False returns findings without emitting
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert len(lint_digest_sql(naive, warn=False)) == 1
-
-    # the generator's output always carries the merge level → silent
-    safe = tdigest_quantiles_sql("events", "value", ("event_type",), (0.5, 0.95))
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        assert lint_digest_sql(safe) == []
