@@ -28,7 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from apm_opentelemetry_collector_spark.config import PipelineConfig
 from apm_opentelemetry_collector_spark.functions import sharding, sqlgen
 from apm_opentelemetry_collector_spark.functions.parse import with_parsed
-from apm_opentelemetry_collector_spark.operators import analytics as _analytics
 from apm_opentelemetry_collector_spark.operators.aggregate import (
     dropped_stats,
     flushed_stats,
@@ -40,7 +39,11 @@ from apm_opentelemetry_collector_spark.operators.pack import (
     assign_batches,
     record_stats,
 )
-from apm_opentelemetry_collector_spark.operators.route import fan_out, with_send_outcome
+from apm_opentelemetry_collector_spark.operators.route import (
+    drop_unowned,
+    fan_out,
+    with_send_outcome,
+)
 from apm_opentelemetry_collector_spark.operators.sample import sample_conversations
 from apm_opentelemetry_collector_spark.operators.translate import (
     memorymonitor_scrape,
@@ -76,7 +79,7 @@ def _chain_outcomes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _chain_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _chain_outcomes(spark, sf_dir)
-    return sharding.assign_shard(out, SHARDS, "conv_id")
+    return drop_unowned(sharding.assign_shard(out, SHARDS, "conv_id"))
 
 
 def q_transcripts_derive(spark, sf_dir):
@@ -240,93 +243,6 @@ def q_xl_span_stats(spark, sf_dir):
             F.sum("span_bytes").alias("xl_size"),
         )
     )
-
-
-def q_events_sessionize(spark, sf_dir):
-    """Gap-based sessionization over the events stream (30-min gap):
-    lag + cumsum — the batch analog of session_window (SURVEY §2.8 T5)."""
-    from pyspark.sql import Window as W
-
-    ev = _load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    # NTZ→timestamp (session is UTC)→double = fractional epoch seconds
-    # (microsecond exact), matching DuckDB's epoch(); gaps are
-    # differences, so the TZ interpretation cancels out regardless
-    secs = F.col("ts").cast("timestamp").cast("double")
-    gap = secs - F.lag(secs).over(w)
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = ev.withColumn(
-        "session_no",
-        F.sum(new_sess).over(w.rowsBetween(W.unboundedPreceding, 0)),
-    )
-    return sess.groupBy("user_id", "session_no").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-    )
-
-
-def q_metrics_resample(spark, sf_dir):
-    """Gap-fill resample of the linux memorymonitor series onto a 15 s
-    grid (forward fill per (name, host)); oracle = DuckDB generate_series
-    grid + native ASOF LEFT JOIN."""
-    from apm_opentelemetry_collector_spark.operators.resample import (
-        resample_ffill,
-    )
-
-    series = to_signalfx(memorymonitor_scrape(spark, os_name="linux")).select(
-        "name", "host", "ts", F.col("value").alias("last_value")
-    )
-    return resample_ffill(
-        series,
-        ["name", "host"],
-        "ts",
-        ["last_value"],
-        "2024-01-01 00:00:00",
-        "2024-01-01 00:01:30",
-        15,
-    )
-
-
-def q_asof_last_event(spark, sf_dir):
-    """Distributed as-of join: each turn picks up the latest event of its
-    user at or before the turn timestamp (union + window forward-fill —
-    one shuffle, no range scan). Oracle: DuckDB's native ASOF LEFT JOIN."""
-    from apm_opentelemetry_collector_spark.operators.asof import asof_join
-
-    turns = derive_transcripts(spark, sf_dir).select(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        F.expr("cast(substring(conv_id, 6) as bigint)").alias("user_id"),
-    )
-    ev = (
-        _load(spark, sf_dir, "events")
-        .groupBy("user_id", "ts")
-        .agg(F.max_by("event_type", "event_id").alias("last_event_type"))
-        .select(
-            "user_id",
-            "ts",
-            F.col("ts").alias("last_event_ts"),
-            "last_event_type",
-        )
-    )
-    out = asof_join(
-        turns, ev, ["user_id"], "ts", ["last_event_ts", "last_event_type"]
-    )
-    return out.select("conv_id", "turn_idx", "last_event_type", "last_event_ts")
-
-
-def q_events_sessionize_window(spark, sf_dir):
-    """T5 in its idiomatic home: F.session_window sessionization (same
-    plan runs on a stream; tests/test_streaming.py proves watermark
-    close-out). Oracle twin: lag+cumsum with a `>= gap` breaker —
-    session_window's half-open interval."""
-    from apm_opentelemetry_collector_spark.streaming.stream_pipeline import (
-        sessionize_session_window,
-    )
-
-    return sessionize_session_window(_load(spark, sf_dir, "events"))
 
 
 RETRY_CAP = 50  # small cap at test scale so overflow actually happens
@@ -638,120 +554,6 @@ def q_record_encode_stats(spark, sf_dir):
     )
 
 
-def q_counter_rate(spark, sf_dir):
-    """SignalFx counter semantics: delta of a cumulative counter with
-    reset handling (decrease ⇒ restart ⇒ delta = post-reset value).
-    The synthetic counter is a per-user running sum mod 1000, so real
-    resets occur; deltas come from one lag window per series."""
-    from pyspark.sql import Window as W
-
-    from apm_opentelemetry_collector_spark.operators.rates import counter_delta
-
-    ev = _load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    counter = (
-        F.sum(F.col("event_id") % 100 + 1).over(
-            w.rowsBetween(W.unboundedPreceding, 0)
-        )
-        % 1000
-    )
-    series = ev.select(
-        "user_id", "event_id", "ts", counter.alias("counter")
-    )
-    return counter_delta(
-        series, ["user_id"], "ts", "counter", order_cols=["event_id"]
-    ).select("user_id", "event_id", "counter", "delta")
-
-
-ALERT_UTIL_THRESHOLD = 50.0
-ALERT_MIN_TICKS = 2
-
-
-def q_alert_sustained_utilization(spark, sf_dir):
-    """Threshold alerting over the scrape series: per host, maximal runs
-    of consecutive ticks with memory.utilization ≥ threshold, kept when
-    the run lasts ≥ ALERT_MIN_TICKS — gaps-and-islands via the
-    row_number difference, the scalable streak detector (one window
-    sort per host, no self-join)."""
-    from pyspark.sql import Window as W
-
-    sfx = to_signalfx(memorymonitor_scrape(spark, os_name="linux"))
-    util = sfx.filter(
-        (F.col("name") == "memory.utilization")
-        & (F.col("value") >= ALERT_UTIL_THRESHOLD)
-    )
-    w = W.partitionBy("host").orderBy("ts")
-    tick = (
-        F.col("ts").cast("timestamp").cast("double") / 10
-    ).cast("bigint")  # scrape interval = 10 s
-    islands = util.withColumn(
-        "island", tick - F.row_number().over(w)
-    )
-    return (
-        islands.groupBy("host", "island")
-        .agg(
-            F.count("*").alias("n_ticks"),
-            F.min("ts").alias("streak_start"),
-            F.max("ts").alias("streak_end"),
-            F.max("value").alias("max_util"),
-        )
-        .filter(F.col("n_ticks") >= ALERT_MIN_TICKS)
-        .drop("island")
-    )
-
-
-RATE_WINDOW_S = 86400
-RATE_MAX_EVENTS = 4
-
-
-def q_rate_limit_exceeded(spark, sf_dir):
-    """Trailing-24h per-user rate limiting over events: rows whose
-    user exceeded RATE_MAX_EVENTS in the preceding day (RANGE-frame
-    window, single per-key sort, exact integer parity)."""
-    from apm_opentelemetry_collector_spark.operators.rates import (
-        sliding_rate_exceeded,
-    )
-
-    ev = _load(spark, sf_dir, "events")
-    out = sliding_rate_exceeded(ev, ["user_id"], "ts", RATE_WINDOW_S, RATE_MAX_EVENTS)
-    return out
-
-
-def q_events_funnel(spark, sf_dir):
-    """Ordered funnel (view → click → purchase, strictly increasing ts):
-    chained conditional min-aggregates, one scan per step against the
-    shrinking reached set. n_users non-increasing by construction."""
-    from apm_opentelemetry_collector_spark.operators.analytics import funnel_stages
-
-    return funnel_stages(_load(spark, sf_dir, "events"))
-
-
-def q_cohort_retention(spark, sf_dir):
-    """Weekly cohort retention matrix over events: integer week indices
-    (days-since-epoch // 7) so both engines bit-match the arithmetic."""
-    from apm_opentelemetry_collector_spark.operators.analytics import cohort_retention
-
-    return cohort_retention(_load(spark, sf_dir, "events"))
-
-
-def q_events_json_props(spark, sf_dir):
-    """JSON props extraction (the log-pipeline parse path for structured
-    payloads): get_json_object → typed column, malformed rows → NULL,
-    aggregated per event_type with exact op order."""
-    ev = _load(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.count(F.col("k")).cast("bigint").alias("n_parsed"),
-            F.sum("k").cast("bigint").alias("sum_k"),
-            (F.sum("k").cast("double") / F.count(F.col("k"))).alias("avg_k"),
-        )
-    )
-
-
 # ------------------------------------------------------------------ driver
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: per-sink outcome aggregate of the full pipeline at sf0.001."""
@@ -766,12 +568,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rows-only: gzip bytes are not SQL-expressible; the byte format and
         # batch shape are covered by the decode-exactly-once pytest oracle
         "record_encode_stats": q_record_encode_stats,
-        "events_funnel": q_events_funnel,
-        "cohort_retention": q_cohort_retention,
-        "events_json_props": q_events_json_props,
-        "rate_limit_exceeded": q_rate_limit_exceeded,
-        "alert_sustained_utilization": q_alert_sustained_utilization,
-        "counter_rate": q_counter_rate,
         # --- transcript pipeline (SURVEY.md §2: S1-S4, F1, P1, P9/J7,
         # J1-J3, J6, W1, W3, A1, A5-A9, F4, T3/T6, O3) -----------------------
         "transcripts_derive": q_transcripts_derive,
@@ -797,11 +593,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "xl_span_stats": q_xl_span_stats,
         # retry loop (T6, O3)
         "retry_outcomes": q_retry_outcomes,
-        # time/window ops
-        "asof_last_event": q_asof_last_event,
-        "metrics_resample": q_metrics_resample,
-        "events_sessionize": q_events_sessionize,
-        "events_sessionize_window": q_events_sessionize_window,
         # retry/backpressure taxonomy splits (S4, A3, A6)
         "sent_stats": q_sent_stats,
         "enqueued_stats": q_enqueued_stats,
@@ -957,23 +748,6 @@ SELECT conv_id, count(*) AS n_turns, count(DISTINCT role) AS n_roles,
        min(ts) AS min_ts, max(ts) AS max_ts
 FROM transcripts GROUP BY conv_id""",
         "metrics_translate": signalfx_oracle_sql(),
-        # the fake payload is a pure function of doc_id (header + 4×md5
-        # bytes), so even the mapInPandas decode path has an exact twin:
-        # pixel_checksum = 4 * (sum of md5 digest bytes) % 65536
-        "metrics_resample": f"""
-WITH sfx AS (
-  SELECT name, host, ts, value AS last_value
-  FROM ({signalfx_oracle_sql(oses=("linux",))})
-), grid AS (
-  SELECT k.name, k.host, g.gts AS ts
-  FROM (SELECT DISTINCT name, host FROM sfx) k,
-       generate_series(TIMESTAMP '2024-01-01 00:00:00',
-                       TIMESTAMP '2024-01-01 00:01:30',
-                       INTERVAL 15 SECOND) g(gts)
-)
-SELECT g.name, g.host, g.ts, s.last_value
-FROM grid g ASOF LEFT JOIN sfx s
-  ON g.name = s.name AND g.host = s.host AND g.ts >= s.ts""",
         # sizes in UTF-8 bytes (strlen); an oversized text keeps its
         # longest character prefix whose bytes fit beside the marker
         # (a k-character prefix has at least k bytes, so k <= TRUNC_CAP)
@@ -1023,57 +797,6 @@ FROM outcomes GROUP BY sink""",
 SELECT 'on' AS backpressure, 'refused' AS outcome, count(*) AS n FROM rej
 UNION ALL
 SELECT 'off', 'dropped', count(*) FROM rej""",
-        "asof_last_event": sqlgen.chain_to_transcripts()
-        + """
-, turns AS (
-  SELECT conv_id, turn_idx, ts,
-         CAST(substr(conv_id, 6) AS BIGINT) AS user_id
-  FROM transcripts
-), ev AS (
-  SELECT user_id, ts, max_by(event_type, event_id) AS last_event_type
-  FROM events GROUP BY user_id, ts
-)
-SELECT t.conv_id, t.turn_idx, e.last_event_type, e.ts AS last_event_ts
-FROM turns t ASOF LEFT JOIN ev e
-  ON t.user_id = e.user_id AND t.ts >= e.ts""",
-        "events_sessionize": """
-WITH gaps AS (
-  SELECT user_id, event_id, ts,
-         epoch(ts) - epoch(lag(ts) OVER w) AS gap
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), marked AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END AS new_sess
-  FROM gaps
-), sess AS (
-  SELECT user_id, event_id, ts,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_no
-  FROM marked
-)
-SELECT user_id, session_no, count(*) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end
-FROM sess GROUP BY user_id, session_no""",
-        "events_sessionize_window": """
-WITH gaps AS (
-  SELECT user_id, event_id, ts,
-         epoch(ts) - epoch(lag(ts) OVER w) AS gap
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), marked AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN gap IS NULL OR gap >= 1800 THEN 1 ELSE 0 END AS new_sess
-  FROM gaps
-), sess AS (
-  SELECT user_id, ts,
-         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_no
-  FROM marked
-)
-SELECT user_id, count(*) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end
-FROM sess GROUP BY user_id, session_no""",
         "topk_users_by_value": """
 WITH per_user AS (
   SELECT event_type, user_id,
@@ -1177,64 +900,4 @@ SELECT event_type,
        quantile_cont(value, 0.95) AS p95,
        min(value) AS vmin, max(value) AS vmax
 FROM events GROUP BY event_type""",
-        "counter_rate": """
-WITH series AS (
-  SELECT user_id, event_id, ts,
-         CAST(sum(event_id % 100 + 1) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) % 1000
-           AS BIGINT) AS counter
-  FROM events
-), lagged AS (
-  SELECT user_id, event_id, counter,
-         lag(counter) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM series
-)
-SELECT user_id, event_id, counter,
-       CAST(CASE WHEN prev IS NULL THEN NULL
-                 WHEN counter >= prev THEN counter - prev
-                 ELSE counter END AS BIGINT) AS delta
-FROM lagged""",
-        "alert_sustained_utilization": f"""
-WITH sfx AS (
-  SELECT name, host, ts, value
-  FROM ({signalfx_oracle_sql(oses=("linux",))})
-), util AS (
-  SELECT host, ts, value,
-         CAST(epoch(ts) / 10 AS BIGINT)
-           - row_number() OVER (PARTITION BY host ORDER BY ts) AS island
-  FROM sfx
-  WHERE name = 'memory.utilization' AND value >= {ALERT_UTIL_THRESHOLD}
-)
-SELECT host, count(*) AS n_ticks,
-       min(ts) AS streak_start, max(ts) AS streak_end,
-       max(value) AS max_util
-FROM util GROUP BY host, island
-HAVING count(*) >= {ALERT_MIN_TICKS}""",
-        "events_funnel": _analytics.funnel_sql(),
-        "cohort_retention": _analytics.cohort_retention_sql(),
-        "events_json_props": """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(k) AS BIGINT) AS n_parsed,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       CAST(sum(k) AS DOUBLE) / count(k) AS avg_k
-FROM (
-  SELECT event_type, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-  FROM events
-) GROUP BY event_type""",
-        # floor(epoch(...)) matches Spark's cast('timestamp').cast('long')
-        # whole-second flooring; DuckDB's bare epoch() keeps the
-        # microsecond fraction, which would miscount pairs exactly
-        # RATE_WINDOW_S seconds apart with the right sub-second phase
-        "rate_limit_exceeded": f"""
-SELECT user_id, ts, n_in_window FROM (
-  SELECT user_id, ts,
-         CAST(count(*) OVER (
-           PARTITION BY user_id
-           ORDER BY CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
-           RANGE BETWEEN {RATE_WINDOW_S} PRECEDING AND CURRENT ROW
-         ) AS BIGINT) AS n_in_window
-  FROM events
-) WHERE n_in_window > {RATE_MAX_EVENTS}""",
     }

@@ -17,12 +17,11 @@ Layout:
   functions/      — column-expression libraries (parse, sharding, sqlgen)
   operators/      — collector-path operators (validate, forward-fill,
                     truncate, enrich, route, pack, encode, aggregate,
-                    sample, translate) and time-series and analytics
-                    operators (asof, resample, rates, skew, analytics)
+                    sample, translate)
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant of the collector path
                     (stateful forward fill, watermarked counts, dedup,
-                    sessions, exactly-once sinks)
+                    exactly-once sinks)
 """
 
 __version__ = "0.1.0"

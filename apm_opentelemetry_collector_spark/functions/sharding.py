@@ -129,7 +129,8 @@ def assign_shard(
     per row), and the residual BETWEEN filter resolves prefixes straddling
     a shard boundary. Ranges are validated non-overlapping, so each row
     matches at most one shard. Rows matching no shard keep shard_id NULL
-    ('no shard found', encoder.go:462) → dropped as FatalEncodingError.
+    ('no shard found', encoder.go:462); route.drop_unowned then drops
+    them as FatalEncodingError.
     `shards` may be the config DataFrame or the plain shard list; the
     list path skips a shards_df + collect round trip per call
     (config is driver-side either way — the LUT below is identical

@@ -104,9 +104,15 @@ outcomes AS (
   FROM routed
 )"""
 
+# a send no shard owns (a gap in the config) is dropped; an earlier drop
+# keeps its own reason (lockstep with operators.route.drop_unowned)
 SHARDED_CTE = """
 sharded AS (
-  SELECT o.*, s.shard_id
+  SELECT o.* REPLACE (
+           CASE WHEN s.shard_id IS NULL THEN 'dropped' ELSE o.outcome END AS outcome,
+           CASE WHEN s.shard_id IS NULL AND o.outcome = 'accepted'
+                THEN 'FatalEncodingError' ELSE o.drop_reason END AS drop_reason),
+         s.shard_id
   FROM outcomes o
   LEFT JOIN {shards}
     ON md5(o.conv_id) >= s.start_key AND md5(o.conv_id) <= s.end_key

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..config import (
+    DROP_FATAL_ENCODING,
     DROP_RETRY_QUEUE_FULL,
     DROP_SEND_NOT_RETRYABLE,
     OUTCOME_ACCEPTED,
@@ -100,6 +101,23 @@ def with_send_outcome(routed: DataFrame, cfg: PipelineConfig | None = None) -> D
         *outcome_exprs(
             routed, is_drop, DROP_SEND_NOT_RETRYABLE, f"'{OUTCOME_ACCEPTED}'"
         ),
+    )
+
+
+def drop_unowned(sharded: DataFrame) -> DataFrame:
+    """A send that no shard owns ends dropped(FatalEncodingError).
+
+    A valid sharding config may leave gaps in the hash space; a row whose
+    hash key falls in one gets shard_id NULL from assign_shard, and the
+    reference drops it ('no shard found', encoder.go:451-464). An earlier
+    drop keeps its own reason. Column order is kept.
+    """
+    outcome, drop_reason = outcome_exprs(
+        sharded, "(shard_id IS NULL)", DROP_FATAL_ENCODING, "`outcome`"
+    )
+    new = {"outcome": outcome, "drop_reason": drop_reason}
+    return sharded.selectExpr(
+        *(new.get(c, q) for c, q in zip(sharded.columns, passthrough(sharded, ())))
     )
 
 

@@ -241,18 +241,15 @@ def to_signalfx(metrics: DataFrame) -> DataFrame:
     )
 
 
-def signalfx_oracle_sql(
-    oses: tuple[str, ...] = ("linux", "darwin", "windows"),
-    n_rounds: int = N_ROUNDS,
-    n_hosts: int = N_HOSTS,
-) -> str:
-    """DuckDB twin of to_signalfx(memorymonitor_scrape(os)) per OS, tagged
-    with an `os` column — same FIELD_SQL / DESCRIPTORS strings verbatim."""
+def signalfx_oracle_sql(n_rounds: int = N_ROUNDS, n_hosts: int = N_HOSTS) -> str:
+    """DuckDB twin of to_signalfx(memorymonitor_scrape(os)) for linux,
+    darwin and windows, tagged with an `os` column — same FIELD_SQL /
+    DESCRIPTORS strings verbatim."""
     fields_cols = ",\n         ".join(
         f"{sql} AS {k}" for k, sql in FIELD_SQL.items()
     )
     branches = []
-    for os_name in oses:
+    for os_name in ("linux", "darwin", "windows"):
         for name, unit, oc_type, _gate, val in os_descriptors(os_name):
             sf_type = "counter" if oc_type.startswith("CUMULATIVE") else "gauge"
             branches.append(

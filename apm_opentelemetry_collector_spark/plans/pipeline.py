@@ -27,7 +27,7 @@ from ..functions import sharding
 from ..operators.enrich import enrich
 from ..operators.forward_fill import forward_fill
 from ..operators.pack import assign_batches
-from ..operators.route import fan_out, with_send_outcome
+from ..operators.route import drop_unowned, fan_out, with_send_outcome
 from ..operators.truncate import truncate_oversize
 from ..operators.validate import split_valid
 from ..sources import fixtures
@@ -67,8 +67,9 @@ def run_pipeline(
     routed = fan_out(valid, routes)
     routed = with_send_outcome(routed, cfg)
     # shard assignment (J1-J3) on the routed stream, like the omnishard
-    # exporter sharding each pipeline's output
-    routed = sharding.assign_shard(routed, shard_list, "conv_id", "left")
+    # exporter sharding each pipeline's output; a send no shard owns is
+    # dropped
+    routed = drop_unowned(sharding.assign_shard(routed, shard_list, "conv_id", "left"))
     # record packing (W3): batch_no for accepted rows only, NULL for
     # dropped sends — they never reach a record (hooks.go:128-160 orders
     # drop before flush); one scan via the gated cumsum

@@ -13,17 +13,17 @@ of its time/state semantics (SURVEY.md §2.8):
     only cross-batch Python state
   - A1-A7 obsreport views            → windowed streaming aggregation
     with a watermark for late data (windowed_sink_counts)
-  - T5/T7 sessions, duplicate sends  → session_window and
-    dropDuplicatesWithinWatermark (sessionize_session_window,
-    dedup_stream), state bounded by the watermark
+  - T7 duplicate sends               → dropDuplicatesWithinWatermark
+    (dedup_stream), state bounded by the watermark
   - T6 retry/idempotence             → foreachBatch + idempotent writes
     (write_sinks_stream*; checkpointLocation gives exactly-once file
     sinks)
 
-Stateless stages (parse, enrich, fan-out, outcome) are the SAME operator
-functions as the batch plan — DataFrame transformations don't care which
-engine runs them; that is the point of declaring the pipeline
-relationally.
+The stream runs the stateful fill, then fan-out and send outcome: the
+SAME operator functions as the batch plan — DataFrame transformations
+don't care which engine runs them; that is the point of declaring the
+pipeline relationally. Truncation, enrich and shard assignment run in
+the batch job only.
 
 Cost of the stateful fill (forward_fill_stateful) per micro-batch:
   - State partitions = slots. A streaming query runs with AQE off, so
@@ -206,36 +206,6 @@ def dedup_stream(
     keys = keys or ["conv_id", "turn_idx"]
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
         keys
-    )
-
-
-def sessionize_session_window(
-    events: DataFrame, gap: str = "30 minutes", watermark: str | None = None
-) -> DataFrame:
-    """T5: gap-based sessionization in its idiomatic Spark home —
-    F.session_window — usable on both batch and streaming DataFrames.
-
-    Semantics twin of the batch lag+cumsum (q_events_sessionize):
-    identical sessions whenever no two consecutive events are EXACTLY
-    `gap` apart — session_window's interval is half-open (an event at
-    last_ts + gap starts a new session) while the batch rule's
-    `gap > G` breaker merges it. With microsecond timestamps the
-    boundary case has measure zero; the equality is asserted on real
-    data in tests/test_streaming.py.
-
-    Output: user_id, session_start, session_end, n_events — session_no
-    is an ordinal only the batch cumsum can assign (streaming sessions
-    emit unordered); join on (user_id, session_start) to correlate.
-    """
-    src = events.withWatermark("ts", watermark) if watermark else events
-    return (
-        src.groupBy("user_id", F.session_window("ts", gap))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-        .drop("session_window")
     )
 
 

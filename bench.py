@@ -79,11 +79,6 @@ def main() -> None:
         "q1_pricing_summary",
         "q3_shipping_priority",
         "q5_local_supplier_volume",
-        "asof_last_event",
-        "metrics_resample",
-        # r3 additions
-        "events_funnel",
-        "rate_limit_exceeded",
     ]
     # Per-query: best-of-REPS, INTERLEAVED round-robin so a transient host
     # slowdown (documented 3-5× contention spikes) hits all queries alike

@@ -6,7 +6,7 @@ work can time a single query (or a short list) in a fresh JVM with the
 noop sink, optionally under config overrides, without paying for the
 whole headline. Usage:
 
-    python bench_extra.py record_packing events_funnel --reps 3
+    python bench_extra.py record_packing conservation --reps 3
     python bench_extra.py pipeline_e2e_synth --rows 2000000
     SPARK_GRAFT_EXTRA_CONF="spark.foo=bar,spark.baz=1" python bench_extra.py ...
 

@@ -321,101 +321,6 @@ def test_resource_auto_detect_env_contract(spark, monkeypatch):
     assert bare["resource_type"].isna().all()
 
 
-# --- as-of join randomized equivalence (one Spark job, many timelines) -------
-def test_asof_join_matches_python_reference(spark):
-    import datetime as dt
-    import random
-
-    from apm_opentelemetry_collector_spark.operators.asof import asof_join
-
-    rng = random.Random(42)
-    t0 = dt.datetime(2024, 1, 1)
-    lrows, rrows = [], []
-    for k in range(25):
-        for ts in sorted(rng.sample(range(0, 10_000), rng.randint(1, 40))):
-            lrows.append((k, t0 + dt.timedelta(seconds=ts), f"L{k}:{ts}"))
-        for ts in sorted(rng.sample(range(0, 10_000), rng.randint(0, 25))):
-            rrows.append((k, t0 + dt.timedelta(seconds=ts), f"V{k}:{ts}"))
-
-    left = spark.createDataFrame(lrows, "k int, ts timestamp, payload string")
-    right = spark.createDataFrame(rrows, "k int, ts timestamp, v string")
-    got = {
-        (r["k"], r["ts"], r["payload"]): r["v"]
-        for r in asof_join(left, right, ["k"], "ts", ["v"]).collect()
-    }
-
-    by_key: dict[int, list] = {}
-    for k, ts, v in rrows:
-        by_key.setdefault(k, []).append((ts, v))
-    for k in by_key:
-        by_key[k].sort()
-    want = {}
-    for k, ts, payload in lrows:
-        match = None
-        for rts, v in by_key.get(k, []):
-            if rts <= ts:  # inclusive — latest right at or before left ts
-                match = v
-            else:
-                break
-        want[(k, ts, payload)] = match
-    assert len(got) == len(lrows)
-    assert got == want
-
-
-# --- salted join: identical results, hot key spread over n_salts tasks -------
-def test_salted_join_equals_plain_join(spark):
-    from apm_opentelemetry_collector_spark.operators.skew import salted_join
-
-    # hot key: conv 'hot' holds half the big side
-    big = spark.createDataFrame(
-        [("hot" if i % 2 == 0 else f"c{i % 37}", i, f"t{i}") for i in range(4000)],
-        "conv_id string, turn_idx long, text string",
-    )
-    small = spark.createDataFrame(
-        [("hot", "sinkH"), ("c1", "sink1"), ("c2", "sink2")],
-        "conv_id string, sink string",
-    )
-    plain = {
-        tuple(r)
-        for r in big.join(small, "conv_id").select(
-            "conv_id", "turn_idx", "sink"
-        ).collect()
-    }
-    salted = {
-        tuple(r)
-        for r in salted_join(big, small, ["conv_id"], salt_from="turn_idx")
-        .select("conv_id", "turn_idx", "sink")
-        .collect()
-    }
-    assert salted == plain and len(plain) > 2000
-
-    # the hot key's rows really spread: >1 distinct salt value observed
-    from pyspark.sql import functions as FF
-    n_salts_used = (
-        big.filter(FF.col("conv_id") == "hot")
-        .select(FF.pmod(FF.xxhash64("turn_idx"), FF.lit(8)).alias("s"))
-        .distinct()
-        .count()
-    )
-    assert n_salts_used > 4
-
-
-def test_salted_join_rejects_outer_modes(spark):
-    """ADVICE r2: right/full outer would replicate unmatched small-side
-    rows once per salt — salted_join must refuse those modes."""
-    import pytest
-
-    from apm_opentelemetry_collector_spark.operators.skew import salted_join
-
-    big = spark.createDataFrame([("a", 1)], "conv_id string, turn_idx long")
-    small = spark.createDataFrame([("a", "s")], "conv_id string, sink string")
-    for how in ("right", "full", "full_outer", "left_anti"):
-        with pytest.raises(ValueError, match="not equivalence-preserving"):
-            salted_join(big, small, ["conv_id"], salt_from="turn_idx", how=how)
-    # allowed modes still run
-    assert salted_join(big, small, ["conv_id"], salt_from="turn_idx", how="left").count() == 1
-
-
 def test_sample_conversations_keeps_whole_conversations(spark):
     """Consistent sampling: a conversation is kept or dropped whole, and
     rate 0.25 keeps exactly the conversations whose md5 starts with a hex
@@ -436,57 +341,3 @@ def test_sample_conversations_keeps_whole_conversations(spark):
     for bad in (-0.1, 1.5):
         with pytest.raises(ValueError, match="rate"):
             sample_conversations(tr, bad)
-
-
-def test_funnel_requires_strict_order(spark):
-    """A user with purchase BEFORE click must not count as completing
-    the funnel; step counts are non-increasing."""
-    import datetime as dt
-
-    from apm_opentelemetry_collector_spark.operators.analytics import funnel_stages
-
-    t = lambda s: dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)
-    rows = [
-        # u1 completes in order
-        (1, "view", t(0)), (1, "click", t(1)), (1, "purchase", t(2)),
-        # u2: purchase precedes click → stops at click
-        (2, "view", t(0)), (2, "purchase", t(1)), (2, "click", t(2)),
-        # u3: view only
-        (3, "view", t(0)),
-        # u4: never viewed → not even step 1
-        (4, "click", t(0)), (4, "purchase", t(1)),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, event_type string, ts timestamp")
-    got = {r["step"]: r["n_users"] for r in funnel_stages(ev).collect()}
-    assert got == {"view": 3, "click": 2, "purchase": 1}
-
-
-def test_json_props_malformed_rows_null(spark):
-    from pyspark.sql import functions as FF
-
-    rows = [(1, "a", '{"k": 5}'), (2, "a", "not json"), (3, "a", None),
-            (4, "a", '{"other": 1}')]
-    ev = spark.createDataFrame(rows, "event_id long, event_type string, props string")
-    k = FF.get_json_object("props", "$.k").cast("bigint")
-    got = {r["event_id"]: r["k"] for r in ev.select("event_id", k.alias("k")).collect()}
-    assert got == {1: 5, 2: None, 3: None, 4: None}
-
-
-def test_sliding_rate_window_boundaries(spark):
-    """RANGE frame is inclusive of both the boundary-aged event and the
-    current row; an event 1s past the window ages out."""
-    import datetime as dt
-
-    from apm_opentelemetry_collector_spark.operators.rates import (
-        sliding_rate_exceeded,
-    )
-
-    t = lambda s: dt.datetime(2024, 1, 1) + dt.timedelta(seconds=s)
-    rows = [(1, t(0)), (1, t(60)), (1, t(60 + 60)), (2, t(0)), (2, t(61))]
-    ev = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    # 60s window, max 1: user1's 2nd event sees [t0, t60] → n=2 (t0 at
-    # exactly -60 included); 3rd sees [t60, t120] → n=2. user2's 2nd
-    # sees only itself (t0 aged out at 61s) → never exceeds.
-    got = {(r["user_id"], r["ts"]): r["n_in_window"]
-           for r in sliding_rate_exceeded(ev, ["user_id"], "ts", 60, 1).collect()}
-    assert got == {(1, t(60)): 2, (1, t(120)): 2}

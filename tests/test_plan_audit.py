@@ -240,38 +240,12 @@ def test_job_runner_bounded_collects_only():
     assert any(m in second[-300:] for m in bounded_markers)
 
 
-def test_asof_join_single_exchange(spark):
-    # the union trick must cost ONE hash exchange on the key — the whole
-    # point of re-expressing as-of as a merged-timeline forward fill
-    from apm_opentelemetry_collector_spark.operators.asof import asof_join
-
-    left = spark.range(100).selectExpr(
-        "id % 10 AS k", "timestamp_seconds(id * 60) AS ts", "id AS payload"
-    )
-    right = spark.range(20).selectExpr(
-        "id % 10 AS k", "timestamp_seconds(id * 300) AS ts", "id * 2 AS v"
-    )
-    out = asof_join(left, right, ["k"], "ts", ["v"])
-    plan = plan_of(out)
-    assert plan.count("hashpartitioning(k") <= 1, plan
-    assert "BatchEvalPython" not in plan
-    # semantics spot-check: k=0, left ts=0 matches right ts=0 (inclusive)
-    row = {(r["k"], r["payload"]): r["v"] for r in out.collect()}
-    assert row[(0, 0)] == 0
-
-
 def test_new_queries_no_python_nodes(spark):
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    for name in ("asof_last_event", "metrics_resample",
-                 "q3_shipping_priority", "q5_local_supplier_volume",
-                 "q14_promo_revenue",
-                 "events_sessionize_window",
-                 "alert_sustained_utilization",
-                 "counter_rate", "cube_orders", "events_hourly_rollup",
-                 "events_funnel", "cohort_retention", "events_json_props",
-                 "rate_limit_exceeded"):
+    for name in ("q3_shipping_priority", "q5_local_supplier_volume",
+                 "q14_promo_revenue", "cube_orders", "events_hourly_rollup"):
         plan = plan_of(qs[name](spark, SF))
         assert "BatchEvalPython" not in plan, name
 

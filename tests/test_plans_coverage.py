@@ -30,9 +30,9 @@ def test_every_bench_headline_query_has_a_plan_section():
     )
 
     # the reverse: no section and no plans/r07 snapshot outlives its
-    # query. Snapshot names are matched whole, not by prefix: live names
-    # such as events_sessionize prefix others (events_sessionize_window),
-    # so a prefix match would keep a retired query's snapshots alive.
+    # query. Snapshot names are matched whole, not by prefix: one query
+    # name may prefix another (`x` and `x_window`), so a prefix match
+    # would keep a retired query's snapshots alive.
     names = set(entrymod.queries())
     stale = sorted(sections - names)
     assert not stale, f"BENCH/PLANS.md sections for removed queries: {stale}"

@@ -228,79 +228,6 @@ def test_windowed_counts_with_watermark(spark, tmp_path):
     assert got["sink_all"] == 10 and got["sink_tools"] == 10
 
 
-# --- T5: session_window sessionization (SURVEY §2.8) --------------------------
-def test_session_window_matches_batch_cumsum(spark):
-    """The F.session_window plan and the batch lag+cumsum assign identical
-    sessions on real data (identical gap semantics away from the
-    measure-zero exact-boundary case)."""
-    import __spark_entry__ as entrymod
-    from apm_opentelemetry_collector_spark.streaming.stream_pipeline import (
-        sessionize_session_window,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    key = ("user_id", "session_start", "session_end", "n_events")
-    want = {
-        tuple(r)
-        for r in entrymod.queries()["events_sessionize"](spark, sf)
-        .select(*key)
-        .collect()
-    }
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    got = {
-        tuple(r) for r in sessionize_session_window(events).select(*key).collect()
-    }
-    assert got == want and len(got) > 100
-
-
-def test_session_window_streaming_closes_on_watermark(spark, tmp_path):
-    """Streaming sessionization: a session emits once the watermark passes
-    session_end + gap; the still-open tail session stays in state."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-    from pyspark.sql import types as T
-
-    from apm_opentelemetry_collector_spark.streaming.stream_pipeline import (
-        run_to_memory,
-        sessionize_session_window,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    mins = lambda m: t0 + dt.timedelta(minutes=m)
-    path = str(tmp_path / "sess_in")
-    # file 1: user 1 session A (2 events), then a gap to session B
-    spark.createDataFrame(
-        [Row(user_id=1, ts=mins(0)), Row(user_id=1, ts=mins(10)),
-         Row(user_id=1, ts=mins(120))],
-        schema,
-    ).coalesce(1).write.mode("append").parquet(path)
-    # file 2: advances the watermark in a second micro-batch
-    spark.createDataFrame(
-        [Row(user_id=2, ts=mins(120))], schema
-    ).coalesce(1).write.mode("append").parquet(path)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    sess = sessionize_session_window(stream, gap="30 minutes", watermark="0 seconds")
-    run_to_memory(sess, "sess_out", output_mode="append")
-    rows = spark.sql("SELECT * FROM sess_out").collect()
-    emitted = {(r["user_id"], r["session_start"], r["n_events"]) for r in rows}
-    # session A closed (end+gap far below the t0+120min watermark)...
-    assert (1, mins(0), 2) in emitted
-    # ...while the sessions still inside watermark+gap remain open state
-    assert all(r["session_start"] != mins(120) for r in rows)
-
-
 # --- T2: rate-source scrape twin (monitor.go:48-61 ticker) --------------------
 def test_rate_scrape_stream_matches_batch_generator(spark):
     """memorymonitor_stream emits EXACTLY the batch generator's rows for
