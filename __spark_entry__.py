@@ -300,237 +300,6 @@ def q_backpressure_matrix(spark, sf_dir):
     return a.unionByName(b).select("backpressure", "outcome", "n")
 
 
-def q_topk_users_by_value(spark, sf_dir):
-    """Top-3 users per event_type by exact decimal value sum (window
-    row_number — the standard top-k-per-group plan)."""
-    from pyspark.sql import Window as W
-
-    ev = _load(spark, sf_dir, "events")
-    per_user = ev.groupBy("event_type", "user_id").agg(
-        F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value")
-    )
-    w = W.partitionBy("event_type").orderBy(
-        F.col("total_value").desc(), F.col("user_id").asc()
-    )
-    return (
-        per_user.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("event_type", "user_id", "total_value", "rnk")
-    )
-
-
-# ---------------------------------------------------------------- generic
-def q_q1_pricing_summary(spark, sf_dir):
-    li = _load(spark, sf_dir, "lineitem")
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(dec("l_extendedprice") * (F.lit(1).cast("decimal(18,2)") - dec("l_discount")))
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-def q_q3_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 adapted to the testdata schema: the canonical join-heavy
-    OLAP plan — broadcast the filtered customer dim (small side), shuffle
-    equi-join orders⨝lineitem on orderkey, decimal-exact revenue, top-10
-    with a deterministic tiebreak."""
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    cut = F.lit("1997-06-01 00:00:00").cast("timestamp")
-    cust = _load(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    )
-    orders = _load(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cut)
-    li = _load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cut)
-    out = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.sum(
-                dec("l_extendedprice")
-                * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-    return out.orderBy(F.col("revenue").desc(), F.col("l_orderkey")).limit(10)
-
-
-def q_q5_local_supplier_volume(spark, sf_dir):
-    """TPC-H Q5 adapted: 6-table star join (region→nation filter chain
-    broadcast, supplier/customer dims broadcast, orders⨝lineitem the only
-    fact shuffle) with the local-supplier constraint c_nationkey =
-    s_nationkey. Catalyst orders the joins; every dim side fits under the
-    broadcast threshold at any realistic dim size."""
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    lo = F.lit("1995-01-01 00:00:00").cast("timestamp")
-    hi = F.lit("1999-01-01 00:00:00").cast("timestamp")
-    cust = _load(spark, sf_dir, "customer")
-    orders = _load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi)
-    )
-    li = _load(spark, sf_dir, "lineitem")
-    supp = _load(spark, sf_dir, "supplier")
-    nation = _load(spark, sf_dir, "nation")
-    region = _load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(
-            F.broadcast(supp),
-            (li.l_suppkey == supp.s_suppkey)
-            & (cust.c_nationkey == supp.s_nationkey),
-        )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum(
-                dec("l_extendedprice")
-                * (F.lit(1).cast("decimal(18,2)") - dec("l_discount"))
-            )
-            .cast("double")
-            .alias("revenue")
-        )
-    )
-
-
-def q_q14_promo_revenue(spark, sf_dir):
-    """TPC-H Q14 adapted: promo vs total revenue per ship month —
-    broadcast part dim onto the lineitem fact, conditional decimal
-    aggregation, month rollup via date_trunc."""
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    li = _load(spark, sf_dir, "lineitem")
-    part = _load(spark, sf_dir, "part")
-    disc = dec("l_extendedprice") * (
-        F.lit(1).cast("decimal(18,2)") - dec("l_discount")
-    )
-    return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy(F.date_trunc("month", "l_shipdate").alias("ship_month"))
-        .agg(
-            F.sum(
-                F.when(F.col("p_type") == "PROMO", disc).otherwise(
-                    F.lit(0).cast("decimal(18,2)")
-                )
-            )
-            .cast("double")
-            .alias("promo_revenue"),
-            F.sum(disc).cast("double").alias("total_revenue"),
-        )
-    )
-
-
-def q_top_customers(spark, sf_dir):
-    orders = _load(spark, sf_dir, "orders")
-    cust = _load(spark, sf_dir, "customer")
-    return (
-        orders.join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_spent"),
-            F.count("*").alias("n_orders"),
-        )
-        .orderBy(F.col("total_spent").desc(), F.col("c_custkey").asc())
-        .limit(10)
-    )
-
-
-def q_distinct_users_per_type(spark, sf_dir):
-    ev = _load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count("*").alias("n_events"),
-    )
-
-
-def q_value_percentiles(spark, sf_dir):
-    """Exact interpolated percentiles per event_type (Spark percentile ≡
-    DuckDB quantile_cont, both linear interpolation over sorted values)."""
-    ev = _load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("p50"),
-        F.expr("percentile(value, 0.95)").alias("p95"),
-        F.min("value").alias("vmin"),
-        F.max("value").alias("vmax"),
-    )
-
-
-def q_rollup_orders(spark, sf_dir):
-    """ROLLUP subtotals (SURVEY §2.5: free from Spark, absent in the
-    reference): order counts + exact decimal totals per (priority,
-    status), per priority, and grand total."""
-    orders = _load(spark, sf_dir, "orders")
-    return orders.rollup("o_orderpriority", "o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
-    )
-
-
-def q_cube_orders(spark, sf_dir):
-    """CUBE: all grouping-set combinations over (priority, status) —
-    the remaining GROUPING SETS shape beside rollup and pivot."""
-    orders = _load(spark, sf_dir, "orders")
-    return orders.cube("o_orderpriority", "o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
-    )
-
-
-def q_events_hourly_rollup(spark, sf_dir):
-    """Event-time tumbling-window rollup (the batch face of the
-    streaming windowed aggregate): per hour × event_type — counts,
-    distinct users, exact decimal value total."""
-    ev = _load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("window.start").alias("hour_start"),
-            "event_type",
-            "n_events",
-            "n_users",
-            "total_value",
-        )
-    )
-
-
-def q_pivot_status_by_priority(spark, sf_dir):
-    """Pivot with a pinned column list (stable schema both engines)."""
-    orders = _load(spark, sf_dir, "orders")
-    statuses = ["F", "O", "P"]  # pinned → stable schema at every sf
-    out = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", statuses)
-        .count()
-        .na.fill(0)
-    )
-    for s in statuses:
-        out = out.withColumnRenamed(s, f"n_{s.lower()}")
-    return out
-
-
 def q_record_encode_stats(spark, sf_dir):
     """P5/P6 + A4 (rows-only check: gzip bytes are not SQL-expressible):
     encoded sink records with compress factors. The byte format itself is
@@ -597,19 +366,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sent_stats": q_sent_stats,
         "enqueued_stats": q_enqueued_stats,
         "backpressure_matrix": q_backpressure_matrix,
-        # generic engine sanity (Catalyst agg/join/topk/percentiles)
-        "topk_users_by_value": q_topk_users_by_value,
-        "q1_pricing_summary": q_q1_pricing_summary,
-        "q3_shipping_priority": q_q3_shipping_priority,
-        "q5_local_supplier_volume": q_q5_local_supplier_volume,
-        "q14_promo_revenue": q_q14_promo_revenue,
-        "top_customers": q_top_customers,
-        "distinct_users_per_type": q_distinct_users_per_type,
-        "value_percentiles": q_value_percentiles,
-        "rollup_orders": q_rollup_orders,
-        "cube_orders": q_cube_orders,
-        "events_hourly_rollup": q_events_hourly_rollup,
-        "pivot_status_by_priority": q_pivot_status_by_priority,
     }
 
 
@@ -797,107 +553,4 @@ FROM outcomes GROUP BY sink""",
 SELECT 'on' AS backpressure, 'refused' AS outcome, count(*) AS n FROM rej
 UNION ALL
 SELECT 'off', 'dropped', count(*) FROM rej""",
-        "topk_users_by_value": """
-WITH per_user AS (
-  SELECT event_type, user_id,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-  FROM events GROUP BY event_type, user_id
-), ranked AS (
-  SELECT event_type, user_id, total_value,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY total_value DESC, user_id ASC) AS rnk
-  FROM per_user
-)
-SELECT event_type, user_id, total_value, rnk FROM ranked WHERE rnk <= 3""",
-        "q1_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-           * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-       AS DOUBLE) AS sum_disc_price,
-  count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus""",
-        "q3_shipping_priority": """
-SELECT l_orderkey, o_orderdate, o_orderpriority,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-            AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1997-06-01 00:00:00'
-  AND l_shipdate > TIMESTAMP '1997-06-01 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey
-LIMIT 10""",
-        "q5_local_supplier_volume": """
-SELECT n_name,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-            AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = 'ASIA'
-  AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1999-01-01 00:00:00'
-GROUP BY n_name""",
-        "q14_promo_revenue": """
-SELECT date_trunc('month', l_shipdate) AS ship_month,
-       CAST(sum(CASE WHEN p_type = 'PROMO'
-                     THEN CAST(l_extendedprice AS DECIMAL(18,2))
-                          * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-                     ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS promo_revenue,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))))
-            AS DOUBLE) AS total_revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY date_trunc('month', l_shipdate)""",
-        "top_customers": """
-SELECT c_custkey, c_name,
-  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_spent,
-  count(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name
-ORDER BY total_spent DESC, c_custkey ASC
-LIMIT 10""",
-        "rollup_orders": """
-SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-FROM orders
-GROUP BY ROLLUP (o_orderpriority, o_orderstatus)""",
-        "cube_orders": """
-SELECT o_orderpriority, o_orderstatus, count(*) AS n_orders,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-FROM orders
-GROUP BY CUBE (o_orderpriority, o_orderstatus)""",
-        "events_hourly_rollup": """
-SELECT date_trunc('hour', ts) AS hour_start, event_type,
-       count(*) AS n_events,
-       count(DISTINCT user_id) AS n_users,
-       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-FROM events
-GROUP BY date_trunc('hour', ts), event_type""",
-        "pivot_status_by_priority": """
-SELECT o_orderpriority,
-       CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
-       CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
-       CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS n_p
-FROM orders GROUP BY o_orderpriority""",
-        "distinct_users_per_type": """
-SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
-FROM events GROUP BY event_type""",
-        "value_percentiles": """
-SELECT event_type,
-       quantile_cont(value, 0.5) AS p50,
-       quantile_cont(value, 0.95) AS p95,
-       min(value) AS vmin, max(value) AS vmax
-FROM events GROUP BY event_type""",
     }

@@ -13,17 +13,14 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents"
-).split()
+TABLES = ("events", "documents")
 
 
 def register_views(
     spark: SparkSession, sf_dir: str, include_pipeline: bool = True
 ) -> list[str]:
-    """Register temp views: the nine parquet tables, `transcripts`
-    (frozen events→transcripts derivation), and — when
+    """Register temp views: the `events` and `documents` parquet tables,
+    `transcripts` (frozen events→transcripts derivation), and — when
     include_pipeline — `routed` (enrich→route→outcome→shard→pack output)
     and `rejected`. Returns the view names registered."""
     from ..config import PipelineConfig

@@ -6,8 +6,8 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-The flagship measurement is the full parse→enrich→route→aggregate
-pipeline over a deterministic synthetic transcript table
+The flagship measurement is the full validate→fill→truncate→enrich→
+route→shard→pack job over a deterministic synthetic transcript table
 (SPARK_GRAFT_BENCH_ROWS turns, default 2,000,000) — the turns/sec
 number BASELINE.md targets. Per-query timings for representative
 operators at the sf dir ride along in "queries".
@@ -45,8 +45,8 @@ BENCH_CFG = PipelineConfig(n_shards=32)
 def time_pipeline_e2e(spark, n_rows: int, workdir: str) -> float:
     """Materialize a synthetic input table (untimed — it stands in for the
     pre-existing Iceberg table), then time the full job: scan → validate →
-    fill → parse → enrich → route → outcome → shard → pack → write routed
-    per-sink + rejected + metric aggregates + lineage manifest."""
+    fill → truncate → enrich → route → outcome → shard → pack → write
+    routed per-sink + rejected + metric aggregates + lineage manifest."""
     inp = os.path.join(workdir, "input")
     if not os.path.isdir(inp):
         tr = synth_transcripts(spark, n_rows=n_rows, n_convs=max(n_rows // 100, 1))
@@ -76,9 +76,6 @@ def main() -> None:
         "record_packing",
         "conservation",
         "metrics_translate",
-        "q1_pricing_summary",
-        "q3_shipping_priority",
-        "q5_local_supplier_volume",
     ]
     # Per-query: best-of-REPS, INTERLEAVED round-robin so a transient host
     # slowdown (documented 3-5× contention spikes) hits all queries alike

@@ -25,7 +25,7 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _files() -> list[str]:
     pats = (
-        "__spark_entry__.py", "bench.py", "bench_extra.py", "scripts/*.py",
+        "__spark_entry__.py", "bench.py", "scripts/*.py",
         "perfbench/*.py", "tests/*.py", f"{PKG}/**/*.py",
     )
     out = []

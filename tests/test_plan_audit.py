@@ -13,12 +13,10 @@ import re
 
 from pyspark.sql import functions as F
 
-from apm_opentelemetry_collector_spark.config import PipelineConfig
 from apm_opentelemetry_collector_spark.functions import sharding
-from apm_opentelemetry_collector_spark.operators.enrich import enrich
 from apm_opentelemetry_collector_spark.operators.forward_fill import forward_fill
-from apm_opentelemetry_collector_spark.operators.route import fan_out, with_send_outcome
 from apm_opentelemetry_collector_spark.operators.validate import split_valid
+from apm_opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from apm_opentelemetry_collector_spark.sources import fixtures
 from apm_opentelemetry_collector_spark.sources.transcripts import derive_transcripts
 
@@ -30,14 +28,8 @@ def plan_of(df) -> str:
 
 
 def _flagship(spark):
-    tr = derive_transcripts(spark, SF)
-    valid, _ = split_valid(tr)
-    filled = forward_fill(valid)
-    enriched = enrich(filled, fixtures.service_dim_df(spark))
-    routed = with_send_outcome(fan_out(enriched, fixtures.routes_df(spark)), PipelineConfig())
-    return sharding.assign_shard(
-        routed, sharding.shards_df(spark, sharding.even_shards(4)), "conv_id"
-    )
+    """The sink table run_job writes, over the derived transcripts."""
+    return run_pipeline(spark, derive_transcripts(spark, SF)).routed
 
 
 def test_no_rowwise_python_anywhere(spark):
@@ -45,22 +37,14 @@ def test_no_rowwise_python_anywhere(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_config_tables_are_local_relations(spark, tmp_path):
+def test_config_tables_are_local_relations(spark):
     """Routes, service_dim and the shard LUT are LocalTableScans: no
     ExistingRDD / PythonRDD scan, so no Python job runs per broadcast of
-    a config table, in the flagship chain or in run_pipeline over
-    parquet input."""
-    from apm_opentelemetry_collector_spark.plans.pipeline import run_pipeline
-    from apm_opentelemetry_collector_spark.sources.transcripts import synth_transcripts
-
-    path = str(tmp_path / "in")
-    synth_transcripts(spark, 2000, 40).write.parquet(path)
-    routed = run_pipeline(spark, spark.read.parquet(path)).routed
-    for df in (_flagship(spark), routed):
-        plan = plan_of(df)
-        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
-        # service_dim, routes and the shard LUT
-        assert plan.count("LocalTableScan") == 3, plan
+    a config table in the chain run_job writes."""
+    plan = plan_of(_flagship(spark))
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+    # service_dim, routes and the shard LUT
+    assert plan.count("LocalTableScan") == 3, plan
 
 
 def test_config_tables_equal_their_constants(spark):
@@ -241,12 +225,11 @@ def test_job_runner_bounded_collects_only():
 
 
 def test_new_queries_no_python_nodes(spark):
+    """No row-wise Python UDF in any driver query's plan."""
     import __spark_entry__ as entrymod
 
-    qs = entrymod.queries()
-    for name in ("q3_shipping_priority", "q5_local_supplier_volume",
-                 "q14_promo_revenue", "cube_orders", "events_hourly_rollup"):
-        plan = plan_of(qs[name](spark, SF))
+    for name, q in entrymod.queries().items():
+        plan = plan_of(q(spark, SF))
         assert "BatchEvalPython" not in plan, name
 
 
