@@ -35,15 +35,7 @@ from apm_opentelemetry_collector_spark.operators.aggregate import (
 )
 from apm_opentelemetry_collector_spark.operators.enrich import enrich
 from apm_opentelemetry_collector_spark.operators.forward_fill import forward_fill
-from apm_opentelemetry_collector_spark.operators.pack import (
-    assign_batches,
-    record_stats,
-)
-from apm_opentelemetry_collector_spark.operators.route import (
-    drop_unowned,
-    fan_out,
-    with_send_outcome,
-)
+from apm_opentelemetry_collector_spark.operators.pack import record_stats
 from apm_opentelemetry_collector_spark.operators.sample import sample_conversations
 from apm_opentelemetry_collector_spark.operators.translate import (
     memorymonitor_scrape,
@@ -51,6 +43,7 @@ from apm_opentelemetry_collector_spark.operators.translate import (
     to_signalfx,
 )
 from apm_opentelemetry_collector_spark.operators.validate import split_valid
+from apm_opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from apm_opentelemetry_collector_spark.sources import fixtures
 from apm_opentelemetry_collector_spark.sources.transcripts import derive_transcripts
 
@@ -65,21 +58,14 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- pipeline
-def _chain_valid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transcripts → protocol filter → forward fill (the admitted stream)."""
-    tr = derive_transcripts(spark, sf_dir)
-    valid, _ = split_valid(tr, backpressure_on=True)
-    return forward_fill(valid)
+def _routed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The job's sink table: run_pipeline's routed rows (every send with
+    its outcome, shard and batch_no)."""
+    return run_pipeline(spark, derive_transcripts(spark, sf_dir), CFG).routed
 
 
-def _chain_outcomes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    routed = fan_out(_chain_valid(spark, sf_dir), fixtures.routes_df(spark))
-    return with_send_outcome(routed, CFG)
-
-
-def _chain_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _chain_outcomes(spark, sf_dir)
-    return drop_unowned(sharding.assign_shard(out, SHARDS, "conv_id"))
+def _accepted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _routed(spark, sf_dir).filter(F.col("outcome") == "accepted")
 
 
 def q_transcripts_derive(spark, sf_dir):
@@ -118,7 +104,7 @@ def q_enrich_service(spark, sf_dir):
 
 
 def q_route_fanout(spark, sf_dir):
-    return _chain_outcomes(spark, sf_dir).select(
+    return _routed(spark, sf_dir).select(
         "sink", "pipeline_id", "conv_id", "turn_idx"
     )
 
@@ -131,13 +117,13 @@ def q_shard_assign(spark, sf_dir):
 
 
 def q_send_outcomes(spark, sf_dir):
-    return _chain_outcomes(spark, sf_dir).select(
+    return _routed(spark, sf_dir).select(
         "sink", "conv_id", "turn_idx", "outcome", "drop_reason"
     )
 
 
 def q_sink_outcome_counts(spark, sf_dir):
-    return sink_outcome_counts(_chain_outcomes(spark, sf_dir), CFG, salted=True)
+    return sink_outcome_counts(_routed(spark, sf_dir), CFG, salted=True)
 
 
 def q_receiver_counts(spark, sf_dir):
@@ -149,8 +135,7 @@ def q_receiver_counts(spark, sf_dir):
 
 
 def q_record_packing(spark, sf_dir):
-    accepted = _chain_sharded(spark, sf_dir).filter(F.col("outcome") == "accepted")
-    return record_stats(assign_batches(accepted, CFG))
+    return record_stats(_accepted(spark, sf_dir))
 
 
 def q_flushed_stats(spark, sf_dir):
@@ -158,11 +143,11 @@ def q_flushed_stats(spark, sf_dir):
 
 
 def q_dropped_stats(spark, sf_dir):
-    return dropped_stats(_chain_outcomes(spark, sf_dir))
+    return dropped_stats(_routed(spark, sf_dir))
 
 
 def q_conservation(spark, sf_dir):
-    return _chain_outcomes(spark, sf_dir).groupBy("sink").agg(
+    return _routed(spark, sf_dir).groupBy("sink").agg(
         F.count("*").alias("n_routed"),
         F.sum(F.when(F.col("outcome") == "accepted", 1).otherwise(0)).alias(
             "n_accepted"
@@ -252,8 +237,7 @@ def q_retry_outcomes(spark, sf_dir):
     """T6/O3: retryable sends, bounded retry queue, overflow drops."""
     from apm_opentelemetry_collector_spark.operators.route import with_retry_outcome
 
-    routed = fan_out(_chain_valid(spark, sf_dir), fixtures.routes_df(spark))
-    out = with_retry_outcome(routed, CFG, retry_queue_size=RETRY_CAP)
+    out = with_retry_outcome(_routed(spark, sf_dir), CFG, retry_queue_size=RETRY_CAP)
     return out.select(
         "sink", "conv_id", "turn_idx", "outcome", "drop_reason", "result_code", "attempts"
     )
@@ -261,12 +245,13 @@ def q_retry_outcomes(spark, sf_dir):
 
 def q_sent_stats(spark, sf_dir):
     """A6: omnishard_sent_spans/_bytes per (sink, result_code)
-    (telemetry.go:164-190)."""
+    (telemetry.go:164-190); a row dropped before the send has no
+    result_code and is not counted."""
     from apm_opentelemetry_collector_spark.operators.route import with_retry_outcome
 
-    routed = fan_out(_chain_valid(spark, sf_dir), fixtures.routes_df(spark))
-    out = with_retry_outcome(routed, CFG, retry_queue_size=RETRY_CAP)
-    return out.groupBy("sink", "result_code").agg(
+    out = with_retry_outcome(_routed(spark, sf_dir), CFG, retry_queue_size=RETRY_CAP)
+    sent = out.filter(F.col("result_code").isNotNull())
+    return sent.groupBy("sink", "result_code").agg(
         F.count("*").alias("sent_spans"),
         F.sum(F.octet_length("text")).alias("sent_bytes"),
         F.sum("attempts").alias("total_attempts"),
@@ -276,8 +261,7 @@ def q_sent_stats(spark, sf_dir):
 def q_enqueued_stats(spark, sf_dir):
     """A3: enqueued vs dequeued spans per sink (telemetry.go:96-126):
     enqueued = all routed rows, dequeued = rows surviving the send."""
-    out = _chain_outcomes(spark, sf_dir)
-    return out.groupBy("sink").agg(
+    return _routed(spark, sf_dir).groupBy("sink").agg(
         F.count("*").alias("enqueued_spans"),
         F.sum(F.when(F.col("outcome") == "accepted", 1).otherwise(0)).alias(
             "dequeued_spans"
@@ -306,9 +290,7 @@ def q_record_encode_stats(spark, sf_dir):
     covered by the decode-exactly-once pytest oracle (tests/test_encode)."""
     from apm_opentelemetry_collector_spark.operators.encode import encode_records
 
-    sharded = _chain_sharded(spark, sf_dir)
-    accepted = sharded.filter(F.col("outcome") == "accepted")
-    recs = encode_records(assign_batches(accepted, CFG))
+    recs = encode_records(_accepted(spark, sf_dir))
     return recs.select(
         "sink",
         "shard_id",
@@ -371,38 +353,33 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 # ------------------------------------------------------------- oracle SQL
 def _retry_chain_sql() -> str:
-    """ROUTED chain + deterministic retry-queue CTEs (mirrors
-    operators.route.with_retry_outcome)."""
+    """The job's chain + deterministic retry-queue CTEs (mirrors
+    operators.route.with_retry_outcome on run_pipeline's routed rows)."""
     return (
-        sqlgen.pipeline_with(
-            sqlgen.TRANSCRIPTS_CTE,
-            sqlgen.INVALID_CTE,
-            sqlgen.FILLED_CTE,
-            sqlgen.VALID_CTE,
-            sqlgen.ROUTED_CTE,
-        )
+        sqlgen.run_pipeline_sql(CFG)
         + f"""
 , sig AS (
-  SELECT routed.*,
-         substr(md5(conv_id || ':' || CAST(turn_idx AS VARCHAR) || ':' || sink), 1, 2) AS p2
-  FROM routed
+  SELECT packed.*,
+         substr(md5(conv_id || ':' || CAST(turn_idx AS VARCHAR) || ':' || sink), 1, 2) = 'fe'
+           AND outcome = 'accepted' AS slot,
+         outcome <> 'accepted' AND drop_reason <> 'SendErrNotRetryable' AS not_sent
+  FROM packed
 ), seq AS (
   SELECT sig.*,
-         sum(CASE WHEN p2 = 'fe' THEN 1 ELSE 0 END)
+         sum(CASE WHEN slot THEN 1 ELSE 0 END)
            OVER (PARTITION BY sink ORDER BY conv_id, turn_idx
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS retry_seq
   FROM sig
 ), retry AS (
-  SELECT seq.*,
-    CASE WHEN p2 = 'ff' THEN 'dropped'
-         WHEN p2 = 'fe' AND retry_seq > {RETRY_CAP} THEN 'dropped'
-         ELSE 'accepted' END AS outcome,
-    CASE WHEN p2 = 'ff' THEN 'SendErrNotRetryable'
-         WHEN p2 = 'fe' AND retry_seq > {RETRY_CAP} THEN 'RetryQueueFull' END AS drop_reason,
-    CASE WHEN p2 = 'ff' THEN 'FAILED_NOT_RETRYABLE'
-         WHEN p2 = 'fe' THEN 'FAILED_RETRYABLE'
+  SELECT seq.* REPLACE (
+    CASE WHEN slot AND retry_seq > {RETRY_CAP} THEN 'dropped' ELSE outcome END AS outcome,
+    CASE WHEN slot AND retry_seq > {RETRY_CAP} THEN 'RetryQueueFull'
+         ELSE drop_reason END AS drop_reason),
+    CASE WHEN not_sent THEN NULL
+         WHEN outcome <> 'accepted' THEN 'FAILED_NOT_RETRYABLE'
+         WHEN slot THEN 'FAILED_RETRYABLE'
          ELSE 'SUCCESS' END AS result_code,
-    CASE WHEN p2 = 'fe' AND retry_seq <= {RETRY_CAP} THEN 2 ELSE 1 END AS attempts
+    CASE WHEN not_sent THEN 0 WHEN slot AND retry_seq <= {RETRY_CAP} THEN 2 ELSE 1 END AS attempts
   FROM seq
 )"""
     )
@@ -411,6 +388,7 @@ def _retry_chain_sql() -> str:
 def oracle_sql() -> dict[str, str]:
     dim = fixtures.service_dim_values_sql("d")
     shards_sql = fixtures.shards_values_sql(SHARDS, "s")
+    chain = sqlgen.run_pipeline_sql(CFG)
 
     return {
         "transcripts_derive": sqlgen.chain_to_transcripts()
@@ -441,8 +419,8 @@ SELECT f.conv_id, f.turn_idx,
        COALESCE(d.resource_type, 'unknown') AS resource_type
 FROM filled f
 LEFT JOIN {dim} ON d.role = f.role AND d.tool = f.tool""",
-        "route_fanout": sqlgen.chain_to_outcomes()
-        + "\nSELECT sink, pipeline_id, conv_id, turn_idx FROM routed",
+        "route_fanout": chain
+        + "\nSELECT sink, pipeline_id, conv_id, turn_idx FROM packed",
         "shard_assign": f"""
 WITH convs AS (
   SELECT DISTINCT 'conv-' || lpad(CAST(user_id AS VARCHAR), 8, '0') AS conv_id
@@ -452,47 +430,47 @@ SELECT c.conv_id, s.shard_id
 FROM convs c
 LEFT JOIN {shards_sql}
   ON md5(c.conv_id) >= s.start_key AND md5(c.conv_id) <= s.end_key""",
-        "send_outcomes": sqlgen.chain_to_outcomes()
-        + "\nSELECT sink, conv_id, turn_idx, outcome, drop_reason FROM outcomes",
-        "sink_outcome_counts": sqlgen.chain_to_outcomes()
+        "send_outcomes": chain
+        + "\nSELECT sink, conv_id, turn_idx, outcome, drop_reason FROM packed",
+        "sink_outcome_counts": chain
         + f"""
 SELECT sink, CAST(substr(conv_id, 6) AS BIGINT) % {CFG.n_conv_buckets} AS conv_bucket,
        role, tool, outcome, count(*) AS n
-FROM outcomes GROUP BY ALL""",
-        "receiver_counts": sqlgen.chain_to_valid()
+FROM packed GROUP BY ALL""",
+        "receiver_counts": chain
         + """
 SELECT 'transcripts' AS receiver, 'received' AS status, count(*) AS n FROM valid
 UNION ALL
 SELECT 'transcripts', 'refused', count(*)
 FROM transcripts t JOIN invalid_convs i ON i.conv_id = t.conv_id""",
-        "record_packing": sqlgen.chain_to_packed(SHARDS, CFG.max_record_size)
+        "record_packing": chain
         + """
 SELECT sink, shard_id, batch_no,
        count(*) AS span_count,
        CAST(sum(strlen(text)) AS BIGINT) AS uncompressed_bytes,
        min(conv_id) AS partition_key
-FROM packed GROUP BY sink, shard_id, batch_no""",
-        "flushed_stats": sqlgen.chain_to_packed(SHARDS, CFG.max_record_size)
+FROM packed WHERE outcome = 'accepted' GROUP BY sink, shard_id, batch_no""",
+        "flushed_stats": chain
         + """
 , recs AS (
   SELECT sink, shard_id, batch_no, count(*) AS span_count,
          sum(strlen(text)) AS uncompressed_bytes
-  FROM packed GROUP BY sink, shard_id, batch_no
+  FROM packed WHERE outcome = 'accepted' GROUP BY sink, shard_id, batch_no
 )
 SELECT sink, shard_id, CAST(sum(span_count) AS BIGINT) AS flushed_spans,
        count(*) AS flushed_batches,
        CAST(sum(uncompressed_bytes) AS BIGINT) AS flushed_bytes
 FROM recs GROUP BY sink, shard_id""",
-        "dropped_stats": sqlgen.chain_to_outcomes()
+        "dropped_stats": chain
         + """
 SELECT sink, drop_reason, count(*) AS dropped_spans
-FROM outcomes WHERE outcome = 'dropped' GROUP BY sink, drop_reason""",
-        "conservation": sqlgen.chain_to_outcomes()
+FROM packed WHERE outcome = 'dropped' GROUP BY sink, drop_reason""",
+        "conservation": chain
         + """
 SELECT sink, count(*) AS n_routed,
        CAST(sum(CASE WHEN outcome = 'accepted' THEN 1 ELSE 0 END) AS BIGINT) AS n_accepted,
        CAST(sum(CASE WHEN outcome = 'dropped' THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
-FROM outcomes GROUP BY sink""",
+FROM packed GROUP BY sink""",
         "sampler_counts": sqlgen.chain_to_transcripts()
         + """
 SELECT role, count(*) AS n FROM transcripts
@@ -537,12 +515,12 @@ FROM retry""",
 SELECT sink, result_code, count(*) AS sent_spans,
        CAST(sum(strlen(text)) AS BIGINT) AS sent_bytes,
        CAST(sum(attempts) AS BIGINT) AS total_attempts
-FROM retry GROUP BY sink, result_code""",
-        "enqueued_stats": sqlgen.chain_to_outcomes()
+FROM retry WHERE result_code IS NOT NULL GROUP BY sink, result_code""",
+        "enqueued_stats": chain
         + """
 SELECT sink, count(*) AS enqueued_spans,
        CAST(sum(CASE WHEN outcome = 'accepted' THEN 1 ELSE 0 END) AS BIGINT) AS dequeued_spans
-FROM outcomes GROUP BY sink""",
+FROM packed GROUP BY sink""",
         "backpressure_matrix": sqlgen.pipeline_with(
             sqlgen.TRANSCRIPTS_CTE, sqlgen.INVALID_CTE
         )

@@ -2,8 +2,9 @@
 
 A brand-new Spark-first engine with the capabilities of
 signalfx/apm-opentelemetry-collector (the Omnition/SignalFx OpenTelemetry
-collector build): a parse → enrich → route → aggregate pipeline over tables
-of multi-turn conversation/agent transcripts
+collector build): a validate → fill → truncate → enrich → route → shard →
+pack pipeline (plans/pipeline.run_pipeline) with obsreport-style
+aggregates, over tables of multi-turn conversation/agent transcripts
 (conv_id, turn_idx, role, text, tool, ts).
 
 The reference is a Go channel/goroutine pipeline; this engine re-expresses
@@ -21,7 +22,7 @@ Layout:
   plans/          — end-to-end pipeline assembly + lineage/resume
   streaming/      — Structured Streaming variant of the collector path
                     (stateful forward fill, watermarked counts, dedup,
-                    exactly-once sinks)
+                    an epoch-idempotent parquet sink)
 """
 
 __version__ = "0.1.0"

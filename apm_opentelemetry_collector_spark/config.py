@@ -28,6 +28,10 @@ SEND_CONCURRENCY = 20
 NUM_WORKERS = 1
 # exporter/omnishard/exporter.go:33 — retry queue capacity (batches).
 RETRY_QUEUE_SIZE = 10_000
+# Deterministic retryable-send rule (operators.route.with_retry_outcome):
+# a send is FAILED_RETRYABLE iff md5(conv_id:turn_idx:sink) starts with
+# this value (~0.39%), disjoint from PipelineConfig.drop_md5_prefix.
+RETRY_MD5_PREFIX = "fe"
 # exporter/omnishard/factory.go:34 — batch flush interval (streaming only).
 BATCH_FLUSH_INTERVAL_SECS = 5
 # exporter/omnishard/shard_encoder.go:35 — 8-byte record magic prefix.

@@ -33,23 +33,22 @@ from ..config import PipelineConfig
 def assign_batches(
     df: DataFrame,
     cfg: PipelineConfig | None = None,
-    group_cols: tuple[str, ...] = ("sink", "shard_id"),
-    size_col: str = "text",
     gate: F.Column | None = None,
 ) -> DataFrame:
-    """Adds `batch_no` (int64) per group under the byte budget: rows are
-    sized by the UTF-8 byte length of `size_col` (the oracle's strlen).
+    """Adds `batch_no` (int64) per (sink, shard_id) under the byte budget:
+    rows are sized by the UTF-8 byte length of `text` (the oracle's
+    strlen).
 
     gate (optional bool Column): rows failing it contribute 0 bytes and
     get NULL batch_no — this packs exactly the gated subset (e.g. only
     accepted sends) without splitting the DataFrame into two scans.
     """
     cfg = cfg or PipelineConfig()
-    size = F.octet_length(size_col)
+    size = F.octet_length("text")
     if gate is not None:
         size = F.when(gate, size).otherwise(F.lit(0))
     w = (
-        Window.partitionBy(*group_cols)
+        Window.partitionBy("sink", "shard_id")
         .orderBy("conv_id", "turn_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -60,13 +59,13 @@ def assign_batches(
     return df.withColumn("batch_no", batch)
 
 
-def record_stats(packed: DataFrame, group_cols: tuple[str, ...] = ("sink", "shard_id")) -> DataFrame:
+def record_stats(packed: DataFrame) -> DataFrame:
     """Per-record stats: spanCount, uncompressedBytes, partition_key.
 
     partition_key = first row's conv_id in the defined order
     (shard_encoder.go:211 'first span's traceID').
     """
-    return packed.groupBy(*group_cols, "batch_no").agg(
+    return packed.groupBy("sink", "shard_id", "batch_no").agg(
         F.count("*").alias("span_count"),
         F.sum(F.octet_length("text")).alias("uncompressed_bytes"),
         F.min_by(

@@ -35,6 +35,7 @@ from ..config import (
     RESULT_FAILED_NOT_RETRYABLE,
     RESULT_FAILED_RETRYABLE,
     RESULT_SUCCESS,
+    RETRY_MD5_PREFIX,
     RETRY_QUEUE_SIZE,
     PipelineConfig,
 )
@@ -78,6 +79,13 @@ def outcome_exprs(
     return f"{outcome} AS outcome", f"{why} AS drop_reason"
 
 
+# md5 hex of a send's identity (conv_id:turn_idx:sink): its prefix
+# decides the send's deterministic result
+SEND_SIG = (
+    "md5(CAST(concat(conv_id, ':', CAST(turn_idx AS STRING), ':', sink) AS BINARY))"
+)
+
+
 def with_send_outcome(routed: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     """Deterministic per-(row, sink) send outcome + drop reason.
 
@@ -91,11 +99,7 @@ def with_send_outcome(routed: DataFrame, cfg: PipelineConfig | None = None) -> D
     # one selectExpr instead of two withColumns (r7 construction-cost
     # pass; run_pipeline builds this per job submission)
     pfx = cfg.drop_md5_prefix
-    sig = (
-        "md5(CAST(concat(conv_id, ':', CAST(turn_idx AS STRING), ':', sink) "
-        "AS BINARY))"
-    )
-    is_drop = f"(substring({sig}, 1, {len(pfx)}) = '{pfx}')"
+    is_drop = f"(substring({SEND_SIG}, 1, {len(pfx)}) = '{pfx}')"
     return routed.selectExpr(
         *passthrough(routed, ("outcome", "drop_reason")),
         *outcome_exprs(
@@ -125,7 +129,6 @@ def with_retry_outcome(
     routed: DataFrame,
     cfg: PipelineConfig | None = None,
     retry_queue_size: int = RETRY_QUEUE_SIZE,
-    retry_md5_prefix: str = "fe",
 ) -> DataFrame:
     """Retry-queue semantics (T6/O3) as deterministic columns.
 
@@ -135,54 +138,40 @@ def with_retry_outcome(
     with RetryQueueFull (exporter.go:213-221; drop code
     datadropcode.go:22).
 
-    Batch re-expression: a row is RETRYABLE iff md5(conv:turn:sink)
-    starts with `retry_md5_prefix` (disjoint from the non-retryable 'ff'
-    rule). Retryable rows ultimately succeed — attempts = 2 — except
-    those beyond the queue capacity per sink in the deterministic
-    (conv_id, turn_idx) order, which become dropped(RetryQueueFull).
-    The capacity check is a row_number window over retryable rows only
-    (rows gated out contribute nothing, like the gated packing cumsum).
+    Batch re-expression: the send outcome of with_send_outcome first; a
+    send still accepted is RETRYABLE iff md5(conv:turn:sink) starts with
+    RETRY_MD5_PREFIX (disjoint from the non-retryable cfg.drop_md5_prefix
+    rule) and takes a queue slot. Retryable sends ultimately succeed —
+    attempts = 2 — except those beyond the queue capacity per sink in the
+    deterministic (conv_id, turn_idx) order, which become
+    dropped(RetryQueueFull). A row dropped before the send (any drop but
+    the send's own, e.g. a fatal truncation) keeps its outcome and
+    reason, with result_code NULL and attempts 0.
 
     Output columns: outcome, drop_reason, result_code, attempts.
     """
-    cfg = cfg or PipelineConfig()
-    sig = F.md5(
-        F.concat(
-            F.col("conv_id"),
-            F.lit(":"),
-            F.col("turn_idx").cast("string"),
-            F.lit(":"),
-            F.col("sink"),
-        ).cast("binary")
+    sent = with_send_outcome(routed, cfg)
+    is_retry = f"(substring({SEND_SIG}, 1, {len(RETRY_MD5_PREFIX)}) = '{RETRY_MD5_PREFIX}')"
+    w = (
+        Window.partitionBy("sink")
+        .orderBy("conv_id", "turn_idx")
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    is_drop = F.substring(sig, 1, len(cfg.drop_md5_prefix)) == cfg.drop_md5_prefix
-    is_retry = F.substring(sig, 1, len(retry_md5_prefix)) == retry_md5_prefix
-    w = Window.partitionBy("sink").orderBy("conv_id", "turn_idx")
-    retry_seq = F.sum(F.when(is_retry, 1).otherwise(0)).over(
-        w.rowsBetween(Window.unboundedPreceding, 0)
+    queued = sent.withColumn(
+        "_slot", F.expr(f"{is_retry} AND `outcome` = '{OUTCOME_ACCEPTED}'")
+    ).withColumn("_retry_seq", F.sum(F.col("_slot").cast("int")).over(w))
+    overflow = f"(_slot AND _retry_seq > {int(retry_queue_size)})"
+    not_sent = (
+        f"(`outcome` <> '{OUTCOME_ACCEPTED}' "
+        f"AND `drop_reason` <> '{DROP_SEND_NOT_RETRYABLE}')"
     )
-    overflow = is_retry & (retry_seq > retry_queue_size)
-
-    outcome = (
-        F.when(is_drop, OUTCOME_DROPPED)
-        .when(overflow, OUTCOME_DROPPED)
-        .otherwise(OUTCOME_ACCEPTED)
-    )
-    drop_reason = (
-        F.when(is_drop, DROP_SEND_NOT_RETRYABLE)
-        .when(overflow, DROP_RETRY_QUEUE_FULL)
-        .otherwise(F.lit(None).cast("string"))
-    )
-    result_code = (
-        F.when(is_drop, RESULT_FAILED_NOT_RETRYABLE)
-        .when(is_retry & ~overflow, RESULT_FAILED_RETRYABLE)  # first attempt
-        .when(overflow, RESULT_FAILED_RETRYABLE)
-        .otherwise(RESULT_SUCCESS)
-    )
-    attempts = F.when(is_retry & ~overflow, 2).when(overflow | is_drop, 1).otherwise(1)
-    return (
-        routed.withColumn("outcome", outcome)
-        .withColumn("drop_reason", drop_reason)
-        .withColumn("result_code", result_code)
-        .withColumn("attempts", attempts.cast("int"))
+    return queued.selectExpr(
+        *passthrough(sent, ("outcome", "drop_reason")),
+        *outcome_exprs(sent, overflow, DROP_RETRY_QUEUE_FULL, "`outcome`"),
+        f"CASE WHEN {not_sent} THEN CAST(NULL AS STRING) "
+        f"WHEN `outcome` <> '{OUTCOME_ACCEPTED}' THEN '{RESULT_FAILED_NOT_RETRYABLE}' "
+        f"WHEN _slot THEN '{RESULT_FAILED_RETRYABLE}' "
+        f"ELSE '{RESULT_SUCCESS}' END AS result_code",
+        f"CAST(CASE WHEN {not_sent} THEN 0 WHEN _slot AND NOT {overflow} THEN 2 "
+        "ELSE 1 END AS INT) AS attempts",
     )

@@ -1,4 +1,4 @@
-"""End-to-end pipeline assembly: validate → enrich → route → pack.
+"""End-to-end pipeline assembly: validate → truncate → enrich → route → pack.
 
 The Spark lifecycle equivalent of the reference's EP1 flagship path
 (SURVEY.md §3): scan transcripts → validate (receiver protocol) →
@@ -6,6 +6,10 @@ forward-fill (node multiplexing) → truncate (XL spans) → enrich
 (resource processor, broadcast) → fan-out (pipelines config) → send
 outcomes (exporter result codes) → shard assignment (omnishard md5
 ranges) → record packing.
+
+This is the package's one definition of the collector chain: the batch
+job, the driver's collector queries and sql_api's `routed` view all read
+it, and functions/sqlgen.run_pipeline_sql is its DuckDB twin.
 
 Everything is lazy; `run_pipeline` builds exactly the chain the batch job
 writes: `routed` is the sink table (plans/job.py adds only conv_bucket)
@@ -44,14 +48,11 @@ def run_pipeline(
     transcripts: DataFrame,
     cfg: PipelineConfig | None = None,
     routes: DataFrame | None = None,
-    service_dim: DataFrame | None = None,
     shards: list[dict] | None = None,
 ) -> PipelineResult:
     cfg = cfg or PipelineConfig()
     routes = routes if routes is not None else fixtures.routes_df(spark)
-    service_dim = (
-        service_dim if service_dim is not None else fixtures.service_dim_df(spark)
-    )
+    service_dim = fixtures.service_dim_df(spark)
     shard_list = shards if shards is not None else sharding.even_shards(cfg.n_shards)
 
     # receiver stage: protocol validation (F1/S4) + node multiplexing (S3/W1)

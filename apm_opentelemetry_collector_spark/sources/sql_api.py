@@ -16,13 +16,12 @@ from pyspark.sql import SparkSession
 TABLES = ("events", "documents")
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, include_pipeline: bool = True
-) -> list[str]:
+def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register temp views: the `events` and `documents` parquet tables,
-    `transcripts` (frozen events→transcripts derivation), and — when
-    include_pipeline — `routed` (enrich→route→outcome→shard→pack output)
-    and `rejected`. Returns the view names registered."""
+    `transcripts` (frozen events→transcripts derivation), `routed`
+    (run_pipeline's sink table: validate→fill→truncate→enrich→route→
+    outcome→shard→pack) and `rejected`. Returns the view names
+    registered."""
     from ..config import PipelineConfig
     from ..plans.pipeline import run_pipeline
     from .transcripts import derive_transcripts
@@ -36,10 +35,8 @@ def register_views(
     tr = derive_transcripts(spark, sf_dir)
     tr.createOrReplaceTempView("transcripts")
     names.append("transcripts")
-    if include_pipeline:
-        res = run_pipeline(spark, tr, PipelineConfig())
-        res.routed.createOrReplaceTempView("routed")
-        res.rejected.createOrReplaceTempView("rejected")
-        names += ["routed", "rejected"]
-    return names
+    res = run_pipeline(spark, tr, PipelineConfig())
+    res.routed.createOrReplaceTempView("routed")
+    res.rejected.createOrReplaceTempView("rejected")
+    return names + ["routed", "rejected"]
 

@@ -16,8 +16,8 @@ of its time/state semantics (SURVEY.md §2.8):
   - T7 duplicate sends               → dropDuplicatesWithinWatermark
     (dedup_stream), state bounded by the watermark
   - T6 retry/idempotence             → foreachBatch + idempotent writes
-    (write_sinks_stream*; checkpointLocation gives exactly-once file
-    sinks)
+    (write_sinks_stream: an epoch directory per micro-batch, overwritten
+    on replay; checkpointLocation gives exactly-once file sinks)
 
 The stream runs the stateful fill, then fan-out and send outcome: the
 SAME operator functions as the batch plan — DataFrame transformations
@@ -284,62 +284,6 @@ def write_sinks_stream(
 
     return (
         routed.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def write_sinks_stream_merge(
-    routed: DataFrame, table: str, checkpoint_dir: str
-):
-    """Streaming sink upgraded to MERGE semantics: each micro-batch
-    upserts into an Iceberg table on the routed-row identity key, so a
-    replayed epoch is idempotent at the ROW level (not just the epoch
-    directory level of write_sinks_stream). Iceberg runtime required —
-    gated like the rest of sources/iceberg.py; the parquet epoch sink
-    remains the fallback."""
-    from ..sources.iceberg import iceberg_available, merge_resume
-
-    spark = routed.sparkSession
-    if not iceberg_available(spark):
-        raise RuntimeError(
-            "MERGE streaming sink requires the Iceberg runtime; use "
-            "write_sinks_stream (epoch-idempotent parquet) instead"
-        )
-
-    def merge_batch(df: DataFrame, epoch_id: int) -> None:
-        merge_resume(spark, table, df, view_name=f"_epoch_{epoch_id}")
-
-    return (
-        routed.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def write_sinks_stream_upsert(
-    routed: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    key_cols: tuple[str, ...] = ("conv_id", "turn_idx", "sink"),
-):
-    """Row-level idempotent streaming sink WITHOUT the Iceberg runtime:
-    foreachBatch upserts each micro-batch into a parquet table on the
-    routed-row identity key (sources/iceberg.merge_resume_parquet) —
-    the executed twin of the MERGE sink's contract: a replayed epoch,
-    or the same rows arriving again in a later epoch, leaves exactly
-    one row per key. Production uses write_sinks_stream_merge (Iceberg
-    snapshot-atomic commit); this fallback's dir-rename commit is the
-    documented weaker guarantee."""
-    from ..sources.iceberg import merge_resume_parquet
-
-    spark = routed.sparkSession
-
-    def upsert_batch(df: DataFrame, epoch_id: int) -> None:
-        merge_resume_parquet(spark, out_dir, df, key_cols)
-
-    return (
-        routed.writeStream.foreachBatch(upsert_batch)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

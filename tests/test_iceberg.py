@@ -1,18 +1,14 @@
 """Iceberg storage layer: capability detection and the parquet fallback
-(the sandbox ships no Iceberg jars — every Iceberg-only call must gate
-cleanly and the fallback must produce the pruning-equivalent layout)."""
+(without the Iceberg jars, detection must say so and the fallback must
+produce the pruning-equivalent layout)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from apm_opentelemetry_collector_spark.sources.iceberg import (
     iceberg_available,
-    iceberg_bucket_slice,
     is_table_identifier,
-    merge_resume,
-    merge_resume_sql,
     read_transcripts,
     write_transcripts,
 )
@@ -41,111 +37,3 @@ def test_fallback_writes_prunable_layout(spark, tmp_path):
     pruned = back.filter(F.col("conv_bucket") == 1)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and pruned.count() > 0
-
-
-def test_iceberg_only_paths_gate_cleanly(spark):
-    with pytest.raises(RuntimeError, match="Iceberg runtime"):
-        iceberg_bucket_slice(spark, "local.db.t", 0, 16)
-    with pytest.raises(RuntimeError, match="MERGE INTO requires"):
-        merge_resume(spark, "local.db.t", synth_transcripts(spark, 10, 2))
-
-
-def test_merge_sql_shape():
-    sql = merge_resume_sql("local.db.routed", "_updates")
-    assert sql.startswith("MERGE INTO local.db.routed t")
-    # idempotence key = routed-row identity
-    for frag in ("t.conv_id = s.conv_id", "t.turn_idx = s.turn_idx",
-                 "t.sink = s.sink", "WHEN MATCHED THEN UPDATE SET *",
-                 "WHEN NOT MATCHED THEN INSERT *"):
-        assert frag in sql
-
-
-def test_streaming_merge_sink_gates_cleanly(spark):
-    from apm_opentelemetry_collector_spark.streaming.stream_pipeline import (
-        write_sinks_stream_merge,
-    )
-
-    df = synth_transcripts(spark, 10, 2)
-    with pytest.raises(RuntimeError, match="MERGE streaming sink requires"):
-        write_sinks_stream_merge(df, "local.db.routed", "/tmp/nope")
-
-
-def test_parquet_merge_upsert_idempotent(spark, tmp_path):
-    """merge_resume_parquet executes the MERGE contract without the
-    Iceberg runtime: matched keys replaced, new keys inserted, and a
-    REPLAYED epoch leaves the table bit-identical (row-level
-    idempotence — the guarantee merge_resume_sql states)."""
-    from pyspark.sql import Row
-
-    from apm_opentelemetry_collector_spark.sources.iceberg import (
-        merge_resume_parquet,
-    )
-
-    path = str(tmp_path / "routed_merge")
-    mk = lambda rows: spark.createDataFrame(
-        [Row(conv_id=c, turn_idx=i, sink=s, payload=p) for c, i, s, p in rows],
-        "conv_id string, turn_idx long, sink string, payload string",
-    )
-    epoch_a = mk([("c1", 0, "s1", "a0"), ("c1", 1, "s1", "a1"), ("c2", 0, "s1", "a2")])
-    merge_resume_parquet(spark, path, epoch_a)
-
-    def snapshot():
-        return {
-            (r["conv_id"], r["turn_idx"], r["sink"]): r["payload"]
-            for r in spark.read.parquet(path).collect()
-        }
-
-    first = snapshot()
-    assert len(first) == 3
-
-    # replay the SAME epoch → identical table (idempotence)
-    merge_resume_parquet(spark, path, mk([("c1", 0, "s1", "a0"), ("c1", 1, "s1", "a1"), ("c2", 0, "s1", "a2")]))
-    assert snapshot() == first
-
-    # overlapping epoch: c1/1 updated, c3/0 inserted, others untouched
-    merge_resume_parquet(spark, path, mk([("c1", 1, "s1", "B1"), ("c3", 0, "s1", "b0")]))
-    got = snapshot()
-    assert got[("c1", 1, "s1")] == "B1" and got[("c3", 0, "s1")] == "b0"
-    assert got[("c1", 0, "s1")] == "a0" and len(got) == 4
-
-
-def test_streaming_upsert_sink_row_level_idempotent(spark, tmp_path):
-    """The parquet upsert streaming sink: rows re-delivered in a later
-    micro-batch (at-least-once ingest) collapse to ONE row per identity
-    key in the sink table."""
-    from pyspark.sql import Row
-    from pyspark.sql import types as T
-
-    from apm_opentelemetry_collector_spark.streaming.stream_pipeline import (
-        write_sinks_stream_upsert,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("conv_id", T.StringType()),
-            T.StructField("turn_idx", T.LongType()),
-            T.StructField("sink", T.StringType()),
-            T.StructField("payload", T.StringType()),
-        ]
-    )
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    b1 = [Row(conv_id="c1", turn_idx=0, sink="s1", payload="v1"),
-          Row(conv_id="c1", turn_idx=1, sink="s1", payload="v1")]
-    # batch 2 re-delivers turn 1 (retry) with a newer payload + a new row
-    b2 = [Row(conv_id="c1", turn_idx=1, sink="s1", payload="v2"),
-          Row(conv_id="c2", turn_idx=0, sink="s1", payload="v1")]
-    for b in (b1, b2):
-        spark.createDataFrame(b, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = write_sinks_stream_upsert(stream, out, ckpt)
-    q.processAllAvailable()
-    q.stop()
-
-    got = {
-        (r["conv_id"], r["turn_idx"]): r["payload"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {("c1", 0): "v1", ("c1", 1): "v2", ("c2", 0): "v1"}

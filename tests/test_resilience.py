@@ -91,3 +91,23 @@ def test_outcomes_partition_routed_set(spark):
     simple = with_send_outcome(routed)
     by2 = {r["outcome"]: r["n"] for r in simple.groupBy("outcome").agg(F.count("*").alias("n")).collect()}
     assert sum(by2.values()) == n
+
+
+def test_retry_keeps_a_drop_made_before_the_send(spark):
+    # at a 10-byte cap every span is fatally oversized: run_pipeline drops
+    # it (FatalEncodingError) before the send, so the retry step must keep
+    # that drop, give it no result code and no attempt, and queue nothing
+    from apm_opentelemetry_collector_spark.plans.pipeline import run_pipeline
+
+    tr = synth_transcripts(spark, n_rows=500, n_convs=10)
+    routed = run_pipeline(spark, tr, PipelineConfig(max_span_size=10)).routed
+    out = with_retry_outcome(routed, PipelineConfig(), retry_queue_size=1)
+    fatal = out.filter(F.octet_length("text") > 10)
+    assert fatal.count() == routed.count() > 0
+    got = {
+        tuple(r)
+        for r in fatal.select("outcome", "drop_reason", "result_code", "attempts")
+        .distinct()
+        .collect()
+    }
+    assert got == {("dropped", "FatalEncodingError", None, 0)}
