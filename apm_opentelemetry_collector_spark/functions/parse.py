@@ -116,7 +116,6 @@ def parse_pandas_udf(text: pd.Series) -> pd.DataFrame:
     )
 
 
-def with_parsed(df: DataFrame, use_pandas_udf: bool = False) -> DataFrame:
+def with_parsed(df: DataFrame) -> DataFrame:
     """Attach the parsed struct column (P1, SURVEY.md §2.2)."""
-    expr = parse_pandas_udf(F.col("text")) if use_pandas_udf else parse_cols("text")
-    return df.withColumn("parsed", expr)
+    return df.withColumn("parsed", parse_cols("text"))

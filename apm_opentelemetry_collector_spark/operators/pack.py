@@ -37,7 +37,8 @@ def assign_batches(
 ) -> DataFrame:
     """Adds `batch_no` (int64) per (sink, shard_id) under the byte budget:
     rows are sized by the UTF-8 byte length of `text` (the oracle's
-    strlen).
+    strlen). A `bucket` column (a job wave's input, plans/job.py) is part
+    of the window key too, so a record never spans job buckets.
 
     gate (optional bool Column): rows failing it contribute 0 bytes and
     get NULL batch_no — this packs exactly the gated subset (e.g. only
@@ -47,8 +48,9 @@ def assign_batches(
     size = F.octet_length("text")
     if gate is not None:
         size = F.when(gate, size).otherwise(F.lit(0))
+    keys = ["bucket", "sink", "shard_id"] if "bucket" in df.columns else ["sink", "shard_id"]
     w = (
-        Window.partitionBy("sink", "shard_id")
+        Window.partitionBy(*keys)
         .orderBy("conv_id", "turn_idx")
         .rowsBetween(Window.unboundedPreceding, -1)
     )

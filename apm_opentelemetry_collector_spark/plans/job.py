@@ -5,19 +5,29 @@ graceful drain encoder.go:226-263, SHARD_CONFIG_MISTMATCH re-send
 exporter.go:260-267) exists because its pipeline is a lossy stream of
 one-shot sends. The batch engine replaces it with idempotent partitioned
 writes plus per-partition lineage manifests: work is divided into
-conversation buckets; each bucket's outputs land under a bucket-scoped
-directory and a manifest records (input rows, per-outcome counts, a
-checksum). A killed job, re-invoked with the same arguments, REPLAYS ONLY
-the buckets without a manifest (north_star: "a killed job replays only
-incomplete partitions").
+conversation buckets; each bucket's outputs land under bucket-partitioned
+directories (routed/bucket=b/sink=s/, rejected/bucket=b/,
+metrics/bucket=b/) and a manifest, _manifests/bucket=b.json, records
+(per-outcome counts, rejected rows, a checksum). A killed job, re-invoked
+with the same arguments, REPLAYS ONLY the buckets without a manifest
+(north_star: "a killed job replays only incomplete partitions").
+
+The manifests are the commit record. A bucket's files appear under
+routed/, rejected/ and metrics/ when its wave's writes commit, before its
+manifest is written, and a killed write can leave some of them behind: a
+reader of routed/ can see a bucket that has no manifest yet. Read only
+the buckets _manifests/ names; a replay rewrites the others.
 
 Scale design: the unit of resumability is the conv_id bucket — the same
 key the input table is partitioned by (write_partitioned: ts_day ×
-bucket(conv_id)), so each bucket job prunes its scan to its own files and
-buckets never overlap. On a 1000-executor cluster you would raise
-N_BUCKETS to a few thousand so stragglers re-run cheaply; locally 16
-keeps job overhead negligible. `buckets=None` runs the whole input as a
-single pass (fastest when resume granularity is not needed).
+bucket(conv_id)), so a wave prunes its scan to its buckets' files and
+buckets never overlap. The unit of work is a wave of WAVE_BUCKETS pending
+buckets run as one plan; its writes use dynamic partition overwrite, so
+a wave replaces its own buckets' directories and never a completed
+bucket's. On a 1000-executor cluster you would raise N_BUCKETS to a few
+thousand so stragglers re-run cheaply; locally 16 keeps job overhead
+negligible. `buckets=None` runs the whole input as a single pass
+(fastest when resume granularity is not needed).
 """
 
 from __future__ import annotations
@@ -38,8 +48,9 @@ from ..operators.aggregate import conv_bucket_col
 from ..plans.pipeline import run_pipeline
 from ..session import file_listing
 
-# Bucket jobs submitted concurrently from the driver's thread pool.
-MAX_PARALLEL = 4
+# Pending buckets run this many at a time, as one plan: a kill loses at
+# most one wave of in-flight buckets.
+WAVE_BUCKETS = 4
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -120,29 +131,43 @@ def _process(
     transcripts: DataFrame,
     out_dir: str,
     cfg: PipelineConfig,
-    bucket: int | None,
+    wave: list[int] | None,
     n_buckets: int | None,
     fingerprint: dict,
     routes: DataFrame | None = None,
     shards: list[dict] | None = None,
-) -> dict:
-    """Run the pipeline over one bucket (or all) and write outputs.
+) -> list[dict]:
+    """Run the pipeline over one wave of buckets (None = a single pass
+    over all rows), write its outputs and return one manifest per bucket.
 
     Single materialization discipline: the routed rows (with outcome,
-    shard, batch assignment) are written ONCE, partitioned by sink; every
-    aggregate is then derived from the written files — no stage of the
-    lineage is computed twice. The manifest records n_buckets and the
-    job fingerprint so a resume under another bucket layout or
-    fingerprint can be refused.
+    shard, batch assignment) are written ONCE; every aggregate is then
+    derived from the written files — no stage of the lineage is computed
+    twice. The manifests record n_buckets and the job fingerprint so a
+    resume under another bucket layout or fingerprint can be refused.
     """
     res = run_pipeline(spark, transcripts, cfg, routes=routes, shards=shards)
-    sub = f"bucket={bucket}" if bucket is not None else "all"
+    keys = [] if wave is None else ["bucket"]
+    sub = ["all"] if wave is None else []
 
-    routed_dir = os.path.join(out_dir, "routed", sub)
+    def _write(df: DataFrame, name: str, *parts: str) -> DataFrame:
+        """Write df under out_dir/name, a wave's rows partitioned by
+        bucket (dynamic overwrite: only this wave's buckets are
+        replaced), and read this run's rows back, pruned. The schema is
+        the written one: an empty bucket leaves no part file to infer it
+        from, and empty buckets are legal (sparse inputs, layouts written
+        with fewer buckets than requested)."""
+        path = os.path.join(out_dir, name, *sub)
+        w = df.write.mode("overwrite").partitionBy(*keys, *parts)
+        if wave is not None:
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.parquet(path)
+        back = spark.read.schema(df.schema).parquet(path)
+        return back if wave is None else back.filter(F.col("bucket").isin(wave))
+
     sink_table = res.routed.withColumn(
         "conv_bucket", conv_bucket_col(cfg.n_conv_buckets)
     )
-    rejected_dir = os.path.join(out_dir, "rejected", sub)
 
     # The routed chain (write → metrics aggregate → totals) and the
     # rejected chain (write → count) share no lineage, so they run as
@@ -152,18 +177,12 @@ def _process(
     # routed write's stragglers).
 
     def _routed_chain() -> list:
-        sink_table.write.mode("overwrite").partitionBy("sink").parquet(routed_dir)
         # aggregates from the written table — ONE pruned scan (group
         # cols + crc only; parquet column pruning keeps text out)
         # produces the metric table, the outcome totals, and the lineage
-        # checksum. Explicit schema (known from the DataFrame just
-        # written): an EMPTY bucket writes only _SUCCESS, and schema
-        # inference over zero part files would fail — empty buckets are
-        # legal (sparse inputs, layouts written with fewer buckets than
-        # requested).
-        written = spark.read.schema(sink_table.schema).parquet(routed_dir)
-        sink_counts = written.groupBy(
-            "sink", "conv_bucket", "role", "tool", "outcome"
+        # checksum.
+        sink_counts = _write(sink_table, "routed", "sink").groupBy(
+            *keys, "sink", "conv_bucket", "role", "tool", "outcome"
         ).agg(
             F.count("*").alias("n"),
             F.sum(
@@ -173,26 +192,19 @@ def _process(
         # Metrics are written by Spark directly — never collected to the
         # driver: cardinality is sinks × n_conv_buckets × roles × tools
         # × outcomes, and n_conv_buckets is "a few thousand" on a real
-        # cluster.
-        metrics_dir = os.path.join(out_dir, "metrics", sub)
-        sink_counts.write.mode("overwrite").parquet(metrics_dir)
-
-        # The manifest totals come from a second aggregate over the
-        # WRITTEN metrics table (tiny scan), collapsed to one row per
-        # outcome — the only .collect() in the runner, bounded by
-        # #outcomes (≤4).
+        # cluster. The manifest totals come from a second aggregate over
+        # the WRITTEN metrics table (tiny scan), collapsed to one row per
+        # (bucket, outcome): bounded by WAVE_BUCKETS × #outcomes (≤4).
         return (
-            spark.read.schema(sink_counts.schema).parquet(metrics_dir)
-            .groupBy("outcome")
+            _write(sink_counts, "metrics")
+            .groupBy(*keys, "outcome")
             .agg(F.sum("n").alias("n"), F.sum("crc").alias("crc"))
             .collect()
         )
 
-    def _rejected_chain() -> int:
-        res.rejected.write.mode("overwrite").parquet(rejected_dir)
-        return (
-            spark.read.schema(res.rejected.schema).parquet(rejected_dir).count()
-        )
+    def _rejected_chain() -> list:
+        # one row per bucket of the wave (one row in the single pass)
+        return _write(res.rejected, "rejected").groupBy(*keys).count().collect()
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -200,47 +212,61 @@ def _process(
         totals_f = pool.submit(_routed_chain)
         rejected_f = pool.submit(_rejected_chain)
         totals = totals_f.result()
-        n_rejected = rejected_f.result()
+        rejected = rejected_f.result()
 
-    by_outcome = {r["outcome"]: int(r["n"]) for r in totals}
-    checksum = sum(int(r["crc"] or 0) for r in totals)
-    return {
-        "bucket": bucket,
-        "n_buckets": n_buckets,
-        "fingerprint": fingerprint,
-        "routed_rows": int(sum(by_outcome.values())),
-        "by_outcome": by_outcome,
-        "rejected_rows": int(n_rejected),
-        "checksum": int(checksum),
-        "completed_at": time.time(),
-    }
+    buckets = [None] if wave is None else wave
+    by_outcome: dict = {b: {} for b in buckets}
+    checksum = dict.fromkeys(buckets, 0)
+    n_rejected = dict.fromkeys(buckets, 0)
+    for r in totals:
+        b = r["bucket"] if keys else None
+        by_outcome[b][r["outcome"]] = int(r["n"])
+        checksum[b] += int(r["crc"] or 0)
+    for r in rejected:
+        n_rejected[r["bucket"] if keys else None] = int(r["count"])
+    return [
+        {
+            "bucket": b,
+            "n_buckets": n_buckets,
+            "fingerprint": fingerprint,
+            "routed_rows": int(sum(by_outcome[b].values())),
+            "by_outcome": by_outcome[b],
+            "rejected_rows": n_rejected[b],
+            "checksum": checksum[b],
+            "completed_at": time.time(),
+        }
+        for b in buckets
+    ]
 
 
-def bucket_slice(transcripts: DataFrame, bucket: int, n_buckets: int) -> DataFrame:
-    """One bucket's input slice, scan-pruned when the layout allows.
+def wave_input(transcripts: DataFrame, wave: list[int], n_buckets: int) -> DataFrame:
+    """The input rows of a wave of buckets, with their bucket as column
+    `bucket`, scan-pruned when the layout allows.
 
     If the input carries the write_partitioned `conv_bucket` partition
     column (same pmod(xxhash64(conv_id), n) bucketing as bucket_expr),
-    filter on IT — the parquet scan then prunes to the bucket's files
+    filter on IT — the parquet scan then prunes to the wave's files
     (PartitionFilters; asserted in tests/test_plan_audit.py). The caller
     must run with the layout's n_buckets; run_job fails fast on a
     mismatch (validate_bucket_layout). Without the column, the bucket
     is computed on the fly, which cannot prune — run_job materializes the
-    bucketed input ONCE in that case rather than rescanning per bucket.
+    bucketed input ONCE in that case rather than rescanning per wave.
+    The column is not named conv_bucket: the sink table's conv_bucket is
+    the metrics bucket (conv_bucket_col), another function.
     """
     if "conv_bucket" in transcripts.columns:
-        return transcripts.filter(F.col("conv_bucket") == bucket).drop("conv_bucket")
-    return (
-        transcripts.withColumn("_bucket", bucket_expr(n_buckets))
-        .filter(F.col("_bucket") == bucket)
-        .drop("_bucket")
+        return transcripts.filter(F.col("conv_bucket").isin(wave)).withColumnRenamed(
+            "conv_bucket", "bucket"
+        )
+    return transcripts.withColumn("bucket", bucket_expr(n_buckets)).filter(
+        F.col("bucket").isin(wave)
     )
 
 
 def validate_bucket_layout(transcripts: DataFrame, n_buckets: int) -> None:
     """Fail fast when a pre-bucketed layout disagrees with n_buckets.
 
-    bucket_slice trusts an existing conv_bucket column; if the layout was
+    wave_input trusts an existing conv_bucket column; if the layout was
     written with MORE buckets than this run's n_buckets, rows with
     conv_bucket >= n_buckets would silently never be processed yet the
     job would complete and write manifests. conv_bucket is a partition
@@ -284,7 +310,7 @@ def _materialize_bucketed(
     n_buckets: int,
     fingerprint: dict,
 ) -> DataFrame:
-    """One full input scan + partitioned write; per-bucket reads then prune.
+    """One full input scan + partitioned write; wave reads then prune.
 
     Idempotent across resume: a completed `_bucketed` layout (its
     fingerprint record, written after Spark's _SUCCESS marker) is reused
@@ -318,24 +344,24 @@ def run_job(
     """Run (or resume) the full job. Buckets with a manifest are skipped.
 
     Input scanning is pruned, never repeated: an input that already
-    carries the write_partitioned conv_bucket layout is read per bucket
+    carries the write_partitioned conv_bucket layout is read per wave
     with partition pruning; any other input is bucket-partitioned to
     `out_dir/_bucketed` exactly once (reused on resume) so an N-bucket
-    run costs one full scan + one write + N pruned reads, not N scans.
+    run costs one full scan + one write + N/WAVE_BUCKETS pruned reads,
+    not N scans.
 
-    Bucket jobs are submitted from a small driver THREAD pool
-    (MAX_PARALLEL = 4 threads): Spark's scheduler runs concurrent jobs
-    fine, and each bucket carries ~seconds of fixed job-submission cost
-    that would otherwise serialize — a 4096-bucket resume must not pay
-    4096 × that latency back-to-back (VERDICT r2 #4; measured win in
-    BENCH/BASELINE.md §Resume). Manifest writes are per-bucket atomic
-    renames, so the resume contract is unchanged under concurrency.
+    The pending buckets run in order, WAVE_BUCKETS at a time: each wave
+    is ONE run_pipeline plan (_process) whose writes are partitioned by
+    bucket, and its manifests are written, one atomic rename per bucket,
+    after the wave's writes commit. A record never spans buckets
+    (assign_batches packs per bucket), so a bucket's outputs do not
+    depend on which wave ran it.
 
     routes/shards override the default fixtures (e.g. loaded from the
     YAML service config). fail_after injects a crash after that many
-    completed buckets (kill-replay tests): exactly fail_after buckets
-    are submitted and allowed to finish before the injected error, so
-    replay semantics stay deterministic even with threads.
+    completed buckets (kill-replay tests): exactly the first fail_after
+    pending buckets run and get their manifests before the injected
+    error.
 
     Resuming is refused (ValueError) when out_dir holds manifests or a
     `_bucketed` layout written under a different n_buckets (bucket ids
@@ -344,6 +370,11 @@ def run_job(
     table, shard list or input files changed: outputs of two runs would
     mix).
     """
+    if n_buckets is not None and n_buckets < 1:
+        raise ValueError(
+            f"n_buckets={n_buckets}: a bucketed job needs at least 1 bucket "
+            "(None runs a single pass)"
+        )
     cfg = cfg or PipelineConfig()
     fingerprint = job_fingerprint(spark, transcripts, cfg, routes, shards)
     check_manifest_layout(out_dir, n_buckets, fingerprint)
@@ -355,11 +386,9 @@ def run_job(
         if 0 in completed_buckets(out_dir):
             skipped.append(0)
         else:
-            manifests.append(
-                _process(spark, transcripts, out_dir, cfg, None, n_buckets,
-                         fingerprint, routes, shards)
-            )
-            _write_json(_manifest_path(out_dir, 0), manifests[-1])
+            manifests = _process(spark, transcripts, out_dir, cfg, None, n_buckets,
+                                 fingerprint, routes, shards)
+            _write_json(_manifest_path(out_dir, 0), manifests[0])
             run.append(0)
         return JobResult(out_dir, run, skipped, manifests)
 
@@ -377,25 +406,13 @@ def run_job(
     if crash:
         todo = todo[:fail_after]
 
-    def _one(b: int) -> dict:
-        part = bucket_slice(transcripts, b, n_buckets)
-        m = _process(spark, part, out_dir, cfg, b, n_buckets, fingerprint,
-                     routes, shards)
-        _write_json(_manifest_path(out_dir, b), m)
-        return m
-
-    workers = max(1, min(MAX_PARALLEL, len(todo)))
-    if workers == 1:
-        for b in todo:
-            manifests.append(_one(b))
-            run.append(b)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            for b, m in zip(todo, ex.map(_one, todo)):
-                manifests.append(m)
-                run.append(b)
+    for i in range(0, len(todo), WAVE_BUCKETS):
+        wave = todo[i:i + WAVE_BUCKETS]
+        for m in _process(spark, wave_input(transcripts, wave, n_buckets), out_dir,
+                          cfg, wave, n_buckets, fingerprint, routes, shards):
+            _write_json(_manifest_path(out_dir, m["bucket"]), m)
+            manifests.append(m)
+        run.extend(wave)
     if crash:
         raise RuntimeError(f"injected failure after {fail_after} buckets")
     return JobResult(out_dir, run, skipped, manifests)

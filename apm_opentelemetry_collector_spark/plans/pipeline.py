@@ -13,7 +13,9 @@ it, and functions/sqlgen.run_pipeline_sql is its DuckDB twin.
 
 Everything is lazy; `run_pipeline` builds exactly the chain the batch job
 writes: `routed` is the sink table (plans/job.py adds only conv_bucket)
-and every metric is aggregated from the written files, not here. The
+and every metric is aggregated from the written files, not here. A
+bucketed job runs it over a wave of buckets whose input carries a
+`bucket` column; the rows keep it, and records are packed per bucket. The
 plan shuffles the fact table on conv_id (protocol check and forward fill
 share that window) and on (sink, shard_id) for the packing order; every
 config join is broadcast.

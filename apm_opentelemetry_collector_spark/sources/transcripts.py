@@ -235,30 +235,3 @@ def write_partitioned(df: DataFrame, path: str, n_buckets: int = 16) -> None:
         .partitionBy("ts_day", "conv_bucket")
         .parquet(path)
     )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    n_buckets: int = 16,
-    sort_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> None:
-    """Write transcripts as a BUCKETED table (bucketBy conv_id, sorted
-    within buckets by (conv_id, turn_idx)).
-
-    This is the co-located-join layout: two tables bucketed by the same
-    key and count join WITHOUT an Exchange on either side — Spark's
-    scan-provided hash distribution satisfies the join's requirement
-    (asserted in tests/test_plan_audit.py). The Iceberg analog is
-    `bucket(N, conv_id)` hidden partitioning with storage-partitioned
-    joins; this is the builtin-catalog twin (bucketBy requires
-    saveAsTable — point the target database's LOCATION where the files
-    should live).
-    """
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, "conv_id")
-        .sortBy(*sort_cols)
-        .saveAsTable(table)
-    )

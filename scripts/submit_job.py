@@ -51,6 +51,8 @@ def main() -> None:
     args = ap.parse_args()
     if not args.input and not args.synthetic:
         ap.error("one of --input / --synthetic is required")
+    if args.buckets < 0:
+        ap.error(f"--buckets must be 0 (single pass) or more, not {args.buckets}")
 
     # under spark-submit a session already exists; standalone runs build one
     spark = SparkSession.builder.appName("transcript-pipeline").getOrCreate()

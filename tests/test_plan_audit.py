@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from apm_opentelemetry_collector_spark.functions import sharding
@@ -182,10 +183,11 @@ def test_partition_pruning_on_layout(spark, tmp_path):
 
 
 def test_job_bucket_slice_prunes_partitioned_layout(spark, tmp_path):
-    # run_job's per-bucket read over the write_partitioned layout must be
-    # a partition-pruned scan (one bucket's files), not a full rescan —
-    # AND slice the same rows as the on-the-fly xxhash bucketing.
-    from apm_opentelemetry_collector_spark.plans.job import bucket_slice
+    # run_job's read of a wave over the write_partitioned layout must be
+    # a partition-pruned scan (the wave's files, one IN-list filter), not
+    # a full rescan — AND read the same rows as the on-the-fly xxhash
+    # bucketing.
+    from apm_opentelemetry_collector_spark.plans.job import wave_input
     from apm_opentelemetry_collector_spark.sources.transcripts import (
         synth_transcripts,
         write_partitioned,
@@ -194,21 +196,24 @@ def test_job_bucket_slice_prunes_partitioned_layout(spark, tmp_path):
     raw = synth_transcripts(spark, 2000, 40)
     path = str(tmp_path / "layout")
     write_partitioned(raw, path, n_buckets=4)
-    pruned = bucket_slice(spark.read.parquet(path), 2, 4)
+    pruned = wave_input(spark.read.parquet(path), [1, 2], 4)
 
     plan = plan_of(pruned)
-    assert "PartitionFilters" in plan
-    assert "conv_bucket" in plan.split("PartitionFilters")[1][:200]
+    filters = plan.split("PartitionFilters: [")[1].split("]")[0]
+    assert re.search(r"conv_bucket#\d+ IN \(1,2\)", filters), filters
 
-    direct = bucket_slice(raw, 2, 4)
-    key = lambda df: {tuple(r) for r in df.select("conv_id", "turn_idx").collect()}
-    assert key(pruned) == key(direct) and len(key(pruned)) > 0
+    direct = wave_input(raw, [1, 2], 4)
+    key = lambda df: {tuple(r) for r in df.select("conv_id", "turn_idx", "bucket").collect()}
+    assert key(pruned) == key(direct)
+    assert {b for _, _, b in key(pruned)} == {1, 2}
 
 
 def test_job_runner_bounded_collects_only():
     # the runner must never collect config-unbounded data to the driver;
-    # the TWO allowed .collect()s are the ≤#outcomes manifest totals and
-    # the ≤n_buckets distinct partition values in validate_bucket_layout.
+    # the THREE allowed .collect()s are the manifest totals per (bucket,
+    # outcome) and the rejected counts per bucket — both bounded by
+    # WAVE_BUCKETS × #outcomes — and the ≤n_buckets distinct partition
+    # values in validate_bucket_layout.
     import inspect
 
     from apm_opentelemetry_collector_spark.plans import job
@@ -217,11 +222,44 @@ def test_job_runner_bounded_collects_only():
     code = "\n".join(
         l for l in src.splitlines() if not l.strip().startswith("#")
     )
-    assert code.count(".collect()") == 2, "new driver-side collect in plans/job.py"
-    first, second = code.split(".collect()")[:2]
-    bounded_markers = ('groupBy("outcome")', 'select("conv_bucket").distinct()')
-    assert any(m in first[-300:] for m in bounded_markers)
-    assert any(m in second[-300:] for m in bounded_markers)
+    assert code.count(".collect()") == 3, "new driver-side collect in plans/job.py"
+    bounded_markers = (
+        'groupBy(*keys, "outcome")',
+        "groupBy(*keys).count()",
+        'select("conv_bucket").distinct()',
+    )
+    found = [
+        m for before in code.split(".collect()")[:3] for m in bounded_markers
+        if m in before[-300:]
+    ]
+    assert sorted(found) == sorted(bounded_markers), found
+
+
+def test_job_builds_one_plan_per_wave(spark, tmp_path, monkeypatch):
+    """run_job builds one run_pipeline plan per wave of WAVE_BUCKETS
+    buckets, looked up through the plans.job module attribute (where a
+    tracer wraps it): a 16-bucket run killed after 8 buckets and its
+    replay build 2 + 2 plans."""
+    from apm_opentelemetry_collector_spark.plans import job
+    from apm_opentelemetry_collector_spark.sources.transcripts import (
+        synth_transcripts,
+    )
+
+    calls = []
+    orig = job.run_pipeline
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(job, "run_pipeline", counted)
+    tr = synth_transcripts(spark, 2000, 40)
+    out = str(tmp_path / "job")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        job.run_job(spark, tr, out, n_buckets=16, fail_after=8)
+    assert len(calls) == 2
+    replay = job.run_job(spark, tr, out, n_buckets=16)
+    assert len(calls) == 4 and len(replay.buckets_run) == 8
 
 
 def test_new_queries_no_python_nodes(spark):
@@ -231,34 +269,3 @@ def test_new_queries_no_python_nodes(spark):
     for name, q in entrymod.queries().items():
         plan = plan_of(q(spark, SF))
         assert "BatchEvalPython" not in plan, name
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: two tables bucketed by conv_id with the same
-    bucket count must join with ZERO Exchange operators — the bucketed
-    scan satisfies the join's hash distribution (the parquet twin of
-    Iceberg's storage-partitioned join)."""
-    from apm_opentelemetry_collector_spark.sources.transcripts import (
-        synth_transcripts,
-        write_bucketed,
-    )
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bdemo LOCATION '{tmp_path}/wh'")
-    old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        tr = synth_transcripts(spark, 4000, 80)
-        write_bucketed(tr, "bdemo.t_a", n_buckets=8)
-        write_bucketed(
-            tr.groupBy("conv_id").count(), "bdemo.t_b", n_buckets=8,
-            sort_cols=("conv_id",),
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bdemo.t_a").join(spark.table("bdemo.t_b"), "conv_id")
-        assert joined.count() == 4000
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-        spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
